@@ -591,14 +591,15 @@ def q17_term_stats(spark, sf):
     """Inverted-index term statistics (df, cf) — the posting-list aggregate
     expressed relationally.
 
-    r6 plan shape: the exploded relation comes from the index build's OWN
-    vectorized Arrow pass (tokenize.exploded_postings: one mapInPandas,
-    flat numpy factorize — already one row per DISTINCT (doc, term) with
-    its tf), so a single groupBy(term) with map-side partial aggregation
-    replaces the old count-distinct plan's TWO exchanges (partial count by
-    (term, doc_id) → exchange → re-aggregate → exchange) — guide §2.3/2.4
-    + §4.2 (batches to native code). df = rows per term and cf = Σtf are
-    value-identical to countDistinct(doc_id) / count(*) over the raw token
+    Plan shape: the relation is the index build's OWN map-side-combined
+    Arrow pass (tokenize.partial_postings: one mapInArrow, flat numpy
+    factorize — one packed row per (term, batch) whose ids/tfs lists hold
+    one entry per DISTINCT (doc, term)), so a single groupBy(term) with
+    map-side partial aggregation replaces the old count-distinct plan's
+    TWO exchanges (partial count by (term, doc_id) → exchange →
+    re-aggregate → exchange), and the shuffle carries packed rows, not
+    one row per posting. df = Σ size(ids) and cf = Σ tfs are value-
+    identical to countDistinct(doc_id) / count(*) over the raw token
     explode; tokenizer parity with the oracle's regexp tokenization is
     pinned by this gate's own hash and the index parity tests.
 
@@ -606,13 +607,14 @@ def q17_term_stats(spark, sf):
     and abandoned: ProjectCollapse inlines the array_sort(tokenize) child
     into every lambda reference, re-evaluating it per element — O(n²) per
     row, ~50x slower than this shape at sf0.1.)"""
-    from macrobase_spark.index.tokenize import exploded_postings
+    from macrobase_spark.index.tokenize import partial_postings
 
     d = _t(spark, sf, "documents")
+    tf_sum = F.aggregate("tfs", F.lit(0).cast("long"), lambda acc, x: acc + x)
     return (
-        exploded_postings(d)
+        partial_postings(d)
         .groupBy("term")
-        .agg(F.count("*").alias("df"), F.sum("tf").cast("long").alias("cf"))
+        .agg(F.sum(F.size("ids")).alias("df"), F.sum(tf_sum).alias("cf"))
         .orderBy(F.col("df").desc(), F.col("term").asc())
         .limit(50)
     )
@@ -635,8 +637,8 @@ def q18_bm25_relational(spark, sf):
     # token-less docs" exactly; integer token counts sum exactly in
     # double, and the scoring arithmetic consumes the same double values
     # as columns instead of literals, so scores are bit-identical.
-    # (An Arrow-kernel variant — turn_features + exploded_postings with
-    # the query terms pushed into the kernel — was A/B'd and REJECTED: it
+    # (An Arrow-kernel variant — turn_features + an exploded-postings
+    # kernel with the query terms pushed into it — was A/B'd and REJECTED: it
     # ships the full text column into Python twice, which loses to the
     # in-JVM tokenizer at 10x scale; guide §4.1, fewer boundary bytes.)
     stats = d.select(F.size(tokenize_expr("text")).alias("_dl")).agg(

@@ -5,15 +5,16 @@ Pipeline (all lazy DataFrame stages; Python only inside Arrow batches):
   transcripts (conv_id, turn_idx, role, text, tool, ts)
     → fused Arrow pass: terms+tfs+doc_len+anomaly   (tokenize.py)
     → docs table + global stats (N, avgdl)
-    → MAP-SIDE COMBINE (r6, tokenize.partial_postings): one row per
-      (term, salt) per Arrow batch, doc-sorted ids/tfs/dls packed as list
-      columns — the (term, salt) shuffle ships ~vocabulary-count packed
-      rows instead of one row per posting
-    → hot-term detection (sampled approx df counts → broadcast set)
-    → PHASE 1: shuffle+sort on (term, salt)   salt = doc_id % S for hot
-        terms else 0; mapInArrow merges each run's partials (one lexsort
-        restores global doc order) → posting blob (delta+varint); cold
-        terms finalize here
+    → hot-term detection (sampled df counts → broadcast set)
+    → MAP-SIDE COMBINE (tokenize.partial_postings — the ONE tokenize →
+      postings relation): one row per (term, salt) per Arrow batch,
+      doc-sorted ids/tfs/dls packed as list columns; salt = doc_id % S
+      for hot terms else 0. The (term, salt) shuffle ships ~vocabulary-
+      count packed rows instead of one row per posting
+    → PHASE 1 (_merge_partial_runs — the ONE encode kernel): shuffle+sort
+        on (term, salt); mapInArrow merges each run's partials (one
+        lexsort restores global doc order) → posting blob (delta+varint);
+        cold terms finalize here
     → PHASE 2: groupBy(term) merge salted partials → final blob
         + df/cf stats + block-max impact metadata (BM25 upper bounds)
     → write parquet range-partitioned & sorted by term (row-group pruning
@@ -34,6 +35,11 @@ parquet partitions plus a manifest line (lineage + metrics: terms, postings,
 bytes, merge fan-in) per bucket. A restarted build skips buckets already in
 the manifest. Granularity = num_groups re-scans of the input (configurable;
 1 = single pass, no mid-build resume).
+
+The positional layer (partial_positional_postings → _merge_partial_pos_runs)
+and update_index's delta segments run the same relation and kernels;
+hot-term detection and suggest_stopwords count document frequency over the
+same packed relation.
 """
 
 from __future__ import annotations
@@ -132,10 +138,39 @@ def _run_starts_arrow(tbl) -> np.ndarray:
     return np.concatenate(([0], change)).astype(np.int64)
 
 
+def _split_runs(batches, encode_slice):
+    """Batch-carry loop shared by the phase-1 kernels: over Arrow batches
+    pre-sorted by (term, salt), yield encode_slice(tbl, starts, ends) for
+    every COMPLETE (term, salt) run. Runs never span partitions (the
+    shuffle key is (term, salt)); the last run of a batch may continue in
+    the next one, so it is carried and encoded once its end is seen."""
+    import pyarrow as pa
+
+    carry = None  # pa.Table holding the last (possibly incomplete) run
+    for rb in batches:
+        tbl = pa.Table.from_batches([rb])
+        if carry is not None:
+            tbl = pa.concat_tables([carry, tbl])
+        tbl = tbl.combine_chunks()
+        if tbl.num_rows == 0:
+            carry = None
+            continue
+        starts = _run_starts_arrow(tbl)
+        if len(starts) == 1:
+            carry = tbl
+            continue
+        carry = tbl.slice(int(starts[-1]))
+        yield encode_slice(tbl, starts[:-1], starts[1:])
+    if carry is not None and carry.num_rows:
+        starts = _run_starts_arrow(carry)
+        ends = np.concatenate((starts[1:], [carry.num_rows]))
+        yield encode_slice(carry, starts, ends)
+
+
 def _encode_runs_flat(run_terms, ids: np.ndarray, tfs: np.ndarray,
                       dls: np.ndarray, starts: np.ndarray, ends: np.ndarray,
-                      hot_terms: set[str] | None, avgdl: float):
-    """Shared vectorized encode core: flat doc-sorted posting arrays +
+                      hot_terms: set[str], avgdl: float):
+    """Vectorized encode core: flat doc-sorted posting arrays +
     [starts, ends) run boundaries → one _ENC_SCHEMA Arrow batch. Whole-
     array varint streams (codec.encode_run_batch), reduceat per-run and
     per-block maxima, Arrow-native output assembly — no Python loop over
@@ -158,10 +193,8 @@ def _encode_runs_flat(run_terms, ids: np.ndarray, tfs: np.ndarray,
             run_terms,
             value_set=pa.array(sorted(hot_terms), type=pa.string()))
         ).to_numpy(zero_copy_only=False)
-    elif hot_terms is not None:  # empty set: every run finalizes here
+    else:  # empty set: every run finalizes here
         final = np.ones(len(starts), dtype=bool)
-    else:  # None → every run is a mergeable partial (update path)
-        final = np.zeros(len(starts), dtype=bool)
 
     # per-run max impact: every run start is a reduceat boundary, so each
     # segment is exactly one run
@@ -198,77 +231,18 @@ def _encode_runs_flat(run_terms, ids: np.ndarray, tfs: np.ndarray,
                "blob_len", "blob", "final"])
 
 
-def _encode_tbl_slice(tbl, starts: np.ndarray, ends: np.ndarray,
-                      hot_terms: set[str] | None, avgdl: float):
-    """Encode all (term, salt) runs of an exploded-row Arrow table slice
-    (one row per posting, pre-sorted by (term, salt, doc_id))."""
-    import pyarrow as pa
-
-    starts = np.asarray(starts, dtype=np.int64)
-    ends = np.asarray(ends, dtype=np.int64)
-    n = int(ends[-1])
-    ids_all = tbl.column("doc_id").chunk(0).to_numpy(
-        zero_copy_only=False)[:n].astype(np.uint64)
-    tfs_all = tbl.column("tf").chunk(0).to_numpy(
-        zero_copy_only=False)[:n].astype(np.uint64)
-    dls_all = tbl.column("dl").chunk(0).to_numpy(
-        zero_copy_only=False)[:n].astype(np.uint64)
-    run_terms = tbl.column("term").chunk(0).take(pa.array(starts))
-    return _encode_runs_flat(run_terms, ids_all, tfs_all, dls_all,
-                             starts, ends, hot_terms, avgdl)
-
-
-def _encode_sorted_runs(hot_terms: set[str] | None, avgdl: float):
-    """Phase 1 kernel as a mapInArrow over partitions pre-sorted by
-    (term, salt, doc_id): encode each (term, salt) run with numpy slices —
-    no per-group applyInPandas dispatch, and (r6, guide §4.2) no pandas
-    boundary: the posting rows' term strings are never boxed into Python
-    objects (the pandas path paid one PyObject per posting row — the
-    dominant cost of the encode stage at 22M rows), run detection /
-    aggregates / block maxima are single pyarrow-C++/numpy calls, and the
-    output is assembled as Arrow arrays directly. Runs never span
-    partitions (the shuffle key is (term, salt)); runs spanning Arrow
-    batches are carried. Cold terms (single shard) are finalized here,
-    skipping phase 2."""
-    import pyarrow as pa
-
-    def fn(batches):
-        carry = None  # pa.Table holding the last (possibly incomplete) run
-        for rb in batches:
-            tbl = pa.Table.from_batches([rb])
-            if carry is not None:
-                tbl = pa.concat_tables([carry, tbl])
-            tbl = tbl.combine_chunks()
-            if tbl.num_rows == 0:
-                carry = None
-                continue
-            starts = _run_starts_arrow(tbl)
-            # hold back the last (possibly incomplete) run
-            if len(starts) == 1:
-                carry = tbl
-                continue
-            carry = tbl.slice(int(starts[-1]))
-            yield _encode_tbl_slice(tbl, starts[:-1], starts[1:],
-                                    hot_terms, avgdl)
-        if carry is not None and carry.num_rows:
-            starts = _run_starts_arrow(carry)
-            ends = np.concatenate((starts[1:], [carry.num_rows]))
-            yield _encode_tbl_slice(carry, starts, ends, hot_terms, avgdl)
-
-    return fn
-
-
-def _merge_partial_runs(hot_terms: set[str] | None, avgdl: float):
-    """Phase 1 kernel over MAP-SIDE-COMBINED partial rows (one row per
-    (term, salt) per upstream Arrow batch, carrying doc-sorted ids/tfs/dls
-    LIST columns — tokenize.partial_postings), pre-sorted by (term, salt):
-    concatenate each run's list segments (zero-copy child-array slices),
-    one lexsort restores global doc order per run (partials from different
-    map tasks interleave doc ranges; ids are unique per run because a doc
-    lives in exactly one upstream batch), then the shared flat encode core
-    emits final/partial blobs — bit-identical to the exploded-row path.
-    Runs never span partitions (the shuffle key is (term, salt)); runs
-    spanning Arrow batches are carried."""
+def _merge_partial_runs(hot_terms: set[str], avgdl: float):
+    """Phase 1 kernel (mapInArrow) over MAP-SIDE-COMBINED partial rows (one
+    row per (term, salt) per upstream Arrow batch, carrying doc-sorted
+    ids/tfs/dls LIST columns — tokenize.partial_postings), pre-sorted by
+    (term, salt): concatenate each run's list segments (zero-copy child-
+    array slices), one lexsort restores global doc order per run (partials
+    from different map tasks interleave doc ranges; ids are unique per run
+    because a doc lives in exactly one upstream batch), then
+    _encode_runs_flat emits the blobs. Runs of terms outside `hot_terms`
+    finalize here (fan_in 1); hot runs are partials for the phase-2 merge.
+    An empty `hot_terms` finalizes every run — the update path's segment
+    rows. No posting row is ever boxed into a Python object."""
     import pyarrow as pa
 
     def encode_slice(tbl, starts: np.ndarray, ends: np.ndarray):
@@ -300,25 +274,7 @@ def _merge_partial_runs(hot_terms: set[str] | None, avgdl: float):
             flat_starts, flat_ends, hot_terms, avgdl)
 
     def fn(batches):
-        carry = None
-        for rb in batches:
-            tbl = pa.Table.from_batches([rb])
-            if carry is not None:
-                tbl = pa.concat_tables([carry, tbl])
-            tbl = tbl.combine_chunks()
-            if tbl.num_rows == 0:
-                carry = None
-                continue
-            starts = _run_starts_arrow(tbl)
-            if len(starts) == 1:
-                carry = tbl
-                continue
-            carry = tbl.slice(int(starts[-1]))
-            yield encode_slice(tbl, starts[:-1], starts[1:])
-        if carry is not None and carry.num_rows:
-            starts = _run_starts_arrow(carry)
-            ends = np.concatenate((starts[1:], [carry.num_rows]))
-            yield encode_slice(carry, starts, ends)
+        return _split_runs(batches, encode_slice)
 
     return fn
 
@@ -385,70 +341,14 @@ def _merge_final(avgdl: float, drop_bc=None):
     return merge
 
 
-def _encode_pos_runs(hot_terms: set[str]):
-    """Phase 1 of the positional layer: encode each (term, salt) run of
-    (doc_id, tf, dl, pos) rows — pre-sorted by the shuffle — into one
-    self-contained positional blob. Cold terms finalize here; hot terms'
-    salted partials merge in phase 2. Carry logic mirrors
-    _encode_sorted_runs (runs never span partitions; runs spanning Arrow
-    batches are held back)."""
-    from macrobase_spark.index.codec import encode_positional
-
-    def encode_slice(pdf: pd.DataFrame, starts, ends) -> list[dict]:
-        terms = pdf["term"].to_numpy(object)
-        ids = pdf["doc_id"].to_numpy(np.int64).astype(np.uint64)
-        tfs = pdf["tf"].to_numpy(np.int64).astype(np.uint64)
-        dls = pdf["dl"].to_numpy(np.int64).astype(np.uint64)
-        pos = pdf["pos"].to_numpy(object)
-        rows = []
-        for s, e in zip(starts, ends):
-            flat = (np.concatenate(
-                [np.asarray(x, dtype=np.uint64) for x in pos[s:e]])
-                if e > s else np.empty(0, dtype=np.uint64))
-            blob = encode_positional(ids[s:e], tfs[s:e], dls[s:e], flat)
-            t = terms[s]
-            rows.append(dict(term=t, df=int(e - s), blob_len=len(blob),
-                             blob=blob, final=t not in hot_terms))
-        return rows
-
-    def fn(batches):
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            terms = pdf["term"].to_numpy(object)
-            salts = pdf["salt"].to_numpy(np.int64)
-            change = np.flatnonzero(
-                (terms[1:] != terms[:-1]) | (salts[1:] != salts[:-1])) + 1
-            starts = np.concatenate(([0], change))
-            if len(starts) == 1:
-                carry = pdf
-                continue
-            carry = pdf.iloc[starts[-1]:].reset_index(drop=True)
-            rows = encode_slice(pdf, starts[:-1], starts[1:])
-            if rows:
-                yield pd.DataFrame(rows)
-        if carry is not None and len(carry):
-            terms = carry["term"].to_numpy(object)
-            salts = carry["salt"].to_numpy(np.int64)
-            change = np.flatnonzero(
-                (terms[1:] != terms[:-1]) | (salts[1:] != salts[:-1])) + 1
-            starts = np.concatenate(([0], change))
-            ends = np.concatenate((starts[1:], [len(carry)]))
-            rows = encode_slice(carry, starts, ends)
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return fn
-
-
 def _merge_partial_pos_runs(hot_terms: set[str]):
     """Phase 1 of the positional layer over MAP-SIDE-COMBINED partial rows
     (tokenize.partial_positional_postings), pre-sorted by (term, salt):
     per run, entries re-sort by doc id (one lexsort; position segments
     follow their entry via a vectorized gather) and each run encodes into
-    one self-contained positional blob — byte-identical to the
-    exploded-row path's output. Carry mirrors _merge_partial_runs."""
+    one self-contained positional blob. Finalization follows
+    _merge_partial_runs: runs outside `hot_terms` are final, and an empty
+    set finalizes every run (update segments)."""
     import pyarrow as pa
 
     from macrobase_spark.index.codec import encode_positional
@@ -505,25 +405,7 @@ def _merge_partial_pos_runs(hot_terms: set[str]):
             names=["term", "df", "blob_len", "blob", "final"])
 
     def fn(batches):
-        carry = None
-        for rb in batches:
-            tbl = pa.Table.from_batches([rb])
-            if carry is not None:
-                tbl = pa.concat_tables([carry, tbl])
-            tbl = tbl.combine_chunks()
-            if tbl.num_rows == 0:
-                carry = None
-                continue
-            starts = _run_starts_arrow(tbl)
-            if len(starts) == 1:
-                carry = tbl
-                continue
-            carry = tbl.slice(int(starts[-1]))
-            yield encode_slice(tbl, starts[:-1], starts[1:])
-        if carry is not None and carry.num_rows:
-            starts = _run_starts_arrow(carry)
-            ends = np.concatenate((starts[1:], [carry.num_rows]))
-            yield encode_slice(carry, starts, ends)
+        return _split_runs(batches, encode_slice)
 
     return fn
 
@@ -577,15 +459,17 @@ def detect_hot_terms(src: DataFrame, sample_frac: float, threshold: int,
     the AmortizedMaintenanceCounter role (legacy/.../count/
     AmortizedMaintenanceCounter.java:35-110) re-expressed as a sampled count.
     Sampling happens BEFORE tokenization, so the pre-pass touches only
-    sample_frac of the text."""
-    from macrobase_spark.index.tokenize import exploded_postings
+    sample_frac of the text. The packed relation holds one entry per
+    (doc, term), so summing its list sizes per term is the sampled document
+    frequency."""
+    from macrobase_spark.index.tokenize import partial_postings
 
     sampled = src.sample(fraction=min(1.0, sample_frac), seed=1)
     hot = (
-        exploded_postings(sampled, doc_id_col, text_col, stopwords=stopwords)
+        partial_postings(sampled, doc_id_col, text_col, stopwords=stopwords)
         .groupBy("term")
-        .count()
-        .filter(F.col("count") >= max(1.0, threshold * sample_frac))
+        .agg(F.sum(F.size("ids")).alias("df"))
+        .filter(F.col("df") >= max(1.0, threshold * sample_frac))
         .select("term")
         .collect()
     )
@@ -607,20 +491,20 @@ def suggest_stopwords(
     function words). Feed the result to build_index(stopwords=...).
 
     Same sampled pre-pass shape as detect_hot_terms: tokenization touches
-    only sample_frac of the text; the count is per-document (exploded
-    relation is one row per (doc, term)). Returns at most max_terms,
+    only sample_frac of the text; the count is per-document (the packed
+    relation has one entry per (doc, term)). Returns at most max_terms,
     most-frequent first (ties by term) — deterministic for a fixed input."""
-    from macrobase_spark.index.tokenize import exploded_postings
+    from macrobase_spark.index.tokenize import partial_postings
 
     sampled = df.select(doc_id_col, text_col).sample(
         fraction=min(1.0, sample_frac), seed=1)
     n = sampled.count()
     if n == 0:
         return []
-    rows = (exploded_postings(sampled, doc_id_col, text_col)
-            .groupBy("term").count()
-            .filter(F.col("count") >= df_frac_threshold * n)
-            .orderBy(F.col("count").desc(), F.col("term"))
+    rows = (partial_postings(sampled, doc_id_col, text_col)
+            .groupBy("term").agg(F.sum(F.size("ids")).alias("df"))
+            .filter(F.col("df") >= df_frac_threshold * n)
+            .orderBy(F.col("df").desc(), F.col("term"))
             .limit(max_terms)
             .collect())
     return [r["term"] for r in rows]
@@ -862,7 +746,7 @@ def build_index(
         # (Catalyst does not reuse the exchange across the union's branches
         # — verified in the executed plan), doubling the dominant phase.
         # The encoded relation is tiny (delta+varint blobs, ~1-2% of the
-        # exploded postings), so caching it is effectively free.
+        # raw postings), so caching it is effectively free.
         from pyspark import StorageLevel
 
         encoded = (
@@ -872,13 +756,6 @@ def build_index(
                         schema=_ENC_SCHEMA)
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        if os.environ.get("MB_ENC_MAT") == "1":
-            # experimental barrier: pin the cache before the union write
-            # (A/B shows the pipelined default wins — see BENCH.md r3 notes)
-            _tp = time.time()
-            encoded.count()
-            phases["encode_materialize"] = phases.get(
-                "encode_materialize", 0.0) + round(time.time() - _tp, 3)
         finals = encoded.filter(F.col("final")).drop("final")
         merged_hot = (
             encoded.filter(~F.col("final")).drop("final")
@@ -933,10 +810,10 @@ def build_index(
         pos_root = os.path.join(out_dir, "positions")
         if not (resume and os.path.exists(os.path.join(pos_root, "_SUCCESS"))):
             _tp = time.time()
-            # map-side combine (r6): packed (term, salt) partial rows with
+            # map-side combine: packed (term, salt) partial rows with
             # entry lists + flat positions — same ~30x shuffle-row
             # reduction as the main layer; the merge kernel re-sorts
-            # entries per run by doc id and emits byte-identical blobs
+            # entries per run by doc id
             from macrobase_spark.index.tokenize import partial_positional_postings
 
             pos_part = partial_positional_postings(
@@ -1237,7 +1114,9 @@ def update_index(
     """
     from pyspark import StorageLevel
 
-    from macrobase_spark.index.tokenize import exploded_postings, turn_features
+    from macrobase_spark.index.tokenize import (partial_positional_postings,
+                                                partial_postings,
+                                                turn_features)
 
     spark = df_new.sparkSession
     restore_compact_backup(out_dir)  # recover any crashed compaction first
@@ -1329,32 +1208,30 @@ def update_index(
         # over the delta (a term can be hot in the delta without being hot in
         # the base corpus)
         hot_set = set(stats.get("hot_terms", []))
-        hot_set |= set(detect_hot_terms(src, 0.1, 50_000, doc_id_col, text_col))
+        hot_set |= set(detect_hot_terms(src, 0.1, 50_000, doc_id_col,
+                                        text_col, stopwords=stop))
 
-        # persisted: the touched-buckets collect AND the encode+write below
-        # both consume this relation — without the pin every update would
-        # re-tokenize the whole delta, and a nondeterministic df_new could
-        # even write buckets the version gate never stamped stale (r4 review)
-        new_post = (exploded_postings(src, doc_id_col, text_col,
-                                      stopwords=stop).withColumn(
+        # the same map-side-combined relation as the fresh build (hot terms
+        # salted by doc_id % S inside the combine). Persisted: the touched-
+        # buckets collect AND the encode+write below both consume it —
+        # without the pin every update would re-tokenize the whole delta,
+        # and a nondeterministic df_new could even write buckets the
+        # version gate never stamped stale (r4 review)
+        new_post = (partial_postings(src, doc_id_col, text_col,
+                                     hot_terms=hot_set,
+                                     salt_partitions=salt_partitions,
+                                     stopwords=stop).withColumn(
             "bucket", F.pmod(F.xxhash64("term"), F.lit(num_buckets)).cast("int"))
             .persist(StorageLevel.MEMORY_AND_DISK))
         touched = [r["bucket"] for r in new_post.select("bucket").distinct().collect()]
         n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        salted = new_post.withColumn(
-            "salt",
-            F.when(
-                F.col("term").isin(list(hot_set)) if hot_set else F.lit(False),
-                F.pmod(F.col("doc_id"), F.lit(salt_partitions)).cast("int"),
-            ).otherwise(F.lit(0)),
-        )
         # encode per (term, salt) run; hot_terms=∅ → every run finalizes with
         # real per-segment block-max metadata (a hot term's delta becomes up to
         # `salt_partitions` segment rows — parallel encode, parallel read)
         new_enc = (
-            salted.repartition(n_shuffle, "term", "salt")
-            .sortWithinPartitions("term", "salt", "doc_id")
-            .mapInArrow(_encode_sorted_runs(set(), avgdl), schema=_ENC_SCHEMA)
+            new_post.drop("bucket").repartition(n_shuffle, "term", "salt")
+            .sortWithinPartitions("term", "salt")
+            .mapInArrow(_merge_partial_runs(set(), avgdl), schema=_ENC_SCHEMA)
             .drop("final")
             .withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(num_buckets)).cast("int"))
             .repartition("bucket")
@@ -1373,24 +1250,14 @@ def update_index(
             # as the main append: a hot term's delta becomes up to
             # salt_partitions finalized segment rows instead of one giant
             # reducer task. compact_index merges segments back to one row.
-            from macrobase_spark.index.tokenize import (
-                exploded_positional_postings)
-
-            pos_salted = (exploded_positional_postings(src, doc_id_col,
-                                                       text_col,
-                                                       stopwords=stop)
-                          .withColumn(
-                "salt",
-                F.when(
-                    F.col("term").isin(list(hot_set)) if hot_set
-                    else F.lit(False),
-                    F.pmod(F.col("doc_id"),
-                           F.lit(salt_partitions)).cast("int"),
-                ).otherwise(F.lit(0))))
+            pos_part = partial_positional_postings(
+                src, doc_id_col, text_col, hot_terms=hot_set,
+                salt_partitions=salt_partitions, stopwords=stop)
             pos_enc = (
-                pos_salted.repartition(n_shuffle, "term", "salt")
-                .sortWithinPartitions("term", "salt", "doc_id")
-                .mapInPandas(_encode_pos_runs(set()), schema=_POS_ENC_SCHEMA)
+                pos_part.repartition(n_shuffle, "term", "salt")
+                .sortWithinPartitions("term", "salt")
+                .mapInArrow(_merge_partial_pos_runs(set()),
+                            schema=_POS_ENC_SCHEMA)
                 .drop("final")
                 .withColumn("bucket", F.pmod(F.xxhash64("term"),
                                              F.lit(num_buckets)).cast("int"))

@@ -183,65 +183,6 @@ def turn_features(df: DataFrame, text_col: str = "text",
         "*", "_f.doc_len", "_f.rep_ratio").drop("_f")
 
 
-def exploded_postings(df: DataFrame, doc_id_col: str = "doc_id",
-                      text_col: str = "text",
-                      emit_empty_docs: bool = False,
-                      stopwords: frozenset | None = None,
-                      keep_terms: frozenset | None = None) -> DataFrame:
-    """text → exploded (doc_id, term, tf, dl) in ONE Arrow pass, skipping
-    per-row array assembly entirely (the index-build hot path: flat numpy →
-    flat output frame, no Python loop over rows OR tokens).
-
-    emit_empty_docs=True adds a (doc_id, NULL, 0, 0) marker row per token-
-    less document so the docs table derived from this relation (the fused
-    single-tokenize build) still covers every document; filter
-    `term IS NOT NULL` for the pure postings view. `stopwords` drops
-    tokens before any stat (see _flat_term_counts) — a doc whose every
-    token is a stopword counts as token-less.
-
-    keep_terms (r6, guide §4.1 — pass only what the caller needs across
-    the boundary) restricts the OUTPUT rows to the given terms AFTER all
-    stats are computed (dl still counts every surviving token), so a
-    term-filtered query ships only its terms' (doc, term, tf, dl) rows
-    out of the kernel instead of the whole vocabulary's."""
-
-    def explode(batches):
-        for pdf in batches:
-            bounds, urow, ucode, counts, vocab, lens = _flat_term_counts(
-                pdf[text_col], stopwords)
-            doc_ids = pdf[doc_id_col].to_numpy(np.int64)
-            if bounds is None:
-                if emit_empty_docs and len(doc_ids):
-                    yield pd.DataFrame(
-                        {"doc_id": doc_ids, "term": [None] * len(doc_ids),
-                         "tf": np.zeros(len(doc_ids), dtype=np.int32),
-                         "dl": np.zeros(len(doc_ids), dtype=np.int32)})
-                continue
-            if keep_terms is not None:
-                kmask = np.isin(vocab, list(keep_terms))[ucode]
-                urow, ucode, counts = urow[kmask], ucode[kmask], counts[kmask]
-            out = pd.DataFrame(
-                {
-                    "doc_id": doc_ids[urow],
-                    "term": vocab[ucode],
-                    "tf": counts.astype(np.int32),
-                    "dl": lens[urow].astype(np.int32),
-                }
-            )
-            if emit_empty_docs:
-                empty = doc_ids[lens == 0]
-                if len(empty):
-                    out = pd.concat([out, pd.DataFrame(
-                        {"doc_id": empty, "term": [None] * len(empty),
-                         "tf": np.zeros(len(empty), dtype=np.int32),
-                         "dl": np.zeros(len(empty), dtype=np.int32)})],
-                        ignore_index=True)
-            yield out
-
-    return df.select(doc_id_col, text_col).mapInPandas(
-        explode, schema="doc_id long, term string, tf int, dl int")
-
-
 def partial_postings(df: DataFrame, doc_id_col: str = "doc_id",
                      text_col: str = "text",
                      hot_terms: set[str] | frozenset | None = None,
@@ -254,11 +195,18 @@ def partial_postings(df: DataFrame, doc_id_col: str = "doc_id",
     the encode shuffle ships ~vocabulary-count rows of packed arrays
     instead of one row per posting (~30x fewer rows), and both Python
     boundary crossings shrink accordingly. `salt` splits hot terms'
-    entries by doc_id % salt_partitions exactly like the exploded path,
-    so the downstream (term, salt) shuffle keeps the same skew story.
+    entries by doc_id % salt_partitions (0 for every other term), so the
+    downstream (term, salt) shuffle spreads a hot term over S reducers.
     The per-batch arrays are ascending in doc_id, so the phase-1 merge
-    (build._merge_partial_runs) reproduces the exploded path's globally
-    doc-sorted runs — and therefore bit-identical posting blobs."""
+    (build._merge_partial_runs) restores each run's global doc order with
+    one lexsort.
+
+    This is the only tokenize → postings relation: the build, the update
+    delta, hot-term detection, suggest_stopwords and the q17 term-stats
+    gate all read it. Every (doc, term) pair is exactly one list entry, so
+    sum(size(ids)) per term is the document frequency and the summed tfs
+    the collection frequency. `stopwords` drops tokens before any stat
+    (see _flat_term_counts) — doc lengths count survivors only."""
     import pyarrow as pa
 
     hot_sorted = sorted(hot_terms) if hot_terms else []
@@ -342,10 +290,13 @@ def partial_positional_postings(df: DataFrame, doc_id_col: str = "doc_id",
     Arrow batch carrying ids/tfs/dls list columns PLUS the run's token
     positions as one flat list (each entry owns tfs[i] ascending
     positions, entries concatenated in ids order) — the map-side combine
-    of the positional index build. With `stopwords`, dropped tokens leave
-    POSITION GAPS (surviving tokens keep original in-document positions)
-    while dl/tf count survivors, exactly like
-    exploded_positional_postings."""
+    of the positional index build and of update_index's positional delta.
+    Positions are extracted with one lexsort over (code, salt, row, pos)
+    keys — no per-token Python. With `stopwords`, dropped tokens leave
+    POSITION GAPS (Lucene StopFilter + position increments): surviving
+    tokens keep their original in-document positions, so a phrase
+    spanning a removed stopword still matches at its original span, while
+    dl/tf count survivors only."""
     import pyarrow as pa
 
     hot_sorted = sorted(hot_terms) if hot_terms else []
@@ -456,72 +407,3 @@ def with_anomaly_score(df: DataFrame, exact: bool = False) -> DataFrame:
     )
     z = F.abs(ll - F.lit(med)) / F.lit(mad * 1.4826)
     return df.withColumn("anomaly", F.greatest(F.col("rep_ratio"), F.tanh(z / 6.0)))
-
-
-def exploded_positional_postings(df: DataFrame, doc_id_col: str = "doc_id",
-                                 text_col: str = "text",
-                                 stopwords: frozenset | None = None
-                                 ) -> DataFrame:
-    """text → (doc_id, term, tf, dl, pos array<int>) in one Arrow pass —
-    the positional-index feed. Same tokenizer/factorize core as
-    exploded_postings, plus each (doc, term)'s ascending token positions,
-    extracted with one lexsort over (row, code) keys (no per-token Python).
-
-    With `stopwords`, dropped tokens leave POSITION GAPS (Lucene
-    StopFilter + position increments): surviving tokens keep their
-    original in-document positions, so a phrase spanning a removed
-    stopword still matches at its original span — while dl/tf count
-    survivors only (consistent with exploded_postings)."""
-
-    def explode(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        for pdf in batches:
-            flat_arr, row_idx, lens = _tokenize_flat_arrow(pdf[text_col])
-            doc_ids = pdf[doc_id_col].to_numpy(np.int64)
-            if len(lens) == 0 or len(flat_arr) == 0:
-                continue
-            # positions within each row: global arange minus row starts
-            row_starts = np.concatenate(([0], np.cumsum(lens)))[:-1]
-            pos_in_row = np.arange(len(flat_arr), dtype=np.int64) - np.repeat(
-                row_starts, lens)
-            if stopwords:
-                keep = pc.invert(pc.is_in(
-                    flat_arr,
-                    value_set=pa.array(sorted(stopwords), type=pa.string())))
-                kn = keep.to_numpy(zero_copy_only=False)
-                flat_arr = flat_arr.filter(keep)
-                row_idx = row_idx[kn]
-                pos_in_row = pos_in_row[kn]  # gaps preserved
-                lens = np.bincount(row_idx, minlength=len(lens))
-                if len(flat_arr) == 0:
-                    continue
-            denc2 = flat_arr.dictionary_encode()
-            codes2 = denc2.indices.to_numpy(zero_copy_only=False).astype(
-                np.int64)
-            vocab2 = denc2.dictionary.to_numpy(zero_copy_only=False)
-            key = row_idx * len(vocab2) + codes2
-            order = np.argsort(key, kind="stable")  # stable → positions
-            # stay ascending within each (row, term) group
-            sk = key[order]
-            grp_start = np.concatenate(
-                ([0], np.flatnonzero(sk[1:] != sk[:-1]) + 1))
-            grp_key = sk[grp_start]
-            grp_len = np.diff(np.concatenate((grp_start, [len(sk)])))
-            g_row = grp_key // len(vocab2)
-            g_code = grp_key % len(vocab2)
-            pos_sorted = pos_in_row[order]
-            pos_col = [pos_sorted[s:s + ln].astype(np.int32).tolist()
-                       for s, ln in zip(grp_start, grp_len)]
-            yield pd.DataFrame({
-                "doc_id": doc_ids[g_row],
-                "term": np.asarray(vocab2, dtype=object)[g_code],
-                "tf": grp_len.astype(np.int32),
-                "dl": lens[g_row].astype(np.int32),
-                "pos": pos_col,
-            })
-
-    return df.select(doc_id_col, text_col).mapInPandas(
-        explode,
-        schema="doc_id long, term string, tf int, dl int, pos array<int>")

@@ -249,6 +249,15 @@ def test_prevalence_ratio_all_outliers_no_crash(spark):
     assert all(r["prevalence_ratio"] == 0.0 for r in out)
 
 
+def test_diff_empty_input_raises_no_outliers(spark):
+    """Zero input rows: the fused GROUPING SETS pass emits no grand-total
+    row, and diff() must still raise its documented ValueError rather than
+    a bare StopIteration from the total-row lookup."""
+    df = spark.createDataFrame([], "a string, b string, _OUTLIER double")
+    with pytest.raises(ValueError, match="no outliers"):
+        diff(df, ["a", "b"], min_support=0.0, min_ratio=0.0, max_order=2)
+
+
 def test_diff_quoted_reserved_word_attrs(spark):
     """r4 review: attr names that are SQL reserved words (or contain
     spaces) must survive the generated GROUPING SETS SQL."""

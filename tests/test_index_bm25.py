@@ -1059,18 +1059,31 @@ def test_boost_batch_matches_single_bitwise(spark, corpus):
         assert by_q.get(qid, []) == want, qid
 
 
-def test_exploded_postings_keep_terms_pushdown(spark, corpus):
-    """keep_terms restricts OUTPUT rows only: the kept rows' (tf, dl) are
-    identical to the unfiltered relation's rows for those terms (dl still
-    counts every token), and no other term crosses the kernel boundary."""
-    from macrobase_spark.index.tokenize import exploded_postings
+def test_update_segments_match_fresh_build_of_delta(spark, tmp_path):
+    """With no hot term anywhere, update_index appends exactly one segment
+    row per delta term, and those rows carry the same (term, df, cf, blob)
+    as a fresh build_index of the delta alone — blob bytes depend only on
+    the delta's (doc, tf, dl) postings, never on avgdl."""
+    from collections import Counter
 
-    df, _, _, _ = corpus
-    want = frozenset({"the", "rare7"})
-    full = {(r["doc_id"], r["term"]): (r["tf"], r["dl"])
-            for r in exploded_postings(df).filter(
-                F.col("term").isin(list(want))).collect()}
-    kept_rows = exploded_postings(df, keep_terms=want).collect()
-    kept = {(r["doc_id"], r["term"]): (r["tf"], r["dl"]) for r in kept_rows}
-    assert kept == full and len(kept_rows) == len(kept)
-    assert {r["term"] for r in kept_rows} <= set(want)
+    from macrobase_spark.index.build import update_index
+
+    base = with_doc_id(synth_transcripts(spark, n_convs=20, seed=42))
+    delta = (with_doc_id(synth_transcripts(spark, n_convs=8, seed=99))
+             .withColumn("doc_id", F.col("doc_id") + 10 ** 9)).cache()
+    out = str(tmp_path / "upd_idx")
+    fresh = str(tmp_path / "delta_idx")
+    build_index(base, out, num_buckets=4, hot_df_threshold=10 ** 9)
+    build_index(delta, fresh, num_buckets=4, hot_df_threshold=10 ** 9)
+
+    def rows(path):
+        return Counter((r["term"], r["df"], r["cf"], bytes(r["blob"]))
+                       for r in read_index(spark, path)[0].select(
+                           "term", "df", "cf", "blob").collect())
+
+    before = rows(out)
+    update_index(delta, out)
+    appended = rows(out) - before
+    want = rows(fresh)
+    assert appended == want and sum(want.values()) > 0
+    delta.unpersist()

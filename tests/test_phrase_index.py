@@ -208,6 +208,37 @@ def test_positional_update_compact_lifecycle(spark, tmp_path):
     delta.unpersist()
 
 
+def test_positional_update_segments_match_fresh_build(spark, tmp_path):
+    """Positional analogue of the main-layer segment check: with no hot
+    term, the positional rows update_index appends equal, on (term, df,
+    blob), those of a fresh positions=True build of the delta alone."""
+    import os
+    from collections import Counter
+
+    from macrobase_spark.index.build import update_index
+
+    base = with_doc_id(synth_transcripts(spark, n_convs=20, seed=7))
+    delta = (with_doc_id(synth_transcripts(spark, n_convs=8, seed=99))
+             .withColumn("doc_id", F.col("doc_id") + 10_000_000)).cache()
+    out = str(tmp_path / "upd_pos")
+    fresh = str(tmp_path / "delta_pos")
+    for src, path in ((base, out), (delta, fresh)):
+        build_index(src, path, num_buckets=4, hot_df_threshold=10 ** 9,
+                    positions=True)
+
+    def rows(path):
+        pos = spark.read.parquet(os.path.join(path, "positions"))
+        return Counter((r["term"], r["df"], bytes(r["blob"]))
+                       for r in pos.select("term", "df", "blob").collect())
+
+    before = rows(out)
+    update_index(delta, out)
+    appended = rows(out) - before
+    want = rows(fresh)
+    assert appended == want and sum(want.values()) > 0
+    delta.unpersist()
+
+
 def test_plain_index_refuses_phrase(spark, tmp_path):
     t = with_doc_id(synth_transcripts(spark, n_convs=10, seed=1))
     out = str(tmp_path / "plain")

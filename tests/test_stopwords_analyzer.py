@@ -135,8 +135,11 @@ def test_update_index_inherits_stoplist(spark, stop_corpus, tmp_path):
         synth_transcripts(spark, n_convs=6, seed=99)).withColumn(
         "doc_id", F.col("doc_id") + 10 ** 9)
     update_index(delta, out2)
-    postings, _, _ = read_index(spark, out2)
+    postings, _, stats = read_index(spark, out2)
     assert postings.filter(F.col("term").isin(STOP)).count() == 0
+    # the delta's hot-term re-detection runs the same analyzer, so a
+    # stopword never enters the persisted hot set
+    assert not set(stats["hot_terms"]) & set(STOP)
     union = docs + [(r["doc_id"], r["text"]) for r in
                     delta.select("doc_id", "text").collect()]
     got = [(r["doc_id"], r["score"]) for r in
@@ -173,10 +176,11 @@ def test_all_stopword_docs_survive_build(spark, tmp_path):
 def test_suggest_stopwords_matches_df_recount(spark):
     """The suggester returns exactly the terms whose document frequency
     meets the threshold, most-frequent first — pinned against a python
-    recount of per-document term presence."""
+    recount of per-document term presence. detect_hot_terms over the full
+    sample counts the same document frequency."""
     from collections import Counter
 
-    from macrobase_spark.index.build import suggest_stopwords
+    from macrobase_spark.index.build import detect_hot_terms, suggest_stopwords
 
     df = with_doc_id(synth_transcripts(spark, n_convs=40, seed=42))
     got = suggest_stopwords(df, df_frac_threshold=0.5, sample_frac=1.0)
@@ -187,6 +191,9 @@ def test_suggest_stopwords_matches_df_recount(spark):
     want = sorted((t for t, c in dfs.items() if c >= 0.5 * len(rows)),
                   key=lambda t: (-dfs[t], t))
     assert got == want and got  # non-empty on this corpus (zipf head)
+    # integer df >= 0.5·n  <=>  df >= ceil(0.5·n)
+    hot = detect_hot_terms(df, 1.0, math.ceil(0.5 * len(rows)))
+    assert sorted(hot) == sorted(want)
     assert suggest_stopwords(df.limit(0), sample_frac=1.0) == []
 
 
