@@ -646,11 +646,16 @@ def q18_bm25_relational(spark, sf):
         F.avg(F.when(F.col("_dl") > 0, F.col("_dl"))).alias("_avgdl"),
     )
     # dl rides the exploded projection (same tokenize pass) instead of a
-    # separate explode→groupBy→join subtree: one Exchange fewer, and the
-    # documents text is tokenized once less per run.
-    toks = d.select(
-        "doc_id", F.size(tokenize_expr("text")).alias("dl"),
-        F.explode(tokenize_expr("text")).alias("term"))
+    # separate explode→groupBy→join subtree: one Exchange fewer. Each doc
+    # is tokenized once, below the Generate, and dl derives from that
+    # array (size(tokenize(text)) beside the explode would sit above the
+    # Generate and re-tokenize per emitted token). explode_outer: a plain
+    # explode makes Catalyst push an inferred size(tokens) > 0 filter
+    # below the projection, tokenizing every doc again; the NULL term an
+    # outer explode emits for a token-less doc fails the term IN filter.
+    toks = (d.select("doc_id", tokenize_expr("text").alias("_toks"))
+            .select("doc_id", F.size("_toks").alias("dl"), "_toks")
+            .select("doc_id", "dl", F.explode_outer("_toks").alias("term")))
     tf = (
         toks.filter(F.col("term").isin(q_terms))
         .groupBy("doc_id", "term").agg(F.count("*").alias("tf"),

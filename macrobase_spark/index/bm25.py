@@ -1,19 +1,34 @@
-"""BM25 top-k query over the inverted index, plus an exact pure-Python oracle
-for rank-identity testing.
+"""BM25 query family over the inverted index (top-k, batch, sharded, count,
+match ids, facets, explain, phrase), plus exact pure-Python oracles for
+rank-identity testing.
 
 Scoring (Robertson/Lucene BM25, k1=1.2, b=0.75):
     idf(t)      = ln(1 + (N − df + 0.5)/(df + 0.5))
     score(d, q) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))
 
-Query plan:
-  postings parquet → filter term IN query_terms   (row-group pruning: the
-    postings files are sorted by term within bucket partitions, so parquet
-    min/max statistics skip non-matching row groups — index lookup, not scan)
-  → mapInPandas decode+score (numpy; per-term block-max pruning keeps only
-    blocks whose BM25 upper bound can still reach the per-partition top-k —
-    the block-max-WAND idea, safe/exact because bounds are conservative)
-  → per-partition top-k candidates → groupBy(doc_id) sum across terms
-  → global orderBy(score desc, doc_id asc) LIMIT k.
+Every term-query entry point runs the same three stages:
+
+  1. resolve (`_resolve`, driver-side): parse the micro-syntax, drop
+     stoplisted tokens, add synonym alternates, expand prefix / fuzzy /
+     regexp tokens against the term dictionary (`_TermDict`: at most one
+     column-pruned term scan per token kind for the whole call, positive
+     and negative tokens and every query of a batch together), apply boost
+     precedence, and refuse the option combinations no surface supports.
+     The result is one `_Clauses(terms, nterms, boosts)` per query.
+  2. candidate / match set: bucket pruning (`_prune_buckets`: term →
+     bucket is computed driver-side, so only matching bucket directories
+     are listed; parquet row-group statistics then skip non-matching
+     terms). Scoring surfaces decode+score the candidate blobs in Arrow
+     (`_score_partition`, with per-term block-max / WAND pruning where it
+     stays exact) and sum contributions per doc (`_doc_scores`);
+     membership surfaces (count, match ids, facets) decode ids only
+     (`_match_set`).
+  3. restrict (`_restrict`): the MUST_NOT anti-join, pending-tombstone
+     anti-joins and the doc_filter semi-join, applied identically by every
+     surface; then the surface's own tail (top-k, per-query windows, facet
+     aggregation, explain rows).
+
+A sharded call is the same pipeline over several index handles.
 
 Determinism/rank-identity: postings are scored in docID order with float64
 throughout; ties broken by ascending doc_id. Scores are identical bits to the
@@ -26,13 +41,15 @@ from __future__ import annotations
 
 import math
 from collections import Counter
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from macrobase_spark.index.build import read_index, K1, B, BLOCK_SIZE
+from macrobase_spark.index.build import (read_index, has_tombstones, K1, B,
+                                         BLOCK_SIZE)
 from macrobase_spark.index.tokenize import TOKEN_PATTERN
 
 
@@ -144,16 +161,6 @@ def _parse_query_full(q: str) -> ParsedQuery:
     return pq
 
 
-def _parse_query(q: str) -> tuple[list[str], list[str], list[str],
-                                  list[str], dict[str, float]]:
-    """Legacy 5-tuple view of _parse_query_full → (terms, prefixes,
-    neg_terms, neg_prefixes, boosts); fuzzy tokens are NOT included —
-    callers that support fuzzy use _parse_query_full."""
-    pq = _parse_query_full(q)
-    return (sorted(pq.terms), sorted(pq.prefixes), sorted(pq.neg_terms),
-            sorted(pq.neg_prefixes), pq.boosts)
-
-
 def _tokenize_query_wild(q: str) -> tuple[list[str], list[str]]:
     """Positive side of the query only: (exact terms, prefix patterns).
     Exclusion tokens (`-tok`) are dropped — callers that render or expand
@@ -167,18 +174,18 @@ def _tokenize_query_wild(q: str) -> tuple[list[str], list[str]]:
 
 
 def _expand_prefixes(postings: DataFrame, prefixes: list[str],
-                     max_expansions: int,
-                     total_cap: int | None = None) -> list[str]:
+                     max_expansions: int) -> list[str]:
     """Expand prefix wildcards against the index's term dictionary.
 
     The scan cannot bucket-prune (term → bucket is a hash, so a prefix
     spans every bucket) but it reads ONLY the tiny `term` column of the
     postings parquet — column pruning keeps the posting blobs untouched,
     so at 100 TB this is a dictionary scan, not an index scan. Expansion
-    is bounded: more than `max_expansions` matching terms raises loudly
-    (rank-exactness over silent truncation — Lucene's
-    maxClauseCount/TooManyClauses policy)."""
-    cap = max_expansions if total_cap is None else total_cap
+    is bounded: the scan stops at max_expansions·len(prefixes) terms and
+    raises loudly above it (rank-exactness over silent truncation —
+    Lucene's maxClauseCount/TooManyClauses policy); _TermDict applies the
+    per-query bound."""
+    cap = max_expansions * len(prefixes)
     cond = F.col("term").startswith(prefixes[0])
     for p in prefixes[1:]:
         cond = cond | F.col("term").startswith(p)
@@ -187,8 +194,7 @@ def _expand_prefixes(postings: DataFrame, prefixes: list[str],
     if len(rows) > cap:
         raise ValueError(
             f"prefix wildcard(s) {prefixes!r} expand to more than "
-            f"{max_expansions} terms — narrow the prefix or raise "
-            "max_expansions")
+            f"{cap} terms — narrow the prefix or raise max_expansions")
     return sorted(r["term"] for r in rows)
 
 
@@ -203,9 +209,11 @@ _FIELD_SCOPE_RE = _re.compile(
     r"):([A-Za-z0-9_.\-]+)")
 
 
-def _split_field_scopes(q: str) -> tuple[str, str | None]:
+def _split_field_scopes(q: str, doc_filter: str | None = None
+                        ) -> tuple[str, str | None]:
     """Strip `field:value` tokens from the query and render them as a SQL
-    predicate over the docs metadata: same-field values OR together
+    predicate over the docs metadata, AND-ed with an explicit doc_filter
+    (returned as the call's doc_filter): same-field values OR together
     (role:user role:tool = either), distinct fields AND (Lucene's implicit
     per-field disjunction under a conjunctive filter). `-field:value`
     negates (MUST_NOT the scope): same-field negatives AND together as a
@@ -222,7 +230,7 @@ def _split_field_scopes(q: str) -> tuple[str, str | None]:
 
     stripped = _FIELD_SCOPE_RE.sub(_take, q)
     if not scopes and not neg_scopes:
-        return q, None
+        return q, doc_filter
     preds = []
     for f in sorted(scopes):
         vs = sorted(scopes[f])
@@ -232,13 +240,9 @@ def _split_field_scopes(q: str) -> tuple[str, str | None]:
         vs = sorted(neg_scopes[f])
         preds.append(f"{f} <> '{vs[0]}'" if len(vs) == 1 else
                      f"{f} NOT IN (" + ", ".join(f"'{v}'" for v in vs) + ")")
-    return stripped, " AND ".join(preds)
-
-
-def _merge_doc_filter(doc_filter: str | None, scope: str | None) -> str | None:
-    if scope is None:
-        return doc_filter
-    return scope if doc_filter is None else f"({doc_filter}) AND ({scope})"
+    scope = " AND ".join(preds)
+    return stripped, (scope if doc_filter is None
+                      else f"({doc_filter}) AND ({scope})")
 
 
 def _sort_columns(sort_by: str):
@@ -284,16 +288,15 @@ def _edit_distance(a: str, b: str, limit: int) -> int:
 
 
 def _expand_fuzzy(postings: DataFrame, fuzzies: dict[str, int],
-                  max_expansions: int) -> dict[str, list[str]]:
+                  max_expansions: int) -> list[str]:
     """Expand fuzzy tokens (`tok~N`) against the term dictionary: every
-    indexed term within N edits of the token (Lucene FuzzyQuery's
+    indexed term within N edits of some token (Lucene FuzzyQuery's
     dictionary-intersection rewrite, done as a length-banded levenshtein
     filter instead of a Levenshtein automaton — the same column-pruned
-    term-only scan as _expand_prefixes, so blobs are never read).
-    Candidate assignment back to tokens happens driver-side with a
-    limit-banded DP. Per-token expansions above max_expansions raise
-    loudly (the TooManyClauses policy); the combined scan is capped at
-    max_expansions·len(fuzzies)."""
+    term-only scan as _expand_prefixes, so blobs are never read). The
+    combined scan is capped at max_expansions·len(fuzzies); _TermDict
+    assigns candidates back to tokens driver-side with a limit-banded DP
+    and applies the per-token bound (the TooManyClauses policy)."""
     cond = None
     for tok, nmax in sorted(fuzzies.items()):
         c = ((F.length("term") >= len(tok) - nmax)
@@ -308,20 +311,7 @@ def _expand_fuzzy(postings: DataFrame, fuzzies: dict[str, int],
             f"fuzzy token(s) {sorted(fuzzies)!r} expand to more than "
             f"{cap} dictionary terms combined — tighten the distance or "
             "raise max_expansions")
-    out: dict[str, list[str]] = {t: [] for t in fuzzies}
-    for r in rows:
-        term = r["term"]
-        for tok, nmax in fuzzies.items():
-            if _edit_distance(tok, term, nmax) <= nmax:
-                out[tok].append(term)
-    for tok in out:
-        if len(out[tok]) > max_expansions:
-            raise ValueError(
-                f"fuzzy token {tok!r}~{fuzzies[tok]} expands to more "
-                f"than {max_expansions} terms — tighten the distance or "
-                "raise max_expansions")
-        out[tok] = sorted(out[tok])
-    return out
+    return sorted(r["term"] for r in rows)
 
 
 def _reject_regexes(pq: "ParsedQuery", where: str) -> None:
@@ -338,34 +328,55 @@ def _expand_regex(postings: DataFrame, patterns: list[str],
     """Expand `/pat/` regexp tokens against the term dictionary (Lucene
     RegexpQuery's rewrite): each pattern matches WHOLE terms (anchored),
     evaluated JVM-side by rlike over the same column-pruned term-only
-    scan as prefixes/fuzzies — one scan per pattern so expansions assign
-    to their pattern without cross-engine regex re-evaluation. Per-pattern
-    expansions above max_expansions raise (TooManyClauses policy); an
-    invalid pattern surfaces Spark's own parse error."""
+    scan as prefixes/fuzzies. ONE scan serves every pattern: each row
+    carries one match flag per pattern, so expansions assign to their
+    pattern without cross-engine regex re-evaluation. The scan is capped
+    at max_expansions·len(patterns) — a truncated scan still leaves some
+    pattern above the bound — and per-pattern expansions above
+    max_expansions raise (TooManyClauses policy); an invalid pattern
+    surfaces Spark's own parse error."""
+    flags = [F.col("term").rlike(f"^(?:{p})$").alias(f"_r{i}")
+             for i, p in enumerate(patterns)]
+    cond = F.col("_r0")
+    for i in range(1, len(patterns)):
+        cond = cond | F.col(f"_r{i}")
+    cap = max_expansions * len(patterns)
+    rows = (postings.select("term", *flags).filter(cond).distinct()
+            .limit(cap + 1).collect())
     out: dict[str, list[str]] = {}
-    for pat in sorted(patterns):
-        rows = (postings.filter(
-                    F.col("term").rlike(f"^(?:{pat})$"))
-                .select("term").distinct()
-                .limit(max_expansions + 1).collect())
-        if len(rows) > max_expansions:
+    for i, pat in enumerate(patterns):
+        out[pat] = sorted(r["term"] for r in rows if r[f"_r{i}"])
+        if len(out[pat]) > max_expansions:
             raise ValueError(
                 f"regexp token /{pat}/ expands to more than "
                 f"{max_expansions} dictionary terms — tighten the pattern "
                 "or raise max_expansions")
-        out[pat] = sorted(r["term"] for r in rows)
     return out
 
 
-def _after_cursor(after) -> tuple[float, int]:
-    """Normalize a search-after cursor: a previous-page Row (or mapping)
+def _after_cursor(rel: DataFrame, after) -> DataFrame:
+    """Search-after: keep only rows STRICTLY after the cursor in ranking
+    order (score desc, doc_id asc) — exact because scores are
+    bitwise-reproducible. The cursor is a previous-page Row (or mapping)
     with doc_id/score fields, or an explicit (score, doc_id) tuple."""
     try:
-        return float(after["score"]), int(after["doc_id"])
+        s0, d0 = float(after["score"]), int(after["doc_id"])
     except (TypeError, IndexError, KeyError):
-        pass
-    s0, d0 = after
-    return float(s0), int(d0)
+        s0, d0 = after
+        s0, d0 = float(s0), int(d0)
+    return rel.filter((F.col("score") < s0)
+                      | ((F.col("score") == s0) & (F.col("doc_id") > d0)))
+
+
+def _rank_within(rel: DataFrame, key: str, col: str = "rank",
+                 score: str = "score") -> DataFrame:
+    """row_number within each `key` partition in ranking order (score
+    desc, doc_id asc)."""
+    from pyspark.sql import Window as W
+
+    return rel.withColumn(col, F.row_number().over(
+        W.partitionBy(key).orderBy(F.col(score).desc(),
+                                   F.col("doc_id").asc())))
 
 
 def _term_doc_ids(postings: DataFrame, terms: list[str],
@@ -391,6 +402,294 @@ def _term_doc_ids(postings: DataFrame, terms: list[str],
     schema = ("doc_id long, term string" if with_term else "doc_id long")
     return (postings.filter(F.col("term").isin(terms))
             .select("term", "blob").mapInPandas(ids_only, schema=schema))
+
+
+# ------------------------------------------------ shared query stages
+
+class _Index(NamedTuple):
+    postings: DataFrame
+    docs: DataFrame
+    stats: dict
+    dir: str
+
+
+def _open(spark: SparkSession, index_dir: str) -> _Index:
+    return _Index(*read_index(spark, index_dir), index_dir)
+
+
+class _Clauses(NamedTuple):
+    """One resolved query: sorted scored terms, sorted excluded terms,
+    effective per-term boosts (absent = 1.0)."""
+    terms: list[str]
+    nterms: list[str]
+    boosts: dict[str, float]
+
+
+def _check_mode(mode: str, min_should_match: int | None) -> int | None:
+    """Validate mode / min_should_match; returns the effective m (None
+    for the disjunctive default — m=1 is a no-op)."""
+    if mode not in ("or", "and"):
+        raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
+    if min_should_match is not None:
+        if not isinstance(min_should_match, int) or min_should_match < 1:
+            raise ValueError("min_should_match must be a positive int, "
+                             f"got {min_should_match!r}")
+        if mode == "and":
+            raise ValueError(
+                "min_should_match does not compose with mode='and' — "
+                "'and' already requires every term; pass one or the other")
+    return min_should_match if (min_should_match or 0) > 1 else None
+
+
+class _TermDict:
+    """The term-dictionary side of one call: at most ONE column-pruned
+    term scan per token kind (prefix, fuzzy, regexp) covers every query's
+    positive and negative tokens; lookups are answered on the driver,
+    each bounded by max_expansions (TooManyClauses)."""
+
+    def __init__(self, postings: DataFrame, pqs: list[ParsedQuery],
+                 max_expansions: int):
+        self.max_expansions = max_expansions
+        prefixes = sorted({p for pq in pqs
+                           for p in (*pq.prefixes, *pq.neg_prefixes)})
+        fuzzies: dict[str, int] = {}
+        for pq in pqs:
+            for tok, nv in (*pq.fuzzies.items(), *pq.neg_fuzzies.items()):
+                fuzzies[tok] = max(nv, fuzzies.get(tok, 0))
+        regexes = sorted({p for pq in pqs
+                          for p in (*pq.regexes, *pq.neg_regexes)})
+        self._prefixed = (_expand_prefixes(postings, prefixes, max_expansions)
+                          if prefixes else [])
+        self._fuzzy = (_expand_fuzzy(postings, fuzzies, max_expansions)
+                       if fuzzies else [])
+        self._regex = (_expand_regex(postings, regexes, max_expansions)
+                       if regexes else {})
+
+    def prefixed(self, prefixes: set[str]) -> list[str]:
+        out = [t for t in self._prefixed
+               if any(t.startswith(p) for p in prefixes)]
+        if len(out) > self.max_expansions:
+            raise ValueError(
+                f"prefix wildcard(s) {sorted(prefixes)!r} expand to more "
+                f"than {self.max_expansions} terms — narrow the prefix or "
+                "raise max_expansions")
+        return out
+
+    def fuzzy(self, fuzzies: dict[str, int]) -> dict[str, list[str]]:
+        out = {tok: [t for t in self._fuzzy if _edit_distance(tok, t, nv) <= nv]
+               for tok, nv in fuzzies.items()}
+        for tok, ts in out.items():
+            if len(ts) > self.max_expansions:
+                raise ValueError(
+                    f"fuzzy token {tok!r}~{fuzzies[tok]} expands to more "
+                    f"than {self.max_expansions} terms — tighten the "
+                    "distance or raise max_expansions")
+        return out
+
+    def regex(self, patterns: set[str]) -> dict[str, list[str]]:
+        return {p: self._regex[p] for p in patterns}
+
+
+def _resolve(postings: DataFrame, stats: dict, pqs: list[ParsedQuery],
+             mode: str = "or", msm: int | None = None,
+             synonyms: dict[str, list[str]] | None = None,
+             max_expansions: int = 128) -> list[_Clauses]:
+    """Resolve parsed queries into term clauses against one index:
+    stoplisted terms drop (they have no postings, so mode='and' / m count
+    only indexable terms); synonym alternates and positive prefix / fuzzy
+    / regexp expansions join the scored terms, negative ones the
+    exclusions, all through one _TermDict; an explicit term boost wins,
+    else the largest boost of a source covering the term. Positive
+    expansions and synonyms refuse mode='and' / m > 1 (per-slot "any
+    expansion" semantics are not implemented); exclusions may expand."""
+    if mode == "and" or msm is not None:
+        if any(pq.prefixes or pq.fuzzies or pq.regexes for pq in pqs):
+            raise ValueError(
+                "prefix wildcards / fuzzy / regexp tokens are not "
+                "supported with mode='and' / min_should_match — expand "
+                "into explicit terms for conjunctive retrieval")
+        if synonyms:
+            raise ValueError(
+                "synonyms are not supported with mode='and' / "
+                "min_should_match — expand into explicit terms for "
+                "conjunctive retrieval")
+    stop = set(stats.get("stopwords", []))
+    syn = {src.strip().lower(): sorted({a.strip().lower() for a in alts}
+                                       - stop - {""})
+           for src, alts in (synonyms or {}).items()}
+    tdict = _TermDict(postings, pqs, max_expansions)
+    out = []
+    for pq in pqs:
+        qb = pq.boosts
+        explicit = pq.terms - stop
+        # (boost key, terms it covers) for every non-prefix source
+        covers = [(s, alts) for s, alts in syn.items()
+                  if s in pq.terms and alts]
+        covers += [*tdict.fuzzy(pq.fuzzies).items(),
+                   *tdict.regex(pq.regexes).items()]
+        terms = set(explicit).union(*(ts for _, ts in covers))
+        if pq.prefixes:
+            terms.update(tdict.prefixed(pq.prefixes))
+        boosts = {t: qb[t] for t in explicit if t in qb}
+        for t in terms - boosts.keys():
+            pbs = [qb[p] for p in pq.prefixes
+                   if p in qb and t.startswith(p)]
+            pbs += [qb[s] for s, ts in covers if s in qb and t in ts]
+            if pbs:
+                boosts[t] = max(pbs)
+        nterms = (pq.neg_terms - stop).union(
+            *tdict.fuzzy(pq.neg_fuzzies).values(),
+            *tdict.regex(pq.neg_regexes).values())
+        if pq.neg_prefixes:
+            nterms.update(tdict.prefixed(pq.neg_prefixes))
+        out.append(_Clauses(sorted(terms), sorted(nterms), boosts))
+    return out
+
+
+def _idf(n_docs: int, df: float) -> float:
+    return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+
+
+def _prune_buckets(postings: DataFrame, stats: dict, terms: list[str]
+                   ) -> tuple[DataFrame, list[int] | None]:
+    """Partition pruning: term → bucket = pmod(xxhash64(term), B) computed
+    driver-side, so only matching bucket directories are even listed.
+    Returns (pruned postings, buckets | None when unbucketed)."""
+    if "num_buckets" not in stats:
+        return postings, None
+    from macrobase_spark.index.xxh64 import term_bucket
+
+    buckets = sorted({term_bucket(t, stats["num_buckets"]) for t in terms})
+    return postings.filter(F.col("bucket").isin(buckets)), buckets
+
+
+def _bounds_current(index_dir: str, stats: dict, buckets: list[int]) -> bool:
+    """Version gate: buckets an incremental update did not touch carry
+    block-max bounds computed under an older avgdl — untrustworthy until
+    rewritten or compacted (exactness over speed)."""
+    from macrobase_spark.index.build import bucket_versions
+
+    sv = stats.get("version", 1)
+    bv = bucket_versions(index_dir)
+    return all(bv.get(b, 1) == sv for b in buckets)
+
+
+def _term_dfs(cand: DataFrame) -> dict[str, int]:
+    """Per-term df summed over candidate rows (a term spans several rows
+    on a segmented index and across shards): one tiny metadata job."""
+    return {r["term"]: r["df"] for r in
+            cand.groupBy("term").agg(F.sum("df").alias("df")).collect()}
+
+
+def _doc_scores(contrib: DataFrame, mode: str = "or", msm: int | None = None,
+                need=None, keys: tuple[str, ...] = ("doc_id",)) -> DataFrame:
+    """Per-doc score = the ascending-term sum of the (term, doc)
+    contributions (bitwise-reproducible float order). The matched-term
+    count (a (term, doc) pair lives in one segment) rides the same
+    aggregate and filters mode='and' (== need: a term count, or a
+    (query_id, _need) relation for a batch) and m (>= msm)."""
+    scored = contrib.groupBy(*keys).agg(
+        F.aggregate(
+            F.array_sort(F.collect_list(F.struct("term", "contrib"))),
+            F.lit(0.0),
+            lambda acc, x: acc + x["contrib"],
+        ).alias("score"),
+        F.count("term").alias("_nt"),
+    )
+    if mode == "and":
+        if isinstance(need, DataFrame):
+            scored = scored.join(F.broadcast(need), "query_id")
+            need = F.col("_need")
+        scored = scored.filter(F.col("_nt") == need)
+    elif msm is not None:
+        scored = scored.filter(F.col("_nt") >= msm)
+    return scored.drop("_nt", "_need")
+
+
+def _union(parts: list[DataFrame]) -> DataFrame:
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
+
+
+def _restrict(spark: SparkSession, rel: DataFrame, handles: list[_Index],
+              doc_filter: str | None, excl: list[DataFrame] = (),
+              on="doc_id") -> DataFrame:
+    """The restrictions every surface applies before its own tail:
+    MUST_NOT anti-joins (`on` is (query_id, doc_id) for a batch), the
+    handles' pending deletes (they vanish at once; corpus stats count
+    them until compact_index purges — Lucene semantics), and the
+    doc_filter semi-join against the filtered docs projections."""
+    from macrobase_spark.index.build import tombstone_ids
+
+    for part in excl:
+        rel = rel.join(part, on, "anti")
+    for h in handles:
+        tomb = tombstone_ids(spark, h.dir)
+        if tomb is not None:
+            rel = rel.join(tomb, "doc_id", "anti")
+    if doc_filter is not None:
+        rel = rel.join(_union([h.docs.filter(F.expr(doc_filter))
+                               .select("doc_id") for h in handles]),
+                       "doc_id", "semi")
+    return rel
+
+
+def _match_set(spark: SparkSession, handles: list[_Index], clauses: _Clauses,
+               mode: str = "or", msm: int | None = None,
+               doc_filter: str | None = None) -> DataFrame | None:
+    """The query's full match set as an ids-only (doc_id) relation over
+    index handles (a doc lives in one shard, so shard sets union exactly)
+    under mode / m / exclusions / doc_filter / tombstones; None when no
+    document can match."""
+    terms, nterms, _ = clauses
+    if not terms or (msm is not None and msm > len(terms)):
+        return None
+    parts = []
+    for h in handles:
+        postings, _ = _prune_buckets(h.postings, h.stats, [*terms, *nterms])
+        if mode == "and" or msm is not None:
+            # distinct-term count per doc: exact on segmented indexes too
+            ok = (F.col("_nt") == len(terms) if mode == "and"
+                  else F.col("_nt") >= msm)
+            m = (_term_doc_ids(postings, terms, with_term=True)
+                 .groupBy("doc_id")
+                 .agg(F.countDistinct("term").alias("_nt"))
+                 .filter(ok).select("doc_id"))
+        else:
+            m = _term_doc_ids(postings, terms).distinct()
+        excl = [_term_doc_ids(postings, nterms)] if nterms else []
+        parts.append(_restrict(spark, m, [h], doc_filter, excl))
+    return _union(parts)
+
+
+def _empty_topk(spark: SparkSession, docs: DataFrame | None = None,
+                sort_by: str | None = None,
+                collapse: str | None = None) -> DataFrame:
+    """A zero-hit top-k in the non-empty path's schema (sort_by / collapse
+    append their metadata columns)."""
+    extra = (dict.fromkeys(_sort_columns(sort_by)[1]) if sort_by
+             else [collapse] if collapse else [])
+    return spark.createDataFrame([], ", ".join(
+        ["doc_id long", "score double"]
+        + [f"{c} {docs.schema[c].dataType.simpleString()}" for c in extra]))
+
+
+def _check_shards(where: str, handles: list[_Index], pq: ParsedQuery) -> None:
+    """Sharded surfaces need one analyzer and no per-shard resolution."""
+    stops = {tuple(h.stats.get("stopwords", [])) for h in handles}
+    if len(stops) > 1:
+        raise ValueError(
+            f"{where}: shards were built with DIFFERENT stoplists "
+            f"{sorted(stops)!r} — global scoring would mix analyzers; "
+            "rebuild with one list")
+    if (pq.prefixes or pq.neg_prefixes or pq.fuzzies or pq.neg_fuzzies
+            or pq.regexes or pq.neg_regexes or pq.boosts):
+        raise ValueError(
+            f"{where}: wildcard/fuzzy/boost tokens are not supported "
+            "across shards — pre-expand the query or use bm25_topk per "
+            "shard")
 
 
 def _score_partition(n_docs: int, avgdl: float, k: int, single_term: bool,
@@ -527,7 +826,9 @@ def bm25_topk(
     are exclusions (Lucene MUST_NOT): docs containing ANY excluded term
     are dropped before top-k and excluded terms never contribute to the
     score. ``-pre*`` excludes every expansion of the prefix. A query with
-    ONLY exclusions returns empty (nothing to rank). Exclusions compose
+    ONLY exclusions (or only stoplisted terms) returns empty, in the same
+    columns as any zero-hit result (sort_by / collapse columns included).
+    Exclusions compose
     with every other option; block pruning is disabled when present (an
     exclusion can promote docs from pruned blocks into the top-k).
 
@@ -652,166 +953,53 @@ def bm25_topk(
     pages never show a group twice. Pruning is disabled (a group winner
     can sit below the uncollapsed kth score); not combinable with
     sort_by in v1."""
-    if mode not in ("or", "and"):
-        raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
-    if min_should_match is not None:
-        if not isinstance(min_should_match, int) or min_should_match < 1:
-            raise ValueError("min_should_match must be a positive int, "
-                             f"got {min_should_match!r}")
-        if mode == "and":
-            raise ValueError(
-                "min_should_match does not compose with mode='and' — "
-                "'and' already requires every term; pass one or the other")
+    msm = _check_mode(mode, min_should_match)
     if after is not None and sort_by is not None:
         raise ValueError("after= is a score-order cursor — it does not "
                          "compose with sort_by")
     if collapse is not None and sort_by is not None:
         raise ValueError("collapse does not compose with sort_by (v1) — "
                          "collapse ranks group winners by score")
-    query, _scope = _split_field_scopes(query)
-    doc_filter = _merge_doc_filter(doc_filter, _scope)
-    postings, docs, stats = read_index(spark, index_dir)
-    pq = _parse_query_full(query)
-    # index-time stoplist: stoplisted query terms have no postings; drop
-    # them up front so mode='and' requires only indexable terms and a
-    # stopword exclusion is a no-op (Lucene query-analyzer symmetry)
-    _stop = set(stats.get("stopwords", []))
-    terms = sorted(pq.terms - _stop)
-    prefixes = sorted(pq.prefixes)
-    nterms, nprefixes = sorted(pq.neg_terms - _stop), sorted(pq.neg_prefixes)
-    qboosts = pq.boosts
-    explicit_terms = list(terms)
-    if prefixes or pq.fuzzies or pq.regexes:
-        if mode == "and" or (min_should_match or 0) > 1:
+    query, doc_filter = _split_field_scopes(query, doc_filter)
+    ix = _open(spark, index_dir)
+    postings, docs, stats = ix.postings, ix.docs, ix.stats
+    have = sorted(set(docs.columns) - {"doc_id"})
+    if sort_by is not None:
+        sort_cols, names = _sort_columns(sort_by)
+        missing = [c for c in names if c not in have]
+        if missing:
             raise ValueError(
-                "prefix wildcards / fuzzy / regexp tokens are not "
-                "supported with mode='and' / min_should_match — expand "
-                "into explicit terms for conjunctive retrieval")
-    # normalize: m=1 is the disjunctive default (no-op); m above the
-    # indexable term count can never be satisfied
-    msm = min_should_match if (min_should_match or 0) > 1 else None
-    if msm is not None and msm > len(terms):
-        # unsatisfiable m: empty result with the SAME schema the non-empty
-        # path would produce (sort_by/collapse append metadata columns —
-        # an empty bare (doc_id, score) frame would break downstream
-        # selects of those columns)
-        from pyspark.sql.types import (DoubleType, LongType, StructField,
-                                       StructType)
-
-        fields = [StructField("doc_id", LongType()),
-                  StructField("score", DoubleType())]
-        extra: list[str] = []
-        if sort_by is not None:
-            _, _names = _sort_columns(sort_by)
-            extra = list(dict.fromkeys(_names))
-        elif collapse is not None:
-            extra = [collapse]
-        fields += [docs.schema[c] for c in extra if c in docs.columns]
-        return spark.createDataFrame([], StructType(fields))
-    # query-time synonym expansion: alternates of query terms join the
-    # disjunction, each with its own idf (scoring-boolean rewrite)
-    smap: dict[str, list[str]] = {}
-    if synonyms:
-        if mode == "and" or msm is not None:
-            raise ValueError(
-                "synonyms are not supported with mode='and' / "
-                "min_should_match — expand into explicit terms for "
-                "conjunctive retrieval")
-        for src, alts in synonyms.items():
-            src_l = src.strip().lower()
-            if src_l not in pq.terms:
-                continue
-            added = sorted({a.strip().lower() for a in alts}
-                           - _stop - {""})
-            if added:
-                smap[src_l] = added
-        if smap:
-            terms = sorted(set(terms) |
-                           {a for alts in smap.values() for a in alts})
-    if prefixes:
-        terms = sorted(set(terms) |
-                       set(_expand_prefixes(postings, prefixes,
-                                            max_expansions)))
-    fmap: dict[str, list[str]] = {}
-    if pq.fuzzies:
-        fmap = _expand_fuzzy(postings, pq.fuzzies, max_expansions)
-        terms = sorted(set(terms) |
-                       {t for ts in fmap.values() for t in ts})
-    rmap: dict[str, list[str]] = {}
-    if pq.regexes:
-        rmap = _expand_regex(postings, sorted(pq.regexes), max_expansions)
-        terms = sorted(set(terms) |
-                       {t for ts in rmap.values() for t in ts})
-    # effective per-term boosts: explicit term boost wins; a prefix boost
-    # (pre*^2), fuzzy boost (tok~1^2), or regexp boost (/pat/^2) covers
-    # its expansions; the largest wins on overlap
-    boosts: dict[str, float] | None = None
-    if qboosts:
-        boosts = {t: qboosts[t] for t in explicit_terms if t in qboosts}
-        for t in terms:
-            if t in boosts:
-                continue
-            pbs = [qboosts[p] for p in prefixes
-                   if p in qboosts and t.startswith(p)]
-            pbs += [qboosts[ftok] for ftok, exps in fmap.items()
-                    if ftok in qboosts and t in exps]
-            pbs += [qboosts[pat] for pat, exps in rmap.items()
-                    if pat in qboosts and t in exps]
-            # a boost on a query term covers its synonym alternates
-            pbs += [qboosts[src] for src, alts in smap.items()
-                    if src in qboosts and t in alts]
-            if pbs:
-                boosts[t] = max(pbs)
-        boosts = boosts or None
-    if nprefixes:
-        nterms = sorted(set(nterms) |
-                        set(_expand_prefixes(postings, nprefixes,
-                                             max_expansions)))
-    if pq.neg_fuzzies:
-        nfmap = _expand_fuzzy(postings, pq.neg_fuzzies, max_expansions)
-        nterms = sorted(set(nterms) |
-                        {t for ts in nfmap.values() for t in ts})
-    if pq.neg_regexes:
-        nrmap = _expand_regex(postings, sorted(pq.neg_regexes),
-                              max_expansions)
-        nterms = sorted(set(nterms) |
-                        {t for ts in nrmap.values() for t in ts})
+                f"sort_by: {missing!r} not sortable docs-metadata "
+                f"columns (have {have})")
+    if collapse is not None and collapse not in have:
+        raise ValueError(
+            f"collapse: {collapse!r} not a docs-metadata column "
+            f"(have {have})")
+    [(terms, nterms, boosts)] = _resolve(
+        postings, stats, [_parse_query_full(query)], mode, msm, synonyms,
+        max_expansions)
+    # no indexable term, or an m above the indexable term count: nothing
+    # can match
+    if not terms or (msm is not None and msm > len(terms)):
+        return _empty_topk(spark, docs, sort_by, collapse)
     n, avgdl = stats["n_docs"], stats["avgdl"]
     # anomaly/filter/exclusion/tombstone modifiers change the final ranking
     # AFTER raw-BM25 scoring (filtering can promote docs from pruned
     # blocks; weighting reorders), so every block-pruning θ computed from
     # raw scores is invalid — score fully. Exactness over speed, same
     # policy as the stale-version gate.
-    from macrobase_spark.index.build import tombstone_ids
-
-    tomb = tombstone_ids(spark, index_dir)
     allow_prune = (anomaly_max is None and not anomaly_weight
-                   and doc_filter is None and not nterms and tomb is None
+                   and doc_filter is None and not nterms
+                   and not has_tombstones(index_dir)
                    and after is None and sort_by is None
                    and collapse is None and msm is None
                    and recency_half_life is None)
-    if terms and "num_buckets" in stats:
-        # partition pruning: term → bucket = pmod(xxhash64(term), B), computed
-        # driver-side (pure-Python XXH64, no Spark round trip) so only the
-        # matching bucket directories are even listed
-        from macrobase_spark.index.build import bucket_versions
-        from macrobase_spark.index.xxh64 import term_bucket
-
-        # bucket pruning covers the EXCLUDED terms too — their postings
-        # are scanned (ids only) for the anti-join below
-        buckets = sorted({term_bucket(t, stats["num_buckets"])
-                          for t in [*terms, *nterms]})
-        postings = postings.filter(F.col("bucket").isin(buckets))
-        # version gate: after an incremental update, buckets the update did
-        # not touch carry block-max metadata computed under an older avgdl —
-        # their bounds are not trustworthy, so disable block pruning
-        # (exactness over speed) until the bucket is rewritten/compacted
-        sv = stats.get("version", 1)
-        bv = bucket_versions(index_dir)
-        allow_prune = allow_prune and all(
-            bv.get(b, 1) == sv for b in buckets)
-    if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+    # bucket pruning covers the EXCLUDED terms too — their postings are
+    # scanned (ids only) for the anti-join
+    postings, buckets = _prune_buckets(postings, stats, [*terms, *nterms])
+    if buckets is not None:
+        allow_prune = allow_prune and _bounds_current(index_dir, stats,
+                                                      buckets)
     cand = postings.filter(F.col("term").isin(terms)).select(
         "term", "df", "max_impact", "blob", "block_max"
     )
@@ -821,17 +1009,14 @@ def bm25_topk(
     # index (the common case), keeping the fast path one job.
     idfs: dict[str, float] | None = None
     seg = set(stats.get("segmented_buckets", []))
-    if seg and (("num_buckets" not in stats) or (seg & set(buckets))):
-        df_rows = cand.groupBy("term").agg(F.sum("df").alias("df")).collect()
-        idfs = {r["term"]: math.log(1.0 + (n - r["df"] + 0.5) / (r["df"] + 0.5))
-                for r in df_rows}
+    if seg and (buckets is None or seg & set(buckets)):
+        idfs = {t: _idf(n, d) for t, d in _term_dfs(cand).items()}
     lambdas: dict[str, float] | None = None
     if (wand and len(terms) > 1 and allow_prune and mode == "or"
             and not boosts):
         meta = cand.select("term", "df", "max_impact").collect()
         if meta:
-            idfs = {r["term"]: math.log(1.0 + (n - r["df"] + 0.5) / (r["df"] + 0.5))
-                    for r in meta}
+            idfs = {r["term"]: _idf(n, r["df"]) for r in meta}
             ubs = {r["term"]: idfs[r["term"]] * (K1 + 1.0) * r["max_impact"]
                    for r in meta}
             rarest = min(meta, key=lambda r: r["df"])
@@ -873,44 +1058,9 @@ def bm25_topk(
         # aggregate: a term may span several segment rows.
         scored = contrib.select("doc_id", F.col("contrib").alias("score"))
     else:
-        # ascending-term add order for bitwise-reproducible float sums;
-        # the matched-term count rides the same aggregate (a (term, doc)
-        # pair appears in exactly one segment, so count == distinct terms)
-        scored = (
-            contrib.groupBy("doc_id")
-            .agg(
-                F.aggregate(
-                    F.array_sort(F.collect_list(F.struct("term", "contrib"))),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x["contrib"],
-                ).alias("score"),
-                F.count("term").alias("_nt"),
-            )
-        )
-        if mode == "and":
-            scored = scored.filter(F.col("_nt") == len(terms))
-        elif msm is not None:
-            # minimum_should_match: the count of distinct matched terms
-            # rides the same aggregate — a pure filter, no extra shuffle
-            scored = scored.filter(F.col("_nt") >= msm)
-        scored = scored.drop("_nt")
-    if nterms:
-        # MUST_NOT: drop docs containing any excluded term (they never
-        # contribute to scores — exclusion is membership, not scoring)
-        scored = scored.join(_term_doc_ids(postings, nterms),
-                             "doc_id", "anti")
-    if tomb is not None:
-        # pending deletes vanish from results immediately; corpus stats
-        # keep counting them until compact_index purges (Lucene semantics)
-        scored = scored.join(tomb, "doc_id", "anti")
-    if doc_filter is not None:
-        # doc-set restriction BEFORE top-k: the filtered docs projection is
-        # a pushed-down parquet scan of the docs table; the semi-join keeps
-        # scored rows whose doc survives the predicate. AQE picks
-        # broadcast vs shuffle by the filtered side's actual size.
-        scored = scored.join(
-            docs.filter(F.expr(doc_filter)).select("doc_id"),
-            "doc_id", "semi")
+        scored = _doc_scores(contrib, mode, msm, len(terms))
+    excl = [_term_doc_ids(postings, nterms)] if nterms else []
+    scored = _restrict(spark, scored, [ix], doc_filter, excl)
     if anomaly_max is not None or anomaly_weight:
         scored = scored.join(docs.select("doc_id", "anomaly"), "doc_id", "inner")
         if anomaly_max is not None:
@@ -927,8 +1077,8 @@ def bm25_topk(
         if recency_col not in docs.columns:
             raise ValueError(
                 f"recency: {recency_col!r} is not a docs-metadata column "
-                f"(have {sorted(set(docs.columns) - {'doc_id'})}) — the "
-                "index must persist the timestamp at build time")
+                f"(have {have}) — the index must persist the timestamp "
+                "at build time")
         from pyspark.sql.types import (DateType, NumericType, StringType,
                                        TimestampNTZType, TimestampType)
 
@@ -963,39 +1113,19 @@ def bm25_topk(
                   .withColumn("score", F.col("score") * weight)
                   .drop(recency_col))
     if sort_by is not None:
-        cols, names = _sort_columns(sort_by)
-        missing = [c for c in names
-                   if c not in docs.columns or c == "doc_id"]
-        if missing:
-            raise ValueError(
-                f"sort_by: {missing!r} not sortable docs-metadata "
-                f"columns (have {sorted(set(docs.columns) - {'doc_id'})})")
         # matching docs ranked by metadata: join the (small, pre-limit)
         # match set to the docs projection of just the sort columns —
         # column pruning reaches the docs parquet scan; AQE broadcasts
         # the smaller side
         out = scored.join(docs.select("doc_id", *dict.fromkeys(names)),
                           "doc_id")
-        return out.orderBy(*cols, F.col("doc_id").asc()).limit(k)
+        return out.orderBy(*sort_cols, F.col("doc_id").asc()).limit(k)
     if collapse is not None:
-        from pyspark.sql import Window as W
-
-        if collapse not in docs.columns or collapse == "doc_id":
-            raise ValueError(
-                f"collapse: {collapse!r} not a docs-metadata column "
-                f"(have {sorted(set(docs.columns) - {'doc_id'})})")
-        scored = scored.join(docs.select("doc_id", collapse), "doc_id")
-        cw = W.partitionBy(collapse).orderBy(
-            F.col("score").desc(), F.col("doc_id").asc())
-        scored = (scored.withColumn("_rn", F.row_number().over(cw))
-                  .filter(F.col("_rn") == 1).drop("_rn"))
+        scored = _rank_within(
+            scored.join(docs.select("doc_id", collapse), "doc_id"),
+            collapse, "_rn").filter(F.col("_rn") == 1).drop("_rn")
     if after is not None:
-        s0, d0 = _after_cursor(after)
-        # strict ranking-order cursor: (score desc, doc_id asc) position
-        # after (s0, d0) — exact because scores are bitwise-reproducible
-        scored = scored.filter(
-            (F.col("score") < s0)
-            | ((F.col("score") == s0) & (F.col("doc_id") > d0)))
+        scored = _after_cursor(scored, after)
     return scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
 
 
@@ -1025,7 +1155,7 @@ def _batch_wand_lambdas(
     for r in meta:  # a term may span rows on a segmented index
         dfs[r["term"]] = dfs.get(r["term"], 0) + r["df"]
         mx[r["term"]] = max(mx.get(r["term"], 0.0), r["max_impact"])
-    idf = {t: math.log(1.0 + (n - d + 0.5) / (d + 0.5)) for t, d in dfs.items()}
+    idf = {t: _idf(n, d) for t, d in dfs.items()}
     ubs = {t: idf[t] * (K1 + 1.0) * mx[t] for t in dfs}
     rarest: dict[str, str] = {}
     for qid, ts in q_terms.items():
@@ -1035,15 +1165,11 @@ def _batch_wand_lambdas(
     probe = sorted({t for t in rarest.values() if dfs[t] >= k})
     thetas: dict[str, float] = {}
     if probe:
-        from pyspark.sql import Window as W
-
         contrib_r = cand.filter(F.col("term").isin(probe)).mapInPandas(
             _score_partition(n, avgdl, k, single_term=True, idfs=idf),
             schema="doc_id long, term string, contrib double",
         )
-        w = W.partitionBy("term").orderBy(
-            F.col("contrib").desc(), F.col("doc_id").asc())
-        rows = (contrib_r.withColumn("_rn", F.row_number().over(w))
+        rows = (_rank_within(contrib_r, "term", "_rn", "contrib")
                 .filter(F.col("_rn") == k).select("term", "contrib").collect())
         thetas = {r["term"]: r["contrib"] for r in rows}
     lambdas: dict[str, float] = {}
@@ -1125,19 +1251,7 @@ def bm25_topk_batch(
     Exclusions (``-term`` / ``-pre*``, see bm25_topk) apply per query via
     one (query_id, doc_id) anti-join fed by a single ids-only scan over
     the union of every query's excluded terms."""
-    from pyspark.sql import Window as W
-
-    if mode not in ("or", "and"):
-        raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
-    if min_should_match is not None:
-        if not isinstance(min_should_match, int) or min_should_match < 1:
-            raise ValueError("min_should_match must be a positive int, "
-                             f"got {min_should_match!r}")
-        if mode == "and":
-            raise ValueError(
-                "min_should_match does not compose with mode='and' — "
-                "'and' already requires every term; pass one or the other")
-    msm = min_should_match if (min_should_match or 0) > 1 else None
+    msm = _check_mode(mode, min_should_match)
     if isinstance(queries, list):
         queries = {str(i): q for i, q in enumerate(queries)}
     scoped = [qid for qid, q in queries.items()
@@ -1155,117 +1269,30 @@ def bm25_topk_batch(
     for qid, pq_ in parsed.items():
         _reject_regexes(pq_, f"bm25_topk_batch (query {qid!r})")
     out_schema = "query_id string, doc_id long, score double, rank int"
-    postings, docs, stats = read_index(spark, index_dir)
-    all_prefixes = sorted({p for pq_ in parsed.values()
-                           for p in pq_.prefixes})
-    all_nprefixes = sorted({p for pq_ in parsed.values()
-                            for p in pq_.neg_prefixes})
-    all_fuzzies: dict[str, int] = {}
-    for pq_ in parsed.values():
-        for tok, nv in (*pq_.fuzzies.items(), *pq_.neg_fuzzies.items()):
-            all_fuzzies[tok] = max(nv, all_fuzzies.get(tok, 0))
-    if (all_prefixes or all_nprefixes or
-            any(pq_.fuzzies for pq_ in parsed.values())) and (
-            mode == "and" or msm is not None):
-        raise ValueError(
-            "prefix wildcards / fuzzy tokens are not supported with "
-            "mode='and' / min_should_match — expand into explicit terms "
-            "for conjunctive retrieval")
-    # one combined dictionary scan for the whole batch; the expansion bound
-    # is PER QUERY (consistent with bm25_topk), so the scan cap scales with
-    # the distinct-prefix count — if the cap is hit, some single prefix
-    # already exceeds max_expansions and its query would fail alone too
-    scan_prefixes = sorted({*all_prefixes, *all_nprefixes})
-    expansions: list[str] = (
-        _expand_prefixes(postings, scan_prefixes, max_expansions,
-                         total_cap=max_expansions * len(scan_prefixes))
-        if scan_prefixes else [])
-    # fuzzy: ONE combined dictionary scan at each token's widest distance,
-    # then per-query re-restriction driver-side (a query using tok~1 when
-    # another uses tok~2 keeps only its own ≤1-edit expansions)
-    fmap_all: dict[str, list[str]] = (
-        _expand_fuzzy(postings, all_fuzzies, max_expansions)
-        if all_fuzzies else {})
-
-    def _fuzzy_terms(fz: dict[str, int]) -> dict[str, list[str]]:
-        return {tok: [t for t in fmap_all[tok]
-                      if _edit_distance(tok, t, nv) <= nv]
-                for tok, nv in fz.items()}
-
-    syn_norm: dict[str, list[str]] = {}
-    if synonyms:
-        if mode == "and" or msm is not None:
-            raise ValueError(
-                "synonyms are not supported with mode='and' / "
-                "min_should_match — expand into explicit terms for "
-                "conjunctive retrieval")
-        syn_norm = {src.strip().lower():
-                    sorted({a.strip().lower() for a in alts} - {""})
-                    for src, alts in synonyms.items()}
-    q_terms: dict[str, list[str]] = {}
-    q_negs: dict[str, list[str]] = {}
-    q_boosts: dict[str, dict[str, float]] = {}
-    for qid, pq_ in parsed.items():
-        _stop = set(stats.get("stopwords", []))
-        ts, ps = sorted(pq_.terms - _stop), sorted(pq_.prefixes)
-        ns, nps, qb = (sorted(pq_.neg_terms - _stop),
-                       sorted(pq_.neg_prefixes), pq_.boosts)
-        ex = {e for e in expansions if any(e.startswith(p) for p in ps)}
-        if len(ex) > max_expansions:
-            raise ValueError(
-                f"query {qid!r}: prefix wildcard(s) {ps!r} expand to more "
-                f"than {max_expansions} terms — narrow the prefix or raise "
-                "max_expansions")
-        fex = _fuzzy_terms(pq_.fuzzies)
-        # per-query synonym alternates from the shared corpus-wide map
-        sm = {s: [a for a in alts if a not in _stop]
-              for s, alts in syn_norm.items() if s in pq_.terms}
-        sm = {s: alts for s, alts in sm.items() if alts}
-        q_terms[qid] = sorted(set(ts) | ex |
-                              {t for l in fex.values() for t in l} |
-                              {a for l in sm.values() for a in l})
-        q_negs[qid] = sorted(
-            set(ns)
-            | {e for e in expansions if any(e.startswith(p) for p in nps)}
-            | {t for l in _fuzzy_terms(pq_.neg_fuzzies).values()
-               for t in l})
-        # effective per-term boosts (same precedence as bm25_topk:
-        # explicit term boost wins, then the largest matching
-        # prefix/fuzzy/synonym boost)
-        eff = {t: qb[t] for t in ts if t in qb}
-        for t in q_terms[qid]:
-            if t in eff:
-                continue
-            pbs = [qb[p] for p in ps if p in qb and t.startswith(p)]
-            pbs += [qb[tok] for tok, l in fex.items()
-                    if tok in qb and t in l]
-            pbs += [qb[s] for s, l in sm.items() if s in qb and t in l]
-            if pbs:
-                eff[t] = max(pbs)
-        q_boosts[qid] = eff
+    ix = _open(spark, index_dir)
+    postings, stats = ix.postings, ix.stats
+    # one _TermDict for the whole batch: one dictionary scan per token
+    # kind, expansion bound per query (consistent with bm25_topk)
+    clauses = dict(zip(parsed, _resolve(
+        postings, stats, list(parsed.values()), mode, msm, synonyms,
+        max_expansions)))
+    q_terms = {qid: c.terms for qid, c in clauses.items()}
+    q_negs = {qid: c.nterms for qid, c in clauses.items()}
+    q_boosts = {qid: c.boosts for qid, c in clauses.items()}
     any_boost = any(q_boosts.values())
     all_terms = sorted({t for ts in q_terms.values() for t in ts})
     all_negs = sorted({t for ts in q_negs.values() for t in ts})
     if not all_terms:
         return spark.createDataFrame([], out_schema)
     n, avgdl = stats["n_docs"], stats["avgdl"]
-    from macrobase_spark.index.build import tombstone_ids
-
-    tomb = tombstone_ids(spark, index_dir)
-    allow_prune = doc_filter is None and not all_negs and tomb is None
-    if "num_buckets" in stats:
-        from macrobase_spark.index.build import bucket_versions
-        from macrobase_spark.index.xxh64 import term_bucket
-
-        buckets = sorted({term_bucket(t, stats["num_buckets"])
-                          for t in [*all_terms, *all_negs]})
-        postings = postings.filter(F.col("bucket").isin(buckets))
-        # same version gate as bm25_topk: stale block-max metadata after an
-        # incremental update means bounds can't be trusted until compaction
-        sv = stats.get("version", 1)
-        bv = bucket_versions(index_dir)
-        allow_prune = allow_prune and all(
-            bv.get(b, 1) == sv for b in buckets)
+    allow_prune = (doc_filter is None and not all_negs
+                   and not has_tombstones(index_dir))
+    postings, buckets = _prune_buckets(postings, stats,
+                                       [*all_terms, *all_negs])
+    if buckets is not None:
+        # same version gate as bm25_topk
+        allow_prune = allow_prune and _bounds_current(index_dir, stats,
+                                                      buckets)
     segmented = bool(stats.get("segmented_buckets"))
     # single-term queries split off the aggregate path when their score is
     # provably one row's contribution: compacted index (one row per term)
@@ -1292,9 +1319,7 @@ def bm25_topk_batch(
         s_contrib = s_cand.mapInPandas(
             _score_partition(n, avgdl, k, single_term=True),
             schema="doc_id long, term string, contrib double")
-        sw = W.partitionBy("term").orderBy(
-            F.col("contrib").desc(), F.col("doc_id").asc())
-        s_top = (s_contrib.withColumn("rank", F.row_number().over(sw))
+        s_top = (_rank_within(s_contrib, "term", score="contrib")
                  .filter(F.col("rank") <= k))
         s_qmap = spark.createDataFrame(
             [(qid, t, float(q_boosts[qid].get(t, 1.0)))
@@ -1312,13 +1337,8 @@ def bm25_topk_batch(
         m_terms = sorted({t for ts in multis.values() for t in ts})
         cand = postings.filter(F.col("term").isin(m_terms)).select(
             "term", "df", "max_impact", "blob", "block_max")
-        idfs: dict[str, float] | None = None
-        if segmented:
-            df_rows = cand.groupBy("term").agg(
-                F.sum("df").alias("df")).collect()
-            idfs = {r["term"]:
-                    math.log(1.0 + (n - r["df"] + 0.5) / (r["df"] + 0.5))
-                    for r in df_rows}
+        idfs = ({t: _idf(n, d) for t, d in _term_dfs(cand).items()}
+                if segmented else None)
         lambdas = (_batch_wand_lambdas(cand, multis, n, avgdl, k)
                    if wand and allow_prune and mode == "or"
                    and msm is None and not any_boost else None)
@@ -1339,26 +1359,12 @@ def bm25_topk_batch(
         joined = (contrib.join(F.broadcast(qmap), "term")
                   .withColumn("contrib",
                               F.col("contrib") * F.col("boost")))
-        scored = (
-            joined.groupBy("query_id", "doc_id")
-            .agg(
-                F.aggregate(
-                    F.array_sort(F.collect_list(F.struct("term", "contrib"))),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x["contrib"],
-                ).alias("score"),
-                F.count("term").alias("_nt"),
-            )
-        )
-        if mode == "and":
-            need = spark.createDataFrame(
-                [(qid, len(ts)) for qid, ts in multis.items()],
-                "query_id string, _need int")
-            scored = (scored.join(F.broadcast(need), "query_id")
-                      .filter(F.col("_nt") == F.col("_need")).drop("_need"))
-        elif msm is not None:
-            scored = scored.filter(F.col("_nt") >= msm)
-        scored = scored.drop("_nt")
+        need = spark.createDataFrame(
+            [(qid, len(ts)) for qid, ts in multis.items()],
+            "query_id string, _need int") if mode == "and" else None
+        scored = _doc_scores(joined, mode, msm, need,
+                             keys=("query_id", "doc_id"))
+        excl = []
         if all_negs:
             # per-query MUST_NOT: one ids-only scan over the union of
             # excluded terms, routed to owning queries via the broadcast
@@ -1366,30 +1372,17 @@ def bm25_topk_batch(
             nqmap = spark.createDataFrame(
                 [(qid, t) for qid, ts in q_negs.items() for t in ts],
                 "query_id string, term string")
-            excl = (_term_doc_ids(postings, all_negs, with_term=True)
+            excl = [_term_doc_ids(postings, all_negs, with_term=True)
                     .join(F.broadcast(nqmap), "term")
-                    .select("query_id", "doc_id"))
-            scored = scored.join(excl, ["query_id", "doc_id"], "anti")
-        if tomb is not None:
-            scored = scored.join(tomb, "doc_id", "anti")
-        if doc_filter is not None:
-            # one filtered docs projection serves the whole batch; the
-            # semi-join restricts every query's candidates BEFORE ranking
-            scored = scored.join(
-                docs.filter(F.expr(doc_filter)).select("doc_id"),
-                "doc_id", "semi")
-        w = W.partitionBy("query_id").orderBy(
-            F.col("score").desc(), F.col("doc_id").asc())
+                    .select("query_id", "doc_id")]
+        scored = _restrict(spark, scored, [ix], doc_filter, excl,
+                           on=["query_id", "doc_id"])
         parts.append(
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
+            _rank_within(scored, "query_id").filter(F.col("rank") <= k)
             .select("query_id", "doc_id", "score", "rank"))
     if not parts:
         return spark.createDataFrame([], out_schema)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return _union(parts)
 
 
 def bm25_oracle(
@@ -1520,6 +1513,32 @@ def bm25_oracle(
     return ranked[:k]
 
 
+def _positional_index(spark: SparkSession, index_dir: str) -> _Index:
+    ix = _open(spark, index_dir)
+    if not ix.stats.get("has_positions"):
+        raise ValueError(
+            f"index at {index_dir!r} has no positional layer — build with "
+            "build_index(..., positions=True) to enable phrase queries")
+    return ix
+
+
+def _positions(spark: SparkSession, ix: _Index, terms: list[str]
+               ) -> tuple[DataFrame, dict[str, int]]:
+    """The bucket/row-group-pruned positional rows of `terms` and each
+    term's df — summed driver-side, since a term may span several rows on
+    a segmented index (post-update, pre-compaction)."""
+    import os
+
+    pos_df, _ = _prune_buckets(
+        spark.read.parquet(os.path.join(ix.dir, "positions")), ix.stats,
+        terms)
+    pos_df = pos_df.filter(F.col("term").isin(terms))
+    dfs: dict[str, int] = {}
+    for r in pos_df.select("term", "df").collect():
+        dfs[r["term"]] = dfs.get(r["term"], 0) + int(r["df"])
+    return pos_df, dfs
+
+
 def bm25_phrase_topk(
     spark: SparkSession,
     index_dir: str,
@@ -1561,11 +1580,8 @@ def bm25_phrase_topk(
     out_schema = "doc_id long, score double"
     if not seq:
         return spark.createDataFrame([], out_schema)
-    _, docs, stats = read_index(spark, index_dir)
-    if not stats.get("has_positions"):
-        raise ValueError(
-            f"index at {index_dir!r} has no positional layer — build with "
-            "build_index(..., positions=True) to enable phrase queries")
+    ix = _positional_index(spark, index_dir)
+    stats = ix.stats
     # index-time stoplist: stoplisted phrase tokens were never indexed but
     # surviving tokens keep original positions (gap-preserving analysis).
     # Drop stoplisted tokens from the chain while keeping the original
@@ -1582,24 +1598,10 @@ def bm25_phrase_topk(
             return spark.createDataFrame([], out_schema)
     n, avgdl = stats["n_docs"], stats["avgdl"]
     uterms = sorted(set(seq))
-    import os as _os
-
-    pos_df = spark.read.parquet(_os.path.join(index_dir, "positions"))
-    from macrobase_spark.index.xxh64 import term_bucket
-
-    buckets = sorted({term_bucket(t, stats["num_buckets"]) for t in uterms})
-    pos_df = (pos_df.filter(F.col("bucket").isin(buckets))
-              .filter(F.col("term").isin(uterms)))
-    meta = pos_df.select("term", "df").collect()
-    # a term may span several rows on a segmented index (post-update,
-    # pre-compaction): df is the cross-segment sum
-    dfs: dict[str, int] = {}
-    for r in meta:
-        dfs[r["term"]] = dfs.get(r["term"], 0) + int(r["df"])
+    pos_df, dfs = _positions(spark, ix, uterms)
     if set(dfs) != set(uterms):
         return spark.createDataFrame([], out_schema)  # a term is absent
-    idf = {t: math.log(1.0 + (n - d + 0.5) / (d + 0.5))
-           for t, d in dfs.items()}
+    idf = {t: _idf(n, d) for t, d in dfs.items()}
     cand_ids: np.ndarray | None = None
     rarest = min(uterms, key=lambda t: dfs[t])
     if len(uterms) > 1 and dfs[rarest] <= candidate_collect_limit:
@@ -1689,19 +1691,9 @@ def bm25_phrase_topk(
     out = (gathered.withColumn("score", phrase_score("parts"))
            .filter(F.col("score").isNotNull())
            .select("doc_id", "score"))
-    from macrobase_spark.index.build import tombstone_ids
-
-    tomb = tombstone_ids(spark, index_dir)
-    if tomb is not None:
-        out = out.join(tomb, "doc_id", "anti")
-    if doc_filter is not None:
-        out = out.join(docs.filter(F.expr(doc_filter)).select("doc_id"),
-                       "doc_id", "semi")
+    out = _restrict(spark, out, [ix], doc_filter)
     if after is not None:
-        s0, d0 = _after_cursor(after)
-        out = out.filter(
-            (F.col("score") < s0)
-            | ((F.col("score") == s0) & (F.col("doc_id") > d0)))
+        out = _after_cursor(out, after)
     return (out.orderBy(F.col("score").desc(), F.col("doc_id").asc())
             .limit(k))
 
@@ -1799,12 +1791,15 @@ def bm25_facets(
     postings (bucket/row-group-pruned; no scores, no positions) →
     distinct/conjunctive-count per doc → restriction joins → ONE join to
     the docs metadata projection (facet columns only — column pruning
-    reaches the docs parquet scan) → one tiny groupBy per facet. The
-    posting blobs of non-query terms are never read.
+    reaches the docs parquet scan) → one groupBy over the exploded
+    (facet, value) entries. The posting blobs of non-query terms are
+    never read.
 
     Returns (facet string, value string, doc_count long), ordered by
     (facet, doc_count desc, value) with '__total__' first. NULL metadata
-    values count under the '(null)' bucket.
+    values count under the '(null)' bucket. A query with zero matches —
+    including one with no indexable term (stoplist-only, exclusion-only)
+    — returns the lone ('__total__', '', 0) row.
 
     `ranges` adds numeric range facets (Lucene range faceting) over
     numeric docs columns (anomaly, doc_len, turn_idx, …): for
@@ -1820,16 +1815,26 @@ def bm25_facets(
     ``metrics={"anomaly": ["avg", "max"]}`` appends `anomaly_avg` /
     `anomaly_max` columns computed over the matching docs in each
     bucket (fns: avg, min, max, sum)."""
-    if mode not in ("or", "and"):
-        raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
+    return _facets(spark, [index_dir], query, facets, mode, doc_filter,
+                   max_expansions, ranges, metrics)
+
+
+def _facets(spark: SparkSession, index_dirs: list[str], query: str,
+            facets: list[str] | None, mode: str, doc_filter: str | None,
+            max_expansions: int, ranges: dict[str, list[float]] | None,
+            metrics: dict[str, list[str]] | None,
+            sharded: str | None = None) -> DataFrame:
+    """The facet body of bm25_facets (one handle) and bm25_facets_sharded
+    (one per shard; `sharded` names it for the shard refusals)."""
+    _check_mode(mode, None)
     facets = facets or []
     ranges = ranges or {}
+    metrics = metrics or {}
     if not facets and not ranges:
         raise ValueError(
             "facets: pass at least one docs metadata column (facets=) "
             "or numeric range spec (ranges=)")
     _METRIC_FNS = ("avg", "min", "max", "sum")
-    metrics = metrics or {}
     for col, fns in metrics.items():
         bad_fns = [f for f in fns if f not in _METRIC_FNS]
         if bad_fns:
@@ -1837,83 +1842,39 @@ def bm25_facets(
                 f"metrics[{col!r}]: unsupported fn(s) {bad_fns!r} — "
                 f"supported: {_METRIC_FNS}")
     for col, edges in ranges.items():
-        if len(edges) < 2 or sorted(edges) != list(edges)                 or len(set(edges)) != len(edges):
+        if (len(edges) < 2 or sorted(edges) != list(edges)
+                or len(set(edges)) != len(edges)):
             raise ValueError(
                 f"ranges[{col!r}]: need >= 2 strictly increasing edges, "
                 f"got {edges!r}")
-    query, _scope = _split_field_scopes(query)
-    doc_filter = _merge_doc_filter(doc_filter, _scope)
-    postings, docs, stats = read_index(spark, index_dir)
-    bad = [c for c in [*facets, *ranges, *metrics]
-           if c not in docs.columns or c == "doc_id"]
+    query, doc_filter = _split_field_scopes(query, doc_filter)
+    handles = [_open(spark, d) for d in index_dirs]
+    pq = _parse_query_full(query)
+    if sharded:
+        _check_shards(sharded, handles, pq)
+    fcols = list(dict.fromkeys([*facets, *ranges, *metrics]))
+    have = set.intersection(*(set(h.docs.columns) for h in handles))
+    have.discard("doc_id")
+    bad = [c for c in fcols if c not in have]
     if bad:
         raise ValueError(
             f"facets: {bad!r} not docs-metadata columns "
-            f"(have {sorted(set(docs.columns) - {'doc_id'})})")
-    pq = _parse_query_full(query)
+            f"(have {sorted(have)})")
     _reject_regexes(pq, "bm25_facets")
-    _stop = set(stats.get("stopwords", []))
-    terms, prefixes = sorted(pq.terms - _stop), sorted(pq.prefixes)
-    nterms, nprefixes = sorted(pq.neg_terms - _stop), sorted(pq.neg_prefixes)
-    if (prefixes or pq.fuzzies) and mode == "and":
-        raise ValueError(
-            "prefix wildcards / fuzzy tokens are not supported with "
-            "mode='and' — expand into explicit terms for conjunctive "
-            "retrieval")
-    if prefixes:
-        terms = sorted(set(terms) |
-                       set(_expand_prefixes(postings, prefixes,
-                                            max_expansions)))
-    if pq.fuzzies:
-        terms = sorted(set(terms) | {
-            t for ts in _expand_fuzzy(postings, pq.fuzzies,
-                                      max_expansions).values()
-            for t in ts})
-    if nprefixes:
-        nterms = sorted(set(nterms) |
-                        set(_expand_prefixes(postings, nprefixes,
-                                             max_expansions)))
-    if pq.neg_fuzzies:
-        nterms = sorted(set(nterms) | {
-            t for ts in _expand_fuzzy(postings, pq.neg_fuzzies,
-                                      max_expansions).values()
-            for t in ts})
-    out_schema = "facet string, value string, doc_count long" + "".join(
-        f", {col}_{fn} double"
-        for col, fns in sorted(metrics.items()) for fn in fns)
-    if not terms:
-        return spark.createDataFrame([], out_schema)
-    if "num_buckets" in stats:
-        from macrobase_spark.index.xxh64 import term_bucket
-
-        buckets = sorted({term_bucket(t, stats["num_buckets"])
-                          for t in [*terms, *nterms]})
-        postings = postings.filter(F.col("bucket").isin(buckets))
-    if mode == "and":
-        # conjunctive membership: a doc matches iff it carries EVERY query
-        # term — distinct-term count per doc ((term, doc) is unique per
-        # segment, and a doc's posting for a term lives in exactly one
-        # segment, so countDistinct is exact on segmented indexes too)
-        matched = (_term_doc_ids(postings, terms, with_term=True)
-                   .groupBy("doc_id")
-                   .agg(F.countDistinct("term").alias("_nt"))
-                   .filter(F.col("_nt") == len(terms)).select("doc_id"))
-    else:
-        matched = _term_doc_ids(postings, terms).distinct()
-    if nterms:
-        matched = matched.join(_term_doc_ids(postings, nterms),
-                               "doc_id", "anti")
-    from macrobase_spark.index.build import tombstone_ids
-
-    tomb = tombstone_ids(spark, index_dir)
-    if tomb is not None:
-        matched = matched.join(tomb, "doc_id", "anti")
-    if doc_filter is not None:
-        matched = matched.join(
-            docs.filter(F.expr(doc_filter)).select("doc_id"),
-            "doc_id", "semi")
-    fcols = list(dict.fromkeys([*facets, *ranges, *metrics]))
-    meta = matched.join(docs.select("doc_id", *fcols), "doc_id")
+    [cl] = _resolve(handles[0].postings, handles[0].stats, [pq], mode,
+                    max_expansions=max_expansions)
+    matched = _match_set(spark, handles, cl, mode, None, doc_filter)
+    if matched is None:
+        # nothing can match: the same lone ('__total__', '', 0) row a
+        # zero-match query returns
+        mcols = [f"{col}_{fn}" for col, fns in sorted(metrics.items())
+                 for fn in fns]
+        return spark.createDataFrame(
+            [("__total__", "", 0, *[None] * len(mcols))],
+            "facet string, value string, doc_count long"
+            + "".join(f", {c} double" for c in mcols))
+    all_docs = _union([h.docs.select("doc_id", *fcols) for h in handles])
+    meta = matched.join(all_docs, "doc_id")
     return _facet_single_pass(spark, meta, facets, ranges, metrics)
 
 
@@ -2007,38 +1968,18 @@ def bm25_explain(
     doc_ids is given), then one bucket/row-group-pruned decode of the
     query terms' postings filtered to the target ids inside the Arrow
     kernel (the id set is bounded by k — a closure broadcast, never a
-    shuffle). Anomaly/sort modifiers affect WHICH docs are selected via
-    **topk_kwargs, not the raw contributions shown."""
-    query, _scope = _split_field_scopes(query)
-    doc_filter = _merge_doc_filter(
-        topk_kwargs.pop("doc_filter", None), _scope)
-    postings, docs, stats = read_index(spark, index_dir)
+    shuffle). The terms and boosts come from the same resolver as
+    bm25_topk's, so synonym alternates (``synonyms=`` in **topk_kwargs)
+    get their own rows. Anomaly/sort modifiers affect WHICH docs are
+    selected via **topk_kwargs, not the raw contributions shown."""
+    query, doc_filter = _split_field_scopes(
+        query, topk_kwargs.pop("doc_filter", None))
+    postings, _, stats = read_index(spark, index_dir)
     pq = _parse_query_full(query)
     _reject_regexes(pq, "bm25_explain")
-    _stop = set(stats.get("stopwords", []))
-    terms, prefixes, qboosts = (sorted(pq.terms - _stop),
-                                sorted(pq.prefixes), pq.boosts)
-    explicit_terms = list(terms)
-    if prefixes:
-        terms = sorted(set(terms) |
-                       set(_expand_prefixes(postings, prefixes,
-                                            max_expansions)))
-    fmap: dict[str, list[str]] = {}
-    if pq.fuzzies:
-        fmap = _expand_fuzzy(postings, pq.fuzzies, max_expansions)
-        terms = sorted(set(terms) |
-                       {t for ts in fmap.values() for t in ts})
-    boosts: dict[str, float] = {t: qboosts[t] for t in explicit_terms
-                                if t in qboosts}
-    for t in terms:
-        if t in boosts:
-            continue
-        pbs = [qboosts[p] for p in prefixes
-               if p in qboosts and t.startswith(p)]
-        pbs += [qboosts[ftok] for ftok, exps in fmap.items()
-                if ftok in qboosts and t in exps]
-        if pbs:
-            boosts[t] = max(pbs)
+    [(terms, _, boosts)] = _resolve(
+        postings, stats, [pq], synonyms=topk_kwargs.get("synonyms"),
+        max_expansions=max_expansions)
     out_schema = ("doc_id long, term string, tf double, dl double, "
                   "df double, idf double, boost double, contrib double")
     if not terms:
@@ -2054,20 +1995,14 @@ def bm25_explain(
     target = np.sort(np.asarray(sorted(set(int(d) for d in doc_ids)),
                                 dtype=np.int64))
     n, avgdl = stats["n_docs"], stats["avgdl"]
-    if "num_buckets" in stats:
-        from macrobase_spark.index.xxh64 import term_bucket
-
-        buckets = sorted({term_bucket(t, stats["num_buckets"])
-                          for t in terms})
-        postings = postings.filter(F.col("bucket").isin(buckets))
+    postings, _ = _prune_buckets(postings, stats, terms)
     cand = postings.filter(F.col("term").isin(terms)).select(
         "term", "df", "blob")
     # segmented index: a term spans several rows — idf needs the
     # cross-segment df sum (same policy as bm25_topk)
     idfs: dict[str, float] | None = None
     if stats.get("segmented_buckets"):
-        df_rows = cand.groupBy("term").agg(F.sum("df").alias("df")).collect()
-        idfs = {r["term"]: float(r["df"]) for r in df_rows}
+        idfs = {t: float(d) for t, d in _term_dfs(cand).items()}
     bmap = dict(boosts)
 
     def explain_fn(batches):
@@ -2150,18 +2085,10 @@ def more_like_this(
         return spark.createDataFrame([], out_schema)
     postings, _, stats = read_index(spark, index_dir)
     n = stats["n_docs"]
-    if "num_buckets" in stats:
-        from macrobase_spark.index.xxh64 import term_bucket
-
-        buckets = sorted({term_bucket(t, stats["num_buckets"])
-                          for t in cand})
-        postings = postings.filter(F.col("bucket").isin(buckets))
-    df_rows = (postings.filter(F.col("term").isin(cand))
-               .groupBy("term").agg(F.sum("df").alias("df")).collect())
-    dfs = {r["term"]: int(r["df"]) for r in df_rows}
+    postings, _ = _prune_buckets(postings, stats, cand)
+    dfs = _term_dfs(postings.filter(F.col("term").isin(cand)))
     ranked = sorted(
-        ((tf[t] * math.log(1.0 + (n - d + 0.5) / (d + 0.5)), t)
-         for t, d in dfs.items() if d >= min_df),
+        ((tf[t] * _idf(n, d), t) for t, d in dfs.items() if d >= min_df),
         key=lambda x: (-x[0], x[1]))
     terms = sorted(t for _, t in ranked[:max_query_terms])
     if not terms:
@@ -2204,62 +2131,31 @@ def bm25_topk_sharded(
     in v1 — expand them per query via bm25_topk, or pre-expand.
     Block pruning is disabled (per-shard block-max bounds were computed
     under per-shard stats)."""
-    if mode not in ("or", "and"):
-        raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
+    _check_mode(mode, None)
     if not index_dirs:
         raise ValueError("index_dirs: pass at least one index")
-    query, _scope = _split_field_scopes(query)
-    doc_filter = _merge_doc_filter(doc_filter, _scope)
-    handles = [read_index(spark, d) for d in index_dirs]
-    stops = [tuple(h[2].get("stopwords", [])) for h in handles]
-    if len(set(stops)) > 1:
-        raise ValueError(
-            "bm25_topk_sharded: shards were built with DIFFERENT "
-            f"stoplists {sorted(set(stops))!r} — global scoring would mix "
-            "analyzers; rebuild with one list")
+    query, doc_filter = _split_field_scopes(query, doc_filter)
+    handles = [_open(spark, d) for d in index_dirs]
     pq = _parse_query_full(query)
-    if pq.prefixes or pq.neg_prefixes or pq.fuzzies or pq.neg_fuzzies \
-            or pq.regexes or pq.neg_regexes or pq.boosts:
-        raise ValueError(
-            "bm25_topk_sharded: wildcard/fuzzy/boost tokens are not "
-            "supported across shards — pre-expand the query or use "
-            "bm25_topk per shard")
-    _stop = set(stops[0])
-    terms = sorted(pq.terms - _stop)
-    nterms = sorted(pq.neg_terms - _stop)
-    out_schema = "doc_id long, score double"
+    _check_shards("bm25_topk_sharded", handles, pq)
+    [(terms, nterms, _)] = _resolve(handles[0].postings, handles[0].stats,
+                                    [pq], mode)
     if not terms:
-        return spark.createDataFrame([], out_schema)
-    n_docs = sum(h[2]["n_docs"] for h in handles)
-    sum_dl = sum(h[2].get("sum_dl",
-                          h[2]["avgdl"] * h[2]["n_docs"]) for h in handles)
+        return _empty_topk(spark)
+    n_docs = sum(h.stats["n_docs"] for h in handles)
+    sum_dl = sum(h.stats.get("sum_dl", h.stats["avgdl"] * h.stats["n_docs"])
+                 for h in handles)
     avgdl = sum_dl / n_docs
-    from macrobase_spark.index.build import tombstone_ids
-    from macrobase_spark.index.xxh64 import term_bucket
-
-    cands, neg_parts, filt_parts, tomb_parts = [], [], [], []
-    for (postings, docs, stats), d in zip(handles, index_dirs):
-        if "num_buckets" in stats:
-            buckets = sorted({term_bucket(t, stats["num_buckets"])
-                              for t in [*terms, *nterms]})
-            postings = postings.filter(F.col("bucket").isin(buckets))
+    cands, neg_parts = [], []
+    for h in handles:
+        postings, _ = _prune_buckets(h.postings, h.stats, [*terms, *nterms])
         cands.append(postings.filter(F.col("term").isin(terms))
                      .select("term", "df", "blob"))
         if nterms:
             neg_parts.append(_term_doc_ids(postings, nterms))
-        if doc_filter is not None:
-            filt_parts.append(
-                docs.filter(F.expr(doc_filter)).select("doc_id"))
-        tomb = tombstone_ids(spark, d)
-        if tomb is not None:
-            tomb_parts.append(tomb)
-    cand_all = cands[0]
-    for c in cands[1:]:
-        cand_all = cand_all.unionByName(c)
+    cand_all = _union(cands)
     # ONE global-df metadata job over the union (term+df column pruned)
-    df_rows = cand_all.groupBy("term").agg(F.sum("df").alias("df")).collect()
-    idfs = {r["term"]: math.log(1.0 + (n_docs - r["df"] + 0.5)
-                                / (r["df"] + 0.5)) for r in df_rows}
+    idfs = {t: _idf(n_docs, d) for t, d in _term_dfs(cand_all).items()}
     # the scorer needs block_max/max_impact columns for its schema; feed
     # constants that disable pruning (single_term=False, no lambdas)
     cand_sc = cand_all.withColumn(
@@ -2268,29 +2164,8 @@ def bm25_topk_sharded(
     contrib = cand_sc.mapInPandas(
         _score_partition(n_docs, avgdl, k, single_term=False, idfs=idfs),
         schema="doc_id long, term string, contrib double")
-    scored = (
-        contrib.groupBy("doc_id")
-        .agg(
-            F.aggregate(
-                F.array_sort(F.collect_list(F.struct("term", "contrib"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["contrib"],
-            ).alias("score"),
-            F.count("term").alias("_nt"),
-        )
-    )
-    if mode == "and":
-        scored = scored.filter(F.col("_nt") == len(terms))
-    scored = scored.drop("_nt")
-    for part in neg_parts:
-        scored = scored.join(part, "doc_id", "anti")
-    for part in tomb_parts:
-        scored = scored.join(part, "doc_id", "anti")
-    if filt_parts:
-        keep = filt_parts[0]
-        for p in filt_parts[1:]:
-            keep = keep.unionByName(p)
-        scored = scored.join(keep, "doc_id", "semi")
+    scored = _restrict(spark, _doc_scores(contrib, mode, None, len(terms)),
+                       handles, doc_filter, neg_parts)
     return scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
 
 
@@ -2316,18 +2191,13 @@ def bm25_phrase_topk_batch(
     vocabulary. slop and doc_filter apply to every phrase in the batch."""
     import re
 
-    from pyspark.sql import Window as W
-
     from macrobase_spark.index.codec import decode_positional
 
     if isinstance(phrases, list):
         phrases = {str(i): p for i, p in enumerate(phrases)}
     out_schema = "query_id string, doc_id long, score double, rank int"
-    _, docs, stats = read_index(spark, index_dir)
-    if not stats.get("has_positions"):
-        raise ValueError(
-            f"index at {index_dir!r} has no positional layer — build with "
-            "build_index(..., positions=True) to enable phrase queries")
+    ix = _positional_index(spark, index_dir)
+    stats = ix.stats
     _stop = set(stats.get("stopwords", []))
     seqs: dict[str, list[str]] = {}
     spans: dict[str, int] = {}
@@ -2341,26 +2211,13 @@ def bm25_phrase_topk_batch(
         return spark.createDataFrame([], out_schema)
     n, avgdl = stats["n_docs"], stats["avgdl"]
     all_terms = sorted({t for s in seqs.values() for t in s})
-    import os as _os
-
-    pos_df = spark.read.parquet(_os.path.join(index_dir, "positions"))
-    from macrobase_spark.index.xxh64 import term_bucket
-
-    buckets = sorted({term_bucket(t, stats["num_buckets"])
-                      for t in all_terms})
-    pos_df = (pos_df.filter(F.col("bucket").isin(buckets))
-              .filter(F.col("term").isin(all_terms)))
-    meta = pos_df.select("term", "df").collect()
-    dfs: dict[str, int] = {}
-    for r in meta:
-        dfs[r["term"]] = dfs.get(r["term"], 0) + int(r["df"])
+    pos_df, dfs = _positions(spark, ix, all_terms)
     # a phrase with an unindexed term can never match — drop it up front
     live = {qid: s for qid, s in seqs.items()
             if all(t in dfs for t in s)}
     if not live:
         return spark.createDataFrame([], out_schema)
-    idf = {t: math.log(1.0 + (n - d + 0.5) / (d + 0.5))
-           for t, d in dfs.items()}
+    idf = {t: _idf(n, d) for t, d in dfs.items()}
 
     def decode_score(batches):
         for pdf in batches:
@@ -2435,115 +2292,9 @@ def bm25_phrase_topk_batch(
 
     scored = gathered.mapInPandas(
         verify, schema="query_id string, doc_id long, score double")
-    from macrobase_spark.index.build import tombstone_ids
-
-    tomb = tombstone_ids(spark, index_dir)
-    if tomb is not None:
-        scored = scored.join(tomb, "doc_id", "anti")
-    if doc_filter is not None:
-        scored = scored.join(
-            docs.filter(F.expr(doc_filter)).select("doc_id"),
-            "doc_id", "semi")
-    w = W.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
+    scored = _restrict(spark, scored, [ix], doc_filter)
+    return (_rank_within(scored, "query_id").filter(F.col("rank") <= k)
             .select("query_id", "doc_id", "score", "rank"))
-
-
-def _matched_ids(
-    spark: SparkSession,
-    index_dir: str,
-    query: str,
-    mode: str,
-    min_should_match: int | None,
-    doc_filter: str | None,
-    max_expansions: int,
-) -> DataFrame | None:
-    """The query's full match set as a (doc_id) DataFrame on the ids-only
-    decode path, honoring mode / min_should_match / exclusions / field
-    scopes / doc_filter / tombstones. None when no document can match
-    (no indexable terms, or min_should_match above the term count).
-    Shared engine of bm25_count and bm25_match_ids."""
-    if mode not in ("or", "and"):
-        raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
-    if min_should_match is not None:
-        if not isinstance(min_should_match, int) or min_should_match < 1:
-            raise ValueError("min_should_match must be a positive int, "
-                             f"got {min_should_match!r}")
-        if mode == "and":
-            raise ValueError(
-                "min_should_match does not compose with mode='and' — "
-                "'and' already requires every term; pass one or the other")
-    msm = min_should_match if (min_should_match or 0) > 1 else None
-    query, _scope = _split_field_scopes(query)
-    doc_filter = _merge_doc_filter(doc_filter, _scope)
-    postings, docs, stats = read_index(spark, index_dir)
-    pq = _parse_query_full(query)
-    _reject_regexes(pq, "bm25_count / bm25_match_ids")
-    _stop = set(stats.get("stopwords", []))
-    terms = sorted(pq.terms - _stop)
-    nterms = sorted(pq.neg_terms - _stop)
-    if pq.prefixes:
-        if mode == "and" or msm is not None:
-            raise ValueError(
-                "prefix wildcards / fuzzy tokens are not supported with "
-                "mode='and' / min_should_match — expand into explicit "
-                "terms for conjunctive retrieval")
-        terms = sorted(set(terms) |
-                       set(_expand_prefixes(postings, sorted(pq.prefixes),
-                                            max_expansions)))
-    if pq.fuzzies:
-        if mode == "and" or msm is not None:
-            raise ValueError(
-                "prefix wildcards / fuzzy tokens are not supported with "
-                "mode='and' / min_should_match — expand into explicit "
-                "terms for conjunctive retrieval")
-        terms = sorted(set(terms) | {
-            t for ts in _expand_fuzzy(postings, pq.fuzzies,
-                                      max_expansions).values() for t in ts})
-    if pq.neg_prefixes:
-        nterms = sorted(set(nterms) |
-                        set(_expand_prefixes(postings,
-                                             sorted(pq.neg_prefixes),
-                                             max_expansions)))
-    if pq.neg_fuzzies:
-        nterms = sorted(set(nterms) | {
-            t for ts in _expand_fuzzy(postings, pq.neg_fuzzies,
-                                      max_expansions).values() for t in ts})
-    if not terms:
-        return None
-    if "num_buckets" in stats:
-        from macrobase_spark.index.xxh64 import term_bucket
-
-        buckets = sorted({term_bucket(t, stats["num_buckets"])
-                          for t in [*terms, *nterms]})
-        postings = postings.filter(F.col("bucket").isin(buckets))
-    if msm is not None and msm > len(terms):
-        return None
-    if mode == "and" or msm is not None:
-        need = len(terms) if mode == "and" else msm
-        cmp_col = (F.col("_nt") == need if mode == "and"
-                   else F.col("_nt") >= need)
-        matched = (_term_doc_ids(postings, terms, with_term=True)
-                   .groupBy("doc_id")
-                   .agg(F.countDistinct("term").alias("_nt"))
-                   .filter(cmp_col).select("doc_id"))
-    else:
-        matched = _term_doc_ids(postings, terms).distinct()
-    if nterms:
-        matched = matched.join(_term_doc_ids(postings, nterms),
-                               "doc_id", "anti")
-    from macrobase_spark.index.build import tombstone_ids
-
-    tomb = tombstone_ids(spark, index_dir)
-    if tomb is not None:
-        matched = matched.join(tomb, "doc_id", "anti")
-    if doc_filter is not None:
-        matched = matched.join(
-            docs.filter(F.expr(doc_filter)).select("doc_id"),
-            "doc_id", "semi")
-    return matched
 
 
 def bm25_count(
@@ -2557,15 +2308,15 @@ def bm25_count(
 ) -> DataFrame:
     """Number of documents matching the query under full retrieval
     semantics (mode / min_should_match / exclusions / field scopes /
-    doc_filter / tombstones) — a one-row (n_matches long) relation,
-    computed on the ids-only path (no scores, no positions, and unlike
-    bm25_facets no docs-metadata join unless a doc filter requires
-    one)."""
-    matched = _matched_ids(spark, index_dir, query, mode,
-                           min_should_match, doc_filter, max_expansions)
-    if matched is None:
-        return spark.createDataFrame([(0,)], "n_matches long")
-    return matched.agg(F.count("*").alias("n_matches"))
+    doc_filter / tombstones) — a one-row (n_matches long) relation: the
+    count of bm25_match_ids' relation, so it shares the resolver and the
+    ids-only match set with bm25_match_ids and bm25_facets (no scores, no
+    positions, and unlike bm25_facets no docs-metadata join unless a doc
+    filter requires one). A query no document can match (no indexable
+    term, or min_should_match above the term count) counts 0."""
+    return bm25_match_ids(spark, index_dir, query, mode, min_should_match,
+                          doc_filter, max_expansions).agg(
+        F.count("*").alias("n_matches"))
 
 
 def bm25_match_ids(
@@ -2586,8 +2337,14 @@ def bm25_match_ids(
     (doc_id) relation to join/anti-join against the corpus at 100 TB.
     For a ranked export use bm25_topk with a large k instead — this path
     exists precisely to skip the scoring shuffle."""
-    matched = _matched_ids(spark, index_dir, query, mode,
-                           min_should_match, doc_filter, max_expansions)
+    msm = _check_mode(mode, min_should_match)
+    query, doc_filter = _split_field_scopes(query, doc_filter)
+    handles = [_open(spark, index_dir)]
+    pq = _parse_query_full(query)
+    _reject_regexes(pq, "bm25_count / bm25_match_ids")
+    [cl] = _resolve(handles[0].postings, handles[0].stats, [pq], mode, msm,
+                    max_expansions=max_expansions)
+    matched = _match_set(spark, handles, cl, mode, msm, doc_filter)
     if matched is None:
         return spark.createDataFrame([], "doc_id long")
     return matched
@@ -2692,95 +2449,17 @@ def bm25_facets_sharded(
     ranges: dict[str, list[float]] | None = None,
     metrics: dict[str, list[str]] | None = None,
 ) -> DataFrame:
-    """bm25_facets over a sharded corpus (see bm25_topk_sharded): facet
-    membership is stats-free (a doc matches in exactly one shard), so
-    the result is IDENTICAL to a monolithic index over the union —
-    pytest-pinned. Each shard contributes its ids-only match set and its
-    docs-metadata projection; one union, the same per-facet groupBys.
-    Mixed stoplists refuse loudly (they change which query terms
-    exist). Wildcards/fuzzies are rejected as in bm25_topk_sharded."""
-    if mode not in ("or", "and"):
-        raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
+    """bm25_facets over a sharded corpus (see bm25_topk_sharded): the
+    same facet body over one index handle per shard. Facet membership is
+    stats-free (a doc matches in exactly one shard), so the result is
+    IDENTICAL to a monolithic index over the union — pytest-pinned, the
+    empty cases included. Each shard contributes its ids-only match set
+    and its docs-metadata projection; one union of each, then the same
+    single facet pass. Mixed stoplists refuse loudly (they change which
+    query terms exist); wildcard / fuzzy / regexp / boost tokens are
+    rejected as in bm25_topk_sharded."""
     if not index_dirs:
         raise ValueError("index_dirs: pass at least one index")
-    query, _scope = _split_field_scopes(query)
-    doc_filter = _merge_doc_filter(doc_filter, _scope)
-    handles = [read_index(spark, d) for d in index_dirs]
-    stops = [tuple(h[2].get("stopwords", [])) for h in handles]
-    if len(set(stops)) > 1:
-        raise ValueError(
-            "bm25_facets_sharded: shards were built with DIFFERENT "
-            f"stoplists {sorted(set(stops))!r} — rebuild with one list")
-    pq = _parse_query_full(query)
-    if pq.prefixes or pq.neg_prefixes or pq.fuzzies or pq.neg_fuzzies \
-            or pq.regexes or pq.neg_regexes or pq.boosts:
-        raise ValueError(
-            "bm25_facets_sharded: wildcard/fuzzy/boost tokens are not "
-            "supported across shards — pre-expand the query")
-    _stop = set(stops[0])
-    terms = sorted(pq.terms - _stop)
-    nterms = sorted(pq.neg_terms - _stop)
-    facets = facets or []
-    ranges = ranges or {}
-    metrics = metrics or {}
-    if not facets and not ranges:
-        raise ValueError(
-            "facets: pass at least one docs metadata column (facets=) "
-            "or numeric range spec (ranges=)")
-    out_schema = "facet string, value string, doc_count long" + "".join(
-        f", {col}_{fn} double"
-        for col, fns in sorted(metrics.items()) for fn in fns)
-    if not terms:
-        return spark.createDataFrame([], out_schema)
-    from macrobase_spark.index.build import tombstone_ids
-    from macrobase_spark.index.xxh64 import term_bucket
-
-    matched_parts, docs_parts = [], []
-    for (postings, docs, stats), d in zip(handles, index_dirs):
-        if "num_buckets" in stats:
-            buckets = sorted({term_bucket(t, stats["num_buckets"])
-                              for t in [*terms, *nterms]})
-            postings = postings.filter(F.col("bucket").isin(buckets))
-        if mode == "and":
-            m = (_term_doc_ids(postings, terms, with_term=True)
-                 .groupBy("doc_id")
-                 .agg(F.countDistinct("term").alias("_nt"))
-                 .filter(F.col("_nt") == len(terms)).select("doc_id"))
-        else:
-            m = _term_doc_ids(postings, terms).distinct()
-        if nterms:
-            m = m.join(_term_doc_ids(postings, nterms), "doc_id", "anti")
-        tomb = tombstone_ids(spark, d)
-        if tomb is not None:
-            m = m.join(tomb, "doc_id", "anti")
-        if doc_filter is not None:
-            m = m.join(docs.filter(F.expr(doc_filter)).select("doc_id"),
-                       "doc_id", "semi")
-        matched_parts.append(m)
-        docs_parts.append(docs)
-    matched = matched_parts[0]
-    for p in matched_parts[1:]:
-        matched = matched.unionByName(p)
-    fcols = list(dict.fromkeys([*facets, *ranges, *metrics]))
-    bad = [c for c in fcols
-           if any(c not in dp.columns for dp in docs_parts)
-           or c == "doc_id"]
-    if bad:
-        raise ValueError(
-            f"facets: {bad!r} not docs-metadata columns in every shard")
-    all_docs = docs_parts[0].select("doc_id", *fcols)
-    for dp in docs_parts[1:]:
-        all_docs = all_docs.unionByName(dp.select("doc_id", *fcols))
-    meta = matched.join(all_docs, "doc_id")
-    for col, fns in metrics.items():
-        bad_fns = [f for f in fns if f not in ("avg", "min", "max", "sum")]
-        if bad_fns:
-            raise ValueError(
-                f"metrics[{col!r}]: unsupported fn(s) {bad_fns!r}")
-    for f, edges in ranges.items():
-        if len(edges) < 2 or sorted(edges) != list(edges) \
-                or len(set(edges)) != len(edges):
-            raise ValueError(
-                f"ranges[{f!r}]: need >= 2 strictly increasing edges, "
-                f"got {edges!r}")
-    return _facet_single_pass(spark, meta, facets, ranges, metrics)
+    return _facets(spark, index_dirs, query, facets, mode, doc_filter,
+                   max_expansions, ranges, metrics,
+                   sharded="bm25_facets_sharded")

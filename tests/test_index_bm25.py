@@ -973,8 +973,11 @@ def test_exclusion_semantics_and_edges(spark, corpus):
     # only exclusions -> nothing to rank
     assert bm25_topk(spark, out, "-the").count() == 0
     # hyphen inside a word is NOT an exclusion
-    from macrobase_spark.index.bm25 import _parse_query
-    assert _parse_query("well-known") == (["known", "well"], [], [], [], {})
+    from macrobase_spark.index.bm25 import _parse_query_full
+    pq = _parse_query_full("well-known")
+    assert (sorted(pq.terms), sorted(pq.prefixes), sorted(pq.neg_terms),
+            sorted(pq.neg_prefixes), pq.boosts) == (
+        ["known", "well"], [], [], [], {})
 
 
 def test_exclusion_composes_with_filter_and_mode(spark, corpus):

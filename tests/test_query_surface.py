@@ -234,6 +234,19 @@ def test_explain_reproduces_topk_scores(spark, corpus):
             want_idf = math.log(1.0 + (n - df_t + 0.5) / (df_t + 0.5))
             assert math.isclose(p["idf"], want_idf, rel_tol=1e-12)
         assert math.isclose(s, hits[d], rel_tol=1e-12), d
+    # synonyms: the explain rows cover the alternates bm25_topk scores
+    syn = {"tok0042": ["tok0007"]}
+    hits = {r["doc_id"]: r["score"] for r in
+            bm25_topk(spark, out, "tok0042 the", k=6,
+                      synonyms=syn).collect()}
+    sums: dict[int, float] = {}
+    for r in sorted(bm25_explain(spark, out, "tok0042 the", k=6,
+                                 synonyms=syn).collect(),
+                    key=lambda r: (r["doc_id"], r["term"])):
+        sums[r["doc_id"]] = sums.get(r["doc_id"], 0.0) + r["contrib"]
+    assert set(sums) == set(hits)
+    for d, s in sums.items():
+        assert math.isclose(s, hits[d], rel_tol=1e-12), d
 
 
 def test_explain_boost_and_explicit_ids(spark, corpus):
@@ -924,3 +937,104 @@ def test_suggest_sharded_equals_monolith(spark, shards):
     assert got2 == want2 and got2
     with pytest.raises(ValueError, match="empty shard list"):
         suggest_terms(spark, [], "a")
+
+
+# ------------------------------------------ one resolver, one match set
+
+@pytest.fixture(scope="module")
+def stop_index(spark, tmp_path_factory):
+    df = with_doc_id(synth_transcripts(spark, n_convs=10, seed=3))
+    out = str(tmp_path_factory.mktemp("qs_stop_index"))
+    build_index(df, out, num_buckets=2, hot_df_threshold=10 ** 9,
+                stopwords=["the"])
+    return out
+
+
+def test_no_indexable_term_has_the_zero_hit_shape(spark, corpus,
+                                                  stop_index):
+    """A stoplist-only or exclusion-only query returns exactly what a
+    query with zero hits returns: the sort_by / collapse columns on
+    bm25_topk, the lone __total__ row on the facet surfaces."""
+    from macrobase_spark.index.bm25 import bm25_facets_sharded
+
+    _, out, _, _ = corpus
+    for idx, q in [(stop_index, "the"), (out, "-tok0042")]:
+        for kw in [{"sort_by": "turn_idx desc"}, {"collapse": "conv_id"}]:
+            got = bm25_topk(spark, idx, q, **kw)
+            want = bm25_topk(spark, idx, "zzzznotaword", **kw)
+            assert got.count() == 0 and got.dtypes == want.dtypes, (q, kw)
+        for kw in [{}, {"metrics": {"anomaly": ["avg"]}}]:
+            want = [tuple(r) for r in bm25_facets(
+                spark, idx, "zzzznotaword", ["role"], **kw).collect()]
+            assert want[0][:3] == ("__total__", "", 0) and len(want) == 1
+            for fn, where in [(bm25_facets, idx),
+                              (bm25_facets_sharded, [idx])]:
+                got = fn(spark, where, q, ["role"], **kw)
+                assert [tuple(r) for r in got.collect()] == want, (q, kw)
+
+
+def test_batch_and_mode_accepts_exclusion_only_expansions(spark, corpus):
+    """mode='and' refuses positive expansions only: a batch query whose
+    expansion tokens are all exclusions ranks like bm25_topk."""
+    _, out, _, _ = corpus
+    queries = ["tok0042 call -tok07*", "tok0042 call -tok0777~1"]
+    got = bm25_topk_batch(spark, out, queries, k=5, mode="and").collect()
+    for qid, q in enumerate(queries):
+        want = [(r["doc_id"], r["score"]) for r in
+                bm25_topk(spark, out, q, k=5, mode="and").collect()]
+        mine = sorted((r["rank"], r["doc_id"], r["score"]) for r in got
+                      if r["query_id"] == str(qid))
+        assert [(d, s) for _, d, s in mine] == want, q
+    assert got
+
+
+def _jobs_per_call(spark, name, fn):
+    """Spark jobs one warm call runs (its collect), read from a job group
+    of its own."""
+    sc = spark.sparkContext
+    fn().collect()
+    group = f"bm25-jobs-{name}"
+    sc.setJobGroup(group, f"jobs-per-call probe: {name}")
+    try:
+        fn().collect()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup("", "")
+
+
+def test_bm25_jobs_per_call(spark, corpus):
+    """Upper bounds on the Spark jobs each BM25 entry point runs per
+    call, one bm25_topk per serving query class: a plan that sprouts a
+    job fails here."""
+    from macrobase_spark.index.bm25 import bm25_count, bm25_match_ids
+
+    _, out, docs, _ = corpus
+    ids = [d for d, _ in docs[:3]]
+    calls = {
+        "topk single": (1, lambda: bm25_topk(spark, out, "tok0042")),
+        "topk single hot": (1, lambda: bm25_topk(spark, out, "the")),
+        "topk multi": (2, lambda: bm25_topk(spark, out, "call tool")),
+        "topk msm": (2, lambda: bm25_topk(
+            spark, out, "tok0003 tok0042 tok0777", min_should_match=2)),
+        "topk prefix": (4, lambda: bm25_topk(spark, out, "tok05*")),
+        "topk exclude": (2, lambda: bm25_topk(spark, out, "tok0007 -the")),
+        "topk filter": (3, lambda: bm25_topk(
+            spark, out, "tok0011 tok0200", doc_filter="role = 'assistant'")),
+        "batch": (6, lambda: bm25_topk_batch(
+            spark, out, ["the", "tok0042", "call tool", "tok0005 tok0100",
+                         "tok0003 tok0042 tok0777"])),
+        "facets": (6, lambda: bm25_facets(spark, out, "tok0042 the",
+                                          ["role"])),
+        "count": (4, lambda: bm25_count(spark, out, "tok0042 -tok0007")),
+        "match_ids": (3, lambda: bm25_match_ids(spark, out,
+                                                "tok0042 -tok0007")),
+        "explain doc_ids": (3, lambda: bm25_explain(
+            spark, out, "tok0042 call", doc_ids=ids)),
+        "explain k": (5, lambda: bm25_explain(spark, out, "tok0042 call",
+                                              k=3)),
+    }
+    got = {name: _jobs_per_call(spark, name, fn)
+           for name, (_, fn) in calls.items()}
+    over = {name: (got[name], bound) for name, (bound, _) in calls.items()
+            if got[name] > bound}
+    assert not over, f"jobs (got, bound): {over}"
