@@ -10,11 +10,17 @@ Every term-query entry point runs the same three stages:
 
   1. resolve (`_resolve`, driver-side): parse the micro-syntax, drop
      stoplisted tokens, add synonym alternates, expand prefix / fuzzy /
-     regexp tokens against the term dictionary (`_TermDict`: at most one
-     column-pruned term scan per token kind for the whole call, positive
-     and negative tokens and every query of a batch together), apply boost
-     precedence, and refuse the option combinations no surface supports.
-     The result is one `_Clauses(terms, nterms, boosts)` per query.
+     regexp tokens against the term dictionary (`_TermDict` over the
+     `build.open_index` TermDict: term → (df, max_impact, rows), memoized
+     with the index handles of the same version), apply boost precedence,
+     and refuse the option combinations no surface supports. The result is
+     one `_Clauses(terms, nterms, boosts)` per query. Every df — hence
+     every idf, WAND upper bound and phrase rarest-term choice — is a
+     driver literal from the same dictionary. The only Spark job for term
+     metadata is the dictionary's one column-pruned collect on the first
+     query after the index version changes (a build, compaction, merge or
+     another process's update; an in-process update_index folds its delta
+     into the served dictionary instead).
   2. candidate / match set: bucket pruning (`_prune_buckets`: term →
      bucket is computed driver-side, so only matching bucket directories
      are listed; parquet row-group statistics then skip non-matching
@@ -40,6 +46,8 @@ oracle.
 from __future__ import annotations
 
 import math
+import re as _re
+from bisect import bisect_left
 from collections import Counter
 from typing import NamedTuple
 
@@ -48,18 +56,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from macrobase_spark.index.build import (read_index, has_tombstones, K1, B,
-                                         BLOCK_SIZE)
+from macrobase_spark.index.build import (open_index, has_tombstones,
+                                         TermDict, K1, B, BLOCK_SIZE)
 from macrobase_spark.index.tokenize import TOKEN_PATTERN
-
-
-def _tokenize_query(q: str) -> list[str]:
-    import re
-
-    return sorted(set(re.findall(TOKEN_PATTERN, q.lower())))
-
-
-import re as _re
 
 # query micro-syntax: `-tok` at a token boundary is an exclusion
 # (MUST_NOT), a trailing `*` is a prefix wildcard, a trailing `~N` is a
@@ -173,31 +172,6 @@ def _tokenize_query_wild(q: str) -> tuple[list[str], list[str]]:
     return (sorted(pq.terms | set(pq.fuzzies)), sorted(pq.prefixes))
 
 
-def _expand_prefixes(postings: DataFrame, prefixes: list[str],
-                     max_expansions: int) -> list[str]:
-    """Expand prefix wildcards against the index's term dictionary.
-
-    The scan cannot bucket-prune (term → bucket is a hash, so a prefix
-    spans every bucket) but it reads ONLY the tiny `term` column of the
-    postings parquet — column pruning keeps the posting blobs untouched,
-    so at 100 TB this is a dictionary scan, not an index scan. Expansion
-    is bounded: the scan stops at max_expansions·len(prefixes) terms and
-    raises loudly above it (rank-exactness over silent truncation —
-    Lucene's maxClauseCount/TooManyClauses policy); _TermDict applies the
-    per-query bound."""
-    cap = max_expansions * len(prefixes)
-    cond = F.col("term").startswith(prefixes[0])
-    for p in prefixes[1:]:
-        cond = cond | F.col("term").startswith(p)
-    rows = (postings.filter(cond).select("term").distinct()
-            .limit(cap + 1).collect())
-    if len(rows) > cap:
-        raise ValueError(
-            f"prefix wildcard(s) {prefixes!r} expand to more than "
-            f"{cap} terms — narrow the prefix or raise max_expansions")
-    return sorted(r["term"] for r in rows)
-
-
 # field-scoped query sugar: `role:assistant merge scan` restricts the
 # rankable docs to role='assistant' — Lucene field-query syntax mapped onto
 # the docs-table metadata predicate (doc_filter). Recognized fields are the
@@ -269,7 +243,7 @@ def _sort_columns(sort_by: str):
 
 def _edit_distance(a: str, b: str, limit: int) -> int:
     """Levenshtein distance with an early exit above `limit` (returns
-    limit+1). Driver-side only, over dictionary-scan candidates."""
+    limit+1): the oracles' scalar reference for `_edit_distances`."""
     if abs(len(a) - len(b)) > limit:
         return limit + 1
     prev = list(range(len(b) + 1))
@@ -287,71 +261,25 @@ def _edit_distance(a: str, b: str, limit: int) -> int:
     return prev[-1]
 
 
-def _expand_fuzzy(postings: DataFrame, fuzzies: dict[str, int],
-                  max_expansions: int) -> list[str]:
-    """Expand fuzzy tokens (`tok~N`) against the term dictionary: every
-    indexed term within N edits of some token (Lucene FuzzyQuery's
-    dictionary-intersection rewrite, done as a length-banded levenshtein
-    filter instead of a Levenshtein automaton — the same column-pruned
-    term-only scan as _expand_prefixes, so blobs are never read). The
-    combined scan is capped at max_expansions·len(fuzzies); _TermDict
-    assigns candidates back to tokens driver-side with a limit-banded DP
-    and applies the per-token bound (the TooManyClauses policy)."""
-    cond = None
-    for tok, nmax in sorted(fuzzies.items()):
-        c = ((F.length("term") >= len(tok) - nmax)
-             & (F.length("term") <= len(tok) + nmax)
-             & (F.levenshtein(F.col("term"), F.lit(tok)) <= nmax))
-        cond = c if cond is None else (cond | c)
-    cap = max_expansions * len(fuzzies)
-    rows = (postings.filter(cond).select("term").distinct()
-            .limit(cap + 1).collect())
-    if len(rows) > cap:
-        raise ValueError(
-            f"fuzzy token(s) {sorted(fuzzies)!r} expand to more than "
-            f"{cap} dictionary terms combined — tighten the distance or "
-            "raise max_expansions")
-    return sorted(r["term"] for r in rows)
-
-
-def _reject_regexes(pq: "ParsedQuery", where: str) -> None:
-    """Regexp tokens are a bm25_topk-only surface (v1); paths that would
-    otherwise score '/pat/' fragments as ordinary terms refuse loudly."""
-    if pq.regexes or pq.neg_regexes:
-        raise ValueError(
-            f"regexp tokens (/pat/) are not supported in {where} — run "
-            "them through bm25_topk, or expand into explicit terms")
-
-
-def _expand_regex(postings: DataFrame, patterns: list[str],
-                  max_expansions: int) -> dict[str, list[str]]:
-    """Expand `/pat/` regexp tokens against the term dictionary (Lucene
-    RegexpQuery's rewrite): each pattern matches WHOLE terms (anchored),
-    evaluated JVM-side by rlike over the same column-pruned term-only
-    scan as prefixes/fuzzies. ONE scan serves every pattern: each row
-    carries one match flag per pattern, so expansions assign to their
-    pattern without cross-engine regex re-evaluation. The scan is capped
-    at max_expansions·len(patterns) — a truncated scan still leaves some
-    pattern above the bound — and per-pattern expansions above
-    max_expansions raise (TooManyClauses policy); an invalid pattern
-    surfaces Spark's own parse error."""
-    flags = [F.col("term").rlike(f"^(?:{p})$").alias(f"_r{i}")
-             for i, p in enumerate(patterns)]
-    cond = F.col("_r0")
-    for i in range(1, len(patterns)):
-        cond = cond | F.col(f"_r{i}")
-    cap = max_expansions * len(patterns)
-    rows = (postings.select("term", *flags).filter(cond).distinct()
-            .limit(cap + 1).collect())
-    out: dict[str, list[str]] = {}
-    for i, pat in enumerate(patterns):
-        out[pat] = sorted(r["term"] for r in rows if r[f"_r{i}"])
-        if len(out[pat]) > max_expansions:
-            raise ValueError(
-                f"regexp token /{pat}/ expands to more than "
-                f"{max_expansions} dictionary terms — tighten the pattern "
-                "or raise max_expansions")
-    return out
+def _edit_distances(a: str, bs: list[str]) -> np.ndarray:
+    """Levenshtein distance from `a` to every string of `bs` at once: one
+    DP row per character of `a`, computed for all of `bs` together over
+    the strings' code points padded to the longest (a distance is read at
+    the string's own length; the padded columns never feed back). The
+    insertion recurrence cur[j] = min(v[j], cur[j-1] + 1) is a running
+    minimum of v[j] - j."""
+    width = max(1, *map(len, bs))
+    chars = (np.array(bs, dtype=f"<U{width}").view(np.uint32)
+             .reshape(len(bs), width))
+    ar = np.arange(width + 1)
+    prev = np.tile(ar, (len(bs), 1))
+    for i, ca in enumerate(a, 1):
+        v = np.empty_like(prev)
+        v[:, 0] = i
+        v[:, 1:] = np.minimum(prev[:, :-1] + (chars != ord(ca)),
+                              prev[:, 1:] + 1)
+        prev = np.minimum.accumulate(v - ar, axis=1) + ar
+    return prev[np.arange(len(bs)), [len(b) for b in bs]]
 
 
 def _after_cursor(rel: DataFrame, after) -> DataFrame:
@@ -410,11 +338,12 @@ class _Index(NamedTuple):
     postings: DataFrame
     docs: DataFrame
     stats: dict
+    tdict: TermDict
     dir: str
 
 
 def _open(spark: SparkSession, index_dir: str) -> _Index:
-    return _Index(*read_index(spark, index_dir), index_dir)
+    return _Index(*open_index(spark, index_dir), index_dir)
 
 
 class _Clauses(NamedTuple):
@@ -442,55 +371,69 @@ def _check_mode(mode: str, min_should_match: int | None) -> int | None:
 
 
 class _TermDict:
-    """The term-dictionary side of one call: at most ONE column-pruned
-    term scan per token kind (prefix, fuzzy, regexp) covers every query's
-    positive and negative tokens; lookups are answered on the driver,
-    each bounded by max_expansions (TooManyClauses)."""
+    """Prefix / fuzzy / regexp expansion against an index's term
+    dictionary (build.TermDict, memoized per index version), answered on
+    the driver with no Spark job; each expansion is bounded by
+    max_expansions and raises above it (rank-exactness over silent
+    truncation — Lucene's TooManyClauses policy)."""
 
-    def __init__(self, postings: DataFrame, pqs: list[ParsedQuery],
-                 max_expansions: int):
+    def __init__(self, td: TermDict, max_expansions: int):
+        self.terms = td.terms
         self.max_expansions = max_expansions
-        prefixes = sorted({p for pq in pqs
-                           for p in (*pq.prefixes, *pq.neg_prefixes)})
-        fuzzies: dict[str, int] = {}
-        for pq in pqs:
-            for tok, nv in (*pq.fuzzies.items(), *pq.neg_fuzzies.items()):
-                fuzzies[tok] = max(nv, fuzzies.get(tok, 0))
-        regexes = sorted({p for pq in pqs
-                          for p in (*pq.regexes, *pq.neg_regexes)})
-        self._prefixed = (_expand_prefixes(postings, prefixes, max_expansions)
-                          if prefixes else [])
-        self._fuzzy = (_expand_fuzzy(postings, fuzzies, max_expansions)
-                       if fuzzies else [])
-        self._regex = (_expand_regex(postings, regexes, max_expansions)
-                       if regexes else {})
 
     def prefixed(self, prefixes: set[str]) -> list[str]:
-        out = [t for t in self._prefixed
-               if any(t.startswith(p) for p in prefixes)]
-        if len(out) > self.max_expansions:
-            raise ValueError(
-                f"prefix wildcard(s) {sorted(prefixes)!r} expand to more "
-                f"than {self.max_expansions} terms — narrow the prefix or "
-                "raise max_expansions")
-        return out
+        """Every term starting with one of `prefixes`: a bisect into the
+        sorted vocabulary, then the contiguous run of matches."""
+        out: set[str] = set()
+        for p in prefixes:
+            i = bisect_left(self.terms, p)
+            while i < len(self.terms) and self.terms[i].startswith(p):
+                out.add(self.terms[i])
+                i += 1
+                if len(out) > self.max_expansions:
+                    raise ValueError(
+                        f"prefix wildcard(s) {sorted(prefixes)!r} expand to "
+                        f"more than {self.max_expansions} terms — narrow the "
+                        "prefix or raise max_expansions")
+        return sorted(out)
 
     def fuzzy(self, fuzzies: dict[str, int]) -> dict[str, list[str]]:
-        out = {tok: [t for t in self._fuzzy if _edit_distance(tok, t, nv) <= nv]
-               for tok, nv in fuzzies.items()}
-        for tok, ts in out.items():
-            if len(ts) > self.max_expansions:
+        """Every term within N edits of each `tok~N` (Lucene FuzzyQuery's
+        dictionary rewrite): the length band, then one vectorized DP over
+        all of it."""
+        out = {}
+        for tok, nv in fuzzies.items():
+            band = [t for t in self.terms if abs(len(t) - len(tok)) <= nv]
+            out[tok] = [t for t, d in zip(band, _edit_distances(tok, band))
+                        if d <= nv] if band else []
+            if len(out[tok]) > self.max_expansions:
                 raise ValueError(
-                    f"fuzzy token {tok!r}~{fuzzies[tok]} expands to more "
+                    f"fuzzy token {tok!r}~{nv} expands to more "
                     f"than {self.max_expansions} terms — tighten the "
                     "distance or raise max_expansions")
         return out
 
     def regex(self, patterns: set[str]) -> dict[str, list[str]]:
-        return {p: self._regex[p] for p in patterns}
+        """Every term a `/pat/` matches WHOLE (Lucene RegexpQuery's
+        rewrite), by Python `re.fullmatch` — the oracle's own matcher."""
+        out = {}
+        for pat in patterns:
+            try:
+                rx = _re.compile(pat)
+            except _re.error as e:
+                raise ValueError(
+                    f"regexp token /{pat}/ is not a valid pattern: {e}"
+                ) from None
+            out[pat] = [t for t in self.terms if rx.fullmatch(t)]
+            if len(out[pat]) > self.max_expansions:
+                raise ValueError(
+                    f"regexp token /{pat}/ expands to more than "
+                    f"{self.max_expansions} dictionary terms — tighten the "
+                    "pattern or raise max_expansions")
+        return out
 
 
-def _resolve(postings: DataFrame, stats: dict, pqs: list[ParsedQuery],
+def _resolve(td: TermDict, stats: dict, pqs: list[ParsedQuery],
              mode: str = "or", msm: int | None = None,
              synonyms: dict[str, list[str]] | None = None,
              max_expansions: int = 128) -> list[_Clauses]:
@@ -498,8 +441,8 @@ def _resolve(postings: DataFrame, stats: dict, pqs: list[ParsedQuery],
     stoplisted terms drop (they have no postings, so mode='and' / m count
     only indexable terms); synonym alternates and positive prefix / fuzzy
     / regexp expansions join the scored terms, negative ones the
-    exclusions, all through one _TermDict; an explicit term boost wins,
-    else the largest boost of a source covering the term. Positive
+    exclusions, all through the index's _TermDict; an explicit term boost
+    wins, else the largest boost of a source covering the term. Positive
     expansions and synonyms refuse mode='and' / m > 1 (per-slot "any
     expansion" semantics are not implemented); exclusions may expand."""
     if mode == "and" or msm is not None:
@@ -517,7 +460,7 @@ def _resolve(postings: DataFrame, stats: dict, pqs: list[ParsedQuery],
     syn = {src.strip().lower(): sorted({a.strip().lower() for a in alts}
                                        - stop - {""})
            for src, alts in (synonyms or {}).items()}
-    tdict = _TermDict(postings, pqs, max_expansions)
+    tdict = _TermDict(td, max_expansions)
     out = []
     for pq in pqs:
         qb = pq.boosts
@@ -550,6 +493,20 @@ def _idf(n_docs: int, df: float) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 
 
+def _idfs(td: TermDict, n_docs: int, terms) -> dict[str, float]:
+    """The idf driver literal of every term the dictionary holds (a term
+    it lacks has no postings to score)."""
+    return {t: _idf(n_docs, td.stats[t].df) for t in terms if t in td.stats}
+
+
+def _one_row(td: TermDict, terms: list[str]) -> bool:
+    """One term stored in at most one posting row (always so on a
+    compacted index): each doc then has exactly one contribution, so the
+    per-doc score needs no aggregate."""
+    return len(terms) == 1 and (terms[0] not in td.stats
+                                or td.stats[terms[0]].rows == 1)
+
+
 def _prune_buckets(postings: DataFrame, stats: dict, terms: list[str]
                    ) -> tuple[DataFrame, list[int] | None]:
     """Partition pruning: term → bucket = pmod(xxhash64(term), B) computed
@@ -572,13 +529,6 @@ def _bounds_current(index_dir: str, stats: dict, buckets: list[int]) -> bool:
     sv = stats.get("version", 1)
     bv = bucket_versions(index_dir)
     return all(bv.get(b, 1) == sv for b in buckets)
-
-
-def _term_dfs(cand: DataFrame) -> dict[str, int]:
-    """Per-term df summed over candidate rows (a term spans several rows
-    on a segmented index and across shards): one tiny metadata job."""
-    return {r["term"]: r["df"] for r in
-            cand.groupBy("term").agg(F.sum("df").alias("df")).collect()}
 
 
 def _doc_scores(contrib: DataFrame, mode: str = "or", msm: int | None = None,
@@ -693,26 +643,23 @@ def _check_shards(where: str, handles: list[_Index], pq: ParsedQuery) -> None:
 
 
 def _score_partition(n_docs: int, avgdl: float, k: int, single_term: bool,
-                     lambdas: dict[str, float] | None = None,
-                     idfs: dict[str, float] | None = None):
+                     idfs: dict[str, float],
+                     lambdas: dict[str, float] | None = None):
     """Decode + score posting blobs in one Arrow pass; emits (doc_id, term,
-    score contribution). idf is derived from the row's own df stat — no
-    separate term-stats job — EXCEPT on a segmented index (post-update,
-    pre-compaction), where a term spans several rows and the per-term df
-    sums are pre-collected into `idfs`. With a single query term, applies
-    block-max pruning while keeping exactness (kth-best lower bound only
-    grows). `lambdas` carries per-term block-max-WAND thresholds for
-    multi-term pruning (see bm25_topk wand=True)."""
+    score contribution), each term's idf a driver literal from the term
+    dictionary (`idfs`). With a single query term, applies block-max
+    pruning while keeping exactness (kth-best lower bound only grows).
+    `lambdas` carries per-term block-max-WAND thresholds for multi-term
+    pruning (see bm25_topk wand=True)."""
 
     def fn(batches):
         from macrobase_spark.index.build import _decode_partial
 
         for pdf in batches:
             out_doc, out_term, out_score = [], [], []
-            for term, t_df, blob, block_max in zip(
-                    pdf["term"], pdf["df"], pdf["blob"], pdf["block_max"]):
-                idf = idfs[term] if idfs is not None else math.log(
-                    1.0 + (n_docs - t_df + 0.5) / (t_df + 0.5))
+            for term, blob, block_max in zip(
+                    pdf["term"], pdf["blob"], pdf["block_max"]):
+                idf = idfs[term]
                 ids, tfs, dls = _decode_partial(blob)
                 tf = tfs.astype(np.float64)
                 dl = dls.astype(np.float64)
@@ -815,8 +762,9 @@ def bm25_topk(
     disabled (exactness over speed, same policy as the anomaly gate).
 
     Query tokens ending in ``*`` are prefix wildcards (``merg*``):
-    expanded against the term dictionary (bounded by max_expansions, see
-    _expand_prefixes) and scored as a disjunctive query over the
+    expanded against the term dictionary by a bisect into the sorted
+    vocabulary (bounded by max_expansions: more expansions raise, the
+    TooManyClauses policy) and scored as a disjunctive query over the
     expansions, each with its own idf — Lucene's scoring-boolean rewrite.
     Wildcards compose with doc_filter/anomaly but not with mode="and"
     (conjunctive wildcard semantics — "at least one expansion per slot" —
@@ -834,23 +782,22 @@ def bm25_topk(
 
     ``term~1`` / ``term~2`` are fuzzy tokens (Lucene FuzzyQuery syntax):
     expanded against the term dictionary to every indexed term within N
-    edits (length-banded levenshtein over the column-pruned term scan,
-    bounded by max_expansions — the TooManyClauses policy) and scored as
+    edits (a length band, then one vectorized levenshtein DP over the
+    band, bounded by max_expansions) and scored as
     a disjunction, each expansion with its own idf — the same
     scoring-boolean rewrite as prefixes. ``-tok~1`` excludes every
     expansion; ``tok~1^2`` boosts every expansion. Not combinable with
     mode='and' (same policy as prefixes).
 
     ``/pat/`` is a regexp term query (Lucene RegexpQuery syntax): the
-    pattern matches WHOLE dictionary terms (anchored), expanded against
-    the column-pruned term scan (bounded by max_expansions — the
-    TooManyClauses policy) and scored as a disjunction with per-term idf,
-    the same scoring-boolean rewrite as prefixes. ``-/pat/`` excludes
-    every match; ``/pat/^2`` boosts them. Pattern syntax is Java regex
-    (evaluated JVM-side by rlike); no whitespace or '/' inside the
-    fences. Not combinable with mode='and' / min_should_match; a
-    bm25_topk-only surface in v1 (batch/count/facets/sharded refuse
-    loudly).
+    pattern matches WHOLE dictionary terms (`re.fullmatch`, bounded by
+    max_expansions) and scored as a disjunction with per-term idf, the
+    same scoring-boolean rewrite as prefixes. ``-/pat/`` excludes every
+    match; ``/pat/^2`` boosts them. Pattern syntax is Python `re` — the
+    oracle's matcher, so engine and oracle agree on every pattern; an
+    invalid pattern raises ValueError. No whitespace or '/' inside the
+    fences. Not combinable with mode='and' / min_should_match; the
+    sharded surfaces refuse it (as they refuse every expansion).
 
     ``term^2`` / ``pre*^1.5`` are query-time boosts (Lucene syntax): the
     term's contribution is multiplied by the boost before the per-doc sum.
@@ -889,9 +836,10 @@ def bm25_topk(
     skipped iff ub_t(block) + Σ_{u≠t} ub_u < θ. Any doc with true final
     score ≥ θ then sits in no pruned block (its presence would force the
     block's bound above θ), so every candidate that can reach the top-k is
-    fully scored and every pruned doc is provably below the kth. Costs two
-    extra small jobs (metadata + rarest-term pass) — the cluster-scale path
-    for hot multi-term queries; off by default for local latency.
+    fully scored and every pruned doc is provably below the kth. df and
+    max_impact come from the term dictionary, so this costs one extra
+    small job (the rarest-term pass) — the cluster-scale path for hot
+    multi-term queries; off by default for local latency.
 
     ``role:assistant`` / ``tool:grep`` / ``conv_id:c17`` tokens in the
     query are field scopes (Lucene field-query sugar): stripped from the
@@ -975,8 +923,9 @@ def bm25_topk(
         raise ValueError(
             f"collapse: {collapse!r} not a docs-metadata column "
             f"(have {have})")
+    td = ix.tdict
     [(terms, nterms, boosts)] = _resolve(
-        postings, stats, [_parse_query_full(query)], mode, msm, synonyms,
+        td, stats, [_parse_query_full(query)], mode, msm, synonyms,
         max_expansions)
     # no indexable term, or an m above the indexable term count: nothing
     # can match
@@ -1001,40 +950,28 @@ def bm25_topk(
         allow_prune = allow_prune and _bounds_current(index_dir, stats,
                                                       buckets)
     cand = postings.filter(F.col("term").isin(terms)).select(
-        "term", "df", "max_impact", "blob", "block_max"
-    )
-    # segmented index (post-update, pre-compaction): a term may span several
-    # rows, so idf needs the cross-row df sum — one tiny metadata job over
-    # the already-bucket-pruned candidates. Skipped entirely on a compacted
-    # index (the common case), keeping the fast path one job.
-    idfs: dict[str, float] | None = None
-    seg = set(stats.get("segmented_buckets", []))
-    if seg and (buckets is None or seg & set(buckets)):
-        idfs = {t: _idf(n, d) for t, d in _term_dfs(cand).items()}
+        "term", "blob", "block_max")
+    idfs = _idfs(td, n, terms)
     lambdas: dict[str, float] | None = None
-    if (wand and len(terms) > 1 and allow_prune and mode == "or"
+    if (wand and len(terms) > 1 and idfs and allow_prune and mode == "or"
             and not boosts):
-        meta = cand.select("term", "df", "max_impact").collect()
-        if meta:
-            idfs = {r["term"]: _idf(n, r["df"]) for r in meta}
-            ubs = {r["term"]: idfs[r["term"]] * (K1 + 1.0) * r["max_impact"]
-                   for r in meta}
-            rarest = min(meta, key=lambda r: r["df"])
-            if rarest["df"] >= k:
-                r_top = (
-                    cand.filter(F.col("term") == rarest["term"])
-                    .mapInPandas(_score_partition(n, avgdl, k, single_term=True),
-                                 schema="doc_id long, term string, contrib double")
-                    .orderBy(F.col("contrib").desc()).limit(k).collect()
-                )
-                if len(r_top) >= k:
-                    theta = r_top[k - 1]["contrib"]
-                    total_ub = sum(ubs.values())
-                    lambdas = {t: theta - (total_ub - ubs[t]) for t in ubs}
+        ubs = {t: idf * (K1 + 1.0) * td.stats[t].max_impact
+               for t, idf in idfs.items()}
+        rarest = min(idfs, key=lambda t: td.stats[t].df)
+        if td.stats[rarest].df >= k:
+            r_top = (
+                cand.filter(F.col("term") == rarest)
+                .mapInPandas(_score_partition(n, avgdl, k, True, idfs),
+                             schema="doc_id long, term string, contrib double")
+                .orderBy(F.col("contrib").desc()).limit(k).collect()
+            )
+            if len(r_top) >= k:
+                theta = r_top[k - 1]["contrib"]
+                total_ub = sum(ubs.values())
+                lambdas = {t: theta - (total_ub - ubs[t]) for t in ubs}
     contrib = cand.mapInPandas(
-        _score_partition(n, avgdl, k,
-                         single_term=len(terms) == 1 and allow_prune,
-                         lambdas=lambdas, idfs=idfs),
+        _score_partition(n, avgdl, k, len(terms) == 1 and allow_prune, idfs,
+                         lambdas),
         schema="doc_id long, term string, contrib double",
     )
     if boosts:
@@ -1049,13 +986,13 @@ def bm25_topk(
         contrib = contrib.withColumn(
             "contrib",
             F.col("contrib") * F.coalesce(bmap[F.col("term")], F.lit(1.0)))
-    if len(terms) == 1 and idfs is None:
-        # single-term fast path (compacted index: exactly one contribution
+    if _one_row(td, terms):
+        # single-term fast path (one posting row: exactly one contribution
         # per doc): the per-doc sum is the contribution itself, so the
         # groupBy shuffle stage disappears — the plan is scan → Arrow score
         # → TakeOrdered. Bitwise-identical to the aggregate (0.0 + x == x
-        # for positive doubles). Segmented indexes (idfs set) keep the
-        # aggregate: a term may span several segment rows.
+        # for positive doubles). A term spanning several segment rows
+        # keeps the aggregate.
         scored = contrib.select("doc_id", F.col("contrib").alias("score"))
     else:
         scored = _doc_scores(contrib, mode, msm, len(terms))
@@ -1131,7 +1068,9 @@ def bm25_topk(
 
 def _batch_wand_lambdas(
     cand: DataFrame,
+    td: TermDict,
     q_terms: dict[str, list[str]],
+    idfs: dict[str, float],
     n: int,
     avgdl: float,
     k: int,
@@ -1145,18 +1084,14 @@ def _batch_wand_lambdas(
     block, then for any q∋t, score_q(d) ≤ ub_t + Σ_{u≠t} ub_u < θ_q, so d
     can't reach q's top-k. Returns None when nothing is prunable.
 
-    Costs two small jobs (metadata collect + one rarest-terms scoring pass —
-    the terms pass is shared across all queries, not per query)."""
-    meta = cand.select("term", "df", "max_impact").collect()
-    if not meta:
+    df and max_impact come from the term dictionary; costs one small job
+    (one rarest-terms scoring pass shared across all queries, not per
+    query)."""
+    if not idfs:
         return None
-    dfs: dict[str, int] = {}
-    mx: dict[str, float] = {}
-    for r in meta:  # a term may span rows on a segmented index
-        dfs[r["term"]] = dfs.get(r["term"], 0) + r["df"]
-        mx[r["term"]] = max(mx.get(r["term"], 0.0), r["max_impact"])
-    idf = {t: _idf(n, d) for t, d in dfs.items()}
-    ubs = {t: idf[t] * (K1 + 1.0) * mx[t] for t in dfs}
+    dfs = {t: td.stats[t].df for t in idfs}
+    ubs = {t: idf * (K1 + 1.0) * td.stats[t].max_impact
+           for t, idf in idfs.items()}
     rarest: dict[str, str] = {}
     for qid, ts in q_terms.items():
         present = [t for t in ts if t in dfs]
@@ -1166,7 +1101,7 @@ def _batch_wand_lambdas(
     thetas: dict[str, float] = {}
     if probe:
         contrib_r = cand.filter(F.col("term").isin(probe)).mapInPandas(
-            _score_partition(n, avgdl, k, single_term=True, idfs=idf),
+            _score_partition(n, avgdl, k, True, idfs),
             schema="doc_id long, term string, contrib double",
         )
         rows = (_rank_within(contrib_r, "term", "_rn", "contrib")
@@ -1210,15 +1145,16 @@ def bm25_topk_batch(
     Amortizes the per-job overhead that dominates single-query p50 in
     local mode; on a cluster it turns q queries × t terms into one shuffle
     instead of q. wand=True adds batch-safe block-max pruning (see
-    _batch_wand_lambdas) — exact, two extra small jobs; worth it when hot
+    _batch_wand_lambdas) — exact, one extra small job; worth it when hot
     multi-term queries dominate the batch.
 
-    Single-term queries bypass the contribution shuffle entirely (r5): a
-    single-term score IS the term's contribution, so those queries are
-    answered by a separate tiny scan with per-term block-max pruning (the
-    same exact prune bm25_topk's fast path uses) and a per-term top-k —
-    a hot single-term query ("the") no longer pushes its whole posting
-    list through the (query, doc) aggregate. Bit-identical to the
+    Single-term queries whose term sits in one posting row bypass the
+    contribution shuffle entirely (r5): their score IS the term's
+    contribution, so those queries are answered by a separate tiny scan
+    with per-term block-max pruning (the same exact prune bm25_topk's
+    fast path uses) and a per-term top-k — a hot single-term query
+    ("the") no longer pushes its whole posting list through the (query,
+    doc) aggregate. Bit-identical to the
     aggregate path (0.0 + x == x for doubles), pytest-pinned against
     bm25_topk per query.
 
@@ -1245,9 +1181,9 @@ def bm25_topk_batch(
 
     doc_filter (SQL expression over docs metadata, see bm25_topk) applies
     to EVERY query in the batch: one filtered docs projection, one
-    semi-join before the per-query top-k windows. Prefix wildcards
-    (``merg*``) expand per query against the term dictionary in a single
-    combined scan; mode='and' rejects wildcards (same as bm25_topk).
+    semi-join before the per-query top-k windows. Prefix / fuzzy /
+    regexp tokens expand per query against the term dictionary;
+    mode='and' rejects them (same as bm25_topk).
     Exclusions (``-term`` / ``-pre*``, see bm25_topk) apply per query via
     one (query_id, doc_id) anti-join fed by a single ids-only scan over
     the union of every query's excluded terms."""
@@ -1266,15 +1202,12 @@ def bm25_topk_batch(
             "— batch queries share one doc_filter; pass doc_filter= for "
             "the whole batch or run scoped queries via bm25_topk")
     parsed = {qid: _parse_query_full(q) for qid, q in queries.items()}
-    for qid, pq_ in parsed.items():
-        _reject_regexes(pq_, f"bm25_topk_batch (query {qid!r})")
     out_schema = "query_id string, doc_id long, score double, rank int"
     ix = _open(spark, index_dir)
-    postings, stats = ix.postings, ix.stats
-    # one _TermDict for the whole batch: one dictionary scan per token
-    # kind, expansion bound per query (consistent with bm25_topk)
+    postings, stats, td = ix.postings, ix.stats, ix.tdict
+    # expansion bound per query (consistent with bm25_topk)
     clauses = dict(zip(parsed, _resolve(
-        postings, stats, list(parsed.values()), mode, msm, synonyms,
+        td, stats, list(parsed.values()), mode, msm, synonyms,
         max_expansions)))
     q_terms = {qid: c.terms for qid, c in clauses.items()}
     q_negs = {qid: c.nterms for qid, c in clauses.items()}
@@ -1293,15 +1226,14 @@ def bm25_topk_batch(
         # same version gate as bm25_topk
         allow_prune = allow_prune and _bounds_current(index_dir, stats,
                                                       buckets)
-    segmented = bool(stats.get("segmented_buckets"))
     # single-term queries split off the aggregate path when their score is
-    # provably one row's contribution: compacted index (one row per term)
-    # and trustworthy block-max bounds
+    # provably one row's contribution: a term in one posting row and
+    # trustworthy block-max bounds
     singles: dict[str, str] = {}
     multis: dict[str, list[str]] = {}
-    if allow_prune and not segmented and msm is None:
+    if allow_prune and msm is None:
         for qid, ts in q_terms.items():
-            if len(ts) == 1:
+            if _one_row(td, ts):
                 singles[qid] = ts[0]
             else:
                 multis[qid] = ts
@@ -1315,9 +1247,9 @@ def bm25_topk_batch(
     if singles:
         s_terms = sorted(set(singles.values()))
         s_cand = postings.filter(F.col("term").isin(s_terms)).select(
-            "term", "df", "max_impact", "blob", "block_max")
+            "term", "blob", "block_max")
         s_contrib = s_cand.mapInPandas(
-            _score_partition(n, avgdl, k, single_term=True),
+            _score_partition(n, avgdl, k, True, _idfs(td, n, s_terms)),
             schema="doc_id long, term string, contrib double")
         s_top = (_rank_within(s_contrib, "term", score="contrib")
                  .filter(F.col("rank") <= k))
@@ -1336,15 +1268,13 @@ def bm25_topk_batch(
     if multis:
         m_terms = sorted({t for ts in multis.values() for t in ts})
         cand = postings.filter(F.col("term").isin(m_terms)).select(
-            "term", "df", "max_impact", "blob", "block_max")
-        idfs = ({t: _idf(n, d) for t, d in _term_dfs(cand).items()}
-                if segmented else None)
-        lambdas = (_batch_wand_lambdas(cand, multis, n, avgdl, k)
+            "term", "blob", "block_max")
+        idfs = _idfs(td, n, m_terms)
+        lambdas = (_batch_wand_lambdas(cand, td, multis, idfs, n, avgdl, k)
                    if wand and allow_prune and mode == "or"
                    and msm is None and not any_boost else None)
         contrib = cand.mapInPandas(
-            _score_partition(n, avgdl, k, single_term=False, idfs=idfs,
-                             lambdas=lambdas),
+            _score_partition(n, avgdl, k, False, idfs, lambdas),
             schema="doc_id long, term string, contrib double",
         )
         qmap = spark.createDataFrame(
@@ -1523,20 +1453,16 @@ def _positional_index(spark: SparkSession, index_dir: str) -> _Index:
 
 
 def _positions(spark: SparkSession, ix: _Index, terms: list[str]
-               ) -> tuple[DataFrame, dict[str, int]]:
-    """The bucket/row-group-pruned positional rows of `terms` and each
-    term's df — summed driver-side, since a term may span several rows on
-    a segmented index (post-update, pre-compaction)."""
+               ) -> DataFrame:
+    """The bucket/row-group-pruned positional rows of `terms` (their df
+    and presence come from the term dictionary: a term's positional rows
+    sum to its posting df)."""
     import os
 
     pos_df, _ = _prune_buckets(
         spark.read.parquet(os.path.join(ix.dir, "positions")), ix.stats,
         terms)
-    pos_df = pos_df.filter(F.col("term").isin(terms))
-    dfs: dict[str, int] = {}
-    for r in pos_df.select("term", "df").collect():
-        dfs[r["term"]] = dfs.get(r["term"], 0) + int(r["df"])
-    return pos_df, dfs
+    return pos_df.filter(F.col("term").isin(terms))
 
 
 def bm25_phrase_topk(
@@ -1598,13 +1524,14 @@ def bm25_phrase_topk(
             return spark.createDataFrame([], out_schema)
     n, avgdl = stats["n_docs"], stats["avgdl"]
     uterms = sorted(set(seq))
-    pos_df, dfs = _positions(spark, ix, uterms)
-    if set(dfs) != set(uterms):
+    idf = _idfs(ix.tdict, n, uterms)
+    if len(idf) < len(uterms):
         return spark.createDataFrame([], out_schema)  # a term is absent
-    idf = {t: _idf(n, d) for t, d in dfs.items()}
+    pos_df = _positions(spark, ix, uterms)
     cand_ids: np.ndarray | None = None
-    rarest = min(uterms, key=lambda t: dfs[t])
-    if len(uterms) > 1 and dfs[rarest] <= candidate_collect_limit:
+    tstats = ix.tdict.stats
+    rarest = min(uterms, key=lambda t: tstats[t].df)
+    if len(uterms) > 1 and tstats[rarest].df <= candidate_collect_limit:
         blobs = pos_df.filter(F.col("term") == rarest).select(
             "blob").collect()
         cand_ids = np.sort(np.concatenate(
@@ -1860,8 +1787,7 @@ def _facets(spark: SparkSession, index_dirs: list[str], query: str,
         raise ValueError(
             f"facets: {bad!r} not docs-metadata columns "
             f"(have {sorted(have)})")
-    _reject_regexes(pq, "bm25_facets")
-    [cl] = _resolve(handles[0].postings, handles[0].stats, [pq], mode,
+    [cl] = _resolve(handles[0].tdict, handles[0].stats, [pq], mode,
                     max_expansions=max_expansions)
     matched = _match_set(spark, handles, cl, mode, None, doc_filter)
     if matched is None:
@@ -1974,12 +1900,11 @@ def bm25_explain(
     selected via **topk_kwargs, not the raw contributions shown."""
     query, doc_filter = _split_field_scopes(
         query, topk_kwargs.pop("doc_filter", None))
-    postings, _, stats = read_index(spark, index_dir)
-    pq = _parse_query_full(query)
-    _reject_regexes(pq, "bm25_explain")
+    ix = _open(spark, index_dir)
+    postings, stats = ix.postings, ix.stats
     [(terms, _, boosts)] = _resolve(
-        postings, stats, [pq], synonyms=topk_kwargs.get("synonyms"),
-        max_expansions=max_expansions)
+        ix.tdict, stats, [_parse_query_full(query)],
+        synonyms=topk_kwargs.get("synonyms"), max_expansions=max_expansions)
     out_schema = ("doc_id long, term string, tf double, dl double, "
                   "df double, idf double, boost double, contrib double")
     if not terms:
@@ -1996,13 +1921,9 @@ def bm25_explain(
                                 dtype=np.int64))
     n, avgdl = stats["n_docs"], stats["avgdl"]
     postings, _ = _prune_buckets(postings, stats, terms)
-    cand = postings.filter(F.col("term").isin(terms)).select(
-        "term", "df", "blob")
-    # segmented index: a term spans several rows — idf needs the
-    # cross-segment df sum (same policy as bm25_topk)
-    idfs: dict[str, float] | None = None
-    if stats.get("segmented_buckets"):
-        idfs = {t: float(d) for t, d in _term_dfs(cand).items()}
+    cand = postings.filter(F.col("term").isin(terms)).select("term", "blob")
+    dfs = {t: float(ix.tdict.stats[t].df) for t in terms
+           if t in ix.tdict.stats}
     bmap = dict(boosts)
 
     def explain_fn(batches):
@@ -2010,9 +1931,8 @@ def bm25_explain(
 
         for pdf in batches:
             frames = []
-            for term, t_df, blob in zip(pdf["term"], pdf["df"],
-                                        pdf["blob"]):
-                dfv = idfs[term] if idfs is not None else float(t_df)
+            for term, blob in zip(pdf["term"], pdf["blob"]):
+                dfv = dfs[term]
                 ids, tfs, dls = _decode_partial(blob)
                 keep = np.flatnonzero(
                     np.isin(ids, target, assume_unique=True))
@@ -2056,8 +1976,7 @@ def more_like_this(
     postings, not text) — the seed text is fetched with a doc_id pushdown
     filter, so at 100 TB this reads one document's row group. Term
     selection is driver-side over that ONE document: tf from its token
-    list, df from the index's per-term stats (a bucket-pruned metadata
-    read of just the candidate terms — blobs untouched), ranked by
+    list, df from the index's term dictionary (no Spark job), ranked by
     tf·idf with (−tfidf, term) tiebreak so the query is deterministic.
     Terms below min_tf/min_df are dropped (Lucene's noise gates); the
     top max_query_terms survive.
@@ -2083,12 +2002,11 @@ def more_like_this(
     out_schema = "doc_id long, score double"
     if not cand:
         return spark.createDataFrame([], out_schema)
-    postings, _, stats = read_index(spark, index_dir)
-    n = stats["n_docs"]
-    postings, _ = _prune_buckets(postings, stats, cand)
-    dfs = _term_dfs(postings.filter(F.col("term").isin(cand)))
+    ix = _open(spark, index_dir)
+    n, tstats = ix.stats["n_docs"], ix.tdict.stats
     ranked = sorted(
-        ((tf[t] * _idf(n, d), t) for t, d in dfs.items() if d >= min_df),
+        ((tf[t] * _idf(n, tstats[t].df), t) for t in cand
+         if t in tstats and tstats[t].df >= min_df),
         key=lambda x: (-x[0], x[1]))
     terms = sorted(t for _, t in ranked[:max_query_terms])
     if not terms:
@@ -2117,9 +2035,9 @@ def bm25_topk_sharded(
     Lucene MultiReader / Elasticsearch DFS-query-then-fetch shape.
 
     Global stats: n_docs and avgdl from the shards' persisted integer
-    counts; per-term df summed across shards by ONE metadata job over
-    the union of the shards' bucket-pruned candidate rows (term+df
-    columns only). Scoring is ONE job over that same union — a doc
+    counts; per-term df summed across the shards' term dictionaries on
+    the driver (no metadata job). Scoring is ONE job over the union of
+    the shards' bucket-pruned candidate rows — a doc
     lives in exactly one shard (caller contract: globally unique
     doc_ids), so the per-doc ascending-term sum reproduces the
     monolithic float order exactly (identity pinned in pytest).
@@ -2138,7 +2056,7 @@ def bm25_topk_sharded(
     handles = [_open(spark, d) for d in index_dirs]
     pq = _parse_query_full(query)
     _check_shards("bm25_topk_sharded", handles, pq)
-    [(terms, nterms, _)] = _resolve(handles[0].postings, handles[0].stats,
+    [(terms, nterms, _)] = _resolve(handles[0].tdict, handles[0].stats,
                                     [pq], mode)
     if not terms:
         return _empty_topk(spark)
@@ -2146,23 +2064,24 @@ def bm25_topk_sharded(
     sum_dl = sum(h.stats.get("sum_dl", h.stats["avgdl"] * h.stats["n_docs"])
                  for h in handles)
     avgdl = sum_dl / n_docs
+    # the global df of a term is the sum of the shards' dictionary dfs
+    dfs: Counter[str] = Counter()
     cands, neg_parts = [], []
     for h in handles:
+        for t in terms:
+            if t in h.tdict.stats:
+                dfs[t] += h.tdict.stats[t].df
         postings, _ = _prune_buckets(h.postings, h.stats, [*terms, *nterms])
         cands.append(postings.filter(F.col("term").isin(terms))
-                     .select("term", "df", "blob"))
+                     .select("term", "blob"))
         if nterms:
             neg_parts.append(_term_doc_ids(postings, nterms))
-    cand_all = _union(cands)
-    # ONE global-df metadata job over the union (term+df column pruned)
-    idfs = {t: _idf(n_docs, d) for t, d in _term_dfs(cand_all).items()}
-    # the scorer needs block_max/max_impact columns for its schema; feed
-    # constants that disable pruning (single_term=False, no lambdas)
-    cand_sc = cand_all.withColumn(
-        "max_impact", F.lit(0.0)).withColumn(
-        "block_max", F.array().cast("array<double>"))
-    contrib = cand_sc.mapInPandas(
-        _score_partition(n_docs, avgdl, k, single_term=False, idfs=idfs),
+    # no pruning (single_term=False, no lambdas) leaves the kernel's
+    # block_max input unused: feed an empty list instead of reading it
+    contrib = _union(cands).withColumn(
+        "block_max", F.array().cast("array<double>")).mapInPandas(
+        _score_partition(n_docs, avgdl, k, False,
+                         {t: _idf(n_docs, d) for t, d in dfs.items()}),
         schema="doc_id long, term string, contrib double")
     scored = _restrict(spark, _doc_scores(contrib, mode, None, len(terms)),
                        handles, doc_filter, neg_parts)
@@ -2210,14 +2129,13 @@ def bm25_phrase_topk_batch(
     if not seqs:
         return spark.createDataFrame([], out_schema)
     n, avgdl = stats["n_docs"], stats["avgdl"]
-    all_terms = sorted({t for s in seqs.values() for t in s})
-    pos_df, dfs = _positions(spark, ix, all_terms)
+    idf = _idfs(ix.tdict, n, {t for s in seqs.values() for t in s})
     # a phrase with an unindexed term can never match — drop it up front
-    live = {qid: s for qid, s in seqs.items()
-            if all(t in dfs for t in s)}
+    live = {qid: s for qid, s in seqs.items() if all(t in idf for t in s)}
     if not live:
         return spark.createDataFrame([], out_schema)
-    idf = {t: _idf(n, d) for t, d in dfs.items()}
+    pos_df = _positions(spark, ix, sorted({t for s in live.values()
+                                           for t in s}))
 
     def decode_score(batches):
         for pdf in batches:
@@ -2341,8 +2259,7 @@ def bm25_match_ids(
     query, doc_filter = _split_field_scopes(query, doc_filter)
     handles = [_open(spark, index_dir)]
     pq = _parse_query_full(query)
-    _reject_regexes(pq, "bm25_count / bm25_match_ids")
-    [cl] = _resolve(handles[0].postings, handles[0].stats, [pq], mode, msm,
+    [cl] = _resolve(handles[0].tdict, handles[0].stats, [pq], mode, msm,
                     max_expansions=max_expansions)
     matched = _match_set(spark, handles, cl, mode, msm, doc_filter)
     if matched is None:

@@ -49,6 +49,7 @@ import os
 import shutil
 import threading
 import time
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -1038,8 +1039,10 @@ def delete_docs(spark: SparkSession, out_dir: str, doc_ids) -> dict:
             df = spark.createDataFrame([(int(i),) for i in doc_ids],
                                        "doc_id long")
         n = df.count()
+        # the cached version stays valid: queries read tombstones per call,
+        # and postings, docs, stats and the term dictionary (whose df counts
+        # deleted docs until compaction) are unchanged
         df.write.mode("append").parquet(os.path.join(out_dir, _TOMBSTONES))
-        invalidate_index_cache(out_dir)
         return {"tombstoned": n}
     finally:
         _mutation_end(_key)
@@ -1097,12 +1100,16 @@ def update_index(
       the full historical posting list of a hot term never lands on one
       task — the scale killer the old rewrite-touched-buckets variant had.
     - a term may now span several rows (base + per-update segments);
-      the query path sums df across rows for idf and concatenates
-      candidates (exactness unaffected — every (term, doc) posting lives in
-      exactly one segment). Buckets with segments are recorded in
+      the term dictionary sums df across rows for idf and the query path
+      concatenates candidates (exactness unaffected — every (term, doc)
+      posting lives in exactly one segment). Buckets with segments are recorded in
       stats.json `segmented_buckets`; their block-max metadata is stale
       w.r.t. the new avgdl so the version gate keeps pruning off there
       until `compact_index` merges segments back to one row per term.
+    - if this process holds the previous version's term dictionary (the
+      index is being served), the delta's (term, df, max_impact) rows are
+      folded into it — one small collect over the persisted delta — so
+      the next query loads no dictionary (`open_index`).
 
     Reference lineage: the reference has no incremental index; this is the
     standard Lucene/LSM segment-log design expressed as parquet appends.
@@ -1123,6 +1130,10 @@ def update_index(
     recover_update_inflight(out_dir)  # roll back a crashed previous update
     _key = _mutation_begin(out_dir)
     try:
+        # a served index's term dictionary carries over: the delta's term
+        # stats fold into it, so the next query loads no dictionary
+        prev = _INDEX_CACHE.get(_version_key(spark, out_dir))
+        base_td = prev.tdict if prev is not None else None
         with open(os.path.join(out_dir, "stats.json")) as f:
             stats = json.load(f)
         tomb = tombstone_ids(spark, out_dir)
@@ -1237,9 +1248,14 @@ def update_index(
             .repartition("bucket")
             .sortWithinPartitions("term")
         )
+        if base_td is not None:
+            new_enc = new_enc.persist(StorageLevel.MEMORY_AND_DISK)
         postings_root = os.path.join(out_dir, "postings")
         new_enc.write.mode("append").partitionBy("bucket").parquet(postings_root)
         new_post.unpersist()
+        if base_td is not None:
+            delta_terms = new_enc.select("term", "df", "max_impact").toArrow()
+            new_enc.unpersist()
 
         if stats.get("has_positions"):
             # positional layer: same LSM segment append — the delta's
@@ -1273,6 +1289,7 @@ def update_index(
                       "segmented_buckets": seg})
         with open(os.path.join(out_dir, "stats.json"), "w") as f:
             json.dump(stats, f)
+        new_key = _version_key(spark, out_dir)
         # touched buckets are re-stamped at their PRE-update version: they now
         # hold mixed-era block-max metadata, so they must read as stale (block
         # pruning off) until compaction rewrites them
@@ -1284,6 +1301,8 @@ def update_index(
                                     "version": bv.get(b, 1), "op": "update",
                                     "ts": time.time()}) + "\n")
         invalidate_index_cache(out_dir)
+        if base_td is not None:
+            _INDEX_CACHE[new_key] = _Version(_term_dict(delta_terms, base_td))
         if journal:
             os.remove(os.path.join(out_dir, _UPDATE_INFLIGHT))
         return {"n_docs": n_docs, "avgdl": avgdl, "version": version,
@@ -1605,24 +1624,77 @@ def bucket_versions(out_dir: str) -> dict[int, int]:
     return versions
 
 
-_INDEX_CACHE: dict[tuple, tuple[DataFrame, DataFrame, dict]] = {}
+class TermStats(NamedTuple):
+    """One term's dictionary entry: df summed over its posting rows, the
+    max of their max_impact, and the number of rows (1 on a compacted
+    index; a segmented index adds one per update that touched the term)."""
+    df: int
+    max_impact: float
+    rows: int
 
 
-def read_index(spark: SparkSession, out_dir: str) -> tuple[DataFrame, DataFrame, dict]:
-    """Open an index (postings df, docs df, stats). DataFrame handles are
-    memoized per (applicationId, path, stats version+mtime): a new session
-    never collides with a garbage-collected one (id() reuse), and an
-    update/compact by ANOTHER process bumps the stats file's version/mtime,
-    invalidating naturally. Same-process builders also call
-    `invalidate_index_cache` explicitly."""
+class TermDict(NamedTuple):
+    """An index version's term dictionary: the ascending vocabulary and
+    each term's TermStats — the small columnar half of the index, kept
+    apart from the posting blobs."""
+    terms: list[str]
+    stats: dict[str, TermStats]
+
+
+def _term_dict(rows, base: TermDict | None = None) -> TermDict:
+    """Fold posting rows' (term, df, max_impact) — an Arrow table — into a
+    TermDict, on top of `base` when given (update_index folds its delta
+    into the previous version's dictionary). Exact: df sums integers and
+    max_impact takes a max, so folding row sets in any grouping gives the
+    same dictionary as one fold over all rows."""
+    g = rows.group_by("term").aggregate(
+        [("df", "sum"), ("max_impact", "max"), ("df", "count")])
+    stats = dict(zip(g["term"].to_pylist(), map(
+        TermStats, g["df_sum"].to_pylist(), g["max_impact_max"].to_pylist(),
+        g["df_count"].to_pylist())))
+    if base is not None:
+        for t, s in stats.items():
+            o = base.stats.get(t)
+            if o is not None:
+                stats[t] = TermStats(o.df + s.df,
+                                     max(o.max_impact, s.max_impact),
+                                     o.rows + s.rows)
+        stats = {**base.stats, **stats}
+    return TermDict(sorted(stats), stats)
+
+
+class _Version:
+    """One cached index version: read_index's (postings, docs, stats)
+    handles, opened on the first read, and its TermDict, loaded on the
+    first open_index — or folded in ahead of the first read by the
+    in-process update_index that created the version."""
+    __slots__ = ("handles", "tdict")
+
+    def __init__(self, tdict: TermDict | None = None):
+        self.handles: tuple[DataFrame, DataFrame, dict] | None = None
+        self.tdict = tdict
+
+
+_INDEX_CACHE: dict[tuple, _Version] = {}
+
+
+def _version_key(spark: SparkSession, out_dir: str) -> tuple:
+    """(applicationId, path, stats mtime): a new session never collides
+    with a garbage-collected one (id() reuse), and an update/compact by
+    ANOTHER process rewrites stats.json, so it names a new version."""
+    mtime = os.stat(os.path.join(out_dir, "stats.json")).st_mtime_ns
+    return (spark.sparkContext.applicationId, os.path.abspath(out_dir), mtime)
+
+
+def _index_entry(spark: SparkSession, out_dir: str) -> _Version:
+    """The cache entry of the index's current version, handles open."""
     restore_compact_backup(out_dir)  # never serve a crashed compaction
     recover_update_inflight(out_dir)  # nor a crashed (dead-owner) update
-    stats_path = os.path.join(out_dir, "stats.json")
-    mtime = os.stat(stats_path).st_mtime_ns
-    key = (spark.sparkContext.applicationId, os.path.abspath(out_dir), mtime)
-    if key in _INDEX_CACHE:
-        return _INDEX_CACHE[key]
-    with open(stats_path) as f:
+    key = _version_key(spark, out_dir)
+    entry = _INDEX_CACHE.get(key)
+    if entry is not None and entry.handles is not None:
+        return entry
+    with open(os.path.join(out_dir, "stats.json")) as f:
         stats = json.load(f)
     postings_root = os.path.join(out_dir, "postings")
     if any(d.startswith("bucket=") for d in (_list_dir(postings_root) or [])):
@@ -1649,8 +1721,34 @@ def read_index(spark: SparkSession, out_dir: str) -> tuple[DataFrame, DataFrame,
     # cache (and pin old DataFrames) for the life of a query server
     for k in [k for k in _INDEX_CACHE if k[:2] == key[:2] and k != key]:
         del _INDEX_CACHE[k]
-    _INDEX_CACHE[key] = (postings, docs, stats)
-    return postings, docs, stats
+    entry = _INDEX_CACHE.setdefault(key, _Version())
+    entry.handles = (postings, docs, stats)
+    return entry
+
+
+def read_index(spark: SparkSession, out_dir: str) -> tuple[DataFrame, DataFrame, dict]:
+    """Open an index (postings df, docs df, stats). DataFrame handles are
+    memoized per index version (`_version_key`), so an update/compact by
+    another process invalidates them naturally; same-process mutations
+    also call `invalidate_index_cache` explicitly."""
+    return _index_entry(spark, out_dir).handles
+
+
+def open_index(spark: SparkSession, out_dir: str
+               ) -> tuple[DataFrame, DataFrame, dict, TermDict]:
+    """read_index plus the version's term dictionary, from ONE cache entry,
+    so handles, stats and dictionary always describe the same index
+    version. The dictionary costs ONE column-pruned collect of (term, df,
+    max_impact) — the posting blobs are never read — on the first call
+    after a version change made by another process, a build, a compaction
+    or a merge; an in-process update_index folds its delta into the
+    previous version's dictionary instead. Every query-time df, WAND bound
+    and prefix / fuzzy / regexp expansion is then answered on the driver."""
+    entry = _index_entry(spark, out_dir)
+    if entry.tdict is None:
+        entry.tdict = _term_dict(
+            entry.handles[0].select("term", "df", "max_impact").toArrow())
+    return (*entry.handles, entry.tdict)
 
 
 def invalidate_index_cache(out_dir: str | None = None) -> None:

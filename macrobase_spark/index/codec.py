@@ -133,20 +133,6 @@ def delta_varint_decode(buf: bytes, return_offset: bool = False):
     return (ids, tfs, off) if return_offset else (ids, tfs)
 
 
-def merge_posting_blobs(blobs: list[bytes]) -> bytes:
-    """Merge several posting-list blobs for the same term (disjoint or
-    interleaved doc ranges, e.g. salted partials) into one sorted blob."""
-    ids, tfs = [], []
-    for b in blobs:
-        i, t = delta_varint_decode(b)
-        ids.append(i)
-        tfs.append(t)
-    all_ids = np.concatenate(ids)
-    all_tfs = np.concatenate(tfs)
-    order = np.argsort(all_ids, kind="stable")
-    return delta_varint_encode(all_ids[order], all_tfs[order])
-
-
 # --------------------------------------------------------------- positions
 
 def encode_positional(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,

@@ -64,55 +64,6 @@ def _tokenize_flat_arrow(text):
     lens = np.bincount(row_idx, minlength=len(row_len)).astype(np.int64)
     return flat, row_idx, lens
 
-_TOKENIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("terms", T.ArrayType(T.StringType())),
-        T.StructField("tfs", T.ArrayType(T.IntegerType())),
-        T.StructField("doc_len", T.IntegerType()),
-        T.StructField("rep_ratio", T.DoubleType()),
-    ]
-)
-
-
-def _tokenize_batch(text: pd.Series) -> pd.DataFrame:
-    """Vectorized tokenize + per-doc term counting in numpy, built on the
-    ONE shared flatten/factorize/np.unique core (_flat_term_counts) — the
-    same kernel every other tokenizing UDF uses, so the tokenizer can
-    never diverge between the array-assembling and flat paths."""
-    bounds, _urow, ucode, counts, vocab, lens = _flat_term_counts(text)
-    n_rows = len(lens)
-    if bounds is None:
-        empty_t = [[] for _ in range(n_rows)]
-        return pd.DataFrame(
-            {"terms": empty_t, "tfs": [[] for _ in range(n_rows)],
-             "doc_len": np.zeros(n_rows, dtype=np.int32),
-             "rep_ratio": np.zeros(n_rows)}
-        )
-    terms_col, tfs_col = [], []
-    for r in range(n_rows):
-        s, e = bounds[r], bounds[r + 1]
-        terms_col.append(vocab[ucode[s:e]].tolist())
-        tfs_col.append(counts[s:e].astype(np.int32).tolist())
-    n_unique = bounds[1:] - bounds[:-1]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        rep = np.where(lens > 0, 1.0 - n_unique / np.maximum(lens, 1), 0.0)
-    return pd.DataFrame(
-        {"terms": terms_col, "tfs": tfs_col,
-         "doc_len": lens.astype(np.int32), "rep_ratio": rep}
-    )
-
-
-@F.pandas_udf(_TOKENIZED_SCHEMA)
-def tokenize_udf(text: pd.Series) -> pd.DataFrame:
-    return _tokenize_batch(text)
-
-
-def tokenize_turns(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Add terms/tfs/doc_len/rep_ratio via the single fused Arrow pass."""
-    return df.withColumn("_tok", tokenize_udf(F.col(text_col))).select(
-        "*", "_tok.terms", "_tok.tfs", "_tok.doc_len", "_tok.rep_ratio"
-    ).drop("_tok")
-
 
 def _flat_term_counts(text: pd.Series, stopwords: frozenset | None = None):
     """Shared vectorized core: flatten batch tokens, factorize, one np.unique

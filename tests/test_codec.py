@@ -6,7 +6,6 @@ from hypothesis import given, settings, strategies as st
 from macrobase_spark.index.codec import (
     delta_varint_decode,
     delta_varint_encode,
-    merge_posting_blobs,
     varint_decode,
     varint_encode,
 )
@@ -40,19 +39,6 @@ def test_empty_posting():
     blob = delta_varint_encode(np.array([], dtype=np.uint64), np.array([], dtype=np.uint64))
     ids, tfs = delta_varint_decode(blob)
     assert len(ids) == 0 and len(tfs) == 0
-
-
-def test_merge_salted_partials():
-    rng = np.random.default_rng(0)
-    all_ids = np.sort(rng.choice(10**6, size=1000, replace=False).astype(np.uint64))
-    tfs = rng.integers(1, 50, size=1000).astype(np.uint64)
-    blobs = [
-        delta_varint_encode(all_ids[s::4], tfs[s::4]) for s in range(4)  # salt shards
-    ]
-    merged = merge_posting_blobs(blobs)
-    ids, t = delta_varint_decode(merged)
-    np.testing.assert_array_equal(ids, all_ids)
-    np.testing.assert_array_equal(t, tfs)
 
 
 def test_compression_ratio_on_dense_ids():

@@ -306,9 +306,9 @@ def test_batch_wand_prunes_hot_two_term_query(spark, tmp_path):
     pruning) while ranks and scores stay identical to the exact path."""
     import numpy as np
 
-    from macrobase_spark.index.build import K1
+    from macrobase_spark.index.build import K1, open_index
     from macrobase_spark.index.bm25 import (
-        _batch_wand_lambdas, _tokenize_query, bm25_topk_batch)
+        _batch_wand_lambdas, _idfs, _parse_query_full, bm25_topk_batch)
 
     rows = []
     for d in range(16):  # high-impact: tf=8, short docs, low doc_ids → block 0
@@ -332,14 +332,16 @@ def test_batch_wand_prunes_hot_two_term_query(spark, tmp_path):
     assert a == b and len(a) == 10
     assert all(doc < 16 for _, doc, _ in a)  # high-impact docs win
 
-    postings, _, stats = read_index(spark, out)
-    terms = _tokenize_query("spike the")
+    postings, _, stats, td = open_index(spark, out)
+    terms = sorted(_parse_query_full("spike the").terms)
     cand = postings.filter(F.col("term").isin(terms)).select(
-        "term", "df", "max_impact", "blob", "block_max")
-    lam = _batch_wand_lambdas(cand, {"h": terms}, stats["n_docs"],
-                              stats["avgdl"], 10)
+        "term", "blob", "block_max")
+    lam = _batch_wand_lambdas(cand, td, {"h": terms},
+                              _idfs(td, stats["n_docs"], terms),
+                              stats["n_docs"], stats["avgdl"], 10)
     assert lam and "spike" in lam
-    meta = cand.select("term", "df", "block_max").collect()
+    meta = (postings.filter(F.col("term").isin(terms))
+            .select("term", "df", "block_max").collect())
     dfs = {}
     for r in meta:
         dfs[r["term"]] = dfs.get(r["term"], 0) + r["df"]
@@ -659,10 +661,10 @@ def test_recency_decay_matches_python_recount(spark, corpus):
 
 
 def test_regexp_term_query_rank_identical(spark, corpus):
-    """/pat/ expands against the dictionary (anchored, Java regex) and
-    scores as a disjunction with per-term idf — rank+score identical to
-    the oracle's re.fullmatch expansion (common regex subset); equals the
-    explicitly expanded query bitwise."""
+    """/pat/ expands against the dictionary (re.fullmatch, as in the
+    oracle) and scores as a disjunction with per-term idf — rank+score
+    identical to the oracle's expansion; equals the explicitly expanded
+    query bitwise."""
     import re as _re
 
     _, out, _, docs = corpus
@@ -684,7 +686,8 @@ def test_regexp_term_query_rank_identical(spark, corpus):
 
 def test_regexp_exclusion_boost_and_guardrails(spark, corpus):
     """-/pat/ excludes every match; /pat/^2 boosts the expansions; regex
-    tokens refuse mode='and'/msm and the non-topk paths."""
+    tokens refuse mode='and'/msm, expand identically on the batch, count
+    and facet surfaces, and an invalid pattern raises ValueError."""
     from macrobase_spark.index.bm25 import (bm25_count, bm25_facets,
                                             bm25_topk_batch)
 
@@ -701,14 +704,26 @@ def test_regexp_exclusion_boost_and_guardrails(spark, corpus):
         assert math.isclose(gs, ws, rel_tol=1e-12)
     with pytest.raises(ValueError, match="not supported with"):
         bm25_topk(spark, out, "/rare[0-9]+/ the", mode="and")
-    with pytest.raises(ValueError, match="regexp tokens"):
-        bm25_topk_batch(spark, out, ["/rare[0-9]+/ the"])
-    with pytest.raises(ValueError, match="regexp tokens"):
-        bm25_count(spark, out, "/rare[0-9]+/")
-    with pytest.raises(ValueError, match="regexp tokens"):
-        bm25_facets(spark, out, "/rare[0-9]+/", ["role"])
+    # batch, count and facets expand regexps through the same dictionary
+    qs = {"pos": "/rare[0-9]+/ the", "neg": "the -/rare[0-9]+/",
+          "boost": "/rare(7|11)/^2 call"}
+    batch = bm25_topk_batch(spark, out, qs, k=8).collect()
+    for qid, q in qs.items():
+        single = [(r["doc_id"], r["score"]) for r in
+                  bm25_topk(spark, out, q, k=8).collect()]
+        per_q = [(r["doc_id"], r["score"]) for r in
+                 sorted((r for r in batch if r["query_id"] == qid),
+                        key=lambda r: r["rank"])]
+        assert per_q == single and single, qid
+    n = bm25_count(spark, out, "/rare[0-9]+/").collect()[0]["n_matches"]
+    assert n == len(bm25_oracle(docs, "/rare[0-9]+/", k=10 ** 9)) and n
+    facets = bm25_facets(spark, out, "/rare[0-9]+/", ["role"]).collect()
+    assert [r["doc_count"] for r in facets
+            if r["facet"] == "__total__"] == [n]
     with pytest.raises(ValueError, match="expands to more"):
         bm25_topk(spark, out, "/.*/", k=5, max_expansions=8)
+    with pytest.raises(ValueError, match="not a valid pattern"):
+        bm25_topk(spark, out, "/(/")
 
 
 # ------------------------------------------- r5: query-time synonyms

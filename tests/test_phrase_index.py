@@ -161,7 +161,10 @@ def test_positional_update_compact_lifecycle(spark, tmp_path):
     positional segment rows (phrase queries see the delta immediately);
     compact_index merges segments back to one blob per term — results
     bit-identical at every stage vs the oracle over base+delta."""
-    from macrobase_spark.index.build import compact_index, update_index
+    import os
+
+    from macrobase_spark.index.build import (compact_index, open_index,
+                                             update_index)
 
     base = with_doc_id(synth_transcripts(spark, n_convs=30, seed=7)).cache()
     out = str(tmp_path / "lsm_pos")
@@ -170,6 +173,13 @@ def test_positional_update_compact_lifecycle(spark, tmp_path):
     delta = (with_doc_id(synth_transcripts(spark, n_convs=12, seed=99))
              .withColumn("doc_id", F.col("doc_id") + 10_000_000)).cache()
     update_index(delta, out)
+    # the phrase paths take df and presence from the term dictionary: a
+    # term's positional rows must sum to its dictionary df after an update
+    pos_dfs = {r["term"]: r["df"] for r in
+               spark.read.parquet(os.path.join(out, "positions"))
+               .groupBy("term").agg(F.sum("df").alias("df")).collect()}
+    assert pos_dfs == {t: st.df for t, st in
+                       open_index(spark, out)[3].stats.items()}
 
     docs = ([(r["doc_id"], r["text"]) for r in
              base.select("doc_id", "text").collect()]
@@ -199,7 +209,6 @@ def test_positional_update_compact_lifecycle(spark, tmp_path):
     check("post-compact")
     # compaction actually merged: every (bucket, term) in the positional
     # layer is back to a single segment row
-    import os
     pos = spark.read.parquet(os.path.join(out, "positions"))
     dup = (pos.groupBy("bucket", "term").count()
            .filter(F.col("count") > 1).count())

@@ -44,6 +44,43 @@ def test_dim_join_broadcasts(spark, sf):
     assert "BroadcastHashJoin" in p
 
 
+def test_semi_anti_joins_match_q03(spark, sf, tmp_path):
+    """q03 derives its EXISTS / NOT EXISTS legs from one per-customer
+    aggregate, so no semi or anti join runs there: real left_semi
+    (customers with an order above 100000) and left_anti (customers with
+    no order) joins, grouped by market segment, must give its
+    n_big_cust / n_no_orders. Every fixture customer has a big order, so
+    the orders are thinned first: custkey % 3 == 0 keeps none, == 1 only
+    its orders up to 100000 — each leg then counts a proper subset."""
+    import __spark_entry__ as e
+
+    c = spark.read.parquet(f"{sf}/customer.parquet")
+    cls = F.col("o_custkey") % 3
+    o = spark.read.parquet(f"{sf}/orders.parquet").filter(
+        (cls == 2) | ((cls == 1) & (F.col("o_totalprice") <= 100000)))
+    c.write.parquet(str(tmp_path / "customer.parquet"))
+    o.write.parquet(str(tmp_path / "orders.parquet"))
+    key = c.c_custkey == o.o_custkey
+    semi = c.join(o.filter(F.col("o_totalprice") > 100000), key, "left_semi")
+    anti = c.join(o, key, "left_anti")
+    assert "LeftSemi" in _plan(semi) and "LeftAnti" in _plan(anti)
+
+    def per_segment(rel):
+        return {r["c_mktsegment"]: r["count"] for r in
+                rel.groupBy("c_mktsegment").count().collect()}
+
+    big, none = per_segment(semi), per_segment(anti)
+    q03 = e.q03_join_inner_semi_anti(spark, str(tmp_path)).collect()
+    segs = {r["c_mktsegment"] for r in q03}
+    assert set(big) | set(none) <= segs
+    assert {r["c_mktsegment"]: r["n_big_cust"] for r in q03} == {
+        s: big.get(s, 0) for s in segs}
+    assert {r["c_mktsegment"]: r["n_no_orders"] for r in q03} == {
+        s: none.get(s, 0) for s in segs}
+    n_cust = c.count()
+    assert 0 < sum(big.values()) < n_cust and 0 < sum(none.values()) < n_cust
+
+
 def test_diff_is_single_grouping_sets_pass(spark, sf):
     """The DIFF lattice = ONE Expand + partial/final HashAggregate pair —
     not one aggregation per order."""
@@ -182,23 +219,23 @@ def test_bm25_doc_filter_pushes_down_and_semijoins(spark, tmp_path):
 
 
 def test_bm25_prefix_expansion_scan_reads_term_only(spark, tmp_path):
-    """The wildcard dictionary scan is column-pruned to the tiny term
-    column — posting blobs are never read to expand a prefix."""
+    """Prefix expansion reads the term dictionary, whose one load is a
+    scan column-pruned to (term, df, max_impact) — posting blobs are
+    never read to expand a prefix (asserted on the executed plan)."""
     from macrobase_spark.fixtures.transcripts import synth_transcripts, with_doc_id
-    from macrobase_spark.index.build import build_index, read_index
+    from macrobase_spark.index.build import (build_index, read_index,
+                                             open_index)
 
     df = with_doc_id(synth_transcripts(spark, n_convs=20, seed=42))
     out = str(tmp_path / "plan_idx_p")
     build_index(df, out, num_buckets=4, hot_df_threshold=10 ** 9)
-    postings, _, _ = read_index(spark, out)
-    expansion = (postings.filter(F.col("term").startswith("tok00"))
-                 .select("term").distinct())
-    p = _plan(expansion)
-    read_schema = p.split("ReadSchema:")[1].split("\n")[0]
-    assert "term" in read_schema
-    assert "blob" not in read_schema and "block_max" not in read_schema
-    # the prefix predicate reaches the scan
-    assert "StartsWith" in p or "PushedFilters: [IsNotNull(term)" in p
+    read_index(spark, out)
+    td = open_index(spark, out)[3]
+    assert any(t.startswith("tok00") for t in td.terms)
+    runs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    p = runs.apply(runs.size() - 1).physicalPlanDescription()
+    read_schema = p.split("ReadSchema:")[1].split("\n")[0].strip()
+    assert read_schema == "struct<term:string,df:bigint,max_impact:double>"
 
 
 def test_bm25_no_tombstone_join_when_none_pending(spark, tmp_path):

@@ -526,21 +526,41 @@ def test_range_facets_match_python_recount(spark, corpus):
         bm25_facets(spark, out, "the")
 
 
-def test_randomized_micro_syntax_rank_identity(spark, corpus):
+@pytest.fixture(scope="module")
+def seg_index(spark, corpus, tmp_path_factory):
+    """The corpus as a segmented positional index: a build over 4/5 of
+    it, then update_index with the rest (a term in both parts spans two
+    posting rows)."""
+    from macrobase_spark.index.build import update_index
+
+    df = corpus[0]
+    seg = str(tmp_path_factory.mktemp("qs_seg_index"))
+    base = F.col("conv_id") < "conv00000048"
+    build_index(df.filter(base), seg, num_buckets=4, hot_df_threshold=120,
+                hot_sample_frac=0.5, positions=True)
+    update_index(df.filter(~base), seg)
+    return seg
+
+
+def test_randomized_micro_syntax_rank_identity(spark, corpus, seg_index):
     """Seeded random sweep over the query micro-syntax surface: random
     combinations of plain terms, exclusions, prefix wildcards, boosts,
     fuzzy tokens, and regexp tokens must stay rank+score identical to
-    the pure-Python oracle (both engines parse independently)."""
+    the pure-Python oracle (both engines parse independently), on a
+    compacted and on a segmented index; one bm25_topk_batch over every
+    trial's query equals bm25_topk per query bitwise."""
     import random
 
     _, out, docs, _ = corpus
     rng = random.Random(2026)
     vocab = ["tok0001", "tok0042", "tok0007", "the", "rare7",
              "tok0100", "call", "tok0009"]
-    # regex bodies from the Java/Python/RE2-common subset, narrow enough
-    # to stay under max_expansions on this corpus
+    # regex bodies narrow enough to stay under max_expansions on this
+    # corpus
     regexes = ["rare(7|11)", "tok000[17]", "cal.", "rare[0-9]"]
     n_checked = 0
+    qs: list[str] = []
+    singles: dict[str, list] = {out: [], seg_index: []}
     for _trial in range(14):
         toks = []
         for _ in range(rng.randint(1, 4)):
@@ -561,14 +581,24 @@ def test_randomized_micro_syntax_rank_identity(spark, corpus):
                     t = rng.choice(["-" + t, t + "^2"])
             toks.append(t)
         q = " ".join(toks)
-        got = [(r["doc_id"], r["score"]) for r in
-               bm25_topk(spark, out, q, k=8).collect()]
+        qs.append(q)
         want = bm25_oracle(docs, q, k=8)
-        assert [d for d, _ in got] == [d for d, _ in want], q
-        for (_, gs), (_, ws) in zip(got, want):
-            assert math.isclose(gs, ws, rel_tol=1e-12), q
-        n_checked += 1 if got else 0
+        for idx, got_all in singles.items():
+            got = [(r["doc_id"], r["score"]) for r in
+                   bm25_topk(spark, idx, q, k=8).collect()]
+            assert [d for d, _ in got] == [d for d, _ in want], (idx, q)
+            for (_, gs), (_, ws) in zip(got, want):
+                assert math.isclose(gs, ws, rel_tol=1e-12), (idx, q)
+            got_all.append(got)
+        n_checked += 1 if want else 0
     assert n_checked >= 8  # the sweep must mostly produce non-empty hits
+    for idx, got_all in singles.items():
+        rows = bm25_topk_batch(spark, idx, qs, k=8).collect()
+        for i, got in enumerate(got_all):
+            per_q = [(r["doc_id"], r["score"]) for r in
+                     sorted((r for r in rows if r["query_id"] == str(i)),
+                            key=lambda r: r["rank"])]
+            assert per_q == got, (idx, qs[i])
 
 
 def test_facet_metrics_match_python_recount(spark, corpus):
@@ -988,27 +1018,37 @@ def test_batch_and_mode_accepts_exclusion_only_expansions(spark, corpus):
     assert got
 
 
-def _jobs_per_call(spark, name, fn):
-    """Spark jobs one warm call runs (its collect), read from a job group
-    of its own."""
+def _jobs(spark, name, fn):
+    """Spark jobs fn() runs, read from a job group of its own."""
     sc = spark.sparkContext
-    fn().collect()
     group = f"bm25-jobs-{name}"
-    sc.setJobGroup(group, f"jobs-per-call probe: {name}")
+    sc.setJobGroup(group, f"jobs probe: {name}")
     try:
-        fn().collect()
+        fn()
         return len(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setJobGroup("", "")
 
 
-def test_bm25_jobs_per_call(spark, corpus):
+def _jobs_per_call(spark, name, fn):
+    """Spark jobs one warm call runs (its collect)."""
+    fn().collect()
+    return _jobs(spark, name, lambda: fn().collect())
+
+
+def test_bm25_jobs_per_call(spark, corpus, seg_index, shards):
     """Upper bounds on the Spark jobs each BM25 entry point runs per
     call, one bm25_topk per serving query class: a plan that sprouts a
-    job fails here."""
-    from macrobase_spark.index.bm25 import bm25_count, bm25_match_ids
+    job fails here. Term metadata (df, max_impact, expansions) comes from
+    the memoized term dictionary, so no call runs a job for it."""
+    from macrobase_spark.index.bm25 import (bm25_count, bm25_match_ids,
+                                            bm25_phrase_topk,
+                                            bm25_topk_sharded,
+                                            more_like_this)
+    from macrobase_spark.index.build import (invalidate_index_cache,
+                                             read_index, open_index)
 
-    _, out, docs, _ = corpus
+    df, out, docs, _ = corpus
     ids = [d for d, _ in docs[:3]]
     calls = {
         "topk single": (1, lambda: bm25_topk(spark, out, "tok0042")),
@@ -1016,7 +1056,24 @@ def test_bm25_jobs_per_call(spark, corpus):
         "topk multi": (2, lambda: bm25_topk(spark, out, "call tool")),
         "topk msm": (2, lambda: bm25_topk(
             spark, out, "tok0003 tok0042 tok0777", min_should_match=2)),
-        "topk prefix": (4, lambda: bm25_topk(spark, out, "tok05*")),
+        "topk prefix": (2, lambda: bm25_topk(spark, out, "tok05*")),
+        "topk fuzzy": (2, lambda: bm25_topk(spark, out, "tok0042~1")),
+        "topk regexp": (2, lambda: bm25_topk(spark, out, "/tok00(4|7)2/")),
+        "topk wand": (3, lambda: bm25_topk(spark, out, "the call",
+                                           wand=True)),
+        "seg single": (2, lambda: bm25_topk(spark, seg_index, "tok0042")),
+        "seg multi": (2, lambda: bm25_topk(spark, seg_index, "call tool")),
+        "seg batch": (4, lambda: bm25_topk_batch(
+            spark, seg_index, ["the", "tok0042", "call tool",
+                               "tok0005 tok0100"])),
+        "seg explain": (3, lambda: bm25_explain(
+            spark, seg_index, "tok0042 call", doc_ids=ids)),
+        "sharded": (2, lambda: bm25_topk_sharded(
+            spark, shards[2], "tok0042 the")),
+        "phrase": (4, lambda: bm25_phrase_topk(spark, seg_index,
+                                               "tok0001 tok0000")),
+        "more_like_this": (3, lambda: more_like_this(spark, out, df,
+                                                     ids[1])),
         "topk exclude": (2, lambda: bm25_topk(spark, out, "tok0007 -the")),
         "topk filter": (3, lambda: bm25_topk(
             spark, out, "tok0011 tok0200", doc_filter="role = 'assistant'")),
@@ -1038,3 +1095,42 @@ def test_bm25_jobs_per_call(spark, corpus):
     over = {name: (got[name], bound) for name, (bound, _) in calls.items()
             if got[name] > bound}
     assert not over, f"jobs (got, bound): {over}"
+    # one job loads the dictionary of an index version (opening the
+    # index's handles is read_index's cost); a warm call reads it from
+    # memory
+    invalidate_index_cache(out)
+    read_index(spark, out)
+    assert _jobs(spark, "dict cold", lambda: open_index(spark, out)[3]) == 1
+    assert _jobs(spark, "dict warm", lambda: open_index(spark, out)[3]) == 0
+
+
+def test_update_folds_the_served_term_dictionary(spark, corpus, tmp_path):
+    """An in-process update_index on an index whose dictionary is loaded
+    folds the delta's term stats into it: the folded dictionary equals a
+    fresh load of the new version, neither the next query nor a delete
+    reloads it, and scores after the update and the delete stay exact."""
+    from macrobase_spark.index.build import (_term_dict, delete_docs,
+                                             open_index, read_index,
+                                             update_index)
+
+    df, _, docs, _ = corpus
+    out = str(tmp_path / "fold")
+    base = F.col("conv_id") < "conv00000048"
+    build_index(df.filter(base), out, num_buckets=4, hot_df_threshold=120,
+                hot_sample_frac=0.5)
+    q = "tok0042 tok0007 the"
+    bm25_topk(spark, out, q).collect()  # served: the dictionary is loaded
+    update_index(df.filter(~base), out)
+    read_index(spark, out)
+    assert _jobs(spark, "dict folded", lambda: open_index(spark, out)) == 0
+    postings, _, _, folded = open_index(spark, out)
+    assert folded == _term_dict(
+        postings.select("term", "df", "max_impact").toArrow())
+    assert max(s.rows for s in folded.stats.values()) > 1  # segmented
+    victim = bm25_oracle(docs, q, k=1)[0][0]
+    delete_docs(spark, out, [victim])
+    assert _jobs(spark, "dict deleted", lambda: open_index(spark, out)) == 0
+    got = [(r["doc_id"], r["score"])
+           for r in bm25_topk(spark, out, q, k=8).collect()]
+    assert got == bm25_oracle(docs, q, k=8,
+                              keep_ids={d for d, _ in docs} - {victim})
