@@ -21,26 +21,35 @@ Every term-query entry point runs the same three stages:
      query after the index version changes (a build, compaction, merge or
      another process's update; an in-process update_index folds its delta
      into the served dictionary instead).
-  2. candidate / match set: bucket pruning (`_prune_buckets`: term →
-     bucket is computed driver-side, so only matching bucket directories
-     are listed; parquet row-group statistics then skip non-matching
-     terms). Scoring surfaces decode+score the candidate blobs in Arrow
-     (`_score_partition`, with per-term block-max / WAND pruning where it
-     stays exact) and sum contributions per doc (`_doc_scores`);
-     membership surfaces (count, match ids, facets) decode ids only
-     (`_match_set`).
-  3. restrict (`_restrict`): the MUST_NOT anti-join, pending-tombstone
-     anti-joins and the doc_filter semi-join, applied identically by every
-     surface; then the surface's own tail (top-k, per-query windows, facet
-     aggregation, explain rows).
+  2. scan → one Arrow task per index: `_candidates` reads the
+     bucket- and row-group-pruned posting rows of every scored AND
+     excluded term (term → bucket is computed driver-side, so only
+     matching bucket directories are listed) and coalesces them into ONE
+     partition; `_score_kernel` then decodes each row once, computes each
+     (term, doc) contribution (with per-term block-max / WAND pruning
+     where it stays exact), drops docs holding an excluded term, sums per
+     doc in ascending-term order, applies the mode='and' / min_should_match
+     count and emits (doc_id, score) — keyed by query_id for a batch (one
+     query is a batch of one). Membership surfaces (count, match ids,
+     facets) run the same kernel unpruned and keep the doc ids
+     (`_match_set`). A PySpark worker task costs about 0.3 s of CPU
+     whatever its rows (the worker's per-task `setup_spark_files` →
+     `importlib.invalidate_caches()` dominates), so the plan counts
+     Python tasks, not rows: no contribution shuffle, no exclusion scan.
+  3. restrict (`_restrict`), natively over the kernel output: the
+     pending-tombstone anti-joins and the doc_filter semi-join, applied
+     identically by every surface; then the surface's own native tail
+     (anomaly / recency weights, collapse, `after`, TakeOrdered top-k,
+     per-query windows, facet aggregation).
 
-A sharded call is the same pipeline over several index handles.
+A sharded call is the same pipeline over several index handles, one
+kernel task per shard.
 
-Determinism/rank-identity: postings are scored in docID order with float64
-throughout; ties broken by ascending doc_id. Scores are identical bits to the
-oracle because each (term, doc) contribution is computed independently and
-the per-doc sum adds terms in ascending-term order both here and in the
-oracle.
+Determinism/rank-identity: postings are scored with float64 throughout;
+ties broken by ascending doc_id. Scores are identical bits to the oracle
+because each (term, doc) contribution is computed independently, the boost
+is one c·b multiplication, and the per-doc sum starts at 0.0 and adds one
+term at a time in ascending-term order both here and in the oracle.
 """
 
 from __future__ import annotations
@@ -307,31 +316,6 @@ def _rank_within(rel: DataFrame, key: str, col: str = "rank",
                                    F.col("doc_id").asc())))
 
 
-def _term_doc_ids(postings: DataFrame, terms: list[str],
-                  with_term: bool = False) -> DataFrame:
-    """doc_ids containing ANY of `terms` — decoded ids only (no scoring).
-    Serves the MUST_NOT anti-join and the facet/match-membership paths.
-    Bucket pruning was already applied by the caller; duplicates are fine
-    for anti-join semantics (facets de-dup downstream). with_term=True
-    keeps the term column so a batch can route each exclusion to its own
-    query (and so conjunctive matching can count distinct terms)."""
-
-    def ids_only(batches):
-        from macrobase_spark.index.build import _decode_partial
-
-        for pdf in batches:
-            for term, blob in zip(pdf["term"], pdf["blob"]):
-                ids, _, _ = _decode_partial(blob)
-                out = {"doc_id": ids.astype(np.int64)}
-                if with_term:
-                    out["term"] = np.repeat(term, len(ids))
-                yield pd.DataFrame(out)
-
-    schema = ("doc_id long, term string" if with_term else "doc_id long")
-    return (postings.filter(F.col("term").isin(terms))
-            .select("term", "blob").mapInPandas(ids_only, schema=schema))
-
-
 # ------------------------------------------------ shared query stages
 
 class _Index(NamedTuple):
@@ -499,61 +483,156 @@ def _idfs(td: TermDict, n_docs: int, terms) -> dict[str, float]:
     return {t: _idf(n_docs, td.stats[t].df) for t in terms if t in td.stats}
 
 
-def _one_row(td: TermDict, terms: list[str]) -> bool:
-    """One term stored in at most one posting row (always so on a
-    compacted index): each doc then has exactly one contribution, so the
-    per-doc score needs no aggregate."""
-    return len(terms) == 1 and (terms[0] not in td.stats
-                                or td.stats[terms[0]].rows == 1)
-
-
-def _prune_buckets(postings: DataFrame, stats: dict, terms: list[str]
-                   ) -> tuple[DataFrame, list[int] | None]:
-    """Partition pruning: term → bucket = pmod(xxhash64(term), B) computed
-    driver-side, so only matching bucket directories are even listed.
-    Returns (pruned postings, buckets | None when unbucketed)."""
-    if "num_buckets" not in stats:
-        return postings, None
-    from macrobase_spark.index.xxh64 import term_bucket
-
-    buckets = sorted({term_bucket(t, stats["num_buckets"]) for t in terms})
-    return postings.filter(F.col("bucket").isin(buckets)), buckets
-
-
-def _bounds_current(index_dir: str, stats: dict, buckets: list[int]) -> bool:
+def _bounds_current(index_dir: str, stats: dict, terms: list[str]) -> bool:
     """Version gate: buckets an incremental update did not touch carry
     block-max bounds computed under an older avgdl — untrustworthy until
     rewritten or compacted (exactness over speed)."""
     from macrobase_spark.index.build import bucket_versions
+    from macrobase_spark.index.xxh64 import term_bucket
 
     sv = stats.get("version", 1)
     bv = bucket_versions(index_dir)
-    return all(bv.get(b, 1) == sv for b in buckets)
+    return all(bv.get(term_bucket(t, stats["num_buckets"]), 1) == sv
+               for t in terms)
 
 
-def _doc_scores(contrib: DataFrame, mode: str = "or", msm: int | None = None,
-                need=None, keys: tuple[str, ...] = ("doc_id",)) -> DataFrame:
-    """Per-doc score = the ascending-term sum of the (term, doc)
-    contributions (bitwise-reproducible float order). The matched-term
-    count (a (term, doc) pair lives in one segment) rides the same
-    aggregate and filters mode='and' (== need: a term count, or a
-    (query_id, _need) relation for a batch) and m (>= msm)."""
-    scored = contrib.groupBy(*keys).agg(
-        F.aggregate(
-            F.array_sort(F.collect_list(F.struct("term", "contrib"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["contrib"],
-        ).alias("score"),
-        F.count("term").alias("_nt"),
-    )
-    if mode == "and":
-        if isinstance(need, DataFrame):
-            scored = scored.join(F.broadcast(need), "query_id")
-            need = F.col("_need")
-        scored = scored.filter(F.col("_nt") == need)
-    elif msm is not None:
-        scored = scored.filter(F.col("_nt") >= msm)
-    return scored.drop("_nt", "_need")
+def _candidates(rows: DataFrame, stats: dict, terms,
+                cols: tuple[str, ...] = ("term", "blob")) -> DataFrame:
+    """The rows of `terms` (postings or positions) in ONE partition, the
+    input of one Python task. Partition pruning computes term → bucket =
+    pmod(xxhash64(term), B) on the driver, so only matching bucket
+    directories are listed, and parquet row-group statistics skip
+    non-matching terms. One partition because a PySpark worker task costs
+    about 0.3 s of CPU whatever its rows: count Python tasks, not rows."""
+    from macrobase_spark.index.xxh64 import term_bucket
+
+    terms = sorted(set(terms))
+    buckets = sorted({term_bucket(t, stats["num_buckets"]) for t in terms})
+    return (rows.filter(F.col("bucket").isin(buckets)
+                        & F.col("term").isin(terms))
+            .select(*cols).coalesce(1))
+
+
+def _row_contrib(ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
+                 idf: float, avgdl: float, block_max, k: int,
+                 single: bool, lam: float | None
+                 ) -> tuple[np.ndarray, np.ndarray]:
+    """One posting row's (doc ids, BM25 contributions), minus the blocks
+    pruning proves cannot matter. `lam` is the term's block-max-WAND
+    threshold: a block whose best possible contribution is below it
+    cannot lift any doc above the global lower bound θ. `single` is the
+    one-term block-max prune: visit blocks in descending upper bound and
+    stop when the bound falls below the kth best contribution so far —
+    exact for a query of one term, whose score IS the contribution. Each
+    contribution is computed elementwise, so pruning never changes a
+    kept doc's bits."""
+    tf = tfs.astype(np.float64)
+    dl = dls.astype(np.float64)
+    sc = idf * (tf * (K1 + 1.0)) / (tf + K1 * (1.0 - B + B * dl / avgdl))
+    if (lam is None and not single) or block_max is None \
+            or len(block_max) <= 1:
+        return ids, sc
+    bm = np.asarray(block_max, dtype=np.float64) * idf * (K1 + 1.0)
+    if lam is not None:
+        keep = np.flatnonzero(bm >= lam)
+    else:
+        keep, best = [], np.empty(0)
+        for bi in np.argsort(-bm, kind="stable"):
+            if len(best) >= k and bm[bi] < best[0]:
+                break
+            keep.append(bi)
+            best = np.sort(np.concatenate(
+                [best, sc[bi * BLOCK_SIZE:(bi + 1) * BLOCK_SIZE]]))[-k:]
+    if len(keep) == len(bm):
+        return ids, sc
+    sel = np.isin(np.arange(len(ids)) // BLOCK_SIZE, keep)
+    return ids[sel], sc[sel]
+
+
+def _score_kernel(queries: dict, idfs: dict[str, float], avgdl: float,
+                  k: int, mode: str, msm: int | None, single: set[str],
+                  lambdas: dict[str, float] | None, keyed: bool):
+    """The one scoring kernel of the BM25 family, run as ONE Arrow task
+    per index handle over the candidate rows of every query's scored and
+    excluded terms: decode each posting row, compute each scored term's
+    contributions (`_row_contrib`), and per query sum a doc's
+    contributions (each times its boost, c·b) in ascending-term order from
+    0.0, one term at a time — the float order of bm25_oracle, never a
+    vectorized reduction — then keep the docs that match mode='and' (every
+    term) / min_should_match (≥ m terms; a (term, doc) pair lives in one
+    segment row, so counting terms counts distinct terms) and hold no
+    excluded term. Emits (doc_id, score), keyed by query_id when `keyed`."""
+    scored = {t for c in queries.values() for t in c.terms if t in idfs}
+    negs = {t for c in queries.values() for t in c.nterms}
+    lambdas = lambdas or {}
+
+    def fn(batches):
+        import pyarrow as pa
+
+        from macrobase_spark.index.build import _decode_partial
+
+        hits: dict[str, list] = {}
+        held: dict[str, list] = {}
+        for rb in batches:
+            cols = rb.to_pydict()
+            for term, blob, bmax in zip(
+                    cols["term"], cols["blob"],
+                    cols.get("block_max", [None] * rb.num_rows)):
+                ids, tfs, dls = _decode_partial(blob)
+                ids = ids.astype(np.int64)
+                if term in negs:
+                    held.setdefault(term, []).append(ids)
+                if term in scored:
+                    hits.setdefault(term, []).append(_row_contrib(
+                        ids, tfs, dls, idfs[term], avgdl, bmax, k,
+                        term in single, lambdas.get(term)))
+        per_term = {t: (np.concatenate([i for i, _ in rs]),
+                        np.concatenate([c for _, c in rs]))
+                    for t, rs in hits.items()}
+        for qid, (terms, nterms, boosts) in queries.items():
+            present = [t for t in terms if t in per_term]
+            if not present:
+                continue
+            docs = np.unique(np.concatenate([per_term[t][0]
+                                             for t in present]))
+            score = np.zeros(len(docs))
+            n_terms = np.zeros(len(docs), dtype=np.int64)
+            for t in present:
+                ids, c = per_term[t]
+                pos = np.searchsorted(docs, ids)
+                score[pos] += c * boosts.get(t, 1.0)
+                n_terms[pos] += 1
+            keep = (n_terms == len(terms) if mode == "and"
+                    else n_terms >= (msm or 1))
+            excl = [i for t in nterms for i in held.get(t, [])]
+            if excl:
+                keep &= ~np.isin(docs, np.concatenate(excl))
+            out = {"doc_id": pa.array(docs[keep]),
+                   "score": pa.array(score[keep])}
+            if keyed:
+                out = {"query_id": pa.array([qid] * len(out["doc_id"]),
+                                            pa.string()), **out}
+            yield pa.RecordBatch.from_pydict(out)
+
+    return fn
+
+
+def _scores(h: _Index, queries: dict, idfs: dict[str, float], avgdl: float,
+            k: int = 10, mode: str = "or", msm: int | None = None,
+            single: set[str] = frozenset(),
+            lambdas: dict[str, float] | None = None,
+            keyed: bool = False) -> DataFrame:
+    """Every query's (doc_id, score) over one index handle (query_id first
+    when `keyed`), from one `_score_kernel` task over the candidate rows
+    of all the queries' terms; `idfs` may be global (sharded). block_max
+    is read only when a term is pruned."""
+    terms = {t for c in queries.values() for t in (*c.terms, *c.nterms)}
+    cols = ("term", "blob") + (("block_max",) if single or lambdas else ())
+    schema = (("query_id string, " if keyed else "")
+              + "doc_id long, score double")
+    return _candidates(h.postings, h.stats, terms, cols).mapInArrow(
+        _score_kernel(queries, idfs, avgdl, k, mode, msm, single, lambdas,
+                      keyed), schema)
 
 
 def _union(parts: list[DataFrame]) -> DataFrame:
@@ -564,17 +643,14 @@ def _union(parts: list[DataFrame]) -> DataFrame:
 
 
 def _restrict(spark: SparkSession, rel: DataFrame, handles: list[_Index],
-              doc_filter: str | None, excl: list[DataFrame] = (),
-              on="doc_id") -> DataFrame:
-    """The restrictions every surface applies before its own tail:
-    MUST_NOT anti-joins (`on` is (query_id, doc_id) for a batch), the
-    handles' pending deletes (they vanish at once; corpus stats count
-    them until compact_index purges — Lucene semantics), and the
-    doc_filter semi-join against the filtered docs projections."""
+              doc_filter: str | None) -> DataFrame:
+    """The restrictions every surface applies to the kernel output before
+    its own tail: the handles' pending deletes (they vanish at once;
+    corpus stats count them until compact_index purges — Lucene
+    semantics) and the doc_filter semi-join against the filtered docs
+    projections."""
     from macrobase_spark.index.build import tombstone_ids
 
-    for part in excl:
-        rel = rel.join(part, on, "anti")
     for h in handles:
         tomb = tombstone_ids(spark, h.dir)
         if tomb is not None:
@@ -589,29 +665,20 @@ def _restrict(spark: SparkSession, rel: DataFrame, handles: list[_Index],
 def _match_set(spark: SparkSession, handles: list[_Index], clauses: _Clauses,
                mode: str = "or", msm: int | None = None,
                doc_filter: str | None = None) -> DataFrame | None:
-    """The query's full match set as an ids-only (doc_id) relation over
-    index handles (a doc lives in one shard, so shard sets union exactly)
-    under mode / m / exclusions / doc_filter / tombstones; None when no
-    document can match."""
-    terms, nterms, _ = clauses
+    """The query's full match set as a (doc_id) relation over index
+    handles (a doc lives in one shard, so shard sets union exactly) under
+    mode / m / exclusions / doc_filter / tombstones — the scoring kernel
+    with no pruning, one task per handle; None when no document can
+    match."""
+    terms = clauses.terms
     if not terms or (msm is not None and msm > len(terms)):
         return None
-    parts = []
-    for h in handles:
-        postings, _ = _prune_buckets(h.postings, h.stats, [*terms, *nterms])
-        if mode == "and" or msm is not None:
-            # distinct-term count per doc: exact on segmented indexes too
-            ok = (F.col("_nt") == len(terms) if mode == "and"
-                  else F.col("_nt") >= msm)
-            m = (_term_doc_ids(postings, terms, with_term=True)
-                 .groupBy("doc_id")
-                 .agg(F.countDistinct("term").alias("_nt"))
-                 .filter(ok).select("doc_id"))
-        else:
-            m = _term_doc_ids(postings, terms).distinct()
-        excl = [_term_doc_ids(postings, nterms)] if nterms else []
-        parts.append(_restrict(spark, m, [h], doc_filter, excl))
-    return _union(parts)
+    return _union([
+        _restrict(spark, _scores(
+            h, {"": clauses}, _idfs(h.tdict, h.stats["n_docs"], terms),
+            h.stats["avgdl"], mode=mode, msm=msm).select("doc_id"),
+            [h], doc_filter)
+        for h in handles])
 
 
 def _empty_topk(spark: SparkSession, docs: DataFrame | None = None,
@@ -640,89 +707,6 @@ def _check_shards(where: str, handles: list[_Index], pq: ParsedQuery) -> None:
             f"{where}: wildcard/fuzzy/boost tokens are not supported "
             "across shards — pre-expand the query or use bm25_topk per "
             "shard")
-
-
-def _score_partition(n_docs: int, avgdl: float, k: int, single_term: bool,
-                     idfs: dict[str, float],
-                     lambdas: dict[str, float] | None = None):
-    """Decode + score posting blobs in one Arrow pass; emits (doc_id, term,
-    score contribution), each term's idf a driver literal from the term
-    dictionary (`idfs`). With a single query term, applies block-max
-    pruning while keeping exactness (kth-best lower bound only grows).
-    `lambdas` carries per-term block-max-WAND thresholds for multi-term
-    pruning (see bm25_topk wand=True)."""
-
-    def fn(batches):
-        from macrobase_spark.index.build import _decode_partial
-
-        for pdf in batches:
-            out_doc, out_term, out_score = [], [], []
-            for term, blob, block_max in zip(
-                    pdf["term"], pdf["blob"], pdf["block_max"]):
-                idf = idfs[term]
-                ids, tfs, dls = _decode_partial(blob)
-                tf = tfs.astype(np.float64)
-                dl = dls.astype(np.float64)
-                lam = (lambdas or {}).get(term)
-                if lam is not None and len(block_max) > 1:
-                    # multi-term block-max WAND: skip blocks whose best
-                    # possible contribution cannot lift any doc above the
-                    # already-established global lower bound θ
-                    bm = np.asarray(block_max, dtype=np.float64) * idf * (K1 + 1.0)
-                    keep_blocks = np.flatnonzero(bm >= lam)
-                    if len(keep_blocks) < len(bm):
-                        segs = [
-                            np.arange(bi * BLOCK_SIZE,
-                                      min((bi + 1) * BLOCK_SIZE, len(ids)))
-                            for bi in keep_blocks
-                        ]
-                        sel = (np.concatenate(segs) if segs
-                               else np.empty(0, dtype=np.int64))
-                        ids, tf, dl = ids[sel], tf[sel], dl[sel]
-                    sc_sel = idf * (tf * (K1 + 1.0)) / (
-                        tf + K1 * (1.0 - B + B * dl / avgdl)
-                    )
-                    doc_sel = ids.astype(np.int64)
-                elif single_term and len(block_max) > 1:
-                    # block-max prune: visit blocks in descending upper bound,
-                    # stop when bound < kth best so far (exact for 1 term)
-                    bm = np.asarray(block_max, dtype=np.float64) * idf * (K1 + 1.0)
-                    order = np.argsort(-bm, kind="stable")
-                    kept: list[np.ndarray] = []
-                    best: list[float] = []
-                    for bi in order:
-                        if len(best) >= k and bm[bi] < best[k - 1]:
-                            break
-                        s, e = bi * BLOCK_SIZE, min((bi + 1) * BLOCK_SIZE, len(ids))
-                        sc = idf * (tf[s:e] * (K1 + 1.0)) / (
-                            tf[s:e] + K1 * (1.0 - B + B * dl[s:e] / avgdl)
-                        )
-                        kept.append(np.stack([ids[s:e].astype(np.float64), sc]))
-                        best = sorted(best + sc.tolist(), reverse=True)[:k]
-                    if kept:
-                        m = np.concatenate(kept, axis=1)
-                        doc_sel, sc_sel = m[0].astype(np.int64), m[1]
-                    else:
-                        doc_sel = np.empty(0, dtype=np.int64)
-                        sc_sel = np.empty(0)
-                else:
-                    sc_sel = idf * (tf * (K1 + 1.0)) / (
-                        tf + K1 * (1.0 - B + B * dl / avgdl)
-                    )
-                    doc_sel = ids.astype(np.int64)
-                out_doc.append(doc_sel)
-                out_term.extend([term] * len(doc_sel))
-                out_score.append(sc_sel)
-            if out_doc:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": np.concatenate(out_doc),
-                        "term": out_term,
-                        "contrib": np.concatenate(out_score),
-                    }
-                )
-
-    return fn
 
 
 def bm25_topk(
@@ -810,16 +794,15 @@ def bm25_topk(
     term are ranked (Lucene's MUST / +term semantics); scores are the same
     BM25 sums, so mode="and" output is a subset-filter of mode="or" — a
     property the parity test pins. Cost is identical to the disjunctive
-    query (the matched-term count rides the existing per-doc aggregate; no
-    extra shuffle). WAND block pruning is disabled in "and" mode: its θ is
+    query (the kernel counts each doc's matched terms as it sums them). WAND block pruning is disabled in "and" mode: its θ is
     a DISJUNCTIVE kth-score bound, and the conjunctive kth score can sit
     below it — exactness over speed, same policy as the anomaly gate.
 
     min_should_match=m is Lucene's minimum_should_match: only docs
     containing at least m DISTINCT query terms are ranked — the middle
     ground between mode="or" (m=1) and mode="and" (m=all). The matched-term
-    count rides the same per-doc aggregate as mode="and" (no extra
-    shuffle); scores are unchanged BM25 sums, so the output is a
+    count is the kernel's, as for mode="and"; scores are unchanged BM25
+    sums, so the output is a
     subset-filter of the disjunctive ranking. m counts indexable terms —
     stoplisted query tokens are dropped before the threshold applies
     (query-analyzer symmetry), and m greater than the query's indexable
@@ -910,7 +893,7 @@ def bm25_topk(
                          "collapse ranks group winners by score")
     query, doc_filter = _split_field_scopes(query, doc_filter)
     ix = _open(spark, index_dir)
-    postings, docs, stats = ix.postings, ix.docs, ix.stats
+    docs, stats = ix.docs, ix.stats
     have = sorted(set(docs.columns) - {"doc_id"})
     if sort_by is not None:
         sort_cols, names = _sort_columns(sort_by)
@@ -924,9 +907,9 @@ def bm25_topk(
             f"collapse: {collapse!r} not a docs-metadata column "
             f"(have {have})")
     td = ix.tdict
-    [(terms, nterms, boosts)] = _resolve(
-        td, stats, [_parse_query_full(query)], mode, msm, synonyms,
-        max_expansions)
+    [clauses] = _resolve(td, stats, [_parse_query_full(query)], mode, msm,
+                         synonyms, max_expansions)
+    terms, nterms, boosts = clauses
     # no indexable term, or an m above the indexable term count: nothing
     # can match
     if not terms or (msm is not None and msm > len(terms)):
@@ -942,62 +925,17 @@ def bm25_topk(
                    and not has_tombstones(index_dir)
                    and after is None and sort_by is None
                    and collapse is None and msm is None
-                   and recency_half_life is None)
-    # bucket pruning covers the EXCLUDED terms too — their postings are
-    # scanned (ids only) for the anti-join
-    postings, buckets = _prune_buckets(postings, stats, [*terms, *nterms])
-    if buckets is not None:
-        allow_prune = allow_prune and _bounds_current(index_dir, stats,
-                                                      buckets)
-    cand = postings.filter(F.col("term").isin(terms)).select(
-        "term", "blob", "block_max")
-    idfs = _idfs(td, n, terms)
-    lambdas: dict[str, float] | None = None
-    if (wand and len(terms) > 1 and idfs and allow_prune and mode == "or"
-            and not boosts):
-        ubs = {t: idf * (K1 + 1.0) * td.stats[t].max_impact
-               for t, idf in idfs.items()}
-        rarest = min(idfs, key=lambda t: td.stats[t].df)
-        if td.stats[rarest].df >= k:
-            r_top = (
-                cand.filter(F.col("term") == rarest)
-                .mapInPandas(_score_partition(n, avgdl, k, True, idfs),
-                             schema="doc_id long, term string, contrib double")
-                .orderBy(F.col("contrib").desc()).limit(k).collect()
-            )
-            if len(r_top) >= k:
-                theta = r_top[k - 1]["contrib"]
-                total_ub = sum(ubs.values())
-                lambdas = {t: theta - (total_ub - ubs[t]) for t in ubs}
-    contrib = cand.mapInPandas(
-        _score_partition(n, avgdl, k, len(terms) == 1 and allow_prune, idfs,
-                         lambdas),
-        schema="doc_id long, term string, contrib double",
-    )
-    if boosts:
-        # query-time boost as a post-multiplication on the (term, doc)
-        # contribution — the SAME float op as the batch path's per-query
-        # boost join, so single and batch stay bitwise-identical. Within a
-        # term the boost is a constant scale, so the kernel's per-term
-        # block-max pruning (single-term path) remains exact; multi-term
-        # WAND is disabled under boosts (its λ bounds are unboosted).
-        bmap = F.create_map(*[x for t, b in sorted(boosts.items())
-                              for x in (F.lit(t), F.lit(b))])
-        contrib = contrib.withColumn(
-            "contrib",
-            F.col("contrib") * F.coalesce(bmap[F.col("term")], F.lit(1.0)))
-    if _one_row(td, terms):
-        # single-term fast path (one posting row: exactly one contribution
-        # per doc): the per-doc sum is the contribution itself, so the
-        # groupBy shuffle stage disappears — the plan is scan → Arrow score
-        # → TakeOrdered. Bitwise-identical to the aggregate (0.0 + x == x
-        # for positive doubles). A term spanning several segment rows
-        # keeps the aggregate.
-        scored = contrib.select("doc_id", F.col("contrib").alias("score"))
-    else:
-        scored = _doc_scores(contrib, mode, msm, len(terms))
-    excl = [_term_doc_ids(postings, nterms)] if nterms else []
-    scored = _restrict(spark, scored, [ix], doc_filter, excl)
+                   and recency_half_life is None
+                   and _bounds_current(index_dir, stats, terms))
+    # multi-term WAND needs unboosted disjunctive bounds; a boost is a
+    # constant per-term scale, so the one-term prune stays exact under it
+    lambdas = (_batch_wand_lambdas(ix, {"": terms}, k)
+               if wand and len(terms) > 1 and allow_prune and mode == "or"
+               and not boosts else None)
+    scored = _restrict(spark, _scores(
+        ix, {"": clauses}, _idfs(td, n, terms), avgdl, k, mode, msm,
+        set(terms) if allow_prune and len(terms) == 1 else set(), lambdas),
+        [ix], doc_filter)
     if anomaly_max is not None or anomaly_weight:
         scored = scored.join(docs.select("doc_id", "anomaly"), "doc_id", "inner")
         if anomaly_max is not None:
@@ -1066,27 +1004,23 @@ def bm25_topk(
     return scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
 
 
-def _batch_wand_lambdas(
-    cand: DataFrame,
-    td: TermDict,
-    q_terms: dict[str, list[str]],
-    idfs: dict[str, float],
-    n: int,
-    avgdl: float,
-    k: int,
-) -> dict[str, float] | None:
-    """Per-term block-skip thresholds for a BATCH of queries, exactness-
-    preserving across every query: λ_t = min over queries q∋t of
-    (θ_q − Σ_{u∈q, u≠t} ub_u), with θ_q the kth best single-term score of
-    q's rarest present term. Skipping a block of t with ub_t < λ_t is safe
-    for EVERY query containing t (the min makes pruning at least as
-    conservative as each query's own WAND bound): if doc d sat in a pruned
-    block, then for any q∋t, score_q(d) ≤ ub_t + Σ_{u≠t} ub_u < θ_q, so d
-    can't reach q's top-k. Returns None when nothing is prunable.
+def _batch_wand_lambdas(h: _Index, q_terms: dict[str, list[str]], k: int
+                        ) -> dict[str, float] | None:
+    """Per-term block-skip thresholds for a BATCH of queries (one query is
+    a batch of one), exactness-preserving across every query: λ_t = min
+    over queries q∋t of (θ_q − Σ_{u∈q, u≠t} ub_u), with θ_q the kth best
+    single-term score of q's rarest present term. Skipping a block of t
+    with ub_t < λ_t is safe for EVERY query containing t (the min makes
+    pruning at least as conservative as each query's own WAND bound): if
+    doc d sat in a pruned block, then for any q∋t, score_q(d) ≤ ub_t +
+    Σ_{u≠t} ub_u < θ_q, so d can't reach q's top-k. Returns None when
+    nothing is prunable.
 
-    df and max_impact come from the term dictionary; costs one small job
-    (one rarest-terms scoring pass shared across all queries, not per
-    query)."""
+    df and max_impact come from the term dictionary; the θs cost one
+    small job: one kernel task scoring every probed rarest term as its
+    own one-term query (block-max pruned), shared across all queries."""
+    td, n = h.tdict, h.stats["n_docs"]
+    idfs = _idfs(td, n, {t for ts in q_terms.values() for t in ts})
     if not idfs:
         return None
     dfs = {t: td.stats[t].df for t in idfs}
@@ -1100,13 +1034,12 @@ def _batch_wand_lambdas(
     probe = sorted({t for t in rarest.values() if dfs[t] >= k})
     thetas: dict[str, float] = {}
     if probe:
-        contrib_r = cand.filter(F.col("term").isin(probe)).mapInPandas(
-            _score_partition(n, avgdl, k, True, idfs),
-            schema="doc_id long, term string, contrib double",
-        )
-        rows = (_rank_within(contrib_r, "term", "_rn", "contrib")
-                .filter(F.col("_rn") == k).select("term", "contrib").collect())
-        thetas = {r["term"]: r["contrib"] for r in rows}
+        top = _scores(h, {t: _Clauses([t], [], {}) for t in probe}, idfs,
+                      h.stats["avgdl"], k, single=set(probe), keyed=True)
+        rows = (_rank_within(top, "query_id", "_rn")
+                .filter(F.col("_rn") == k).select("query_id", "score")
+                .collect())
+        thetas = {r["query_id"]: r["score"] for r in rows}
     lambdas: dict[str, float] = {}
     for qid, ts in q_terms.items():
         present = [t for t in ts if t in dfs]
@@ -1135,42 +1068,33 @@ def bm25_topk_batch(
     max_expansions: int = 128,
     synonyms: dict[str, list[str]] | None = None,
 ) -> DataFrame:
-    """Top-k for MANY queries in ONE scoring job — the throughput shape for
-    query serving: a single pass over the union of all query terms'
-    postings (bucket- and row-group-pruned once), contributions joined to a
-    broadcast (query_id, term) map, per-(query, doc) ascending-term sums
-    (bit-identical to bm25_topk per query), then a per-query top-k window.
-    Returns (query_id, doc_id, score, rank).
+    """Top-k for MANY queries in ONE scoring task — the throughput shape
+    for query serving: one bucket- and row-group-pruned scan of the union
+    of all query terms' postings (scored and excluded), one Arrow kernel
+    task that decodes every row once, scores each (term, doc) once and
+    sums per (query, doc) in ascending-term order (bit-identical to
+    bm25_topk per query — bm25_topk is a batch of one), then a
+    per-query top-k window. Returns (query_id, doc_id, score, rank).
 
-    Amortizes the per-job overhead that dominates single-query p50 in
-    local mode; on a cluster it turns q queries × t terms into one shuffle
-    instead of q. wand=True adds batch-safe block-max pruning (see
+    Amortizes the per-task Python-worker cost that dominates single-query
+    latency in local mode. A term that only one-term queries use is
+    block-max pruned exactly as bm25_topk prunes a one-term query, so a
+    hot single-term query ("the") does not emit its whole posting list.
+    wand=True adds batch-safe block-max pruning for the other terms (see
     _batch_wand_lambdas) — exact, one extra small job; worth it when hot
     multi-term queries dominate the batch.
 
-    Single-term queries whose term sits in one posting row bypass the
-    contribution shuffle entirely (r5): their score IS the term's
-    contribution, so those queries are answered by a separate tiny scan
-    with per-term block-max pruning (the same exact prune bm25_topk's
-    fast path uses) and a per-term top-k — a hot single-term query
-    ("the") no longer pushes its whole posting list through the (query,
-    doc) aggregate. Bit-identical to the
-    aggregate path (0.0 + x == x for doubles), pytest-pinned against
-    bm25_topk per query.
-
     mode="and" applies conjunctive retrieval to every query in the batch
-    (see bm25_topk): per-(query, doc) matched-term counts ride the
-    existing aggregate and are checked against each query's term count
-    from the broadcast map — no extra shuffle. WAND batch pruning is
-    disabled in "and" mode (disjunctive θ bound).
+    (see bm25_topk): a doc must hold each of its query's terms. WAND
+    batch pruning is disabled in "and" mode (disjunctive θ bound).
 
     min_should_match=m applies Lucene's minimum_should_match to every
     query in the batch (see bm25_topk): docs matching fewer than m
     distinct terms of a query drop before that query's top-k. Queries
     with fewer than m indexable terms return no rows (unsatisfiable).
     Same v1 restrictions as bm25_topk: not with mode='and', not with
-    prefix/fuzzy tokens; WAND batch pruning and the single-term fast
-    path are disabled when m > 1 (the filter changes which docs rank).
+    prefix/fuzzy tokens; block pruning is disabled when m > 1 (the
+    filter changes which docs rank).
 
     synonyms (one corpus-wide map, see bm25_topk) applies to every
     query in the batch: a query term present in the map also matches
@@ -1183,10 +1107,8 @@ def bm25_topk_batch(
     to EVERY query in the batch: one filtered docs projection, one
     semi-join before the per-query top-k windows. Prefix / fuzzy /
     regexp tokens expand per query against the term dictionary;
-    mode='and' rejects them (same as bm25_topk).
-    Exclusions (``-term`` / ``-pre*``, see bm25_topk) apply per query via
-    one (query_id, doc_id) anti-join fed by a single ids-only scan over
-    the union of every query's excluded terms."""
+    mode='and' rejects them (same as bm25_topk). Exclusions (``-term`` /
+    ``-pre*``, see bm25_topk) apply per query inside the kernel."""
     msm = _check_mode(mode, min_should_match)
     if isinstance(queries, list):
         queries = {str(i): q for i, q in enumerate(queries)}
@@ -1202,117 +1124,36 @@ def bm25_topk_batch(
             "— batch queries share one doc_filter; pass doc_filter= for "
             "the whole batch or run scoped queries via bm25_topk")
     parsed = {qid: _parse_query_full(q) for qid, q in queries.items()}
-    out_schema = "query_id string, doc_id long, score double, rank int"
     ix = _open(spark, index_dir)
-    postings, stats, td = ix.postings, ix.stats, ix.tdict
+    stats, td = ix.stats, ix.tdict
     # expansion bound per query (consistent with bm25_topk)
-    clauses = dict(zip(parsed, _resolve(
+    live = {qid: c for qid, c in zip(parsed, _resolve(
         td, stats, list(parsed.values()), mode, msm, synonyms,
-        max_expansions)))
-    q_terms = {qid: c.terms for qid, c in clauses.items()}
-    q_negs = {qid: c.nterms for qid, c in clauses.items()}
-    q_boosts = {qid: c.boosts for qid, c in clauses.items()}
-    any_boost = any(q_boosts.values())
-    all_terms = sorted({t for ts in q_terms.values() for t in ts})
-    all_negs = sorted({t for ts in q_negs.values() for t in ts})
-    if not all_terms:
-        return spark.createDataFrame([], out_schema)
+        max_expansions)) if c.terms}
+    if not live:
+        return spark.createDataFrame(
+            [], "query_id string, doc_id long, score double, rank int")
+    all_terms = sorted({t for c in live.values() for t in c.terms})
     n, avgdl = stats["n_docs"], stats["avgdl"]
-    allow_prune = (doc_filter is None and not all_negs
-                   and not has_tombstones(index_dir))
-    postings, buckets = _prune_buckets(postings, stats,
-                                       [*all_terms, *all_negs])
-    if buckets is not None:
-        # same version gate as bm25_topk
-        allow_prune = allow_prune and _bounds_current(index_dir, stats,
-                                                      buckets)
-    # single-term queries split off the aggregate path when their score is
-    # provably one row's contribution: a term in one posting row and
-    # trustworthy block-max bounds
-    singles: dict[str, str] = {}
-    multis: dict[str, list[str]] = {}
-    if allow_prune and msm is None:
-        for qid, ts in q_terms.items():
-            if _one_row(td, ts):
-                singles[qid] = ts[0]
-            else:
-                multis[qid] = ts
-    else:
-        # under min_should_match every query takes the aggregate path —
-        # the matched-term count lives there; queries with fewer than m
-        # terms filter to empty inside the aggregate (_nt <= |terms| < m)
-        multis = {qid: ts for qid, ts in q_terms.items() if ts}
-
-    parts = []
-    if singles:
-        s_terms = sorted(set(singles.values()))
-        s_cand = postings.filter(F.col("term").isin(s_terms)).select(
-            "term", "blob", "block_max")
-        s_contrib = s_cand.mapInPandas(
-            _score_partition(n, avgdl, k, True, _idfs(td, n, s_terms)),
-            schema="doc_id long, term string, contrib double")
-        s_top = (_rank_within(s_contrib, "term", score="contrib")
-                 .filter(F.col("rank") <= k))
-        s_qmap = spark.createDataFrame(
-            [(qid, t, float(q_boosts[qid].get(t, 1.0)))
-             for qid, t in singles.items()],
-            "query_id string, term string, boost double")
-        # boost scales every contribution of the (single) term by a
-        # constant → per-term rank order (and thus the windowed top-k) is
-        # unchanged; only the reported score scales
-        parts.append(
-            s_top.join(F.broadcast(s_qmap), "term")
-            .select("query_id", "doc_id",
-                    (F.col("contrib") * F.col("boost")).alias("score"),
-                    "rank"))
-    if multis:
-        m_terms = sorted({t for ts in multis.values() for t in ts})
-        cand = postings.filter(F.col("term").isin(m_terms)).select(
-            "term", "blob", "block_max")
-        idfs = _idfs(td, n, m_terms)
-        lambdas = (_batch_wand_lambdas(cand, td, multis, idfs, n, avgdl, k)
-                   if wand and allow_prune and mode == "or"
-                   and msm is None and not any_boost else None)
-        contrib = cand.mapInPandas(
-            _score_partition(n, avgdl, k, False, idfs, lambdas),
-            schema="doc_id long, term string, contrib double",
-        )
-        qmap = spark.createDataFrame(
-            [(qid, t, float(q_boosts[qid].get(t, 1.0)))
-             for qid, ts in multis.items() for t in ts],
-            "query_id string, term string, boost double",
-        )
-        # per-query boost rides the broadcast map: contributions are
-        # computed ONCE per (term, doc) and re-scaled per query at the
-        # join — the same c*b float op as bm25_topk's post-multiplication,
-        # keeping batch and single bitwise-identical
-        joined = (contrib.join(F.broadcast(qmap), "term")
-                  .withColumn("contrib",
-                              F.col("contrib") * F.col("boost")))
-        need = spark.createDataFrame(
-            [(qid, len(ts)) for qid, ts in multis.items()],
-            "query_id string, _need int") if mode == "and" else None
-        scored = _doc_scores(joined, mode, msm, need,
-                             keys=("query_id", "doc_id"))
-        excl = []
-        if all_negs:
-            # per-query MUST_NOT: one ids-only scan over the union of
-            # excluded terms, routed to owning queries via the broadcast
-            # (query_id, term) map, then a composite-key anti-join
-            nqmap = spark.createDataFrame(
-                [(qid, t) for qid, ts in q_negs.items() for t in ts],
-                "query_id string, term string")
-            excl = [_term_doc_ids(postings, all_negs, with_term=True)
-                    .join(F.broadcast(nqmap), "term")
-                    .select("query_id", "doc_id")]
-        scored = _restrict(spark, scored, [ix], doc_filter, excl,
-                           on=["query_id", "doc_id"])
-        parts.append(
-            _rank_within(scored, "query_id").filter(F.col("rank") <= k)
+    allow_prune = (doc_filter is None and msm is None
+                   and not any(c.nterms for c in live.values())
+                   and not has_tombstones(index_dir)
+                   and _bounds_current(index_dir, stats, all_terms))
+    # the one-term prune is exact for a term only one-term queries use;
+    # every other term may take a WAND bound from every query holding it
+    single = {t for t in all_terms
+              if all(len(c.terms) == 1 for c in live.values()
+                     if t in c.terms)} if allow_prune else set()
+    wand_q = {qid: c.terms for qid, c in live.items()
+              if set(c.terms) - single}
+    lambdas = (_batch_wand_lambdas(ix, wand_q, k)
+               if wand and allow_prune and mode == "or" and wand_q
+               and not any(c.boosts for c in live.values()) else None)
+    scored = _restrict(spark, _scores(
+        ix, live, _idfs(td, n, all_terms), avgdl, k, mode, msm, single,
+        lambdas, keyed=True), [ix], doc_filter)
+    return (_rank_within(scored, "query_id").filter(F.col("rank") <= k)
             .select("query_id", "doc_id", "score", "rank"))
-    if not parts:
-        return spark.createDataFrame([], out_schema)
-    return _union(parts)
 
 
 def bm25_oracle(
@@ -1454,15 +1295,16 @@ def _positional_index(spark: SparkSession, index_dir: str) -> _Index:
 
 def _positions(spark: SparkSession, ix: _Index, terms: list[str]
                ) -> DataFrame:
-    """The bucket/row-group-pruned positional rows of `terms` (their df
-    and presence come from the term dictionary: a term's positional rows
-    sum to its posting df)."""
+    """The (term, blob) positional rows of `terms`, through the one-task
+    candidate helper (their df and presence come from the term
+    dictionary: a term's positional rows sum to its posting df)."""
     import os
 
-    pos_df, _ = _prune_buckets(
-        spark.read.parquet(os.path.join(ix.dir, "positions")), ix.stats,
-        terms)
-    return pos_df.filter(F.col("term").isin(terms))
+    from macrobase_spark.index.build import _POS_SCHEMA
+
+    return _candidates(spark.read.schema(_POS_SCHEMA + ", bucket int")
+                       .parquet(os.path.join(ix.dir, "positions")),
+                       ix.stats, terms)
 
 
 def bm25_phrase_topk(
@@ -1571,7 +1413,7 @@ def bm25_phrase_topk(
             if frames:
                 yield pd.concat(frames, ignore_index=True)
 
-    parts = pos_df.select("term", "blob").mapInPandas(
+    parts = pos_df.mapInPandas(
         decode_score,
         schema="doc_id long, term string, contrib double, pos array<int>")
     gathered = parts.groupBy("doc_id").agg(
@@ -1714,9 +1556,9 @@ def bm25_facets(
     restrict bm25_topk's rankable population — so the total row equals
     the number of docs bm25_topk could ever return for this query.
 
-    Plan (the 100 TB shape): ids-only Arrow decode of the query terms'
-    postings (bucket/row-group-pruned; no scores, no positions) →
-    distinct/conjunctive-count per doc → restriction joins → ONE join to
+    Plan (the 100 TB shape): the match set (`_match_set`: one kernel
+    task over the bucket/row-group-pruned postings of the scored and
+    excluded terms; no positions) → restriction joins → ONE join to
     the docs metadata projection (facet columns only — column pruning
     reaches the docs parquet scan) → one groupBy over the exploded
     (facet, value) entries. The posting blobs of non-query terms are
@@ -1901,7 +1743,7 @@ def bm25_explain(
     query, doc_filter = _split_field_scopes(
         query, topk_kwargs.pop("doc_filter", None))
     ix = _open(spark, index_dir)
-    postings, stats = ix.postings, ix.stats
+    stats = ix.stats
     [(terms, _, boosts)] = _resolve(
         ix.tdict, stats, [_parse_query_full(query)],
         synonyms=topk_kwargs.get("synonyms"), max_expansions=max_expansions)
@@ -1920,8 +1762,6 @@ def bm25_explain(
     target = np.sort(np.asarray(sorted(set(int(d) for d in doc_ids)),
                                 dtype=np.int64))
     n, avgdl = stats["n_docs"], stats["avgdl"]
-    postings, _ = _prune_buckets(postings, stats, terms)
-    cand = postings.filter(F.col("term").isin(terms)).select("term", "blob")
     dfs = {t: float(ix.tdict.stats[t].df) for t in terms
            if t in ix.tdict.stats}
     bmap = dict(boosts)
@@ -1952,7 +1792,8 @@ def bm25_explain(
             if frames:
                 yield pd.concat(frames, ignore_index=True)
 
-    return (cand.mapInPandas(explain_fn, schema=out_schema)
+    return (_candidates(ix.postings, stats, terms)
+            .mapInPandas(explain_fn, schema=out_schema)
             .orderBy("doc_id", "term"))
 
 
@@ -2036,11 +1877,13 @@ def bm25_topk_sharded(
 
     Global stats: n_docs and avgdl from the shards' persisted integer
     counts; per-term df summed across the shards' term dictionaries on
-    the driver (no metadata job). Scoring is ONE job over the union of
-    the shards' bucket-pruned candidate rows — a doc
+    the driver (no metadata job). Scoring is one kernel task per shard
+    over its bucket-pruned candidate rows, with the global idfs — a doc
     lives in exactly one shard (caller contract: globally unique
-    doc_ids), so the per-doc ascending-term sum reproduces the
-    monolithic float order exactly (identity pinned in pytest).
+    doc_ids), so its whole ascending-term sum and its exclusions are
+    computed in that shard's task, the union of the shards' (doc_id,
+    score) rows is exact, and the ranking reproduces the monolithic
+    float order (identity pinned in pytest).
 
     Supports mode='and'/'or', field scopes, exclusions, doc_filter
     (applied per shard docs table, unioned), stoplists (which must be
@@ -2056,35 +1899,22 @@ def bm25_topk_sharded(
     handles = [_open(spark, d) for d in index_dirs]
     pq = _parse_query_full(query)
     _check_shards("bm25_topk_sharded", handles, pq)
-    [(terms, nterms, _)] = _resolve(handles[0].tdict, handles[0].stats,
-                                    [pq], mode)
-    if not terms:
+    [clauses] = _resolve(handles[0].tdict, handles[0].stats, [pq], mode)
+    if not clauses.terms:
         return _empty_topk(spark)
     n_docs = sum(h.stats["n_docs"] for h in handles)
     sum_dl = sum(h.stats.get("sum_dl", h.stats["avgdl"] * h.stats["n_docs"])
                  for h in handles)
-    avgdl = sum_dl / n_docs
     # the global df of a term is the sum of the shards' dictionary dfs
     dfs: Counter[str] = Counter()
-    cands, neg_parts = [], []
     for h in handles:
-        for t in terms:
+        for t in clauses.terms:
             if t in h.tdict.stats:
                 dfs[t] += h.tdict.stats[t].df
-        postings, _ = _prune_buckets(h.postings, h.stats, [*terms, *nterms])
-        cands.append(postings.filter(F.col("term").isin(terms))
-                     .select("term", "blob"))
-        if nterms:
-            neg_parts.append(_term_doc_ids(postings, nterms))
-    # no pruning (single_term=False, no lambdas) leaves the kernel's
-    # block_max input unused: feed an empty list instead of reading it
-    contrib = _union(cands).withColumn(
-        "block_max", F.array().cast("array<double>")).mapInPandas(
-        _score_partition(n_docs, avgdl, k, False,
-                         {t: _idf(n_docs, d) for t, d in dfs.items()}),
-        schema="doc_id long, term string, contrib double")
-    scored = _restrict(spark, _doc_scores(contrib, mode, None, len(terms)),
-                       handles, doc_filter, neg_parts)
+    idfs = {t: _idf(n_docs, d) for t, d in dfs.items()}
+    scored = _union([_scores(h, {"": clauses}, idfs, sum_dl / n_docs,
+                             mode=mode) for h in handles])
+    scored = _restrict(spark, scored, handles, doc_filter)
     return scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
 
 
@@ -2160,7 +1990,7 @@ def bm25_phrase_topk_batch(
             if frames:
                 yield pd.concat(frames, ignore_index=True)
 
-    parts = pos_df.select("term", "blob").mapInPandas(
+    parts = pos_df.mapInPandas(
         decode_score,
         schema="doc_id long, term string, contrib double, pos array<int>")
     gathered = parts.groupBy("doc_id").agg(
@@ -2228,8 +2058,8 @@ def bm25_count(
     semantics (mode / min_should_match / exclusions / field scopes /
     doc_filter / tombstones) — a one-row (n_matches long) relation: the
     count of bm25_match_ids' relation, so it shares the resolver and the
-    ids-only match set with bm25_match_ids and bm25_facets (no scores, no
-    positions, and unlike bm25_facets no docs-metadata join unless a doc
+    match set with bm25_match_ids and bm25_facets (no positions, no
+    shuffle, and unlike bm25_facets no docs-metadata join unless a doc
     filter requires one). A query no document can match (no indexable
     term, or min_should_match above the term count) counts 0."""
     return bm25_match_ids(spark, index_dir, query, mode, min_should_match,
@@ -2250,11 +2080,10 @@ def bm25_match_ids(
     downstream pipeline stage ("drop all docs matching these boilerplate
     queries", "re-embed everything mentioning X") rather than a results
     page. Same full retrieval semantics as bm25_count over the same
-    ids-only decode (no scores computed, no positions read, no top-k
-    limit, nothing collected to the driver): the result is a lazy
-    (doc_id) relation to join/anti-join against the corpus at 100 TB.
-    For a ranked export use bm25_topk with a large k instead — this path
-    exists precisely to skip the scoring shuffle."""
+    match set (one kernel task, no positions read, no top-k limit,
+    nothing collected to the driver): the result is a lazy (doc_id)
+    relation to join/anti-join against the corpus at 100 TB. For a
+    ranked export use bm25_topk with a large k instead."""
     msm = _check_mode(mode, min_should_match)
     query, doc_filter = _split_field_scopes(query, doc_filter)
     handles = [_open(spark, index_dir)]
@@ -2370,7 +2199,7 @@ def bm25_facets_sharded(
     same facet body over one index handle per shard. Facet membership is
     stats-free (a doc matches in exactly one shard), so the result is
     IDENTICAL to a monolithic index over the union — pytest-pinned, the
-    empty cases included. Each shard contributes its ids-only match set
+    empty cases included. Each shard contributes its match set
     and its docs-metadata projection; one union of each, then the same
     single facet pass. Mixed stoplists refuse loudly (they change which
     query terms exist); wildcard / fuzzy / regexp / boost tokens are

@@ -780,8 +780,11 @@ def build_index(
         # were recorded at encode time (blob_len), so this read-back touches
         # only tiny metadata columns — the blob bytes never re-load
         _tp = time.time()
+        # the known schema, not footer inference: a corpus with no token
+        # writes no posting file to infer from
         stats = (
-            spark.read.parquet(postings_root)
+            spark.read.schema(_POSTINGS_SCHEMA + ", bucket int")
+            .parquet(postings_root)
             .filter(F.col("bucket").isin(todo))
             .groupBy("bucket")
             .agg(
@@ -1697,14 +1700,17 @@ def _index_entry(spark: SparkSession, out_dir: str) -> _Version:
     with open(os.path.join(out_dir, "stats.json")) as f:
         stats = json.load(f)
     postings_root = os.path.join(out_dir, "postings")
+    schema = _POSTINGS_SCHEMA + ", bucket int"
     if any(d.startswith("bucket=") for d in (_list_dir(postings_root) or [])):
-        postings = spark.read.parquet(postings_root)
+        # every writer emits the canonical schema: pass it instead of
+        # paying a footer-inference job on each new index version
+        postings = spark.read.schema(schema).parquet(postings_root)
     else:
         # fully-purged index (every doc deleted and compacted away): no
-        # parquet footers to infer from — serve an empty relation with the
+        # parquet files to read — serve an empty relation with the
         # canonical schema so queries return empty instead of crashing
-        postings = spark.createDataFrame(
-            [], _POSTINGS_SCHEMA + ", bucket int")
+        postings = spark.createDataFrame([], schema)
+    # the docs schema is inferred: its metadata columns vary by input
     docs = spark.read.parquet(os.path.join(out_dir, "docs.parquet"))
     # the engine's kernels (scoring AND the build-time block-max impact
     # metadata) hard-code k1/b per the spec; an index whose stats claim

@@ -1,0 +1,85 @@
+"""Seeded differential test of the BM25 scoring kernel, which owns the
+per-doc float order: on generated small corpora (U+0130 'İ', token-less
+docs, an index-time stoplist, hot terms split across salted rows) and
+generated queries (exclusions, boosts, stoplist-only token sets,
+mode='and', min_should_match), bm25_topk and bm25_topk_batch over a
+segmented index (build, then update_index) and bm25_topk_sharded over two
+shards must equal bm25_oracle bitwise — doc ids, order and float scores.
+"""
+
+from collections import defaultdict
+
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+
+from macrobase_spark.index.bm25 import (bm25_oracle, bm25_topk,
+                                        bm25_topk_batch, bm25_topk_sharded)
+from macrobase_spark.index.build import build_index, update_index
+
+STOP = ["the", "and"]
+# 'İ' lowercases to 'i' + U+0307, which splits the token: "İnsert" is the
+# two tokens "i" and "nsert" on both the index and the query side
+WORDS = ["alpha", "beta", "gamma", "delta", "omega", "the", "and",
+         "İnsert", "KİT", "x1"]
+NOISE = ["", "!!!", "— —", "...?"]
+QWORDS = ["alpha", "beta", "gamma", "delta", "omega", "the", "and",
+          "İnsert", "kit", "nsert", "x1", "absent"]
+
+doc_text = st.one_of(
+    st.sampled_from(NOISE),  # token-less
+    st.lists(st.sampled_from(WORDS), min_size=1, max_size=7).map(" ".join))
+query_tok = st.one_of(
+    st.tuples(st.sampled_from(QWORDS),
+              st.sampled_from(["", "", "^2", "^0.5", "^3"]))
+    .map("".join),
+    st.sampled_from(QWORDS).map("-{}".format))
+query = st.tuples(
+    st.lists(query_tok, min_size=1, max_size=4).map(" ".join),
+    st.sampled_from([("or", None), ("or", None), ("and", None),
+                     ("or", 2), ("or", 3)]))
+
+
+def _rows(rel):
+    return [(r["doc_id"], r["score"]) for r in rel.collect()]
+
+
+@settings(max_examples=2, derandomize=True, deadline=None,
+          suppress_health_check=list(HealthCheck))
+@given(texts=st.lists(doc_text, min_size=8, max_size=16),
+       queries=st.lists(query, min_size=4, max_size=6),
+       k=st.sampled_from([3, 10]))
+def test_kernel_equals_oracle_bitwise(spark, tmp_path_factory, texts,
+                                      queries, k):
+    docs = [(7 * i + 1, t) for i, t in enumerate(texts)]
+    half = len(docs) // 2
+    root = tmp_path_factory.mktemp("diff")
+    seg, other = str(root / "seg"), str(root / "other")
+
+    def frame(rows):
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    for out, rows in ((seg, docs[:half]), (other, docs[half:])):
+        build_index(frame(rows), out, num_buckets=2, salt_partitions=2,
+                    hot_df_threshold=3, hot_sample_frac=1.0, stopwords=STOP)
+    # two shards are one corpus: sharded scoring uses the global stats
+    for q, (mode, msm) in queries:
+        if msm is None and "^" not in q:
+            assert _rows(bm25_topk_sharded(spark, [seg, other], q, k=k,
+                                           mode=mode)) == bm25_oracle(
+                docs, q, k=k, mode=mode, stopwords=set(STOP)), q
+    update_index(frame(docs[half:]), seg)  # seg: base + one segment
+    groups = defaultdict(dict)
+    for i, (q, (mode, msm)) in enumerate(queries):
+        want = bm25_oracle(docs, q, k=k, mode=mode, min_should_match=msm,
+                           stopwords=set(STOP))
+        assert _rows(bm25_topk(spark, seg, q, k=k, mode=mode,
+                               min_should_match=msm)) == want, q
+        groups[mode, msm][str(i)] = (q, want)
+    for (mode, msm), qs in groups.items():
+        got = defaultdict(list)
+        for r in bm25_topk_batch(spark, seg, {i: q for i, (q, _) in
+                                              qs.items()}, k=k, mode=mode,
+                                 min_should_match=msm).collect():
+            got[r["query_id"]].append((r["rank"], r["doc_id"], r["score"]))
+        for i, (q, want) in qs.items():
+            assert [(d, s) for _, d, s in sorted(got[i])] == want, q

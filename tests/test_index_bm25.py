@@ -308,7 +308,7 @@ def test_batch_wand_prunes_hot_two_term_query(spark, tmp_path):
 
     from macrobase_spark.index.build import K1, open_index
     from macrobase_spark.index.bm25 import (
-        _batch_wand_lambdas, _idfs, _parse_query_full, bm25_topk_batch)
+        _batch_wand_lambdas, _open, _parse_query_full, bm25_topk_batch)
 
     rows = []
     for d in range(16):  # high-impact: tf=8, short docs, low doc_ids → block 0
@@ -332,13 +332,9 @@ def test_batch_wand_prunes_hot_two_term_query(spark, tmp_path):
     assert a == b and len(a) == 10
     assert all(doc < 16 for _, doc, _ in a)  # high-impact docs win
 
-    postings, _, stats, td = open_index(spark, out)
+    postings, _, stats, _ = open_index(spark, out)
     terms = sorted(_parse_query_full("spike the").terms)
-    cand = postings.filter(F.col("term").isin(terms)).select(
-        "term", "blob", "block_max")
-    lam = _batch_wand_lambdas(cand, td, {"h": terms},
-                              _idfs(td, stats["n_docs"], terms),
-                              stats["n_docs"], stats["avgdl"], 10)
+    lam = _batch_wand_lambdas(_open(spark, out), {"h": terms}, 10)
     assert lam and "spike" in lam
     meta = (postings.filter(F.col("term").isin(terms))
             .select("term", "df", "block_max").collect())

@@ -1053,41 +1053,41 @@ def test_bm25_jobs_per_call(spark, corpus, seg_index, shards):
     calls = {
         "topk single": (1, lambda: bm25_topk(spark, out, "tok0042")),
         "topk single hot": (1, lambda: bm25_topk(spark, out, "the")),
-        "topk multi": (2, lambda: bm25_topk(spark, out, "call tool")),
-        "topk msm": (2, lambda: bm25_topk(
+        "topk multi": (1, lambda: bm25_topk(spark, out, "call tool")),
+        "topk msm": (1, lambda: bm25_topk(
             spark, out, "tok0003 tok0042 tok0777", min_should_match=2)),
-        "topk prefix": (2, lambda: bm25_topk(spark, out, "tok05*")),
-        "topk fuzzy": (2, lambda: bm25_topk(spark, out, "tok0042~1")),
-        "topk regexp": (2, lambda: bm25_topk(spark, out, "/tok00(4|7)2/")),
-        "topk wand": (3, lambda: bm25_topk(spark, out, "the call",
+        "topk prefix": (1, lambda: bm25_topk(spark, out, "tok05*")),
+        "topk fuzzy": (1, lambda: bm25_topk(spark, out, "tok0042~1")),
+        "topk regexp": (1, lambda: bm25_topk(spark, out, "/tok00(4|7)2/")),
+        "topk wand": (2, lambda: bm25_topk(spark, out, "the call",
                                            wand=True)),
-        "seg single": (2, lambda: bm25_topk(spark, seg_index, "tok0042")),
-        "seg multi": (2, lambda: bm25_topk(spark, seg_index, "call tool")),
-        "seg batch": (4, lambda: bm25_topk_batch(
+        "seg single": (1, lambda: bm25_topk(spark, seg_index, "tok0042")),
+        "seg multi": (1, lambda: bm25_topk(spark, seg_index, "call tool")),
+        "seg batch": (1, lambda: bm25_topk_batch(
             spark, seg_index, ["the", "tok0042", "call tool",
                                "tok0005 tok0100"])),
-        "seg explain": (3, lambda: bm25_explain(
+        "seg explain": (1, lambda: bm25_explain(
             spark, seg_index, "tok0042 call", doc_ids=ids)),
-        "sharded": (2, lambda: bm25_topk_sharded(
+        "sharded": (1, lambda: bm25_topk_sharded(
             spark, shards[2], "tok0042 the")),
-        "phrase": (4, lambda: bm25_phrase_topk(spark, seg_index,
+        "phrase": (2, lambda: bm25_phrase_topk(spark, seg_index,
                                                "tok0001 tok0000")),
-        "more_like_this": (3, lambda: more_like_this(spark, out, df,
+        "more_like_this": (2, lambda: more_like_this(spark, out, df,
                                                      ids[1])),
-        "topk exclude": (2, lambda: bm25_topk(spark, out, "tok0007 -the")),
-        "topk filter": (3, lambda: bm25_topk(
+        "topk exclude": (1, lambda: bm25_topk(spark, out, "tok0007 -the")),
+        "topk filter": (2, lambda: bm25_topk(
             spark, out, "tok0011 tok0200", doc_filter="role = 'assistant'")),
-        "batch": (6, lambda: bm25_topk_batch(
+        "batch": (1, lambda: bm25_topk_batch(
             spark, out, ["the", "tok0042", "call tool", "tok0005 tok0100",
                          "tok0003 tok0042 tok0777"])),
-        "facets": (6, lambda: bm25_facets(spark, out, "tok0042 the",
+        "facets": (5, lambda: bm25_facets(spark, out, "tok0042 the",
                                           ["role"])),
-        "count": (4, lambda: bm25_count(spark, out, "tok0042 -tok0007")),
-        "match_ids": (3, lambda: bm25_match_ids(spark, out,
+        "count": (1, lambda: bm25_count(spark, out, "tok0042 -tok0007")),
+        "match_ids": (1, lambda: bm25_match_ids(spark, out,
                                                 "tok0042 -tok0007")),
-        "explain doc_ids": (3, lambda: bm25_explain(
+        "explain doc_ids": (1, lambda: bm25_explain(
             spark, out, "tok0042 call", doc_ids=ids)),
-        "explain k": (5, lambda: bm25_explain(spark, out, "tok0042 call",
+        "explain k": (2, lambda: bm25_explain(spark, out, "tok0042 call",
                                               k=3)),
     }
     got = {name: _jobs_per_call(spark, name, fn)
@@ -1095,13 +1095,68 @@ def test_bm25_jobs_per_call(spark, corpus, seg_index, shards):
     over = {name: (got[name], bound) for name, (bound, _) in calls.items()
             if got[name] > bound}
     assert not over, f"jobs (got, bound): {over}"
-    # one job loads the dictionary of an index version (opening the
-    # index's handles is read_index's cost); a warm call reads it from
-    # memory
+    # a new index version costs one job to open its handles (the docs
+    # schema is inferred; the postings read takes the known schema) and
+    # one to load its dictionary; a warm call reads both from memory
     invalidate_index_cache(out)
-    read_index(spark, out)
+    assert _jobs(spark, "read cold", lambda: read_index(spark, out)) == 1
     assert _jobs(spark, "dict cold", lambda: open_index(spark, out)[3]) == 1
+    invalidate_index_cache(out)
+    assert _jobs(spark, "open cold", lambda: open_index(spark, out)[3]) == 2
     assert _jobs(spark, "dict warm", lambda: open_index(spark, out)[3]) == 0
+
+
+def _python_ops(rel):
+    """(operator, child) lines of every Python-UDF operator in rel's
+    executed plan (the final adaptive plan, after a collect)."""
+    rel.collect()
+    plan = rel._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    names = [re.sub(r"^[\s+|:-]*(\*\(\d+\) )?", "", line)
+             for line in plan.treeString().splitlines()]
+    return [(op, child) for op, child in zip(names, names[1:])
+            if re.match(r"\w*(Python|InPandas|InArrow)\b", op)]
+
+
+def test_one_python_task_per_index_handle(spark, corpus, seg_index, shards):
+    """Every scoring and membership entry point runs exactly ONE
+    Python-UDF operator per index handle, directly over a one-partition
+    Coalesce: the scored and excluded terms' rows meet in one kernel task,
+    with no second ids stage, contribution shuffle or exclusion join."""
+    from macrobase_spark.index.bm25 import (bm25_count, bm25_facets_sharded,
+                                            bm25_match_ids,
+                                            bm25_topk_sharded)
+
+    _, out, docs, _ = corpus
+    two = shards[2]
+    calls = {
+        "topk single": (1, bm25_topk(spark, out, "tok0042")),
+        "topk multi": (1, bm25_topk(spark, out, "call tool^2")),
+        "topk msm": (1, bm25_topk(spark, out, "tok0003 tok0042 tok0777",
+                                  min_should_match=2)),
+        "topk exclude": (1, bm25_topk(spark, out, "tok0007 -the -tok00*")),
+        "topk filter": (1, bm25_topk(spark, out, "tok0011 tok0200",
+                                     doc_filter="role = 'assistant'")),
+        "topk seg and": (1, bm25_topk(spark, seg_index, "the call",
+                                      mode="and")),
+        "batch": (1, bm25_topk_batch(spark, out, ["the", "call tool",
+                                                  "tok0007 -the"])),
+        "sharded": (2, bm25_topk_sharded(spark, two, "tok0042 the -call")),
+        "count": (1, bm25_count(spark, out, "tok0042 -tok0007")),
+        "match_ids": (1, bm25_match_ids(spark, out, "the call", mode="and")),
+        "facets": (1, bm25_facets(spark, out, "tok0042 the", ["role"])),
+        "facets_sharded": (2, bm25_facets_sharded(spark, two, "tok0042 -the",
+                                                  ["role"])),
+        "explain": (1, bm25_explain(spark, out, "tok0042 call",
+                                    doc_ids=[d for d, _ in docs[:3]])),
+    }
+    bad = {}
+    for name, (handles, rel) in calls.items():
+        ops = _python_ops(rel)
+        if len(ops) != handles or any(c != "Coalesce 1" for _, c in ops):
+            bad[name] = ops
+    assert not bad, bad
 
 
 def test_update_folds_the_served_term_dictionary(spark, corpus, tmp_path):
