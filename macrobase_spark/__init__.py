@@ -21,4 +21,6 @@ pruning, join selection and AQE; Python touches data only through Arrow
 (pandas UDFs) — never per-row.
 """
 
+# no pyspark import here: worker_daemon runs this before it takes Spark's
+# archives off the worker path, so pyspark would load from pyspark.zip
 __version__ = "0.1.0"

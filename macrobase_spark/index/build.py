@@ -882,6 +882,13 @@ def _list_dir(path: str) -> list[str] | None:
     return sorted(os.listdir(path))
 
 
+def _part_files(root: str, buckets: list[int]) -> set[str]:
+    """The parquet part files in root's bucket=B directories."""
+    return {os.path.join(root, f"bucket={b}", f) for b in buckets
+            for f in _list_dir(os.path.join(root, f"bucket={b}")) or []
+            if f.endswith(".parquet") and not f.startswith(("_", "."))}
+
+
 def take_index_snapshot(out_dir: str) -> dict:
     """Record the pre-mutation state of every index artifact update_index /
     build_index touches."""
@@ -1111,8 +1118,9 @@ def update_index(
       until `compact_index` merges segments back to one row per term.
     - if this process holds the previous version's term dictionary (the
       index is being served), the delta's (term, df, max_impact) rows are
-      folded into it — one small collect over the persisted delta — so
-      the next query loads no dictionary (`open_index`).
+      folded into it — read on the driver from the part files the append
+      added, with no Spark job — so the next query loads no dictionary
+      (`open_index`).
 
     Reference lineage: the reference has no incremental index; this is the
     standard Lucene/LSM segment-log design expressed as parquet appends.
@@ -1251,14 +1259,22 @@ def update_index(
             .repartition("bucket")
             .sortWithinPartitions("term")
         )
-        if base_td is not None:
-            new_enc = new_enc.persist(StorageLevel.MEMORY_AND_DISK)
         postings_root = os.path.join(out_dir, "postings")
+        before = _part_files(postings_root, touched)
         new_enc.write.mode("append").partitionBy("bucket").parquet(postings_root)
         new_post.unpersist()
+        folded = base_td
         if base_td is not None:
-            delta_terms = new_enc.select("term", "df", "max_impact").toArrow()
-            new_enc.unpersist()
+            # the delta's rows are the part files the append added: read
+            # their (term, df, max_impact) on the driver, no Spark job
+            import pyarrow as pa
+            import pyarrow.parquet as pq
+
+            added = sorted(_part_files(postings_root, touched) - before)
+            if added:
+                folded = _term_dict(pa.concat_tables(
+                    pq.read_table(f, columns=["term", "df", "max_impact"])
+                    for f in added), base_td)
 
         if stats.get("has_positions"):
             # positional layer: same LSM segment append — the delta's
@@ -1304,8 +1320,8 @@ def update_index(
                                     "version": bv.get(b, 1), "op": "update",
                                     "ts": time.time()}) + "\n")
         invalidate_index_cache(out_dir)
-        if base_td is not None:
-            _INDEX_CACHE[new_key] = _Version(_term_dict(delta_terms, base_td))
+        if folded is not None:
+            _INDEX_CACHE[new_key] = _Version(folded)
         if journal:
             os.remove(os.path.join(out_dir, _UPDATE_INFLIGHT))
         return {"n_docs": n_docs, "avgdl": avgdl, "version": version,

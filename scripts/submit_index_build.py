@@ -20,6 +20,12 @@ Local smoke (this sandbox):
 
 Resumability: re-running the same command after a failure skips buckets
 already committed to <output>/manifest.jsonl.
+
+Python workers: under spark-submit the session is the one its command line
+configures, so a --py-files cluster keeps Spark's stock worker daemon
+(pyspark imported from Spark's own archives). Run as a plain script, the
+local session from `get_spark` starts its workers with
+`macrobase_spark.worker_daemon` (see `macrobase_spark.session`).
 """
 
 from __future__ import annotations
@@ -52,10 +58,12 @@ def main() -> None:
     from macrobase_spark.index.build import build_index
     from macrobase_spark.sources.iceberg import read_table
 
-    # under spark-submit the session comes preconfigured from the CLI; the
-    # local fallback builds one
-    spark = SparkSession.getActiveSession()
-    if spark is None:
+    # under spark-submit (it hands the script its gateway) the master and
+    # confs come from its command line; run as a plain script, get_spark
+    # builds a local session
+    if "PYSPARK_GATEWAY_PORT" in os.environ:
+        spark = SparkSession.builder.appName("index_build").getOrCreate()
+    else:
         from macrobase_spark.session import get_spark
 
         spark = get_spark("index_build")

@@ -4,6 +4,7 @@ rather than in cluster bills.
 
 - predicate pushdown + column pruning reach the parquet scan
 - small dimension joins broadcast
+- the Catalyst and Arrow tokenizers agree on term statistics
 - DIFF runs as ONE grouping-sets aggregate (Expand → partial/final
   HashAggregate), not per-order passes
 - per-series windows partition by the series key (no single-partition sort
@@ -38,10 +39,19 @@ def test_scan_pushdown_and_pruning(spark, sf):
 
 
 def test_dim_join_broadcasts(spark, sf):
+    """q04's dimension joins (nation ⋈ region, then customer ⋈ that)
+    broadcast the dimension side: the customer rows never shuffle for
+    them, and every rich customer finds its nation and region."""
     import __spark_entry__ as e
 
-    p = _plan(e.q03_join_inner_semi_anti(spark, sf))
-    assert "BroadcastHashJoin" in p
+    q04 = e.q04_join_outer_natural(spark, sf)
+    p = _plan(q04, mode="simple")
+    assert "BroadcastHashJoin [n_regionkey#" in p
+    assert "BroadcastHashJoin [c_nationkey#" in p
+    assert "Exchange hashpartitioning(c_nationkey" not in p
+    rich = [r for r in q04.collect() if r["acctbal"] > 9000]
+    assert rich and all(r["nation"] != "none" and r["region"] != "none"
+                        for r in rich)
 
 
 def test_semi_anti_joins_match_q03(spark, sf, tmp_path):
@@ -79,6 +89,27 @@ def test_semi_anti_joins_match_q03(spark, sf, tmp_path):
         s: none.get(s, 0) for s in segs}
     n_cust = c.count()
     assert 0 < sum(big.values()) < n_cust and 0 < sum(none.values()) < n_cust
+
+
+def test_catalyst_tokenizer_matches_q17_term_stats(spark, sf):
+    """q17 computes term stats through the index build's Arrow tokenizer
+    (tokenize.partial_postings); the Catalyst tokenizer (tokenize_expr,
+    which q18 and the text functions use) must give the same top-50
+    (term, df, cf) rows over the same documents."""
+    import __spark_entry__ as e
+    from macrobase_spark.functions.text import tokenize_expr
+
+    d = spark.read.parquet(f"{sf}/documents.parquet")
+    catalyst = (d.select("doc_id",
+                         F.explode(tokenize_expr("text")).alias("term"))
+                .groupBy("term")
+                .agg(F.countDistinct("doc_id").alias("df"),
+                     F.count("*").alias("cf"))
+                .orderBy(F.col("df").desc(), F.col("term").asc())
+                .limit(50))
+    assert "MapInArrow" not in _plan(catalyst, mode="simple")
+    got = [tuple(r) for r in e.q17_term_stats(spark, sf).collect()]
+    assert got and got == [tuple(r) for r in catalyst.collect()]
 
 
 def test_diff_is_single_grouping_sets_pass(spark, sf):
