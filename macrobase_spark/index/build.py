@@ -15,19 +15,30 @@ Pipeline (all lazy DataFrame stages; Python only inside Arrow batches):
         on (term, salt); mapInArrow merges each run's partials (one
         lexsort restores global doc order) → posting blob (delta+varint);
         cold terms finalize here
-    → PHASE 2: groupBy(term) merge salted partials → final blob
-        + df/cf stats + block-max impact metadata (BM25 upper bounds)
-    → write parquet range-partitioned & sorted by term (row-group pruning
-      for term-lookup queries), partitioned by bucket for resumability.
+    → PHASE 2 (_merge_hot_partials), in the write stage: repartition on
+        bucket (a term's rows share one bucket, hence one partition);
+        final rows pass through, and once the partition is drained each
+        hot term's salted partials merge (_merge_postings — the ONE merge,
+        shared with compact_index) → final blob + df/cf stats + block-max
+        impact metadata (BM25 upper bounds)
+    → write parquet sorted by (bucket, term) (term order within each file
+      for row-group pruning of term-lookup queries), partitioned by bucket
+      for resumability.
+    → manifest: per-bucket metrics read on the driver (pyarrow) from the
+      part files the write committed — no Spark read-back job.
+
+One linear plan (_encode): nothing between tokenize and write is cached,
+read twice, unioned or grouped in pandas.
 
 Skew story: a hot term ("the" — in ~90% of turns) would send its entire
 posting list to ONE reducer in a naive groupBy(term). Salting splits it into
 S shards built in parallel; phase 2 merges S pre-compressed blobs (decode +
-merge-sort + re-encode of numpy arrays — cheap relative to shuffle). Cold
-terms take salt=0 and pass through phase 2 untouched. This mirrors the
-two-phase parallel aggregation the reference uses for itemset counting
-(per-thread FastFixedHashTable then merge, lib/.../aplinear/
-APrioriLinear.java:113-338) — re-expressed as Spark shuffle stages.
+merge-sort + re-encode of numpy arrays — cheap relative to shuffle) on the
+bucket's write task. Cold terms take salt=0 and pass through phase 2
+untouched. This mirrors the two-phase parallel aggregation the reference
+uses for itemset counting (per-thread FastFixedHashTable then merge,
+lib/.../aplinear/APrioriLinear.java:113-338) — re-expressed as Spark
+shuffle stages.
 
 Resumability: terms are bucketed by hash into `num_buckets`; buckets are
 processed in `num_groups` independent jobs, each committing its buckets'
@@ -36,14 +47,16 @@ bytes, merge fan-in) per bucket. A restarted build skips buckets already in
 the manifest. Granularity = num_groups re-scans of the input (configurable;
 1 = single pass, no mid-build resume).
 
-The positional layer (partial_positional_postings → _merge_partial_pos_runs)
-and update_index's delta segments run the same relation and kernels;
+The positional layer (partial_positional_postings → _merge_partial_pos_runs
+→ _merge_positions) and update_index's delta segments (no hot run, so no
+phase 2) run the same plan and kernels;
 hot-term detection and suggest_stopwords count document frequency over the
 same packed relation.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -99,9 +112,9 @@ _POSTINGS_SCHEMA = (
     "term string, df long, cf long, fan_in int, max_impact double, "
     "block_max array<double>, blob_len long, blob binary"
 )
-# phase-1 output: `final` rows are complete posting lists (cold terms, one
-# shard); non-final rows are salted partials awaiting the phase-2 merge.
-_ENC_SCHEMA = _POSTINGS_SCHEMA + ", final boolean"
+# phase-1 kernels emit a layer's schema plus `final`: final rows are
+# complete posting lists (cold terms, one shard); non-final rows are salted
+# partials awaiting the phase-2 merge (_encode).
 
 # positional layer (opt-in, build_index(positions=True)): a SEPARATE
 # self-contained artifact under <out_dir>/positions — same (term, salt)
@@ -109,7 +122,6 @@ _ENC_SCHEMA = _POSTINGS_SCHEMA + ", final boolean"
 # (codec.encode_positional), so the layer never needs byte-level alignment
 # with the main posting blobs and the main build path stays untouched.
 _POS_SCHEMA = "term string, df long, blob_len long, blob binary"
-_POS_ENC_SCHEMA = _POS_SCHEMA + ", final boolean"
 
 
 def _impact(tfs: np.ndarray, dls: np.ndarray, avgdl: float) -> np.ndarray:
@@ -172,11 +184,11 @@ def _encode_runs_flat(run_terms, ids: np.ndarray, tfs: np.ndarray,
                       dls: np.ndarray, starts: np.ndarray, ends: np.ndarray,
                       hot_terms: set[str], avgdl: float):
     """Vectorized encode core: flat doc-sorted posting arrays +
-    [starts, ends) run boundaries → one _ENC_SCHEMA Arrow batch. Whole-
-    array varint streams (codec.encode_run_batch), reduceat per-run and
-    per-block maxima, Arrow-native output assembly — no Python loop over
-    runs. `ids/tfs/dls` must be sliced to exactly ends[-1] values and
-    ascending in doc_id within each run."""
+    [starts, ends) run boundaries → one Arrow batch of _POSTINGS_SCHEMA
+    plus `final`. Whole-array varint streams (codec.encode_run_batch),
+    reduceat per-run and per-block maxima, Arrow-native output assembly —
+    no Python loop over runs. `ids/tfs/dls` must be sliced to exactly
+    ends[-1] values and ascending in doc_id within each run."""
     import pyarrow as pa
 
     from macrobase_spark.index.codec import encode_run_batch
@@ -291,55 +303,87 @@ def _decode_partial(blob: bytes) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return ids, tfs, dls
 
 
-def _merge_final(avgdl: float, drop_bc=None):
-    """Phase 2: merge a hot term's salted partial blobs (decode → merge-sort
-    → re-encode). Only hot terms reach here — typically tens of groups.
+def _merge_postings(avgdl: float, blobs: list[bytes],
+                    drop: np.ndarray | None = None) -> dict | None:
+    """The ONE posting merge: one term's blobs (salted partials or LSM
+    segments — disjoint doc sets) → decode → doc-order argsort → re-encode,
+    with df/cf and block-max impact metadata under `avgdl`. `drop` (a
+    SORTED int64 array of tombstoned doc_ids) purges those docs — the
+    compaction-time physical delete; None when every posting is purged
+    (the term leaves the dictionary)."""
+    from macrobase_spark.index.codec import varint_encode
 
-    drop_bc (a Spark broadcast of a SORTED int64 numpy array of tombstoned
-    doc_ids) additionally purges those docs during the merge — the
-    compaction-time physical delete. A term whose postings all vanish
-    emits no row (the term leaves the dictionary)."""
+    parts = [_decode_partial(b) for b in blobs]
+    ids = np.concatenate([p[0] for p in parts])
+    tfs = np.concatenate([p[1] for p in parts])
+    dls = np.concatenate([p[2] for p in parts])
+    order = np.argsort(ids, kind="stable")
+    ids, tfs, dls = ids[order], tfs[order], dls[order]
+    if drop is not None:
+        keep = ~np.isin(ids.astype(np.int64), drop, assume_unique=False)
+        ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
+        if len(ids) == 0:
+            return None
+    blob = delta_varint_encode(ids, tfs) + varint_encode(dls)
+    impact = _impact(tfs, dls, avgdl)
+    return {"df": len(ids), "cf": int(tfs.sum()), "fan_in": len(parts),
+            "max_impact": float(impact.max()),
+            "block_max": _block_max(impact), "blob_len": len(blob),
+            "blob": blob}
 
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        parts = [_decode_partial(b) for b in pdf["blob"]]
-        ids = np.concatenate([p[0] for p in parts])
-        tfs = np.concatenate([p[1] for p in parts])
-        dls = np.concatenate([p[2] for p in parts])
-        order = np.argsort(ids, kind="stable")
-        ids, tfs, dls = ids[order], tfs[order], dls[order]
-        if drop_bc is not None:
-            keep = ~np.isin(ids.astype(np.int64), drop_bc.value,
-                            assume_unique=False)
-            ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-            if len(ids) == 0:
-                return pd.DataFrame({
-                    "term": pd.Series([], dtype=object),
-                    "df": pd.Series([], dtype=np.int64),
-                    "cf": pd.Series([], dtype=np.int64),
-                    "fan_in": pd.Series([], dtype=np.int64),
-                    "max_impact": pd.Series([], dtype=np.float64),
-                    "block_max": pd.Series([], dtype=object),
-                    "blob_len": pd.Series([], dtype=np.int64),
-                    "blob": pd.Series([], dtype=object),
-                })
-        from macrobase_spark.index.codec import varint_encode
 
-        blob = delta_varint_encode(ids, tfs) + varint_encode(dls)
-        impact = _impact(tfs, dls, avgdl)
+def _merge_hot_partials(merge):
+    """PHASE 2 kernel (mapInArrow) over phase-1 rows repartitioned by
+    bucket, in the write stage: final rows pass through batch by batch. A
+    hot term's salted partials all share its bucket, hence this partition,
+    so they are held until the partition is drained and each hot term's
+    are then merged into one row by `merge(blobs)` (the layer's one merge:
+    _merge_postings or _merge_positions). Input rows carry `final` and
+    `bucket`; output rows drop `final`."""
+
+    def fn(batches):
+        import itertools
+
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        hot = []
+        for rb in batches:
+            names = [n for n in rb.schema.names if n != "final"]
+            final = rb.column("final")
+            if pc.any(final).as_py():
+                yield rb.filter(final).select(names)
+            hot.append(rb.filter(pc.invert(final)).select(names))
+        if not hot:
+            return
+        tbl = pa.Table.from_batches(hot).sort_by("term")
+        cols = [tbl.column(c).to_pylist() for c in ("term", "bucket", "blob")]
+        rows = []
+        for term, grp in itertools.groupby(zip(*cols), key=lambda r: r[0]):
+            grp = list(grp)
+            rows.append({"term": term, "bucket": grp[0][1],
+                         **merge([r[2] for r in grp])})
+        if rows:
+            yield pa.RecordBatch.from_pylist(rows, schema=tbl.schema)
+
+    return fn
+
+
+def _grouped_merge(merge, schema: str, drop_bc=None):
+    """compact_index's grouped (applyInPandas) wrapper around a layer's one
+    merge: one term's segment rows → its merged row (`schema`), purging the
+    docs in drop_bc (a Spark broadcast of a SORTED int64 numpy array of
+    tombstoned doc_ids); a term whose postings all vanish emits no row."""
+    columns = [c.split()[0] for c in schema.split(", ")]
+
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        row = merge(list(pdf["blob"]),
+                    drop_bc.value if drop_bc is not None else None)
         return pd.DataFrame(
-            {
-                "term": [pdf["term"].iloc[0]],
-                "df": [len(ids)],
-                "cf": [int(tfs.sum())],
-                "fan_in": [len(parts)],
-                "max_impact": [float(impact.max())],
-                "block_max": [_block_max(impact)],
-                "blob_len": [len(blob)],
-                "blob": [blob],
-            }
-        )
+            [{"term": pdf["term"].iloc[0], **row}] if row is not None else [],
+            columns=columns)
 
-    return merge
+    return fn
 
 
 def _merge_partial_pos_runs(hot_terms: set[str]):
@@ -411,46 +455,79 @@ def _merge_partial_pos_runs(hot_terms: set[str]):
     return fn
 
 
-def _merge_pos_final(drop_bc=None):
-    """Phase 2 of the positional layer: merge one hot term's salted
-    positional partials into a single doc-sorted blob. drop_bc purges
-    tombstoned docs during the merge (see _merge_final)."""
+def _merge_positions(blobs: list[bytes],
+                     drop: np.ndarray | None = None) -> dict | None:
+    """The positional layer's one merge: one term's salted partials or
+    segments → a single doc-sorted blob; `drop` purges tombstoned docs
+    (see _merge_postings)."""
     from macrobase_spark.index.codec import (decode_positional,
                                              encode_positional,
-                                             merge_positional_blobs)
+                                             merge_positional_blobs,
+                                             varint_decode)
 
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        blob = merge_positional_blobs(list(pdf["blob"]))
-        df_count = int(pdf["df"].sum())
-        if drop_bc is not None:
-            ids, tfs, dls, flat = decode_positional(blob)
-            keep = ~np.isin(ids.astype(np.int64), drop_bc.value)
-            if not keep.all():
-                starts = np.concatenate(
-                    ([0], np.cumsum(tfs)))[:-1].astype(np.int64)
-                kept_idx = np.flatnonzero(keep)
-                segs = [flat[starts[i]:starts[i] + int(tfs[i])]
-                        for i in kept_idx]
-                flat = (np.concatenate(segs) if segs
-                        else np.empty(0, dtype=np.uint64))
-                ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-                if len(ids) == 0:
-                    return pd.DataFrame({
-                        "term": pd.Series([], dtype=object),
-                        "df": pd.Series([], dtype=np.int64),
-                        "blob_len": pd.Series([], dtype=np.int64),
-                        "blob": pd.Series([], dtype=object),
-                    })
-                blob = encode_positional(ids, tfs, dls, flat)
-            df_count = len(ids)
-        return pd.DataFrame({
-            "term": [pdf["term"].iloc[0]],
-            "df": [int(df_count)],
-            "blob_len": [len(blob)],
-            "blob": [blob],
-        })
+    blob = merge_positional_blobs(blobs)
+    if drop is not None:
+        ids, tfs, dls, flat = decode_positional(blob)
+        keep = ~np.isin(ids.astype(np.int64), drop)
+        if not keep.all():
+            if not keep.any():
+                return None
+            starts = np.concatenate(([0], np.cumsum(tfs)))[:-1].astype(
+                np.int64)
+            flat = np.concatenate([flat[starts[i]:starts[i] + int(tfs[i])]
+                                   for i in np.flatnonzero(keep)])
+            blob = encode_positional(ids[keep], tfs[keep], dls[keep], flat)
+    # df is the blob's entry count, its leading varint
+    return {"df": int(varint_decode(blob, count=1)[0][0]),
+            "blob_len": len(blob), "blob": blob}
 
-    return merge
+
+def _bucket_col(num_buckets: int):
+    """A term's bucket: the same hash in every writer and every index."""
+    return F.pmod(F.xxhash64("term"), F.lit(num_buckets)).cast("int")
+
+
+def _encode(part: DataFrame, kernel, schema: str, n_shuffle: int,
+            num_buckets: int, merge=None) -> DataFrame:
+    """The ONE encode plan of both layers, linear from the packed partial
+    rows to the write: PHASE 1 `kernel` over the (term, salt) runs, then
+    the rows move to their bucket's partition, where PHASE 2
+    (_merge_hot_partials) merges each hot term's salted partials with
+    `merge` — None when no run is hot (update segments), then rows just
+    drop `final`. Sorted by (bucket, term) for the write: the planned
+    write's own Sort(bucket) is satisfied, so the files keep term order."""
+    enc = (part.repartition(n_shuffle, "term", "salt")
+           .sortWithinPartitions("term", "salt")
+           .mapInArrow(kernel, schema=schema + ", final boolean")
+           .withColumn("bucket", _bucket_col(num_buckets))
+           .repartition("bucket"))
+    if merge is None:
+        enc = enc.drop("final")
+    else:
+        enc = enc.mapInArrow(_merge_hot_partials(merge),
+                             schema=schema + ", bucket int")
+    return enc.sortWithinPartitions("bucket", "term")
+
+
+def _bucket_records(root: str, buckets: list[int]) -> dict[int, dict]:
+    """Per-bucket manifest metrics (terms, postings, bytes, max_fan_in)
+    read on the driver from the committed part files of `buckets` — only
+    the small df / blob_len / fan_in columns, no Spark job."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    recs: dict[int, dict] = {}
+    for f in sorted(_part_files(root, buckets)):
+        t = pq.read_table(f, columns=["df", "blob_len", "fan_in"])
+        if t.num_rows == 0:
+            continue
+        r = recs.setdefault(_file_bucket(f), {
+            "terms": 0, "postings": 0, "bytes": 0, "max_fan_in": 0})
+        r["terms"] += t.num_rows
+        r["postings"] += pc.sum(t["df"]).as_py()
+        r["bytes"] += pc.sum(t["blob_len"]).as_py()
+        r["max_fan_in"] = max(r["max_fan_in"], pc.max(t["fan_in"]).as_py())
+    return recs
 
 
 def detect_hot_terms(src: DataFrame, sample_frac: float, threshold: int,
@@ -714,8 +791,7 @@ def build_index(
     partials = partial_postings(
         src, doc_id_col, text_col, hot_terms=hot_set,
         salt_partitions=salt_partitions, stopwords=stop,
-    ).withColumn(
-        "bucket", F.pmod(F.xxhash64("term"), F.lit(num_buckets)).cast("int"))
+    ).withColumn("bucket", _bucket_col(num_buckets))
     if num_groups > 1:
         partials = partials.persist()
     # persist the hot-term set: the incremental-update path salts its
@@ -737,80 +813,36 @@ def build_index(
         if not todo:
             continue
         part = partials.filter(F.col("bucket").isin(todo)).drop("bucket")
-        # phase 1: shuffle the packed partial rows on (term, salt), sort
-        # runs, merge+encode in-place; cold terms finalize here (fan_in 1),
-        # hot partials go to phase 2. The salt was computed inside the
-        # map-side combine (doc_id % S for hot terms), so the skew story is
-        # unchanged while the shuffle carries ~30x fewer rows.
-        # PERSISTED: the finals and hot-merge branches below would otherwise
-        # each recompute the whole tokenize→shuffle→sort→encode subtree
-        # (Catalyst does not reuse the exchange across the union's branches
-        # — verified in the executed plan), doubling the dominant phase.
-        # The encoded relation is tiny (delta+varint blobs, ~1-2% of the
-        # raw postings), so caching it is effectively free.
-        from pyspark import StorageLevel
-
-        encoded = (
-            part.repartition(n_shuffle, "term", "salt")
-            .sortWithinPartitions("term", "salt")
-            .mapInArrow(_merge_partial_runs(hot_set, avgdl),
-                        schema=_ENC_SCHEMA)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        finals = encoded.filter(F.col("final")).drop("final")
-        merged_hot = (
-            encoded.filter(~F.col("final")).drop("final")
-            .groupBy("term")
-            .applyInPandas(_merge_final(avgdl), schema=_POSTINGS_SCHEMA)
-        )
-        merged = (
-            finals.unionByName(merged_hot)
-            .withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(num_buckets)).cast("int"))
-            .repartition("bucket")
-            .sortWithinPartitions("term")
-        )
+        # phase 1 shuffles the packed partial rows on (term, salt) and
+        # encodes each run — cold terms finalize there (fan_in 1); the
+        # salt was computed inside the map-side combine (doc_id % S for
+        # hot terms), so the skew story holds while the shuffle carries
+        # ~30x fewer rows. Phase 2 merges the hot partials in the write
+        # stage: one linear plan, nothing cached or read twice.
+        enc = _encode(part, _merge_partial_runs(hot_set, avgdl),
+                      _POSTINGS_SCHEMA, n_shuffle, num_buckets,
+                      merge=functools.partial(_merge_postings, avgdl))
         _tp = time.time()
-        merged.write.mode("overwrite").partitionBy("bucket").option(
+        enc.write.mode("overwrite").partitionBy("bucket").option(
             "partitionOverwriteMode", "dynamic"
         ).parquet(postings_root)
         phases["encode_write"] = phases.get("encode_write", 0.0) + round(
             time.time() - _tp, 3)
-        encoded.unpersist()
         # per-bucket lineage + metrics from the committed files: blob sizes
-        # were recorded at encode time (blob_len), so this read-back touches
+        # were recorded at encode time (blob_len), so this read touches
         # only tiny metadata columns — the blob bytes never re-load
         _tp = time.time()
-        # the known schema, not footer inference: a corpus with no token
-        # writes no posting file to infer from
-        stats = (
-            spark.read.schema(_POSTINGS_SCHEMA + ", bucket int")
-            .parquet(postings_root)
-            .filter(F.col("bucket").isin(todo))
-            .groupBy("bucket")
-            .agg(
-                F.count("*").alias("terms"),
-                F.sum("df").alias("postings"),
-                F.sum("blob_len").alias("bytes"),
-                F.max("fan_in").alias("max_fan_in"),
-            )
-            .collect()
-        )
+        stats = _bucket_records(postings_root, todo)
         phases["stats_readback"] = phases.get("stats_readback", 0.0) + round(
             time.time() - _tp, 3)
         with open(manifest_path, "a") as f:
-            for r in stats:
-                rec = {
-                    "bucket": int(r["bucket"]), "status": "done", "group": g,
-                    "terms": int(r["terms"]), "postings": int(r["postings"]),
-                    "bytes": int(r["bytes"]), "max_fan_in": int(r["max_fan_in"]),
-                    "ts": time.time(), "version": 1,
-                }
-                report_buckets[rec["bucket"]] = rec
+            for b, r in sorted(stats.items()):
+                rec = {"bucket": b, "status": "done", "group": g, **r,
+                       "ts": time.time(), "version": 1}
+                report_buckets[b] = rec
                 f.write(json.dumps(rec) + "\n")
 
     if positions:
-        from pyspark import StorageLevel
-
         pos_root = os.path.join(out_dir, "positions")
         if not (resume and os.path.exists(os.path.join(pos_root, "_SUCCESS"))):
             _tp = time.time()
@@ -823,24 +855,9 @@ def build_index(
             pos_part = partial_positional_postings(
                 src, doc_id_col, text_col, hot_terms=hot_set,
                 salt_partitions=salt_partitions, stopwords=stop)
-            pos_enc = (
-                pos_part.repartition(n_shuffle, "term", "salt")
-                .sortWithinPartitions("term", "salt")
-                .mapInArrow(_merge_partial_pos_runs(hot_set),
-                            schema=_POS_ENC_SCHEMA)
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            pos_finals = pos_enc.filter(F.col("final")).drop("final")
-            pos_hot = (pos_enc.filter(~F.col("final")).drop("final")
-                       .groupBy("term")
-                       .applyInPandas(_merge_pos_final(), schema=_POS_SCHEMA))
-            (pos_finals.unionByName(pos_hot)
-             .withColumn("bucket", F.pmod(F.xxhash64("term"),
-                                          F.lit(num_buckets)).cast("int"))
-             .repartition("bucket")
-             .sortWithinPartitions("term")
+            (_encode(pos_part, _merge_partial_pos_runs(hot_set), _POS_SCHEMA,
+                     n_shuffle, num_buckets, merge=_merge_positions)
              .write.mode("overwrite").partitionBy("bucket").parquet(pos_root))
-            pos_enc.unpersist()
             phases["positions"] = round(time.time() - _tp, 3)
         # stamp AFTER the positional write commits: a crash in between
         # leaves has_positions unset and phrase queries refuse cleanly
@@ -882,11 +899,25 @@ def _list_dir(path: str) -> list[str] | None:
     return sorted(os.listdir(path))
 
 
-def _part_files(root: str, buckets: list[int]) -> set[str]:
-    """The parquet part files in root's bucket=B directories."""
+def _buckets(root: str) -> list[int]:
+    """The buckets that have a bucket=B directory under root."""
+    return sorted(int(d.split("=")[1]) for d in _list_dir(root) or []
+                  if d.startswith("bucket="))
+
+
+def _part_files(root: str, buckets: list[int] | None = None) -> set[str]:
+    """The parquet part files in root's bucket=B directories (all of them
+    when `buckets` is None)."""
+    if buckets is None:
+        buckets = _buckets(root)
     return {os.path.join(root, f"bucket={b}", f) for b in buckets
             for f in _list_dir(os.path.join(root, f"bucket={b}")) or []
             if f.endswith(".parquet") and not f.startswith(("_", "."))}
+
+
+def _file_bucket(path: str) -> int:
+    """The bucket of a part file from its bucket=B directory."""
+    return int(os.path.basename(os.path.dirname(path)).split("=")[1])
 
 
 def take_index_snapshot(out_dir: str) -> dict:
@@ -1234,47 +1265,34 @@ def update_index(
                                         text_col, stopwords=stop))
 
         # the same map-side-combined relation as the fresh build (hot terms
-        # salted by doc_id % S inside the combine). Persisted: the touched-
-        # buckets collect AND the encode+write below both consume it —
-        # without the pin every update would re-tokenize the whole delta,
-        # and a nondeterministic df_new could even write buckets the
-        # version gate never stamped stale (r4 review)
-        new_post = (partial_postings(src, doc_id_col, text_col,
-                                     hot_terms=hot_set,
-                                     salt_partitions=salt_partitions,
-                                     stopwords=stop).withColumn(
-            "bucket", F.pmod(F.xxhash64("term"), F.lit(num_buckets)).cast("int"))
-            .persist(StorageLevel.MEMORY_AND_DISK))
-        touched = [r["bucket"] for r in new_post.select("bucket").distinct().collect()]
-        n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        # encode per (term, salt) run; hot_terms=∅ → every run finalizes with
-        # real per-segment block-max metadata (a hot term's delta becomes up to
+        # salted by doc_id % S inside the combine), encoded per (term, salt)
+        # run with hot_terms=∅: every run finalizes with real per-segment
+        # block-max metadata (a hot term's delta becomes up to
         # `salt_partitions` segment rows — parallel encode, parallel read)
-        new_enc = (
-            new_post.drop("bucket").repartition(n_shuffle, "term", "salt")
-            .sortWithinPartitions("term", "salt")
-            .mapInArrow(_merge_partial_runs(set(), avgdl), schema=_ENC_SCHEMA)
-            .drop("final")
-            .withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(num_buckets)).cast("int"))
-            .repartition("bucket")
-            .sortWithinPartitions("term")
-        )
+        n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        new_post = partial_postings(src, doc_id_col, text_col,
+                                    hot_terms=hot_set,
+                                    salt_partitions=salt_partitions,
+                                    stopwords=stop)
         postings_root = os.path.join(out_dir, "postings")
-        before = _part_files(postings_root, touched)
-        new_enc.write.mode("append").partitionBy("bucket").parquet(postings_root)
-        new_post.unpersist()
+        # the touched buckets are the ones the append adds files to: the
+        # listing diff is exactly what was written, with no Spark job
+        before = _part_files(postings_root)
+        _encode(new_post, _merge_partial_runs(set(), avgdl), _POSTINGS_SCHEMA,
+                n_shuffle, num_buckets).write.mode("append").partitionBy(
+            "bucket").parquet(postings_root)
+        added = sorted(_part_files(postings_root) - before)
+        touched = sorted({_file_bucket(f) for f in added})
         folded = base_td
-        if base_td is not None:
+        if base_td is not None and added:
             # the delta's rows are the part files the append added: read
             # their (term, df, max_impact) on the driver, no Spark job
             import pyarrow as pa
             import pyarrow.parquet as pq
 
-            added = sorted(_part_files(postings_root, touched) - before)
-            if added:
-                folded = _term_dict(pa.concat_tables(
-                    pq.read_table(f, columns=["term", "df", "max_impact"])
-                    for f in added), base_td)
+            folded = _term_dict(pa.concat_tables(
+                pq.read_table(f, columns=["term", "df", "max_impact"])
+                for f in added), base_td)
 
         if stats.get("has_positions"):
             # positional layer: same LSM segment append — the delta's
@@ -1288,19 +1306,9 @@ def update_index(
             pos_part = partial_positional_postings(
                 src, doc_id_col, text_col, hot_terms=hot_set,
                 salt_partitions=salt_partitions, stopwords=stop)
-            pos_enc = (
-                pos_part.repartition(n_shuffle, "term", "salt")
-                .sortWithinPartitions("term", "salt")
-                .mapInArrow(_merge_partial_pos_runs(set()),
-                            schema=_POS_ENC_SCHEMA)
-                .drop("final")
-                .withColumn("bucket", F.pmod(F.xxhash64("term"),
-                                             F.lit(num_buckets)).cast("int"))
-                .repartition("bucket")
-                .sortWithinPartitions("term")
-            )
-            pos_enc.write.mode("append").partitionBy("bucket").parquet(
-                os.path.join(out_dir, "positions"))
+            _encode(pos_part, _merge_partial_pos_runs(set()), _POS_SCHEMA,
+                    n_shuffle, num_buckets).write.mode("append").partitionBy(
+                "bucket").parquet(os.path.join(out_dir, "positions"))
 
         seg = sorted(set(stats.get("segmented_buckets", [])) | set(touched))
         stats.update({"n_docs": n_docs, "avgdl": avgdl, "sum_dl": sum_dl,
@@ -1457,10 +1465,7 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
             # pending deletes: a tombstoned doc can appear in ANY bucket's
             # postings, so the physical purge rewrites every bucket (full
             # LSM major compaction), not just the version-stale ones
-            existing = [int(d.split("=")[1])
-                        for d in (_list_dir(postings_root) or [])
-                        if d.startswith("bucket=")]
-            stale = sorted(set(stale) | set(existing))
+            stale = sorted(set(stale) | set(_buckets(postings_root)))
         if not stale:
             return {"version": version, "compacted_buckets": []}
 
@@ -1520,12 +1525,12 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
             .filter(F.col("bucket").isin(stale))
             .drop("bucket")
             .groupBy("term")
-            .applyInPandas(_merge_final(avgdl_enc, drop_bc),
-                           schema=_POSTINGS_SCHEMA)
-            .withColumn("bucket", F.pmod(F.xxhash64("term"),
-                                         F.lit(stats["num_buckets"])).cast("int"))
+            .applyInPandas(_grouped_merge(
+                functools.partial(_merge_postings, avgdl_enc),
+                _POSTINGS_SCHEMA, drop_bc), schema=_POSTINGS_SCHEMA)
+            .withColumn("bucket", _bucket_col(stats["num_buckets"]))
             .repartition("bucket")
-            .sortWithinPartitions("term")
+            .sortWithinPartitions("bucket", "term")
         )
         written_buckets = None
         if purge:
@@ -1555,12 +1560,11 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
                 .filter(F.col("bucket").isin(stale))
                 .drop("bucket")
                 .groupBy("term")
-                .applyInPandas(_merge_pos_final(drop_bc), schema=_POS_SCHEMA)
-                .withColumn("bucket", F.pmod(
-                    F.xxhash64("term"),
-                    F.lit(stats["num_buckets"])).cast("int"))
+                .applyInPandas(_grouped_merge(_merge_positions, _POS_SCHEMA,
+                                              drop_bc), schema=_POS_SCHEMA)
+                .withColumn("bucket", _bucket_col(stats["num_buckets"]))
                 .repartition("bucket")
-                .sortWithinPartitions("term")
+                .sortWithinPartitions("bucket", "term")
             )
             pos_written = None
             if purge:
@@ -1717,7 +1721,7 @@ def _index_entry(spark: SparkSession, out_dir: str) -> _Version:
         stats = json.load(f)
     postings_root = os.path.join(out_dir, "postings")
     schema = _POSTINGS_SCHEMA + ", bucket int"
-    if any(d.startswith("bucket=") for d in (_list_dir(postings_root) or [])):
+    if _buckets(postings_root):
         # every writer emits the canonical schema: pass it instead of
         # paying a footer-inference job on each new index version
         postings = spark.read.schema(schema).parquet(postings_root)
@@ -1880,7 +1884,7 @@ def merge_indexes(spark: SparkSession, shard_dirs: list[str],
     for s in paths:
         p = spark.read.parquet(os.path.join(s, "postings"))
         post_u = p if post_u is None else post_u.unionByName(p)
-    (post_u.repartition("bucket").sortWithinPartitions("term")
+    (post_u.repartition("bucket").sortWithinPartitions("bucket", "term")
      .write.mode("overwrite").partitionBy("bucket")
      .parquet(os.path.join(out_dir, "postings")))
     if has_pos:
@@ -1890,13 +1894,10 @@ def merge_indexes(spark: SparkSession, shard_dirs: list[str],
         for s in paths:
             p = spark.read.parquet(os.path.join(s, "positions"))
             pos_u = p if pos_u is None else pos_u.unionByName(p)
-        (pos_u.repartition("bucket").sortWithinPartitions("term")
+        (pos_u.repartition("bucket").sortWithinPartitions("bucket", "term")
          .write.mode("overwrite").partitionBy("bucket")
          .parquet(os.path.join(out_dir, "positions")))
-    buckets = sorted({int(d.split("=")[1])
-                      for d in (_list_dir(os.path.join(out_dir, "postings"))
-                                or [])
-                      if d.startswith("bucket=")})
+    buckets = _buckets(os.path.join(out_dir, "postings"))
     hot = sorted({t for st in shard_stats
                   for t in st.get("hot_terms", [])})
     # len_med/len_mad feed only future updates' anomaly normalization

@@ -14,6 +14,12 @@ behaviour when the installed pyspark is missing or another release than
 Spark's, and the conf is only set when a worker can import this package
 (its root is the working directory, on PYTHONPATH or in site-packages).
 Cluster sessions keep Spark's default daemon; ``extra_conf`` overrides.
+
+Under spark-submit (it hands the process its gateway in
+``PYSPARK_GATEWAY_PORT``) with no ``master`` argument, the master and the
+shuffle partition count are left to the launcher's command line: a
+builder master would override ``--master`` and silently run a local
+session on the driver.
 """
 
 from __future__ import annotations
@@ -31,16 +37,24 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    master = master or f"local[{cpus}]"
-    if shuffle_partitions is None:
-        # local mode: ~cores, not the 200 default (huge small-task overhead
-        # at test scale; on a cluster you size this to data volume instead).
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
-        shuffle_partitions = cpus if n == "*" else int(n)
+    builder = SparkSession.builder.appName(app_name)
+    # spark-submit hands the process its gateway: its --master stands
+    launched = master is None and "PYSPARK_GATEWAY_PORT" in os.environ
+    if not launched:
+        master = master or f"local[{cpus}]"
+        builder = builder.master(master)
+        if shuffle_partitions is None:
+            # local mode: ~cores, not the 200 default (huge small-task
+            # overhead at test scale; on a cluster you size this to data
+            # volume instead).
+            n = (master[master.find("[") + 1 : master.find("]")]
+                 if "[" in master else "32")
+            shuffle_partitions = cpus if n == "*" else int(n)
+    if shuffle_partitions is not None:
+        builder = builder.config("spark.sql.shuffle.partitions",
+                                 str(shuffle_partitions))
     builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        builder
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -54,7 +68,8 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.io.tmpdir=/tmp")
     )
-    local = master == "local" or master.startswith("local[")
+    local = master is not None and (master == "local"
+                                    or master.startswith("local["))
     if local and _workers_import_package(extra_conf):
         builder = builder.config("spark.python.daemon.module",
                                  "macrobase_spark.worker_daemon")

@@ -21,10 +21,11 @@ Local smoke (this sandbox):
 Resumability: re-running the same command after a failure skips buckets
 already committed to <output>/manifest.jsonl.
 
-Python workers: under spark-submit the session is the one its command line
-configures, so a --py-files cluster keeps Spark's stock worker daemon
-(pyspark imported from Spark's own archives). Run as a plain script, the
-local session from `get_spark` starts its workers with
+Session: `get_spark` leaves the master and the shuffle partition count to
+spark-submit's command line when spark-submit launched the script, so a
+--py-files cluster keeps its --master and Spark's stock worker daemon
+(pyspark imported from Spark's own archives). Run as a plain script,
+`get_spark` builds a local session whose workers start with
 `macrobase_spark.worker_daemon` (see `macrobase_spark.session`).
 """
 
@@ -52,21 +53,12 @@ def main() -> None:
     ap.add_argument("--no-resume", action="store_true")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from macrobase_spark.fixtures.transcripts import with_doc_id
     from macrobase_spark.index.build import build_index
+    from macrobase_spark.session import get_spark
     from macrobase_spark.sources.iceberg import read_table
 
-    # under spark-submit (it hands the script its gateway) the master and
-    # confs come from its command line; run as a plain script, get_spark
-    # builds a local session
-    if "PYSPARK_GATEWAY_PORT" in os.environ:
-        spark = SparkSession.builder.appName("index_build").getOrCreate()
-    else:
-        from macrobase_spark.session import get_spark
-
-        spark = get_spark("index_build")
+    spark = get_spark("index_build")
 
     df = read_table(spark, args.input)
     if args.doc_id_col not in df.columns:

@@ -12,6 +12,7 @@ its users on top of that.
 
 import math
 import re
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -1104,6 +1105,84 @@ def test_bm25_jobs_per_call(spark, corpus, seg_index, shards):
     invalidate_index_cache(out)
     assert _jobs(spark, "open cold", lambda: open_index(spark, out)[3]) == 2
     assert _jobs(spark, "dict warm", lambda: open_index(spark, out)[3]) == 0
+
+
+def _sql_plans(spark, after: int = -1) -> dict[int, str]:
+    """Physical plan of every retained SQL execution with id > after."""
+    seq = spark._jsparkSession.sharedState().statusStore().executionsList()
+    execs = (seq.apply(i) for i in range(seq.size()))
+    return {e.executionId(): e.physicalPlanDescription() for e in execs
+            if e.executionId() > after}
+
+
+def test_build_index_jobs(spark, corpus, tmp_path):
+    """Upper bound on the Spark jobs of one warm build_index (the measured
+    count): its main thread's job group plus the jobs of its helper
+    threads (hot-term detection and the docs write), which carry no job
+    group. The encode path is one linear plan: its postings write holds no
+    grouped-pandas stage and reads no cached relation (the corpus is read
+    from parquet, so no cache feeds the build either)."""
+    corpus[0].write.parquet(str(tmp_path / "corpus"))
+    df = spark.read.parquet(str(tmp_path / "corpus"))
+    sc = spark.sparkContext
+    kw = dict(num_buckets=4, hot_df_threshold=120, hot_sample_frac=0.5)
+    build_index(df, str(tmp_path / "warm"), **kw)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    seen = set(sc.statusTracker().getJobIdsForGroup(None))
+    last = max(_sql_plans(spark), default=-1)
+    out = str(tmp_path / "idx")
+    n = _jobs(spark, "build", lambda: build_index(df, out, **kw))
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n += len(set(sc.statusTracker().getJobIdsForGroup(None)) - seen)
+    assert n <= 12, n
+    writes = [p for p in _sql_plans(spark, last).values()
+              if "InsertIntoHadoopFsRelationCommand" in p
+              and f"{out}/postings" in p]
+    assert len(writes) == 1
+    assert "MapInArrow" in writes[0]
+    for op in ("FlatMapGroupsInPandas", "InMemoryRelation",
+               "InMemoryTableScan", "Union"):
+        assert op not in writes[0], op
+
+
+def _unsorted_part_files(index_dir: str) -> list[str]:
+    """Part files under postings/ and positions/ not in term order (the
+    index must have both layers)."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    out = []
+    for layer in ("postings", "positions"):
+        files = glob.glob(f"{index_dir}/{layer}/bucket=*/*.parquet")
+        assert files, layer
+        for f in files:
+            terms = pq.read_table(f, columns=["term"])["term"].to_pylist()
+            if terms != sorted(terms):
+                out.append(f)
+    return out
+
+
+def test_part_files_sorted_by_term(spark, corpus, seg_index, tmp_path):
+    """Every writer leaves each part file in term order (what row-group
+    pruning of term lookups relies on): the build and the update of
+    seg_index, a compaction of it, and a merge of two positional shards."""
+    from macrobase_spark.index.build import compact_index, merge_indexes
+
+    assert _unsorted_part_files(seg_index) == []
+    compacted = str(tmp_path / "compacted")
+    shutil.copytree(seg_index, compacted)
+    assert compact_index(spark, compacted)["compacted_buckets"]
+    assert _unsorted_part_files(compacted) == []
+    df = corpus[0]
+    shards = [str(tmp_path / f"s{i}") for i in range(2)]
+    for i, s in enumerate(shards):
+        build_index(df.filter(F.col("doc_id") % 2 == i), s, num_buckets=2,
+                    hot_df_threshold=120, hot_sample_frac=0.5,
+                    positions=True)
+    merged = str(tmp_path / "merged")
+    merge_indexes(spark, shards, merged)
+    assert _unsorted_part_files(merged) == []
 
 
 def _python_ops(rel):

@@ -95,3 +95,60 @@ def test_daemon_module_set_only_when_workers_import_the_package(
         {"spark.executorEnv.PYTHONPATH": root})
     monkeypatch.setenv("PYTHONPATH", os.pathsep.join(["/nonexistent", root]))
     assert session._workers_import_package(None)
+
+
+class _Builder:
+    """Records what get_spark asks of SparkSession.builder."""
+
+    def __init__(self):
+        self.conf: dict[str, str] = {}
+        self.sparkContext = self
+
+    def master(self, m):
+        self.conf["master"] = m
+        return self
+
+    def appName(self, name):
+        return self
+
+    def config(self, k, v):
+        self.conf[k] = v
+        return self
+
+    def getOrCreate(self):
+        return self
+
+    def setLogLevel(self, level):
+        pass
+
+
+def _session_conf(monkeypatch, **kw) -> dict[str, str]:
+    builder = _Builder()
+    monkeypatch.setattr(session, "SparkSession",
+                        type("SparkSession", (), {"builder": builder}))
+    session.get_spark(**kw)
+    return builder.conf
+
+
+def test_spark_submit_keeps_its_master(monkeypatch):
+    """Launched by spark-submit (PYSPARK_GATEWAY_PORT set) with no master
+    argument, get_spark sets neither the master nor the shuffle partition
+    count, so --master and --conf stand; an explicit master still wins,
+    and a plain process gets local[$SPARK_GRAFT_CPUS]."""
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    conf = _session_conf(monkeypatch)
+    assert conf["master"] == "local[5]"
+    assert conf["spark.sql.shuffle.partitions"] == "5"
+
+    monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "1")
+    conf = _session_conf(monkeypatch)
+    assert "master" not in conf
+    assert "spark.sql.shuffle.partitions" not in conf
+    assert "spark.python.daemon.module" not in conf
+    assert _session_conf(monkeypatch, shuffle_partitions=7)[
+        "spark.sql.shuffle.partitions"] == "7"
+
+    conf = _session_conf(monkeypatch, master="local[3]")
+    assert conf["master"] == "local[3]"
+    assert conf["spark.sql.shuffle.partitions"] == "3"
