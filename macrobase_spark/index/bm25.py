@@ -21,29 +21,32 @@ Every term-query entry point runs the same three stages:
      query after the index version changes (a build, compaction, merge or
      another process's update; an in-process update_index folds its delta
      into the served dictionary instead).
-  2. scan → one Arrow task per index: `_candidates` reads the
-     bucket- and row-group-pruned posting rows of every scored AND
-     excluded term (term → bucket is computed driver-side, so only
-     matching bucket directories are listed) and coalesces them into ONE
-     partition; `_score_kernel` then decodes each row once, computes each
-     (term, doc) contribution (with per-term block-max / WAND pruning
-     where it stays exact), drops docs holding an excluded term, sums per
-     doc in ascending-term order, applies the mode='and' / min_should_match
-     count and emits (doc_id, score) — keyed by query_id for a batch (one
-     query is a batch of one). Membership surfaces (count, match ids,
-     facets) run the same kernel unpruned and keep the doc ids
-     (`_match_set`). A PySpark worker task costs about 0.3 s of CPU
-     whatever its rows (the worker's per-task `setup_spark_files` →
-     `importlib.invalidate_caches()` dominates), so the plan counts
-     Python tasks, not rows: no contribution shuffle, no exclusion scan.
-  3. restrict (`_restrict`), natively over the kernel output: the
-     pending-tombstone anti-joins and the doc_filter semi-join, applied
-     identically by every surface; then the surface's own native tail
-     (anomaly / recency weights, collapse, `after`, TakeOrdered top-k,
-     per-query windows, facet aggregation).
+  2. score, in-process on the driver, once per index: `_candidates` reads
+     the posting rows of every scored AND excluded term with pyarrow from
+     the version's part files (term → bucket is computed driver-side, and
+     row groups whose term statistics hold no wanted term are skipped);
+     `_score_kernel` then decodes each row once, computes each (term, doc)
+     contribution (with per-term block-max / WAND pruning where it stays
+     exact), drops docs holding an excluded term, sums per doc in
+     ascending-term order, applies the mode='and' / min_should_match count
+     and returns each query's (doc ids, scores) — one query is a batch of
+     one. Membership surfaces (count, match ids, facets) run the same
+     kernel unpruned and keep the doc ids (`_match_set`). A query with a
+     few candidate rows costs less to score here than one Spark job costs
+     to plan and schedule, so the scoring surfaces run no Spark job.
+  3. restrict and rank: pending tombstones drop on the driver (`_live`,
+     from a pyarrow read of the pending ids). With no docs-metadata
+     modifier the top-k is taken on the driver in ranking order (score
+     desc, doc_id asc) and returned as a local DataFrame. The modifiers
+     that need the docs table (doc_filter, anomaly, recency, sort_by,
+     collapse, `after`) run as before in Spark, over a local DataFrame of
+     the match set: the doc_filter semi-join (`_filtered`), then the
+     surface's own native tail (weights, collapse, cursor, TakeOrdered
+     top-k, per-query windows, facet aggregation).
 
 A sharded call is the same pipeline over several index handles, one
-kernel task per shard.
+kernel run per shard. The phrase paths keep a Spark read of the
+positional layer (`_positions`).
 
 Determinism/rank-identity: postings are scored with float64 throughout;
 ties broken by ascending doc_id. Scores are identical bits to the oracle
@@ -65,8 +68,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from macrobase_spark.index.build import (open_index, has_tombstones,
-                                         TermDict, K1, B, BLOCK_SIZE)
+from macrobase_spark.index.build import (open_version, has_tombstones,
+                                         deleted_ids, TermDict, K1, B,
+                                         BLOCK_SIZE)
 from macrobase_spark.index.tokenize import TOKEN_PATTERN
 
 # query micro-syntax: `-tok` at a token boundary is an exclusion
@@ -319,15 +323,19 @@ def _rank_within(rel: DataFrame, key: str, col: str = "rank",
 # ------------------------------------------------ shared query stages
 
 class _Index(NamedTuple):
-    postings: DataFrame
+    """One index version: docs handle, stats, term dictionary and the
+    postings part files per bucket."""
     docs: DataFrame
     stats: dict
     tdict: TermDict
+    files: dict[int, list[str]]
     dir: str
 
 
 def _open(spark: SparkSession, index_dir: str) -> _Index:
-    return _Index(*open_index(spark, index_dir), index_dir)
+    v = open_version(spark, index_dir)
+    _, docs, stats = v.handles
+    return _Index(docs, stats, v.tdict, v.files, index_dir)
 
 
 class _Clauses(NamedTuple):
@@ -496,21 +504,43 @@ def _bounds_current(index_dir: str, stats: dict, terms: list[str]) -> bool:
                for t in terms)
 
 
-def _candidates(rows: DataFrame, stats: dict, terms,
-                cols: tuple[str, ...] = ("term", "blob")) -> DataFrame:
-    """The rows of `terms` (postings or positions) in ONE partition, the
-    input of one Python task. Partition pruning computes term → bucket =
-    pmod(xxhash64(term), B) on the driver, so only matching bucket
-    directories are listed, and parquet row-group statistics skip
-    non-matching terms. One partition because a PySpark worker task costs
-    about 0.3 s of CPU whatever its rows: count Python tasks, not rows."""
+def _may_hold(stats, terms: list[str]) -> bool:
+    """Whether a row group whose term column has these statistics can hold
+    one of the sorted `terms` (no min/max: it can)."""
+    if stats is None or not stats.has_min_max:
+        return True
+    i = bisect_left(terms, stats.min)
+    return i < len(terms) and terms[i] <= stats.max
+
+
+def _candidates(h: _Index, terms, cols: tuple[str, ...] = ("term", "blob")
+                ) -> list:
+    """The posting rows of `terms`, read on the driver with pyarrow from
+    the index version's part files (one Arrow table per file read): term
+    → bucket = pmod(xxhash64(term), B) is computed here, so only the
+    terms' buckets are read; a row group is read only when its term
+    statistics can hold a wanted term (part files are term-sorted), and
+    its rows then filter on `term IN (…)`."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
     from macrobase_spark.index.xxh64 import term_bucket
 
     terms = sorted(set(terms))
-    buckets = sorted({term_bucket(t, stats["num_buckets"]) for t in terms})
-    return (rows.filter(F.col("bucket").isin(buckets)
-                        & F.col("term").isin(terms))
-            .select(*cols).coalesce(1))
+    want = pa.array(terms, pa.string())
+    out = []
+    for b in sorted({term_bucket(t, h.stats["num_buckets"]) for t in terms}):
+        for f in h.files.get(b, ()):
+            with pq.ParquetFile(f) as pf:
+                md = pf.metadata
+                col = md.schema.names.index("term")
+                groups = [g for g in range(md.num_row_groups) if _may_hold(
+                    md.row_group(g).column(col).statistics, terms)]
+                if groups:
+                    t = pf.read_row_groups(groups, columns=list(cols))
+                    out.append(t.filter(pc.is_in(t["term"], value_set=want)))
+    return out
 
 
 def _row_contrib(ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
@@ -549,90 +579,111 @@ def _row_contrib(ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
     return ids[sel], sc[sel]
 
 
-def _score_kernel(queries: dict, idfs: dict[str, float], avgdl: float,
-                  k: int, mode: str, msm: int | None, single: set[str],
-                  lambdas: dict[str, float] | None, keyed: bool):
-    """The one scoring kernel of the BM25 family, run as ONE Arrow task
-    per index handle over the candidate rows of every query's scored and
-    excluded terms: decode each posting row, compute each scored term's
-    contributions (`_row_contrib`), and per query sum a doc's
+def _score_kernel(rows: list, queries: dict, idfs: dict[str, float],
+                  avgdl: float, k: int, mode: str, msm: int | None,
+                  single: set[str], lambdas: dict[str, float] | None
+                  ) -> dict[str, tuple[np.ndarray, np.ndarray]]:
+    """The one scoring kernel of the BM25 family, run once per index
+    handle over the candidate rows (Arrow tables) of every query's scored
+    and excluded terms: decode each posting row, compute each scored
+    term's contributions (`_row_contrib`), and per query sum a doc's
     contributions (each times its boost, c·b) in ascending-term order from
     0.0, one term at a time — the float order of bm25_oracle, never a
     vectorized reduction — then keep the docs that match mode='and' (every
     term) / min_should_match (≥ m terms; a (term, doc) pair lives in one
     segment row, so counting terms counts distinct terms) and hold no
-    excluded term. Emits (doc_id, score), keyed by query_id when `keyed`."""
+    excluded term. Returns query_id → (doc ids, scores) for every query
+    with a candidate row."""
+    from macrobase_spark.index.build import _decode_partial
+
     scored = {t for c in queries.values() for t in c.terms if t in idfs}
     negs = {t for c in queries.values() for t in c.nterms}
     lambdas = lambdas or {}
+    hits: dict[str, list] = {}
+    held: dict[str, list] = {}
+    for tbl in rows:
+        cols = tbl.to_pydict()
+        for term, blob, bmax in zip(
+                cols["term"], cols["blob"],
+                cols.get("block_max", [None] * tbl.num_rows)):
+            ids, tfs, dls = _decode_partial(blob)
+            ids = ids.astype(np.int64)
+            if term in negs:
+                held.setdefault(term, []).append(ids)
+            if term in scored:
+                hits.setdefault(term, []).append(_row_contrib(
+                    ids, tfs, dls, idfs[term], avgdl, bmax, k,
+                    term in single, lambdas.get(term)))
+    per_term = {t: (np.concatenate([i for i, _ in rs]),
+                    np.concatenate([c for _, c in rs]))
+                for t, rs in hits.items()}
+    out = {}
+    for qid, (terms, nterms, boosts) in queries.items():
+        present = [t for t in terms if t in per_term]
+        if not present:
+            continue
+        docs = np.unique(np.concatenate([per_term[t][0] for t in present]))
+        score = np.zeros(len(docs))
+        n_terms = np.zeros(len(docs), dtype=np.int64)
+        for t in present:
+            ids, c = per_term[t]
+            pos = np.searchsorted(docs, ids)
+            score[pos] += c * boosts.get(t, 1.0)
+            n_terms[pos] += 1
+        keep = (n_terms == len(terms) if mode == "and"
+                else n_terms >= (msm or 1))
+        excl = [i for t in nterms for i in held.get(t, [])]
+        if excl:
+            keep &= ~np.isin(docs, np.concatenate(excl))
+        out[qid] = (docs[keep], score[keep])
+    return out
 
-    def fn(batches):
-        import pyarrow as pa
 
-        from macrobase_spark.index.build import _decode_partial
-
-        hits: dict[str, list] = {}
-        held: dict[str, list] = {}
-        for rb in batches:
-            cols = rb.to_pydict()
-            for term, blob, bmax in zip(
-                    cols["term"], cols["blob"],
-                    cols.get("block_max", [None] * rb.num_rows)):
-                ids, tfs, dls = _decode_partial(blob)
-                ids = ids.astype(np.int64)
-                if term in negs:
-                    held.setdefault(term, []).append(ids)
-                if term in scored:
-                    hits.setdefault(term, []).append(_row_contrib(
-                        ids, tfs, dls, idfs[term], avgdl, bmax, k,
-                        term in single, lambdas.get(term)))
-        per_term = {t: (np.concatenate([i for i, _ in rs]),
-                        np.concatenate([c for _, c in rs]))
-                    for t, rs in hits.items()}
-        for qid, (terms, nterms, boosts) in queries.items():
-            present = [t for t in terms if t in per_term]
-            if not present:
-                continue
-            docs = np.unique(np.concatenate([per_term[t][0]
-                                             for t in present]))
-            score = np.zeros(len(docs))
-            n_terms = np.zeros(len(docs), dtype=np.int64)
-            for t in present:
-                ids, c = per_term[t]
-                pos = np.searchsorted(docs, ids)
-                score[pos] += c * boosts.get(t, 1.0)
-                n_terms[pos] += 1
-            keep = (n_terms == len(terms) if mode == "and"
-                    else n_terms >= (msm or 1))
-            excl = [i for t in nterms for i in held.get(t, [])]
-            if excl:
-                keep &= ~np.isin(docs, np.concatenate(excl))
-            out = {"doc_id": pa.array(docs[keep]),
-                   "score": pa.array(score[keep])}
-            if keyed:
-                out = {"query_id": pa.array([qid] * len(out["doc_id"]),
-                                            pa.string()), **out}
-            yield pa.RecordBatch.from_pydict(out)
-
-    return fn
+_NO_HITS = (np.empty(0, dtype=np.int64), np.empty(0))
+_HITS = "doc_id long, score double"
+_BATCH = "query_id string, doc_id long, score double, rank int"
 
 
 def _scores(h: _Index, queries: dict, idfs: dict[str, float], avgdl: float,
             k: int = 10, mode: str = "or", msm: int | None = None,
             single: set[str] = frozenset(),
-            lambdas: dict[str, float] | None = None,
-            keyed: bool = False) -> DataFrame:
-    """Every query's (doc_id, score) over one index handle (query_id first
-    when `keyed`), from one `_score_kernel` task over the candidate rows
-    of all the queries' terms; `idfs` may be global (sharded). block_max
-    is read only when a term is pruned."""
+            lambdas: dict[str, float] | None = None
+            ) -> dict[str, tuple[np.ndarray, np.ndarray]]:
+    """Every query's (doc ids, scores) over one index handle, from one
+    `_score_kernel` run over the candidate rows of all the queries' terms;
+    `idfs` may be global (sharded). block_max is read only when a term is
+    pruned."""
     terms = {t for c in queries.values() for t in (*c.terms, *c.nterms)}
     cols = ("term", "blob") + (("block_max",) if single or lambdas else ())
-    schema = (("query_id string, " if keyed else "")
-              + "doc_id long, score double")
-    return _candidates(h.postings, h.stats, terms, cols).mapInArrow(
-        _score_kernel(queries, idfs, avgdl, k, mode, msm, single, lambdas,
-                      keyed), schema)
+    return _score_kernel(_candidates(h, terms, cols), queries, idfs, avgdl,
+                         k, mode, msm, single, lambdas)
+
+
+def _live(handles: list[_Index], ids: np.ndarray, *cols: np.ndarray
+          ) -> tuple[np.ndarray, ...]:
+    """`ids` (and the aligned `cols`) minus the handles' pending deletes:
+    they vanish at once, while corpus stats count them until compact_index
+    purges (Lucene semantics)."""
+    dead = np.concatenate([deleted_ids(h.dir) for h in handles])
+    if not len(dead):
+        return (ids, *cols)
+    keep = ~np.isin(ids, dead)
+    return (ids[keep], *(c[keep] for c in cols))
+
+
+def _top(ids: np.ndarray, scores: np.ndarray, k: int
+         ) -> tuple[np.ndarray, np.ndarray]:
+    """The k best hits in ranking order: score desc, doc_id asc."""
+    o = np.lexsort((ids, -scores))[:k]
+    return ids[o], scores[o]
+
+
+def _frame(spark: SparkSession, schema: str, **cols) -> DataFrame:
+    """Driver-side columns as a DataFrame: an Arrow table becomes a local
+    relation, which Spark collects without running a job."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table(cols), schema)
 
 
 def _union(parts: list[DataFrame]) -> DataFrame:
@@ -642,43 +693,38 @@ def _union(parts: list[DataFrame]) -> DataFrame:
     return out
 
 
-def _restrict(spark: SparkSession, rel: DataFrame, handles: list[_Index],
+def _filtered(rel: DataFrame, handles: list[_Index],
               doc_filter: str | None) -> DataFrame:
-    """The restrictions every surface applies to the kernel output before
-    its own tail: the handles' pending deletes (they vanish at once;
-    corpus stats count them until compact_index purges — Lucene
-    semantics) and the doc_filter semi-join against the filtered docs
-    projections."""
-    from macrobase_spark.index.build import tombstone_ids
-
-    for h in handles:
-        tomb = tombstone_ids(spark, h.dir)
-        if tomb is not None:
-            rel = rel.join(tomb, "doc_id", "anti")
-    if doc_filter is not None:
-        rel = rel.join(_union([h.docs.filter(F.expr(doc_filter))
-                               .select("doc_id") for h in handles]),
-                       "doc_id", "semi")
-    return rel
+    """The doc_filter semi-join against the handles' filtered docs
+    projections (a no-op without a doc_filter)."""
+    if doc_filter is None:
+        return rel
+    return rel.join(_union([h.docs.filter(F.expr(doc_filter))
+                            .select("doc_id") for h in handles]),
+                    "doc_id", "semi")
 
 
-def _match_set(spark: SparkSession, handles: list[_Index], clauses: _Clauses,
-               mode: str = "or", msm: int | None = None,
-               doc_filter: str | None = None) -> DataFrame | None:
-    """The query's full match set as a (doc_id) relation over index
-    handles (a doc lives in one shard, so shard sets union exactly) under
-    mode / m / exclusions / doc_filter / tombstones — the scoring kernel
-    with no pruning, one task per handle; None when no document can
-    match."""
+def _match_set(handles: list[_Index], clauses: _Clauses, mode: str = "or",
+               msm: int | None = None) -> np.ndarray:
+    """The doc ids of the query's full match set over index handles (a
+    doc lives in one shard, so shard sets union exactly) under mode / m /
+    exclusions / tombstones — the scoring kernel with no pruning, one run
+    per handle. A doc_filter applies after, as `_matched`'s semi-join."""
     terms = clauses.terms
-    if not terms or (msm is not None and msm > len(terms)):
-        return None
-    return _union([
-        _restrict(spark, _scores(
-            h, {"": clauses}, _idfs(h.tdict, h.stats["n_docs"], terms),
-            h.stats["avgdl"], mode=mode, msm=msm).select("doc_id"),
-            [h], doc_filter)
-        for h in handles])
+    ids = [_NO_HITS[0]]
+    if terms and (msm is None or msm <= len(terms)):
+        ids += [_scores(h, {"": clauses},
+                        _idfs(h.tdict, h.stats["n_docs"], terms),
+                        h.stats["avgdl"], mode=mode, msm=msm)
+                .get("", _NO_HITS)[0] for h in handles]
+    return _live(handles, np.concatenate(ids))[0]
+
+
+def _matched(spark: SparkSession, handles: list[_Index], ids: np.ndarray,
+             doc_filter: str | None) -> DataFrame:
+    """A match set as a (doc_id) relation, under the doc_filter."""
+    return _filtered(_frame(spark, "doc_id long", doc_id=ids), handles,
+                     doc_filter)
 
 
 def _empty_topk(spark: SparkSession, docs: DataFrame | None = None,
@@ -821,8 +867,8 @@ def bm25_topk(
     block's bound above θ), so every candidate that can reach the top-k is
     fully scored and every pruned doc is provably below the kth. df and
     max_impact come from the term dictionary, so this costs one extra
-    small job (the rarest-term pass) — the cluster-scale path for hot
-    multi-term queries; off by default for local latency.
+    kernel run (the rarest-term pass) — worth it for hot multi-term
+    queries; off by default.
 
     ``role:assistant`` / ``tool:grep`` / ``conv_id:c17`` tokens in the
     query are field scopes (Lucene field-query sugar): stripped from the
@@ -915,27 +961,33 @@ def bm25_topk(
     if not terms or (msm is not None and msm > len(terms)):
         return _empty_topk(spark, docs, sort_by, collapse)
     n, avgdl = stats["n_docs"], stats["avgdl"]
+    # the docs-metadata modifiers run in Spark over the match set; without
+    # them the top-k is taken on the driver
+    plain = (anomaly_max is None and not anomaly_weight
+             and doc_filter is None and after is None and sort_by is None
+             and collapse is None and recency_half_life is None)
     # anomaly/filter/exclusion/tombstone modifiers change the final ranking
     # AFTER raw-BM25 scoring (filtering can promote docs from pruned
     # blocks; weighting reorders), so every block-pruning θ computed from
     # raw scores is invalid — score fully. Exactness over speed, same
     # policy as the stale-version gate.
-    allow_prune = (anomaly_max is None and not anomaly_weight
-                   and doc_filter is None and not nterms
+    allow_prune = (plain and not nterms and msm is None
                    and not has_tombstones(index_dir)
-                   and after is None and sort_by is None
-                   and collapse is None and msm is None
-                   and recency_half_life is None
                    and _bounds_current(index_dir, stats, terms))
     # multi-term WAND needs unboosted disjunctive bounds; a boost is a
     # constant per-term scale, so the one-term prune stays exact under it
     lambdas = (_batch_wand_lambdas(ix, {"": terms}, k)
                if wand and len(terms) > 1 and allow_prune and mode == "or"
                and not boosts else None)
-    scored = _restrict(spark, _scores(
+    ids, sc = _live([ix], *_scores(
         ix, {"": clauses}, _idfs(td, n, terms), avgdl, k, mode, msm,
-        set(terms) if allow_prune and len(terms) == 1 else set(), lambdas),
-        [ix], doc_filter)
+        set(terms) if allow_prune and len(terms) == 1 else set(),
+        lambdas).get("", _NO_HITS))
+    if plain:
+        ids, sc = _top(ids, sc, k)
+        return _frame(spark, _HITS, doc_id=ids, score=sc)
+    scored = _filtered(_frame(spark, _HITS, doc_id=ids, score=sc), [ix],
+                       doc_filter)
     if anomaly_max is not None or anomaly_weight:
         scored = scored.join(docs.select("doc_id", "anomaly"), "doc_id", "inner")
         if anomaly_max is not None:
@@ -1017,8 +1069,8 @@ def _batch_wand_lambdas(h: _Index, q_terms: dict[str, list[str]], k: int
     nothing is prunable.
 
     df and max_impact come from the term dictionary; the θs cost one
-    small job: one kernel task scoring every probed rarest term as its
-    own one-term query (block-max pruned), shared across all queries."""
+    kernel run scoring every probed rarest term as its own one-term query
+    (block-max pruned), shared across all queries."""
     td, n = h.tdict, h.stats["n_docs"]
     idfs = _idfs(td, n, {t for ts in q_terms.values() for t in ts})
     if not idfs:
@@ -1035,11 +1087,9 @@ def _batch_wand_lambdas(h: _Index, q_terms: dict[str, list[str]], k: int
     thetas: dict[str, float] = {}
     if probe:
         top = _scores(h, {t: _Clauses([t], [], {}) for t in probe}, idfs,
-                      h.stats["avgdl"], k, single=set(probe), keyed=True)
-        rows = (_rank_within(top, "query_id", "_rn")
-                .filter(F.col("_rn") == k).select("query_id", "score")
-                .collect())
-        thetas = {r["query_id"]: r["score"] for r in rows}
+                      h.stats["avgdl"], k, single=set(probe))
+        thetas = {t: float(np.sort(sc)[-k]) for t, (_, sc) in top.items()
+                  if len(sc) >= k}
     lambdas: dict[str, float] = {}
     for qid, ts in q_terms.items():
         present = [t for t in ts if t in dfs]
@@ -1068,21 +1118,23 @@ def bm25_topk_batch(
     max_expansions: int = 128,
     synonyms: dict[str, list[str]] | None = None,
 ) -> DataFrame:
-    """Top-k for MANY queries in ONE scoring task — the throughput shape
-    for query serving: one bucket- and row-group-pruned scan of the union
-    of all query terms' postings (scored and excluded), one Arrow kernel
-    task that decodes every row once, scores each (term, doc) once and
-    sums per (query, doc) in ascending-term order (bit-identical to
-    bm25_topk per query — bm25_topk is a batch of one), then a
-    per-query top-k window. Returns (query_id, doc_id, score, rank).
+    """Top-k for MANY queries in ONE kernel run — the throughput shape
+    for query serving: one bucket- and row-group-pruned driver read of the
+    union of all query terms' candidate rows (scored and excluded), one
+    `_score_kernel` run that decodes every row once, scores each (term,
+    doc) once and sums per (query, doc) in ascending-term order
+    (bit-identical to bm25_topk per query — bm25_topk is a batch of one),
+    then each query's top-k on the driver (a per-query window in Spark
+    under a doc_filter). Returns (query_id, doc_id, score, rank); without
+    a doc_filter no Spark job runs.
 
-    Amortizes the per-task Python-worker cost that dominates single-query
-    latency in local mode. A term that only one-term queries use is
-    block-max pruned exactly as bm25_topk prunes a one-term query, so a
-    hot single-term query ("the") does not emit its whole posting list.
-    wand=True adds batch-safe block-max pruning for the other terms (see
-    _batch_wand_lambdas) — exact, one extra small job; worth it when hot
-    multi-term queries dominate the batch.
+    A term shared by several queries is read and decoded once. A term
+    that only one-term queries use is block-max pruned exactly as
+    bm25_topk prunes a one-term query, so a hot single-term query ("the")
+    does not score its whole posting list. wand=True adds batch-safe
+    block-max pruning for the other terms (see _batch_wand_lambdas) —
+    exact, one extra kernel run; worth it when hot multi-term queries
+    dominate the batch.
 
     mode="and" applies conjunctive retrieval to every query in the batch
     (see bm25_topk): a doc must hold each of its query's terms. WAND
@@ -1131,8 +1183,7 @@ def bm25_topk_batch(
         td, stats, list(parsed.values()), mode, msm, synonyms,
         max_expansions)) if c.terms}
     if not live:
-        return spark.createDataFrame(
-            [], "query_id string, doc_id long, score double, rank int")
+        return spark.createDataFrame([], _BATCH)
     all_terms = sorted({t for c in live.values() for t in c.terms})
     n, avgdl = stats["n_docs"], stats["avgdl"]
     allow_prune = (doc_filter is None and msm is None
@@ -1149,9 +1200,19 @@ def bm25_topk_batch(
     lambdas = (_batch_wand_lambdas(ix, wand_q, k)
                if wand and allow_prune and mode == "or" and wand_q
                and not any(c.boosts for c in live.values()) else None)
-    scored = _restrict(spark, _scores(
+    hits = [(qid, *_live([ix], *h)) for qid, h in _scores(
         ix, live, _idfs(td, n, all_terms), avgdl, k, mode, msm, single,
-        lambdas, keyed=True), [ix], doc_filter)
+        lambdas).items()]
+    if doc_filter is None:
+        hits = [(qid, *_top(ids, sc, k)) for qid, ids, sc in hits]
+    cols = dict(query_id=[qid for qid, ids, _ in hits for _ in ids],
+                doc_id=np.concatenate([_NO_HITS[0], *(h[1] for h in hits)]),
+                score=np.concatenate([_NO_HITS[1], *(h[2] for h in hits)]))
+    if doc_filter is None:
+        return _frame(spark, _BATCH, **cols, rank=[
+            r for _, ids, _ in hits for r in range(1, len(ids) + 1)])
+    scored = _filtered(_frame(spark, "query_id string, " + _HITS, **cols),
+                       [ix], doc_filter)
     return (_rank_within(scored, "query_id").filter(F.col("rank") <= k)
             .select("query_id", "doc_id", "score", "rank"))
 
@@ -1295,16 +1356,35 @@ def _positional_index(spark: SparkSession, index_dir: str) -> _Index:
 
 def _positions(spark: SparkSession, ix: _Index, terms: list[str]
                ) -> DataFrame:
-    """The (term, blob) positional rows of `terms`, through the one-task
-    candidate helper (their df and presence come from the term
-    dictionary: a term's positional rows sum to its posting df)."""
+    """The (term, blob) positional rows of `terms` in ONE partition, read
+    by Spark: term → bucket = pmod(xxhash64(term), B) is computed on the
+    driver, so only matching bucket directories are listed, and parquet
+    row-group statistics skip non-matching terms (their df and presence
+    come from the term dictionary: a term's positional rows sum to its
+    posting df)."""
     import os
 
     from macrobase_spark.index.build import _POS_SCHEMA
+    from macrobase_spark.index.xxh64 import term_bucket
 
-    return _candidates(spark.read.schema(_POS_SCHEMA + ", bucket int")
-                       .parquet(os.path.join(ix.dir, "positions")),
-                       ix.stats, terms)
+    terms = sorted(set(terms))
+    buckets = sorted({term_bucket(t, ix.stats["num_buckets"]) for t in terms})
+    return (spark.read.schema(_POS_SCHEMA + ", bucket int")
+            .parquet(os.path.join(ix.dir, "positions"))
+            .filter(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
+            .select("term", "blob").coalesce(1))
+
+
+def _restrict(spark: SparkSession, rel: DataFrame, ix: _Index,
+              doc_filter: str | None) -> DataFrame:
+    """The phrase paths' restrictions over their Spark relation: the
+    pending deletes (read on the driver) anti-joined out, then the
+    doc_filter semi-join."""
+    dead = deleted_ids(ix.dir)
+    if len(dead):
+        rel = rel.join(_frame(spark, "doc_id long", doc_id=dead), "doc_id",
+                       "anti")
+    return _filtered(rel, [ix], doc_filter)
 
 
 def bm25_phrase_topk(
@@ -1460,7 +1540,7 @@ def bm25_phrase_topk(
     out = (gathered.withColumn("score", phrase_score("parts"))
            .filter(F.col("score").isNotNull())
            .select("doc_id", "score"))
-    out = _restrict(spark, out, [ix], doc_filter)
+    out = _restrict(spark, out, ix, doc_filter)
     if after is not None:
         out = _after_cursor(out, after)
     return (out.orderBy(F.col("score").desc(), F.col("doc_id").asc())
@@ -1556,9 +1636,10 @@ def bm25_facets(
     restrict bm25_topk's rankable population — so the total row equals
     the number of docs bm25_topk could ever return for this query.
 
-    Plan (the 100 TB shape): the match set (`_match_set`: one kernel
-    task over the bucket/row-group-pruned postings of the scored and
-    excluded terms; no positions) → restriction joins → ONE join to
+    Plan: the match set (`_match_set`: one driver-side kernel run over
+    the bucket/row-group-pruned postings of the scored and excluded
+    terms, minus pending deletes; no positions) → the doc_filter
+    semi-join → ONE join to
     the docs metadata projection (facet columns only — column pruning
     reaches the docs parquet scan) → one groupBy over the exploded
     (facet, value) entries. The posting blobs of non-query terms are
@@ -1631,10 +1712,10 @@ def _facets(spark: SparkSession, index_dirs: list[str], query: str,
             f"(have {sorted(have)})")
     [cl] = _resolve(handles[0].tdict, handles[0].stats, [pq], mode,
                     max_expansions=max_expansions)
-    matched = _match_set(spark, handles, cl, mode, None, doc_filter)
-    if matched is None:
-        # nothing can match: the same lone ('__total__', '', 0) row a
-        # zero-match query returns
+    ids = _match_set(handles, cl, mode)
+    if not len(ids):
+        # nothing matches: the lone ('__total__', '', 0) row, with no
+        # Spark job
         mcols = [f"{col}_{fn}" for col, fns in sorted(metrics.items())
                  for fn in fns]
         return spark.createDataFrame(
@@ -1642,7 +1723,7 @@ def _facets(spark: SparkSession, index_dirs: list[str], query: str,
             "facet string, value string, doc_count long"
             + "".join(f", {c} double" for c in mcols))
     all_docs = _union([h.docs.select("doc_id", *fcols) for h in handles])
-    meta = matched.join(all_docs, "doc_id")
+    meta = _matched(spark, handles, ids, doc_filter).join(all_docs, "doc_id")
     return _facet_single_pass(spark, meta, facets, ranges, metrics)
 
 
@@ -1733,13 +1814,15 @@ def bm25_explain(
     float convention), which the identity test pins.
 
     Plan: one bm25_topk pass selects the target docs (skipped when
-    doc_ids is given), then one bucket/row-group-pruned decode of the
-    query terms' postings filtered to the target ids inside the Arrow
-    kernel (the id set is bounded by k — a closure broadcast, never a
-    shuffle). The terms and boosts come from the same resolver as
-    bm25_topk's, so synonym alternates (``synonyms=`` in **topk_kwargs)
+    doc_ids is given), then the query terms' candidate rows (the driver
+    read of `_candidates`) are decoded on the driver and filtered to the
+    target ids; the rows come back as a local DataFrame. The terms and
+    boosts come from the same resolver as bm25_topk's, so synonym
+    alternates (``synonyms=`` in **topk_kwargs)
     get their own rows. Anomaly/sort modifiers affect WHICH docs are
     selected via **topk_kwargs, not the raw contributions shown."""
+    from macrobase_spark.index.build import _decode_partial
+
     query, doc_filter = _split_field_scopes(
         query, topk_kwargs.pop("doc_filter", None))
     ix = _open(spark, index_dir)
@@ -1765,36 +1848,33 @@ def bm25_explain(
     dfs = {t: float(ix.tdict.stats[t].df) for t in terms
            if t in ix.tdict.stats}
     bmap = dict(boosts)
-
-    def explain_fn(batches):
-        from macrobase_spark.index.build import _decode_partial
-
-        for pdf in batches:
-            frames = []
-            for term, blob in zip(pdf["term"], pdf["blob"]):
-                dfv = dfs[term]
-                ids, tfs, dls = _decode_partial(blob)
-                keep = np.flatnonzero(
-                    np.isin(ids, target, assume_unique=True))
-                if len(keep) == 0:
-                    continue
-                tf = tfs[keep].astype(np.float64)
-                dl = dls[keep].astype(np.float64)
-                idf = math.log(1.0 + (n - dfv + 0.5) / (dfv + 0.5))
-                b = bmap.get(term, 1.0)
-                contrib = (idf * (tf * (K1 + 1.0))
-                           / (tf + K1 * (1.0 - B + B * dl / avgdl))) * b
-                frames.append(pd.DataFrame({
-                    "doc_id": ids[keep].astype(np.int64),
-                    "term": term, "tf": tf, "dl": dl,
-                    "df": dfv, "idf": idf, "boost": b,
-                    "contrib": contrib}))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    return (_candidates(ix.postings, stats, terms)
-            .mapInPandas(explain_fn, schema=out_schema)
-            .orderBy("doc_id", "term"))
+    frames = []
+    for tbl in _candidates(ix, terms):
+        cols = tbl.to_pydict()
+        for term, blob in zip(cols["term"], cols["blob"]):
+            dfv = dfs[term]
+            ids, tfs, dls = _decode_partial(blob)
+            # int64 like the target ids: numpy's isin fails on a uint64
+            # array against a negative int64 id
+            ids = ids.astype(np.int64)
+            keep = np.flatnonzero(np.isin(ids, target, assume_unique=True))
+            if len(keep) == 0:
+                continue
+            tf = tfs[keep].astype(np.float64)
+            dl = dls[keep].astype(np.float64)
+            idf = math.log(1.0 + (n - dfv + 0.5) / (dfv + 0.5))
+            b = bmap.get(term, 1.0)
+            contrib = (idf * (tf * (K1 + 1.0))
+                       / (tf + K1 * (1.0 - B + B * dl / avgdl))) * b
+            frames.append(pd.DataFrame({
+                "doc_id": ids[keep],
+                "term": term, "tf": tf, "dl": dl,
+                "df": dfv, "idf": idf, "boost": b,
+                "contrib": contrib}))
+    if not frames:
+        return spark.createDataFrame([], out_schema)
+    return spark.createDataFrame(pd.concat(frames, ignore_index=True)
+                                 .sort_values(["doc_id", "term"]), out_schema)
 
 
 def more_like_this(
@@ -1854,11 +1934,17 @@ def more_like_this(
         return spark.createDataFrame([], out_schema)
     hits = bm25_topk(spark, index_dir, " ".join(terms),
                      k=k + (0 if include_self else 1), **topk_kwargs)
-    if not include_self:
-        hits = (hits.filter(F.col("doc_id") != int(doc_id))
-                .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                .limit(k))
-    return hits
+    if include_self:
+        return hits
+    # drop the seed from the k+1 collected hits on the driver
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    rows = sorted((r.asDict() for r in hits.collect()
+                   if r["doc_id"] != int(doc_id)),
+                  key=lambda r: (-r["score"], r["doc_id"]))[:k]
+    return spark.createDataFrame(pa.Table.from_pylist(
+        rows, schema=to_arrow_schema(hits.schema)), hits.schema)
 
 
 def bm25_topk_sharded(
@@ -1877,13 +1963,14 @@ def bm25_topk_sharded(
 
     Global stats: n_docs and avgdl from the shards' persisted integer
     counts; per-term df summed across the shards' term dictionaries on
-    the driver (no metadata job). Scoring is one kernel task per shard
+    the driver (no metadata job). Scoring is one kernel run per shard
     over its bucket-pruned candidate rows, with the global idfs — a doc
     lives in exactly one shard (caller contract: globally unique
     doc_ids), so its whole ascending-term sum and its exclusions are
-    computed in that shard's task, the union of the shards' (doc_id,
+    computed in that shard's run, the union of the shards' (doc_id,
     score) rows is exact, and the ranking reproduces the monolithic
-    float order (identity pinned in pytest).
+    float order (identity pinned in pytest). Without a doc_filter the
+    top-k is taken on the driver and no Spark job runs.
 
     Supports mode='and'/'or', field scopes, exclusions, doc_filter
     (applied per shard docs table, unioned), stoplists (which must be
@@ -1912,9 +1999,15 @@ def bm25_topk_sharded(
             if t in h.tdict.stats:
                 dfs[t] += h.tdict.stats[t].df
     idfs = {t: _idf(n_docs, d) for t, d in dfs.items()}
-    scored = _union([_scores(h, {"": clauses}, idfs, sum_dl / n_docs,
-                             mode=mode) for h in handles])
-    scored = _restrict(spark, scored, handles, doc_filter)
+    hits = [_scores(h, {"": clauses}, idfs, sum_dl / n_docs,
+                    mode=mode).get("", _NO_HITS) for h in handles]
+    ids, sc = _live(handles, np.concatenate([i for i, _ in hits]),
+                    np.concatenate([s for _, s in hits]))
+    if doc_filter is None:
+        ids, sc = _top(ids, sc, k)
+        return _frame(spark, _HITS, doc_id=ids, score=sc)
+    scored = _filtered(_frame(spark, _HITS, doc_id=ids, score=sc), handles,
+                       doc_filter)
     return scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
 
 
@@ -2040,7 +2133,7 @@ def bm25_phrase_topk_batch(
 
     scored = gathered.mapInPandas(
         verify, schema="query_id string, doc_id long, score double")
-    scored = _restrict(spark, scored, [ix], doc_filter)
+    scored = _restrict(spark, scored, ix, doc_filter)
     return (_rank_within(scored, "query_id").filter(F.col("rank") <= k)
             .select("query_id", "doc_id", "score", "rank"))
 
@@ -2057,13 +2150,18 @@ def bm25_count(
     """Number of documents matching the query under full retrieval
     semantics (mode / min_should_match / exclusions / field scopes /
     doc_filter / tombstones) — a one-row (n_matches long) relation: the
-    count of bm25_match_ids' relation, so it shares the resolver and the
-    match set with bm25_match_ids and bm25_facets (no positions, no
-    shuffle, and unlike bm25_facets no docs-metadata join unless a doc
-    filter requires one). A query no document can match (no indexable
-    term, or min_should_match above the term count) counts 0."""
-    return bm25_match_ids(spark, index_dir, query, mode, min_should_match,
-                          doc_filter, max_expansions).agg(
+    size of bm25_match_ids' match set, so it shares the resolver and the
+    match set with bm25_match_ids and bm25_facets (no positions, and
+    unlike bm25_facets no docs-metadata join unless a doc filter requires
+    one; without one it is counted on the driver). A query no document
+    can match (no indexable term, or min_should_match above the term
+    count) counts 0."""
+    handles, ids, doc_filter = _match_ids(spark, index_dir, query, mode,
+                                          min_should_match, doc_filter,
+                                          max_expansions)
+    if doc_filter is None:
+        return _frame(spark, "n_matches long", n_matches=[len(ids)])
+    return _matched(spark, handles, ids, doc_filter).agg(
         F.count("*").alias("n_matches"))
 
 
@@ -2080,20 +2178,29 @@ def bm25_match_ids(
     downstream pipeline stage ("drop all docs matching these boilerplate
     queries", "re-embed everything mentioning X") rather than a results
     page. Same full retrieval semantics as bm25_count over the same
-    match set (one kernel task, no positions read, no top-k limit,
-    nothing collected to the driver): the result is a lazy (doc_id)
-    relation to join/anti-join against the corpus at 100 TB. For a
-    ranked export use bm25_topk with a large k instead."""
+    match set (one driver-side kernel run, no positions read, no top-k
+    limit): the result is a (doc_id) relation — a local one, under the
+    doc_filter semi-join when there is one — to join/anti-join against
+    the corpus. For a ranked export use bm25_topk with a large k
+    instead."""
+    return _matched(spark, *_match_ids(spark, index_dir, query, mode,
+                                       min_should_match, doc_filter,
+                                       max_expansions))
+
+
+def _match_ids(spark: SparkSession, index_dir: str, query: str, mode: str,
+               min_should_match: int | None, doc_filter: str | None,
+               max_expansions: int
+               ) -> tuple[list[_Index], np.ndarray, str | None]:
+    """bm25_count's and bm25_match_ids' match set: (handles, doc ids, the
+    doc_filter with the query's field scopes folded in)."""
     msm = _check_mode(mode, min_should_match)
     query, doc_filter = _split_field_scopes(query, doc_filter)
     handles = [_open(spark, index_dir)]
-    pq = _parse_query_full(query)
-    [cl] = _resolve(handles[0].tdict, handles[0].stats, [pq], mode, msm,
+    [cl] = _resolve(handles[0].tdict, handles[0].stats,
+                    [_parse_query_full(query)], mode, msm,
                     max_expansions=max_expansions)
-    matched = _match_set(spark, handles, cl, mode, msm, doc_filter)
-    if matched is None:
-        return spark.createDataFrame([], "doc_id long")
-    return matched
+    return handles, _match_set(handles, cl, mode, msm), doc_filter
 
 
 def hybrid_topk(

@@ -677,10 +677,15 @@ def build_index(
     src = df.select(doc_id_col, *meta_cols, text_col)
     # parallelism floor: small inputs (few parquet files / coalesced splits)
     # must still fan out across all cores for the Arrow passes — at 100 TB
-    # the file count dominates and this is a no-op
+    # the file count dominates and this is a no-op. The repartitioned input
+    # is cached so its shuffle runs once, not once per query that reads src
+    # (the feature aggregate, hot-term detection and the postings write).
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    if src.rdd.getNumPartitions() < n_shuffle:
-        src = src.repartition(n_shuffle)
+    floor = src.rdd.getNumPartitions() < n_shuffle
+    if floor:
+        from pyspark import StorageLevel
+
+        src = src.repartition(n_shuffle).persist(StorageLevel.MEMORY_AND_DISK)
     docs_path = os.path.join(out_dir, "docs.parquet")
     # the docs table is committed by a CONCURRENT thread well after
     # stats.json lands, so resume must check the docs write's own commit
@@ -875,6 +880,8 @@ def build_index(
             raise docs_result["error"]
     if num_groups > 1:
         partials.unpersist()
+    if floor:
+        src.unpersist()
     invalidate_index_cache(out_dir)
     elapsed = time.time() - t0
     return {
@@ -1044,6 +1051,17 @@ def tombstone_ids(spark: SparkSession, out_dir: str) -> DataFrame | None:
         return None
     return spark.read.parquet(
         os.path.join(out_dir, _TOMBSTONES)).select("doc_id")
+
+
+def deleted_ids(out_dir: str) -> np.ndarray:
+    """The pending tombstoned doc_ids, read on the driver with pyarrow
+    (empty when none are pending; may contain duplicates)."""
+    if not has_tombstones(out_dir):
+        return np.empty(0, dtype=np.int64)
+    import pyarrow.parquet as pq
+
+    return pq.read_table(os.path.join(out_dir, _TOMBSTONES),
+                         columns=["doc_id"])["doc_id"].to_numpy()
 
 
 def delete_docs(spark: SparkSession, out_dir: str, doc_ids) -> dict:
@@ -1425,6 +1443,24 @@ def restore_compact_backup(out_dir: str) -> bool:
     return True
 
 
+def _overwrite_buckets(merged: DataFrame, root: str, stale: list[int],
+                       purge: bool) -> None:
+    """Write compact_index's merged rows over their stale buckets. Dynamic
+    partition overwrite only replaces buckets PRESENT in the output, so
+    after a purge a bucket whose every term was tombstoned away would
+    survive with stale data: the written buckets are the ones holding a
+    part file the write added (a before/after listing, no Spark job), and
+    the other stale bucket dirs are removed."""
+    before = _part_files(root)
+    merged.write.mode("overwrite").partitionBy("bucket").option(
+        "partitionOverwriteMode", "dynamic").parquet(root)
+    if purge:
+        written = {_file_bucket(f) for f in _part_files(root) - before}
+        for b in set(stale) - written:
+            shutil.rmtree(os.path.join(root, f"bucket={b}"),
+                          ignore_errors=True)
+
+
 def compact_index(spark: SparkSession, out_dir: str) -> dict:
     """Compact stale buckets after incremental updates: merge each term's
     segment rows (base + per-update deltas) back to ONE row and recompute
@@ -1532,25 +1568,7 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
             .repartition("bucket")
             .sortWithinPartitions("bucket", "term")
         )
-        written_buckets = None
-        if purge:
-            # dynamic partition overwrite only replaces buckets PRESENT in
-            # the output — a bucket whose every term was tombstoned away
-            # would survive with stale data. Persist the merge, record the
-            # written buckets, and remove the silently-skipped dirs after.
-            from pyspark import StorageLevel
-
-            merged = merged.persist(StorageLevel.MEMORY_AND_DISK)
-            written_buckets = {r["bucket"] for r in
-                               merged.select("bucket").distinct().collect()}
-        merged.write.mode("overwrite").partitionBy("bucket").option(
-            "partitionOverwriteMode", "dynamic"
-        ).parquet(postings_root)
-        if written_buckets is not None:
-            for b in set(stale) - written_buckets:
-                shutil.rmtree(os.path.join(postings_root, f"bucket={b}"),
-                              ignore_errors=True)
-            merged.unpersist()
+        _overwrite_buckets(merged, postings_root, stale, purge)
         if has_positions:
             # positional segments of the same stale buckets merge back to
             # one doc-sorted blob per term (blob-level fan-in, one reducer
@@ -1566,21 +1584,7 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
                 .repartition("bucket")
                 .sortWithinPartitions("bucket", "term")
             )
-            pos_written = None
-            if purge:
-                from pyspark import StorageLevel
-
-                pos_merged = pos_merged.persist(StorageLevel.MEMORY_AND_DISK)
-                pos_written = {r["bucket"] for r in
-                               pos_merged.select("bucket").distinct().collect()}
-            pos_merged.write.mode("overwrite").partitionBy("bucket").option(
-                "partitionOverwriteMode", "dynamic"
-            ).parquet(positions_root)
-            if pos_written is not None:
-                for b in set(stale) - pos_written:
-                    shutil.rmtree(os.path.join(positions_root, f"bucket={b}"),
-                                  ignore_errors=True)
-                pos_merged.unpersist()
+            _overwrite_buckets(pos_merged, positions_root, stale, purge)
         if purge:
             # docs table rewrite: read old → write new dir → swap (never
             # overwrite the path being read); the backup covers every
@@ -1688,14 +1692,17 @@ def _term_dict(rows, base: TermDict | None = None) -> TermDict:
 
 class _Version:
     """One cached index version: read_index's (postings, docs, stats)
-    handles, opened on the first read, and its TermDict, loaded on the
-    first open_index — or folded in ahead of the first read by the
-    in-process update_index that created the version."""
-    __slots__ = ("handles", "tdict")
+    handles and the postings part files per bucket, both taken on the
+    first read, and its TermDict, loaded on the first open_index — or
+    folded in ahead of the first read by the in-process update_index that
+    created the version. The query path reads candidate rows from `files`
+    only, so a file written after the version opened is never read by it."""
+    __slots__ = ("handles", "tdict", "files")
 
     def __init__(self, tdict: TermDict | None = None):
         self.handles: tuple[DataFrame, DataFrame, dict] | None = None
         self.tdict = tdict
+        self.files: dict[int, list[str]] = {}
 
 
 _INDEX_CACHE: dict[tuple, _Version] = {}
@@ -1747,7 +1754,11 @@ def _index_entry(spark: SparkSession, out_dir: str) -> _Version:
     # cache (and pin old DataFrames) for the life of a query server
     for k in [k for k in _INDEX_CACHE if k[:2] == key[:2] and k != key]:
         del _INDEX_CACHE[k]
+    files: dict[int, list[str]] = {}
+    for f in sorted(_part_files(postings_root)):
+        files.setdefault(_file_bucket(f), []).append(f)
     entry = _INDEX_CACHE.setdefault(key, _Version())
+    entry.files = files
     entry.handles = (postings, docs, stats)
     return entry
 
@@ -1770,11 +1781,18 @@ def open_index(spark: SparkSession, out_dir: str
     or a merge; an in-process update_index folds its delta into the
     previous version's dictionary instead. Every query-time df, WAND bound
     and prefix / fuzzy / regexp expansion is then answered on the driver."""
+    entry = open_version(spark, out_dir)
+    return (*entry.handles, entry.tdict)
+
+
+def open_version(spark: SparkSession, out_dir: str) -> _Version:
+    """The cache entry behind open_index: handles, dictionary and part
+    files of one index version."""
     entry = _index_entry(spark, out_dir)
     if entry.tdict is None:
         entry.tdict = _term_dict(
             entry.handles[0].select("term", "df", "max_impact").toArrow())
-    return (*entry.handles, entry.tdict)
+    return entry
 
 
 def invalidate_index_cache(out_dir: str | None = None) -> None:

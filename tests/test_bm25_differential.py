@@ -4,7 +4,10 @@ docs, an index-time stoplist, hot terms split across salted rows) and
 generated queries (exclusions, boosts, stoplist-only token sets,
 mode='and', min_should_match), bm25_topk and bm25_topk_batch over a
 segmented index (build, then update_index) and bm25_topk_sharded over two
-shards must equal bm25_oracle bitwise — doc ids, order and float scores.
+shards must equal bm25_oracle bitwise — doc ids, order and float scores —
+and bm25_count its match count; after a delete_docs on the segmented
+index, topk, batch and count must equal bm25_oracle over the surviving
+docs (corpus stats still count the deleted ones until a compaction).
 """
 
 from collections import defaultdict
@@ -12,9 +15,9 @@ from collections import defaultdict
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from macrobase_spark.index.bm25 import (bm25_oracle, bm25_topk,
+from macrobase_spark.index.bm25 import (bm25_count, bm25_oracle, bm25_topk,
                                         bm25_topk_batch, bm25_topk_sharded)
-from macrobase_spark.index.build import build_index, update_index
+from macrobase_spark.index.build import build_index, delete_docs, update_index
 
 STOP = ["the", "and"]
 # 'İ' lowercases to 'i' + U+0307, which splits the token: "İnsert" is the
@@ -68,12 +71,25 @@ def test_kernel_equals_oracle_bitwise(spark, tmp_path_factory, texts,
                                            mode=mode)) == bm25_oracle(
                 docs, q, k=k, mode=mode, stopwords=set(STOP)), q
     update_index(frame(docs[half:]), seg)  # seg: base + one segment
+    _check(spark, seg, docs, queries, k)
+    deleted = {d for d, _ in docs[::3]}
+    delete_docs(spark, seg, sorted(deleted))
+    _check(spark, seg, docs, queries, k, {d for d, _ in docs} - deleted)
+
+
+def _check(spark, seg, docs, queries, k, keep_ids=None):
+    """topk, bm25_count and batch (one per option group) on seg against
+    bm25_oracle over the docs in keep_ids (all when None)."""
     groups = defaultdict(dict)
     for i, (q, (mode, msm)) in enumerate(queries):
-        want = bm25_oracle(docs, q, k=k, mode=mode, min_should_match=msm,
-                           stopwords=set(STOP))
+        kw = dict(mode=mode, min_should_match=msm, keep_ids=keep_ids,
+                  stopwords=set(STOP))
+        want = bm25_oracle(docs, q, k=k, **kw)
         assert _rows(bm25_topk(spark, seg, q, k=k, mode=mode,
                                min_should_match=msm)) == want, q
+        [(n,)] = bm25_count(spark, seg, q, mode=mode,
+                            min_should_match=msm).collect()
+        assert n == len(bm25_oracle(docs, q, k=len(docs), **kw)), q
         groups[mode, msm][str(i)] = (q, want)
     for (mode, msm), qs in groups.items():
         got = defaultdict(list)

@@ -164,9 +164,11 @@ def test_dedup_exact_never_shuffles_text(spark, sf):
             assert "text" not in chunk, chunk.split("\n")[0]
 
 
-def test_bm25_scan_prunes_buckets(spark, tmp_path):
-    """Only the query terms' bucket directories appear in the postings scan
-    (driver-side XXH64 partition pruning)."""
+def test_bm25_scan_prunes_buckets(spark, tmp_path, monkeypatch):
+    """Only the query terms' bucket directories are read for candidate
+    rows (driver-side XXH64 partition pruning)."""
+    import pyarrow.parquet as pq
+
     from macrobase_spark.fixtures.transcripts import synth_transcripts, with_doc_id
     from macrobase_spark.index.build import build_index
     from macrobase_spark.index.bm25 import bm25_topk
@@ -175,11 +177,17 @@ def test_bm25_scan_prunes_buckets(spark, tmp_path):
     df = with_doc_id(synth_transcripts(spark, n_convs=20, seed=42))
     out = str(tmp_path / "plan_idx")
     build_index(df, out, num_buckets=8, hot_df_threshold=10 ** 9)
-    res = bm25_topk(spark, out, "rare7", k=5)
-    p = _plan(res, mode="formatted")
+    opened = []
+    parquet_file = pq.ParquetFile
+
+    def recorded(path, *args, **kwargs):
+        opened.append(path)
+        return parquet_file(path, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "ParquetFile", recorded)
+    assert bm25_topk(spark, out, "rare7", k=5).collect()
     b = term_bucket("rare7", 8)
-    assert f"bucket IN ({b})" in p or f"bucket#" in p  # partition filter present
-    assert "PartitionFilters" in p
+    assert opened and all(f"/bucket={b}/" in f for f in opened), opened
 
 
 def test_percentile_col_no_single_partition_window(spark, sf):
@@ -270,21 +278,25 @@ def test_bm25_prefix_expansion_scan_reads_term_only(spark, tmp_path):
 
 
 def test_bm25_no_tombstone_join_when_none_pending(spark, tmp_path):
-    """An index without tombstones plans NO anti-join — the delete path
-    costs nothing until a delete happens; with pending tombstones the
-    anti-join appears."""
+    """Pending deletes are dropped on the driver: no query plans an
+    anti-join, an index without tombstones reads none, and a tombstoned
+    doc vanishes from the next result."""
     from macrobase_spark.fixtures.transcripts import synth_transcripts, with_doc_id
-    from macrobase_spark.index.build import build_index, delete_docs
+    from macrobase_spark.index.build import (build_index, delete_docs,
+                                             deleted_ids)
     from macrobase_spark.index.bm25 import bm25_topk
 
     df = with_doc_id(synth_transcripts(spark, n_convs=20, seed=42))
     out = str(tmp_path / "plan_idx_t")
     build_index(df, out, num_buckets=4, hot_df_threshold=10 ** 9)
-    p0 = _plan(bm25_topk(spark, out, "the call", k=5))
-    assert "LeftAnti" not in p0
-    delete_docs(spark, out, [0])
-    p1 = _plan(bm25_topk(spark, out, "the call", k=5))
-    assert "LeftAnti" in p1
+    res = bm25_topk(spark, out, "the call", k=5)
+    assert "LeftAnti" not in _plan(res)
+    assert len(deleted_ids(out)) == 0
+    top = res.collect()[0]["doc_id"]
+    delete_docs(spark, out, [top])
+    res = bm25_topk(spark, out, "the call", k=5)
+    assert "LeftAnti" not in _plan(res)
+    assert top not in [r["doc_id"] for r in res.collect()]
 
 
 def test_bm25_facets_read_no_blobs_and_prune_docs_columns(spark, tmp_path):

@@ -265,6 +265,8 @@ def test_explain_empty_cases(spark, corpus):
     _, out, _, _ = corpus
     assert bm25_explain(spark, out, "zzzznotaword", k=3).count() == 0
     assert bm25_explain(spark, out, "", k=3).count() == 0
+    # an id no posting holds, negative included, explains nothing
+    assert bm25_explain(spark, out, "the", doc_ids=[-5]).count() == 0
 
 
 # ------------------------------------------------------- more_like_this
@@ -1041,7 +1043,9 @@ def test_bm25_jobs_per_call(spark, corpus, seg_index, shards):
     """Upper bounds on the Spark jobs each BM25 entry point runs per
     call, one bm25_topk per serving query class: a plan that sprouts a
     job fails here. Term metadata (df, max_impact, expansions) comes from
-    the memoized term dictionary, so no call runs a job for it."""
+    the memoized term dictionary, and scoring runs on the driver, so only
+    the docs-metadata joins (doc_filter, facets), the phrase layer and
+    more_like_this's seed lookup run jobs."""
     from macrobase_spark.index.bm25 import (bm25_count, bm25_match_ids,
                                             bm25_phrase_topk,
                                             bm25_topk_sharded,
@@ -1052,43 +1056,43 @@ def test_bm25_jobs_per_call(spark, corpus, seg_index, shards):
     df, out, docs, _ = corpus
     ids = [d for d, _ in docs[:3]]
     calls = {
-        "topk single": (1, lambda: bm25_topk(spark, out, "tok0042")),
-        "topk single hot": (1, lambda: bm25_topk(spark, out, "the")),
-        "topk multi": (1, lambda: bm25_topk(spark, out, "call tool")),
-        "topk msm": (1, lambda: bm25_topk(
+        "topk single": (0, lambda: bm25_topk(spark, out, "tok0042")),
+        "topk single hot": (0, lambda: bm25_topk(spark, out, "the")),
+        "topk multi": (0, lambda: bm25_topk(spark, out, "call tool")),
+        "topk msm": (0, lambda: bm25_topk(
             spark, out, "tok0003 tok0042 tok0777", min_should_match=2)),
-        "topk prefix": (1, lambda: bm25_topk(spark, out, "tok05*")),
-        "topk fuzzy": (1, lambda: bm25_topk(spark, out, "tok0042~1")),
-        "topk regexp": (1, lambda: bm25_topk(spark, out, "/tok00(4|7)2/")),
-        "topk wand": (2, lambda: bm25_topk(spark, out, "the call",
+        "topk prefix": (0, lambda: bm25_topk(spark, out, "tok05*")),
+        "topk fuzzy": (0, lambda: bm25_topk(spark, out, "tok0042~1")),
+        "topk regexp": (0, lambda: bm25_topk(spark, out, "/tok00(4|7)2/")),
+        "topk wand": (0, lambda: bm25_topk(spark, out, "the call",
                                            wand=True)),
-        "seg single": (1, lambda: bm25_topk(spark, seg_index, "tok0042")),
-        "seg multi": (1, lambda: bm25_topk(spark, seg_index, "call tool")),
-        "seg batch": (1, lambda: bm25_topk_batch(
+        "seg single": (0, lambda: bm25_topk(spark, seg_index, "tok0042")),
+        "seg multi": (0, lambda: bm25_topk(spark, seg_index, "call tool")),
+        "seg batch": (0, lambda: bm25_topk_batch(
             spark, seg_index, ["the", "tok0042", "call tool",
                                "tok0005 tok0100"])),
-        "seg explain": (1, lambda: bm25_explain(
+        "seg explain": (0, lambda: bm25_explain(
             spark, seg_index, "tok0042 call", doc_ids=ids)),
-        "sharded": (1, lambda: bm25_topk_sharded(
+        "sharded": (0, lambda: bm25_topk_sharded(
             spark, shards[2], "tok0042 the")),
         "phrase": (2, lambda: bm25_phrase_topk(spark, seg_index,
                                                "tok0001 tok0000")),
-        "more_like_this": (2, lambda: more_like_this(spark, out, df,
+        "more_like_this": (1, lambda: more_like_this(spark, out, df,
                                                      ids[1])),
-        "topk exclude": (1, lambda: bm25_topk(spark, out, "tok0007 -the")),
+        "topk exclude": (0, lambda: bm25_topk(spark, out, "tok0007 -the")),
         "topk filter": (2, lambda: bm25_topk(
             spark, out, "tok0011 tok0200", doc_filter="role = 'assistant'")),
-        "batch": (1, lambda: bm25_topk_batch(
+        "batch": (0, lambda: bm25_topk_batch(
             spark, out, ["the", "tok0042", "call tool", "tok0005 tok0100",
                          "tok0003 tok0042 tok0777"])),
         "facets": (5, lambda: bm25_facets(spark, out, "tok0042 the",
                                           ["role"])),
-        "count": (1, lambda: bm25_count(spark, out, "tok0042 -tok0007")),
-        "match_ids": (1, lambda: bm25_match_ids(spark, out,
+        "count": (0, lambda: bm25_count(spark, out, "tok0042 -tok0007")),
+        "match_ids": (0, lambda: bm25_match_ids(spark, out,
                                                 "tok0042 -tok0007")),
-        "explain doc_ids": (1, lambda: bm25_explain(
+        "explain doc_ids": (0, lambda: bm25_explain(
             spark, out, "tok0042 call", doc_ids=ids)),
-        "explain k": (2, lambda: bm25_explain(spark, out, "tok0042 call",
+        "explain k": (0, lambda: bm25_explain(spark, out, "tok0042 call",
                                               k=3)),
     }
     got = {name: _jobs_per_call(spark, name, fn)
@@ -1115,34 +1119,63 @@ def _sql_plans(spark, after: int = -1) -> dict[int, str]:
             if e.executionId() > after}
 
 
-def test_build_index_jobs(spark, corpus, tmp_path):
-    """Upper bound on the Spark jobs of one warm build_index (the measured
-    count): its main thread's job group plus the jobs of its helper
-    threads (hot-term detection and the docs write), which carry no job
-    group. The encode path is one linear plan: its postings write holds no
-    grouped-pandas stage and reads no cached relation (the corpus is read
-    from parquet, so no cache feeds the build either)."""
-    corpus[0].write.parquet(str(tmp_path / "corpus"))
-    df = spark.read.parquet(str(tmp_path / "corpus"))
+def _build_jobs(spark, df, root, **kw):
+    """One warm build_index of df (a first build warms it up): its Spark
+    jobs — its main thread's job group plus the jobs of its helper threads
+    (hot-term detection and the docs write), which carry no job group —,
+    how many stages of them ran one task per input partition (the stages
+    that read the input), and the physical plan of its postings write."""
     sc = spark.sparkContext
-    kw = dict(num_buckets=4, hot_df_threshold=120, hot_sample_frac=0.5)
-    build_index(df, str(tmp_path / "warm"), **kw)
+    st = sc.statusTracker()
+    build_index(df, str(root / "warm"), **kw)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    seen = set(sc.statusTracker().getJobIdsForGroup(None))
+    seen = set(st.getJobIdsForGroup(None))
     last = max(_sql_plans(spark), default=-1)
-    out = str(tmp_path / "idx")
-    n = _jobs(spark, "build", lambda: build_index(df, out, **kw))
+    out = str(root / "idx")
+    group = f"build {root.name}"
+    sc.setJobGroup(group, group)
+    try:
+        build_index(df, out, **kw)
+    finally:
+        sc.setJobGroup("", "")
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    n += len(set(sc.statusTracker().getJobIdsForGroup(None)) - seen)
-    assert n <= 12, n
+    jobs = (set(st.getJobIdsForGroup(group))
+            | set(st.getJobIdsForGroup(None)) - seen)
+    stages = [st.getStageInfo(s) for j in jobs
+              for s in st.getJobInfo(j).stageIds]
+    reads = {s.stageId for s in stages if s and s.numCompletedTasks
+             and s.numTasks == df.rdd.getNumPartitions()}
     writes = [p for p in _sql_plans(spark, last).values()
               if "InsertIntoHadoopFsRelationCommand" in p
               and f"{out}/postings" in p]
     assert len(writes) == 1
-    assert "MapInArrow" in writes[0]
-    for op in ("FlatMapGroupsInPandas", "InMemoryRelation",
-               "InMemoryTableScan", "Union"):
-        assert op not in writes[0], op
+    return len(jobs), len(reads), writes[0]
+
+
+def test_build_index_jobs(spark, corpus, tmp_path):
+    """Upper bounds on the Spark jobs of one warm build_index (the measured
+    counts), over the 60-conversation corpus read from parquet and as the
+    cached DataFrame itself. Both have fewer partitions than the session's
+    shuffle partitions, so the build's parallelism floor repartitions the
+    input: once, cached for its three queries (the feature aggregate,
+    hot-term detection and the postings write), so one stage reads the
+    input. The encode path is one linear plan: its postings write holds no
+    grouped-pandas stage or union, and the only cached relations it reads
+    hold input rows (the text column), never a tokenized or encoded one."""
+    kw = dict(num_buckets=4, hot_df_threshold=120, hot_sample_frac=0.5)
+    corpus[0].write.parquet(str(tmp_path / "corpus"))
+    parquet = spark.read.parquet(str(tmp_path / "corpus"))
+    for name, df, caches in [("parquet", parquet, 1), ("cached", corpus[0], 2)]:
+        n, reads, write = _build_jobs(spark, df, tmp_path / name, **kw)
+        assert n <= 12 and reads == 1, (name, n, reads)
+        assert "MapInArrow" in write
+        for op in ("FlatMapGroupsInPandas", "Union"):
+            assert op not in write, (name, op)
+        lines = write.splitlines()
+        cached = [lines[i + 1] for i, line in enumerate(lines)
+                  if re.match(r"\(\d+\) InMemoryRelation", line)]
+        assert len(cached) == caches, (name, cached)
+        assert all("text#" in c for c in cached), (name, cached)
 
 
 def _unsorted_part_files(index_dir: str) -> list[str]:
@@ -1198,43 +1231,59 @@ def _python_ops(rel):
             if re.match(r"\w*(Python|InPandas|InArrow)\b", op)]
 
 
-def test_one_python_task_per_index_handle(spark, corpus, seg_index, shards):
-    """Every scoring and membership entry point runs exactly ONE
-    Python-UDF operator per index handle, directly over a one-partition
-    Coalesce: the scored and excluded terms' rows meet in one kernel task,
-    with no second ids stage, contribution shuffle or exclusion join."""
-    from macrobase_spark.index.bm25 import (bm25_count, bm25_facets_sharded,
-                                            bm25_match_ids,
-                                            bm25_topk_sharded)
+def test_one_kernel_run_per_index_handle(spark, corpus, seg_index, shards,
+                                        monkeypatch):
+    """Every scoring and membership entry point scores in-process: its
+    plan holds no Python-UDF operator, and `_score_kernel` runs exactly
+    once per index handle — the scored and excluded terms' rows meet in
+    one run, with no second ids pass or exclusion join. bm25_explain
+    with doc_ids decodes its per-term rows without the kernel; with k its
+    target docs come from one bm25_topk."""
+    from macrobase_spark.index import bm25
 
+    runs = []
+    kernel = bm25._score_kernel
+
+    def counted(*args, **kwargs):
+        runs.append(1)
+        return kernel(*args, **kwargs)
+
+    monkeypatch.setattr(bm25, "_score_kernel", counted)
     _, out, docs, _ = corpus
     two = shards[2]
     calls = {
-        "topk single": (1, bm25_topk(spark, out, "tok0042")),
-        "topk multi": (1, bm25_topk(spark, out, "call tool^2")),
-        "topk msm": (1, bm25_topk(spark, out, "tok0003 tok0042 tok0777",
-                                  min_should_match=2)),
-        "topk exclude": (1, bm25_topk(spark, out, "tok0007 -the -tok00*")),
-        "topk filter": (1, bm25_topk(spark, out, "tok0011 tok0200",
-                                     doc_filter="role = 'assistant'")),
-        "topk seg and": (1, bm25_topk(spark, seg_index, "the call",
-                                      mode="and")),
-        "batch": (1, bm25_topk_batch(spark, out, ["the", "call tool",
-                                                  "tok0007 -the"])),
-        "sharded": (2, bm25_topk_sharded(spark, two, "tok0042 the -call")),
-        "count": (1, bm25_count(spark, out, "tok0042 -tok0007")),
-        "match_ids": (1, bm25_match_ids(spark, out, "the call", mode="and")),
-        "facets": (1, bm25_facets(spark, out, "tok0042 the", ["role"])),
-        "facets_sharded": (2, bm25_facets_sharded(spark, two, "tok0042 -the",
-                                                  ["role"])),
-        "explain": (1, bm25_explain(spark, out, "tok0042 call",
-                                    doc_ids=[d for d, _ in docs[:3]])),
+        "topk single": (1, lambda: bm25.bm25_topk(spark, out, "tok0042")),
+        "topk multi": (1, lambda: bm25.bm25_topk(spark, out, "call tool^2")),
+        "topk msm": (1, lambda: bm25.bm25_topk(
+            spark, out, "tok0003 tok0042 tok0777", min_should_match=2)),
+        "topk exclude": (1, lambda: bm25.bm25_topk(
+            spark, out, "tok0007 -the -tok00*")),
+        "topk filter": (1, lambda: bm25.bm25_topk(
+            spark, out, "tok0011 tok0200", doc_filter="role = 'assistant'")),
+        "topk seg and": (1, lambda: bm25.bm25_topk(
+            spark, seg_index, "the call", mode="and")),
+        "batch": (1, lambda: bm25.bm25_topk_batch(
+            spark, out, ["the", "call tool", "tok0007 -the"])),
+        "sharded": (2, lambda: bm25.bm25_topk_sharded(
+            spark, two, "tok0042 the -call")),
+        "count": (1, lambda: bm25.bm25_count(spark, out, "tok0042 -tok0007")),
+        "match_ids": (1, lambda: bm25.bm25_match_ids(spark, out, "the call",
+                                                     mode="and")),
+        "facets": (1, lambda: bm25.bm25_facets(spark, out, "tok0042 the",
+                                               ["role"])),
+        "facets_sharded": (2, lambda: bm25.bm25_facets_sharded(
+            spark, two, "tok0042 -the", ["role"])),
+        "explain doc_ids": (0, lambda: bm25.bm25_explain(
+            spark, out, "tok0042 call", doc_ids=[d for d, _ in docs[:3]])),
+        "explain k": (1, lambda: bm25.bm25_explain(spark, out, "tok0042 call",
+                                                   k=3)),
     }
     bad = {}
-    for name, (handles, rel) in calls.items():
-        ops = _python_ops(rel)
-        if len(ops) != handles or any(c != "Coalesce 1" for _, c in ops):
-            bad[name] = ops
+    for name, (handles, fn) in calls.items():
+        runs.clear()
+        ops = _python_ops(fn())
+        if ops or len(runs) != handles:
+            bad[name] = (len(runs), ops)
     assert not bad, bad
 
 
@@ -1268,3 +1317,44 @@ def test_update_folds_the_served_term_dictionary(spark, corpus, tmp_path):
            for r in bm25_topk(spark, out, q, k=8).collect()]
     assert got == bm25_oracle(docs, q, k=8,
                               keep_ids={d for d, _ in docs} - {victim})
+
+
+def test_driver_read_follows_the_index_version(spark, corpus, tmp_path):
+    """Queries read candidate rows from the part files their index version
+    opened with: a part file appended out of band, with stats.json
+    unchanged, is not read by the open version (a new version reads it),
+    and the files of an in-process update_index are read by the next
+    query."""
+    import glob
+    import os
+
+    from macrobase_spark.index.build import (invalidate_index_cache,
+                                             update_index)
+    from macrobase_spark.index.xxh64 import term_bucket
+
+    df, _, docs, _ = corpus
+    out = str(tmp_path / "ver")
+    base = F.col("conv_id") < "conv00000048"
+    build_index(df.filter(base), out, num_buckets=4, hot_df_threshold=120,
+                hot_sample_frac=0.5)
+    keep = {r["doc_id"] for r in df.filter(base).select("doc_id").collect()}
+    q = "tok0042 the"
+
+    def topk():
+        return [(r["doc_id"], r["score"])
+                for r in bm25_topk(spark, out, q, k=8).collect()]
+
+    want = bm25_oracle([(d, t) for d, t in docs if d in keep], q, k=8)
+    assert topk() == want
+    [part] = glob.glob(f"{out}/postings/bucket={term_bucket('tok0042', 4)}"
+                       "/*.parquet")
+    oob = os.path.join(os.path.dirname(part), "part-99999-oob.parquet")
+    shutil.copy(part, oob)
+    assert topk() == want
+    invalidate_index_cache(out)
+    assert topk() != want  # a new version reads the duplicated rows
+    os.remove(oob)
+    invalidate_index_cache(out)
+    assert topk() == want
+    update_index(df.filter(~base), out)
+    assert topk() == bm25_oracle(docs, q, k=8)
