@@ -8,8 +8,8 @@ Layout
 - ``operators/``  classify / diff (explanation) / transforms — the MacroBase
   pipeline (ingest → classify → summarize → explanation relation).
 - ``functions/``  scalar/quality-metric column expressions and text functions.
-- ``index/``      inverted-index build (postings, delta+varint, salted
-  two-phase merge, checkpoints) and BM25 block-max top-k query.
+- ``index/``      inverted-index build (postings, delta+varint, one encode
+  per term, checkpoints) and BM25 block-max top-k query.
 - ``pipelines/``  training-data-pipeline ops: dedup (exact/minhash/simhash),
   similarity search (ANN), multimodal plumbing.
 - ``fixtures/``   deterministic synthetic data generators (transcripts, the

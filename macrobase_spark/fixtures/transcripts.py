@@ -14,7 +14,7 @@ Planted structure (mirrors the reference's seeded-anomaly test style,
 /root/reference/lib/src/test/java/.../StreamingSummarizationTest.java:16-90):
 - Zipfian token vocabulary (``tok0000``..) → realistic term-frequency skew.
 - Hot stopword-like terms ("the", "call", "tool", "run") in nearly every
-  turn → exercises the salted hot-term merge path.
+  turn → near-corpus-length posting lists (the build's skew case).
 - One rare discriminative term per conversation (``rare<serial>``) → exact
   top-k targets for BM25 rank-identity tests.
 - Degenerate turns (single token repeated many times) planted with

@@ -5,40 +5,33 @@ Pipeline (all lazy DataFrame stages; Python only inside Arrow batches):
   transcripts (conv_id, turn_idx, role, text, tool, ts)
     → fused Arrow pass: terms+tfs+doc_len+anomaly   (tokenize.py)
     → docs table + global stats (N, avgdl)
-    → hot-term detection (sampled df counts → broadcast set)
     → MAP-SIDE COMBINE (tokenize.partial_postings — the ONE tokenize →
-      postings relation): one row per (term, salt) per Arrow batch,
-      doc-sorted ids/tfs/dls packed as list columns; salt = doc_id % S
-      for hot terms else 0. The (term, salt) shuffle ships ~vocabulary-
-      count packed rows instead of one row per posting
-    → PHASE 1 (_merge_partial_runs — the ONE encode kernel): shuffle+sort
-        on (term, salt); mapInArrow merges each run's partials (one
-        lexsort restores global doc order) → posting blob (delta+varint);
-        cold terms finalize here
-    → PHASE 2 (_merge_hot_partials), in the write stage: repartition on
-        bucket (a term's rows share one bucket, hence one partition);
-        final rows pass through, and once the partition is drained each
-        hot term's salted partials merge (_merge_postings — the ONE merge,
-        shared with compact_index) → final blob + df/cf stats + block-max
-        impact metadata (BM25 upper bounds)
-    → write parquet sorted by (bucket, term) (term order within each file
-      for row-group pruning of term-lookup queries), partitioned by bucket
-      for resumability.
+      postings relation): one row per term per Arrow batch, doc-sorted
+      ids/tfs/dls packed as list columns. The term shuffle ships
+      ~vocabulary-count packed rows instead of one row per posting
+    → ENCODE (_merge_partial_runs — the ONE encode kernel): shuffle+sort
+        on term; mapInArrow merges each term's partials (one lexsort
+        restores global doc order) → the term's final posting blob
+        (delta+varint) + df/cf stats + block-max impact metadata (BM25
+        upper bounds). Every term is encoded exactly once (fan_in 1)
+    → repartition on bucket and write parquet sorted by (bucket, term)
+      (term order within each file for row-group pruning of term-lookup
+      queries), partitioned by bucket for resumability.
     → manifest: per-bucket metrics read on the driver (pyarrow) from the
       part files the write committed — no Spark read-back job.
 
 One linear plan (_encode): nothing between tokenize and write is cached,
 read twice, unioned or grouped in pandas.
 
-Skew story: a hot term ("the" — in ~90% of turns) would send its entire
-posting list to ONE reducer in a naive groupBy(term). Salting splits it into
-S shards built in parallel; phase 2 merges S pre-compressed blobs (decode +
-merge-sort + re-encode of numpy arrays — cheap relative to shuffle) on the
-bucket's write task. Cold terms take salt=0 and pass through phase 2
-untouched. This mirrors the two-phase parallel aggregation the reference
-uses for itemset counting (per-thread FastFixedHashTable then merge,
-lib/.../aplinear/APrioriLinear.java:113-338) — re-expressed as Spark
-shuffle stages.
+Skew story: a hot term ("the", in a large share of turns) lands on ONE
+encode task. That task receives the term's packed partial rows (one per
+upstream Arrow batch, not one per posting) and encodes the whole list in
+one vectorized pass: O(df) numpy work. Salting the term over S tasks
+((term, salt) keys) would not take that work off one task: the S blobs
+would still have to be decoded, merge-sorted and re-encoded into one
+doc-sorted list on one task, and the salting would add a sampled hot-term
+pre-pass job, a second Python stage and a second encode of every hot
+term.
 
 Resumability: terms are bucketed by hash into `num_buckets`; buckets are
 processed in `num_groups` independent jobs, each committing its buckets'
@@ -47,11 +40,9 @@ bytes, merge fan-in) per bucket. A restarted build skips buckets already in
 the manifest. Granularity = num_groups re-scans of the input (configurable;
 1 = single pass, no mid-build resume).
 
-The positional layer (partial_positional_postings → _merge_partial_pos_runs
-→ _merge_positions) and update_index's delta segments (no hot run, so no
-phase 2) run the same plan and kernels;
-hot-term detection and suggest_stopwords count document frequency over the
-same packed relation.
+The positional layer (partial_positional_postings → _merge_partial_pos_runs)
+and update_index's delta segments run the same plan; hot-term detection and
+suggest_stopwords count document frequency over the same packed relation.
 """
 
 from __future__ import annotations
@@ -112,13 +103,10 @@ _POSTINGS_SCHEMA = (
     "term string, df long, cf long, fan_in int, max_impact double, "
     "block_max array<double>, blob_len long, blob binary"
 )
-# phase-1 kernels emit a layer's schema plus `final`: final rows are
-# complete posting lists (cold terms, one shard); non-final rows are salted
-# partials awaiting the phase-2 merge (_encode).
 
 # positional layer (opt-in, build_index(positions=True)): a SEPARATE
-# self-contained artifact under <out_dir>/positions — same (term, salt)
-# salted two-phase shuffle, but each blob carries its own doc ids
+# self-contained artifact under <out_dir>/positions — same term-keyed
+# encode plan, but each blob carries its own doc ids
 # (codec.encode_positional), so the layer never needs byte-level alignment
 # with the main posting blobs and the main build path stays untouched.
 _POS_SCHEMA = "term string, df long, blob_len long, blob binary"
@@ -136,26 +124,25 @@ def _block_max(impact: np.ndarray) -> list[float]:
 
 
 def _run_starts_arrow(tbl) -> np.ndarray:
-    """Run boundaries on (term, salt) over a single-chunk Arrow table —
+    """Run boundaries on term over a single-chunk Arrow table —
     adjacent-element comparison in pyarrow C++ (no string boxing)."""
     import pyarrow.compute as pc
 
     terms = tbl.column("term").chunk(0)
-    salts = tbl.column("salt").chunk(0).to_numpy(zero_copy_only=False)
     n = len(terms)
     if n <= 1:
         return np.zeros(1, dtype=np.int64)
-    t_neq = pc.not_equal(terms.slice(1), terms.slice(0, n - 1)).to_numpy(
-        zero_copy_only=False)
-    change = np.flatnonzero(t_neq | (salts[1:] != salts[:-1])) + 1
+    change = np.flatnonzero(pc.not_equal(
+        terms.slice(1), terms.slice(0, n - 1)).to_numpy(
+        zero_copy_only=False)) + 1
     return np.concatenate(([0], change)).astype(np.int64)
 
 
 def _split_runs(batches, encode_slice):
-    """Batch-carry loop shared by the phase-1 kernels: over Arrow batches
-    pre-sorted by (term, salt), yield encode_slice(tbl, starts, ends) for
-    every COMPLETE (term, salt) run. Runs never span partitions (the
-    shuffle key is (term, salt)); the last run of a batch may continue in
+    """Batch-carry loop shared by the encode kernels: over Arrow batches
+    pre-sorted by term, yield encode_slice(tbl, starts, ends) for every
+    COMPLETE term run. Runs never span partitions (the shuffle key is
+    term); the last run of a batch may continue in
     the next one, so it is carried and encoded once its end is seen."""
     import pyarrow as pa
 
@@ -182,10 +169,10 @@ def _split_runs(batches, encode_slice):
 
 def _encode_runs_flat(run_terms, ids: np.ndarray, tfs: np.ndarray,
                       dls: np.ndarray, starts: np.ndarray, ends: np.ndarray,
-                      hot_terms: set[str], avgdl: float):
+                      avgdl: float):
     """Vectorized encode core: flat doc-sorted posting arrays +
-    [starts, ends) run boundaries → one Arrow batch of _POSTINGS_SCHEMA
-    plus `final`. Whole-array varint streams (codec.encode_run_batch),
+    [starts, ends) run boundaries → one Arrow batch of _POSTINGS_SCHEMA,
+    one final row per run. Whole-array varint streams (codec.encode_run_batch),
     reduceat per-run and per-block maxima, Arrow-native output assembly —
     no Python loop over runs. `ids/tfs/dls` must be sliced to exactly
     ends[-1] values and ascending in doc_id within each run."""
@@ -198,37 +185,23 @@ def _encode_runs_flat(run_terms, ids: np.ndarray, tfs: np.ndarray,
     csum = np.concatenate(([0], np.cumsum(tfs.astype(np.int64))))
     cfs = csum[ends] - csum[starts]
     impact_all = _impact(tfs, dls, avgdl)
-
-    if hot_terms:
-        import pyarrow.compute as pc
-
-        final = pc.invert(pc.is_in(
-            run_terms,
-            value_set=pa.array(sorted(hot_terms), type=pa.string()))
-        ).to_numpy(zero_copy_only=False)
-    else:  # empty set: every run finalizes here
-        final = np.ones(len(starts), dtype=bool)
-
     # per-run max impact: every run start is a reduceat boundary, so each
     # segment is exactly one run
-    per_run_max = np.maximum.reduceat(impact_all, starts)
-    max_impact = np.where(final, per_run_max, 0.0)
+    max_impact = np.maximum.reduceat(impact_all, starts)
 
-    # block maxima for ALL runs in one reduceat (block boundaries inside
+    # block maxima for all runs in one reduceat (block boundaries inside
     # each run every BLOCK_SIZE rows; run starts are boundaries too, so no
-    # segment crosses a run); non-final runs contribute 0-length lists
+    # segment crosses a run)
     nb = ((dfs + BLOCK_SIZE - 1) // BLOCK_SIZE).astype(np.int64)
     run_of_block = np.repeat(np.arange(len(starts)), nb)
     first_block = np.concatenate(([0], np.cumsum(nb)))[:-1]
     block_in_run = (np.arange(int(nb.sum()), dtype=np.int64)
                     - first_block[run_of_block])
     bnds = starts[run_of_block] + BLOCK_SIZE * block_in_run
-    bm_flat = np.maximum.reduceat(impact_all, bnds)
-    lengths = np.where(final, nb, 0)
-    offsets = np.concatenate(([0], np.cumsum(lengths))).astype(np.int32)
+    offsets = np.concatenate(([0], np.cumsum(nb))).astype(np.int32)
     block_max = pa.ListArray.from_arrays(
         pa.array(offsets, type=pa.int32()),
-        pa.array(bm_flat[final[run_of_block]], type=pa.float64()))
+        pa.array(np.maximum.reduceat(impact_all, bnds), type=pa.float64()))
 
     return pa.RecordBatch.from_arrays(
         [run_terms,
@@ -238,24 +211,22 @@ def _encode_runs_flat(run_terms, ids: np.ndarray, tfs: np.ndarray,
          pa.array(max_impact, type=pa.float64()),
          block_max,
          pa.array([len(b) for b in blobs], type=pa.int64()),
-         pa.array(blobs, type=pa.binary()),
-         pa.array(final)],
+         pa.array(blobs, type=pa.binary())],
         names=["term", "df", "cf", "fan_in", "max_impact", "block_max",
-               "blob_len", "blob", "final"])
+               "blob_len", "blob"])
 
 
-def _merge_partial_runs(hot_terms: set[str], avgdl: float):
-    """Phase 1 kernel (mapInArrow) over MAP-SIDE-COMBINED partial rows (one
-    row per (term, salt) per upstream Arrow batch, carrying doc-sorted
+def _merge_partial_runs(avgdl: float):
+    """The encode kernel (mapInArrow) over MAP-SIDE-COMBINED partial rows
+    (one row per term per upstream Arrow batch, carrying doc-sorted
     ids/tfs/dls LIST columns — tokenize.partial_postings), pre-sorted by
-    (term, salt): concatenate each run's list segments (zero-copy child-
-    array slices), one lexsort restores global doc order per run (partials
+    term: concatenate each term's list segments (zero-copy child-array
+    slices), one lexsort restores global doc order per term (partials
     from different map tasks interleave doc ranges; ids are unique per run
     because a doc lives in exactly one upstream batch), then
-    _encode_runs_flat emits the blobs. Runs of terms outside `hot_terms`
-    finalize here (fan_in 1); hot runs are partials for the phase-2 merge.
-    An empty `hot_terms` finalizes every run — the update path's segment
-    rows. No posting row is ever boxed into a Python object."""
+    _encode_runs_flat emits each term's final row (fan_in 1) — a build's
+    one row per term, an update's one segment row per touched term. No
+    posting row is ever boxed into a Python object."""
     import pyarrow as pa
 
     def encode_slice(tbl, starts: np.ndarray, ends: np.ndarray):
@@ -284,7 +255,7 @@ def _merge_partial_runs(hot_terms: set[str], avgdl: float):
             ids_flat[order].astype(np.uint64),
             tfs_flat[order].astype(np.uint64),
             dls_flat[order].astype(np.uint64),
-            flat_starts, flat_ends, hot_terms, avgdl)
+            flat_starts, flat_ends, avgdl)
 
     def fn(batches):
         return _split_runs(batches, encode_slice)
@@ -305,8 +276,8 @@ def _decode_partial(blob: bytes) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
 
 def _merge_postings(avgdl: float, blobs: list[bytes],
                     drop: np.ndarray | None = None) -> dict | None:
-    """The ONE posting merge: one term's blobs (salted partials or LSM
-    segments — disjoint doc sets) → decode → doc-order argsort → re-encode,
+    """The ONE posting merge: one term's blobs (LSM segments — disjoint
+    doc sets) → decode → doc-order argsort → re-encode,
     with df/cf and block-max impact metadata under `avgdl`. `drop` (a
     SORTED int64 array of tombstoned doc_ids) purges those docs — the
     compaction-time physical delete; None when every posting is purged
@@ -332,43 +303,6 @@ def _merge_postings(avgdl: float, blobs: list[bytes],
             "blob": blob}
 
 
-def _merge_hot_partials(merge):
-    """PHASE 2 kernel (mapInArrow) over phase-1 rows repartitioned by
-    bucket, in the write stage: final rows pass through batch by batch. A
-    hot term's salted partials all share its bucket, hence this partition,
-    so they are held until the partition is drained and each hot term's
-    are then merged into one row by `merge(blobs)` (the layer's one merge:
-    _merge_postings or _merge_positions). Input rows carry `final` and
-    `bucket`; output rows drop `final`."""
-
-    def fn(batches):
-        import itertools
-
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        hot = []
-        for rb in batches:
-            names = [n for n in rb.schema.names if n != "final"]
-            final = rb.column("final")
-            if pc.any(final).as_py():
-                yield rb.filter(final).select(names)
-            hot.append(rb.filter(pc.invert(final)).select(names))
-        if not hot:
-            return
-        tbl = pa.Table.from_batches(hot).sort_by("term")
-        cols = [tbl.column(c).to_pylist() for c in ("term", "bucket", "blob")]
-        rows = []
-        for term, grp in itertools.groupby(zip(*cols), key=lambda r: r[0]):
-            grp = list(grp)
-            rows.append({"term": term, "bucket": grp[0][1],
-                         **merge([r[2] for r in grp])})
-        if rows:
-            yield pa.RecordBatch.from_pylist(rows, schema=tbl.schema)
-
-    return fn
-
-
 def _grouped_merge(merge, schema: str, drop_bc=None):
     """compact_index's grouped (applyInPandas) wrapper around a layer's one
     merge: one term's segment rows → its merged row (`schema`), purging the
@@ -386,14 +320,13 @@ def _grouped_merge(merge, schema: str, drop_bc=None):
     return fn
 
 
-def _merge_partial_pos_runs(hot_terms: set[str]):
-    """Phase 1 of the positional layer over MAP-SIDE-COMBINED partial rows
-    (tokenize.partial_positional_postings), pre-sorted by (term, salt):
-    per run, entries re-sort by doc id (one lexsort; position segments
-    follow their entry via a vectorized gather) and each run encodes into
-    one self-contained positional blob. Finalization follows
-    _merge_partial_runs: runs outside `hot_terms` are final, and an empty
-    set finalizes every run (update segments)."""
+def _merge_partial_pos_runs(batches):
+    """The positional layer's encode kernel (mapInArrow) over MAP-SIDE-
+    COMBINED partial rows (tokenize.partial_positional_postings),
+    pre-sorted by term: per term, entries re-sort by doc id (one lexsort;
+    position segments follow their entry via a vectorized gather) and the
+    term encodes into one self-contained positional blob — a build's one
+    row per term, an update's one segment row per touched term."""
     import pyarrow as pa
 
     from macrobase_spark.index.codec import encode_positional
@@ -430,35 +363,26 @@ def _merge_partial_pos_runs(hot_terms: set[str]):
         # is preserved by the lexsort's primary key)
         run_pos = new_starts[e_starts]
         run_pos_end = new_starts[e_ends]
-        terms_list = tbl.column("term").chunk(0).take(
-            pa.array(starts)).to_pylist()
-        rows = []
-        for i, t in enumerate(terms_list):
-            fs, fe = int(e_starts[i]), int(e_ends[i])
-            blob = encode_positional(
-                ids_s[fs:fe].astype(np.uint64),
-                tfs_s[fs:fe].astype(np.uint64),
-                dls_s[fs:fe].astype(np.uint64),
-                pos_s[int(run_pos[i]):int(run_pos_end[i])].astype(np.uint64))
-            rows.append((t, fe - fs, len(blob), blob, t not in hot_terms))
+        blobs = [encode_positional(
+            ids_s[fs:fe].astype(np.uint64), tfs_s[fs:fe].astype(np.uint64),
+            dls_s[fs:fe].astype(np.uint64),
+            pos_s[ps:pe].astype(np.uint64))
+            for fs, fe, ps, pe in zip(e_starts.tolist(), e_ends.tolist(),
+                                      run_pos.tolist(), run_pos_end.tolist())]
         return pa.RecordBatch.from_arrays(
-            [pa.array([r[0] for r in rows], type=pa.string()),
-             pa.array([r[1] for r in rows], type=pa.int64()),
-             pa.array([r[2] for r in rows], type=pa.int64()),
-             pa.array([r[3] for r in rows], type=pa.binary()),
-             pa.array([r[4] for r in rows], type=pa.bool_())],
-            names=["term", "df", "blob_len", "blob", "final"])
+            [tbl.column("term").chunk(0).take(pa.array(starts)),
+             pa.array(e_ends - e_starts, type=pa.int64()),
+             pa.array([len(b) for b in blobs], type=pa.int64()),
+             pa.array(blobs, type=pa.binary())],
+            names=["term", "df", "blob_len", "blob"])
 
-    def fn(batches):
-        return _split_runs(batches, encode_slice)
-
-    return fn
+    return _split_runs(batches, encode_slice)
 
 
 def _merge_positions(blobs: list[bytes],
                      drop: np.ndarray | None = None) -> dict | None:
-    """The positional layer's one merge: one term's salted partials or
-    segments → a single doc-sorted blob; `drop` purges tombstoned docs
+    """The positional layer's one merge: one term's segments → a single
+    doc-sorted blob; `drop` purges tombstoned docs
     (see _merge_postings)."""
     from macrobase_spark.index.codec import (decode_positional,
                                              encode_positional,
@@ -488,25 +412,18 @@ def _bucket_col(num_buckets: int):
 
 
 def _encode(part: DataFrame, kernel, schema: str, n_shuffle: int,
-            num_buckets: int, merge=None) -> DataFrame:
+            num_buckets: int) -> DataFrame:
     """The ONE encode plan of both layers, linear from the packed partial
-    rows to the write: PHASE 1 `kernel` over the (term, salt) runs, then
-    the rows move to their bucket's partition, where PHASE 2
-    (_merge_hot_partials) merges each hot term's salted partials with
-    `merge` — None when no run is hot (update segments), then rows just
-    drop `final`. Sorted by (bucket, term) for the write: the planned
-    write's own Sort(bucket) is satisfied, so the files keep term order."""
-    enc = (part.repartition(n_shuffle, "term", "salt")
-           .sortWithinPartitions("term", "salt")
-           .mapInArrow(kernel, schema=schema + ", final boolean")
-           .withColumn("bucket", _bucket_col(num_buckets))
-           .repartition("bucket"))
-    if merge is None:
-        enc = enc.drop("final")
-    else:
-        enc = enc.mapInArrow(_merge_hot_partials(merge),
-                             schema=schema + ", bucket int")
-    return enc.sortWithinPartitions("bucket", "term")
+    rows to the write: a shuffle on term, `kernel` over each term's run
+    (one final row per term), then the rows move to their bucket's
+    partition, sorted by (bucket, term) for the write: the planned write's
+    own Sort(bucket) is satisfied, so the files keep term order."""
+    return (part.repartition(n_shuffle, "term")
+            .sortWithinPartitions("term")
+            .mapInArrow(kernel, schema=schema)
+            .withColumn("bucket", _bucket_col(num_buckets))
+            .repartition("bucket")
+            .sortWithinPartitions("bucket", "term"))
 
 
 def _bucket_records(root: str, buckets: list[int]) -> dict[int, dict]:
@@ -536,13 +453,18 @@ def detect_hot_terms(src: DataFrame, sample_frac: float, threshold: int,
     """Approximate hot-term (heavy-hitter) detection via DOCUMENT sampling —
     the AmortizedMaintenanceCounter role (legacy/.../count/
     AmortizedMaintenanceCounter.java:35-110) re-expressed as a sampled count.
-    Sampling happens BEFORE tokenization, so the pre-pass touches only
-    sample_frac of the text. The packed relation holds one entry per
-    (doc, term), so summing its list sizes per term is the sampled document
-    frequency."""
+    Sampling happens BEFORE tokenization, so the pass touches only
+    sample_frac of the text, and it keeps a doc by a hash of its doc_id
+    (pipelines.deterministic_sample), so the result depends only on the
+    input, never on its partitioning. The packed relation holds one entry
+    per (doc, term), so summing its list sizes per term is the sampled
+    document frequency. Returns the hot terms in ascending order. The
+    build does not call this: it encodes every term once, on one task."""
     from macrobase_spark.index.tokenize import partial_postings
+    from macrobase_spark.pipelines.sample import deterministic_sample
 
-    sampled = src.sample(fraction=min(1.0, sample_frac), seed=1)
+    sampled = deterministic_sample(src, min(1.0, sample_frac), seed=1,
+                                   id_col=doc_id_col)
     hot = (
         partial_postings(sampled, doc_id_col, text_col, stopwords=stopwords)
         .groupBy("term")
@@ -551,7 +473,7 @@ def detect_hot_terms(src: DataFrame, sample_frac: float, threshold: int,
         .select("term")
         .collect()
     )
-    return [r["term"] for r in hot]
+    return sorted(r["term"] for r in hot)
 
 
 def suggest_stopwords(
@@ -570,12 +492,15 @@ def suggest_stopwords(
 
     Same sampled pre-pass shape as detect_hot_terms: tokenization touches
     only sample_frac of the text; the count is per-document (the packed
-    relation has one entry per (doc, term)). Returns at most max_terms,
-    most-frequent first (ties by term) — deterministic for a fixed input."""
+    relation has one entry per (doc, term)) and the sample is keyed on
+    doc_id. Returns at most max_terms, most-frequent first (ties by term)
+    — the same for a fixed input at any partitioning."""
     from macrobase_spark.index.tokenize import partial_postings
+    from macrobase_spark.pipelines.sample import deterministic_sample
 
-    sampled = df.select(doc_id_col, text_col).sample(
-        fraction=min(1.0, sample_frac), seed=1)
+    sampled = deterministic_sample(df.select(doc_id_col, text_col),
+                                   min(1.0, sample_frac), seed=1,
+                                   id_col=doc_id_col)
     n = sampled.count()
     if n == 0:
         return []
@@ -595,7 +520,6 @@ def build_index(
     text_col: str = "text",
     num_buckets: int = 16,
     num_groups: int = 1,
-    salt_partitions: int = 8,
     hot_df_threshold: int = 50_000,
     hot_sample_frac: float = 0.02,
     resume: bool = True,
@@ -605,6 +529,11 @@ def build_index(
     """Build the index at `out_dir`; returns the build report (metrics).
 
     `df` must contain doc_id (stable, partition-independent) and text.
+
+    `hot_df_threshold` and `hot_sample_frac` are accepted for older
+    callers and ignored: every term is encoded once, on one task (see the
+    module docstring), so the build detects no hot terms, and the report's
+    `hot_terms` is always [].
 
     positions=True additionally builds the positional layer
     (<out_dir>/positions: per-term self-contained blobs of doc ids, tfs,
@@ -679,7 +608,7 @@ def build_index(
     # must still fan out across all cores for the Arrow passes — at 100 TB
     # the file count dominates and this is a no-op. The repartitioned input
     # is cached so its shuffle runs once, not once per query that reads src
-    # (the feature aggregate, hot-term detection and the postings write).
+    # (the feature aggregate and the postings write).
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     floor = src.rdd.getNumPartitions() < n_shuffle
     if floor:
@@ -694,24 +623,6 @@ def build_index(
     docs_done = (resume
                  and os.path.exists(os.path.join(out_dir, "stats.json"))
                  and os.path.exists(os.path.join(docs_path, "_SUCCESS")))
-
-    # hot-term detection is independent of the docs pipeline → run it as a
-    # concurrent Spark job from a helper thread (the local/cluster scheduler
-    # interleaves both), hiding its latency behind the docs pass
-    import threading
-
-    hot_result: dict = {}
-
-    def _hot():
-        try:
-            hot_result["terms"] = detect_hot_terms(
-                src, hot_sample_frac, hot_df_threshold, doc_id_col,
-                text_col, stopwords=stop)
-        except Exception as exc:  # surfaced after join
-            hot_result["error"] = exc
-
-    hot_thread = threading.Thread(target=_hot, daemon=True)
-    hot_thread.start()
 
     docs_thread: "threading.Thread | None" = None
     docs_result: dict = {}
@@ -746,8 +657,8 @@ def build_index(
 
         # the docs write needs only the cached feats + the stats just
         # computed — it is independent of the postings pipeline, so it runs
-        # as a CONCURRENT Spark job behind the encode shuffle (same pattern
-        # as hot-term detection), shaving one serial job off the build
+        # as a CONCURRENT Spark job from a helper thread, behind the encode
+        # shuffle, shaving one serial job off the build
         def _write_docs():
             try:
                 (feats.withColumn(
@@ -776,37 +687,21 @@ def build_index(
         json.dump({"n_docs": n_docs, "avgdl": avgdl, "sum_dl": sum_dl,
                    "len_med": med, "len_mad": mad, "k1": K1, "b": B,
                    "block_size": BLOCK_SIZE, "num_buckets": num_buckets,
-                   "version": 1, "salt_partitions": salt_partitions,
-                   "stopwords": sorted(stop or ()),
+                   "version": 1, "stopwords": sorted(stop or ()),
                    "segmented_buckets": []}, f)
 
-    _tp = time.time()
-    hot_thread.join()
-    phases["hot_join_wait"] = round(time.time() - _tp, 3)
-    if "error" in hot_result:
-        raise hot_result["error"]
-    hot_set = set(hot_result["terms"])
     # single fused Arrow pass text → MAP-SIDE-COMBINED partial rows (one
-    # per (term, salt) per batch, posting arrays packed as list columns —
+    # per term per batch, posting arrays packed as list columns —
     # tokenize.partial_postings, guide §2.3): the encode shuffle ships
     # ~vocabulary-count rows instead of one row per posting. Persisted
     # only when multiple groups would otherwise re-tokenize.
     from macrobase_spark.index.tokenize import partial_postings
 
     partials = partial_postings(
-        src, doc_id_col, text_col, hot_terms=hot_set,
-        salt_partitions=salt_partitions, stopwords=stop,
+        src, doc_id_col, text_col, stopwords=stop,
     ).withColumn("bucket", _bucket_col(num_buckets))
     if num_groups > 1:
         partials = partials.persist()
-    # persist the hot-term set: the incremental-update path salts its
-    # encoding shuffle with it (same skew story as the fresh build)
-    stats_path = os.path.join(out_dir, "stats.json")
-    with open(stats_path) as f:
-        _stats = json.load(f)
-    _stats["hot_terms"] = sorted(hot_set)
-    with open(stats_path, "w") as f:
-        json.dump(_stats, f)
 
     groups: list[list[int]] = [
         [b for b in range(num_buckets) if b % num_groups == g] for g in range(num_groups)
@@ -818,15 +713,11 @@ def build_index(
         if not todo:
             continue
         part = partials.filter(F.col("bucket").isin(todo)).drop("bucket")
-        # phase 1 shuffles the packed partial rows on (term, salt) and
-        # encodes each run — cold terms finalize there (fan_in 1); the
-        # salt was computed inside the map-side combine (doc_id % S for
-        # hot terms), so the skew story holds while the shuffle carries
-        # ~30x fewer rows. Phase 2 merges the hot partials in the write
-        # stage: one linear plan, nothing cached or read twice.
-        enc = _encode(part, _merge_partial_runs(hot_set, avgdl),
-                      _POSTINGS_SCHEMA, n_shuffle, num_buckets,
-                      merge=functools.partial(_merge_postings, avgdl))
+        # the packed partial rows shuffle on term and each term encodes
+        # once into its final row: one linear plan, nothing cached or read
+        # twice
+        enc = _encode(part, _merge_partial_runs(avgdl), _POSTINGS_SCHEMA,
+                      n_shuffle, num_buckets)
         _tp = time.time()
         enc.write.mode("overwrite").partitionBy("bucket").option(
             "partitionOverwriteMode", "dynamic"
@@ -851,17 +742,16 @@ def build_index(
         pos_root = os.path.join(out_dir, "positions")
         if not (resume and os.path.exists(os.path.join(pos_root, "_SUCCESS"))):
             _tp = time.time()
-            # map-side combine: packed (term, salt) partial rows with
-            # entry lists + flat positions — same ~30x shuffle-row
-            # reduction as the main layer; the merge kernel re-sorts
-            # entries per run by doc id
+            # map-side combine: packed per-term partial rows with entry
+            # lists + flat positions — same ~30x shuffle-row reduction as
+            # the main layer; the encode kernel re-sorts entries per term
+            # by doc id
             from macrobase_spark.index.tokenize import partial_positional_postings
 
             pos_part = partial_positional_postings(
-                src, doc_id_col, text_col, hot_terms=hot_set,
-                salt_partitions=salt_partitions, stopwords=stop)
-            (_encode(pos_part, _merge_partial_pos_runs(hot_set), _POS_SCHEMA,
-                     n_shuffle, num_buckets, merge=_merge_positions)
+                src, doc_id_col, text_col, stopwords=stop)
+            (_encode(pos_part, _merge_partial_pos_runs, _POS_SCHEMA,
+                     n_shuffle, num_buckets)
              .write.mode("overwrite").partitionBy("bucket").parquet(pos_root))
             phases["positions"] = round(time.time() - _tp, 3)
         # stamp AFTER the positional write commits: a crash in between
@@ -887,7 +777,7 @@ def build_index(
     return {
         "n_docs": n_docs,
         "avgdl": avgdl,
-        "hot_terms": sorted(hot_set),
+        "hot_terms": [],  # no hot-term detection; kept for report readers
         "buckets": len(report_buckets),
         "postings": sum(r.get("postings", 0) for r in report_buckets.values()),
         "bytes": sum(r.get("bytes", 0) for r in report_buckets.values()),
@@ -1150,14 +1040,12 @@ def update_index(
 
     - new docs' features append to docs.parquet; global stats (n_docs,
       avgdl) recompute; stats version bumps.
-    - new postings are encoded with the SAME salted shuffle as the fresh
-      build (hot terms — persisted in stats.json, unioned with a sampled
-      re-detection over the delta — shard across (term, salt) reducers, so
-      no reducer ever sees more than one shard of one hot term's DELTA) and
-      appended as additional parquet rows in their buckets. Existing blobs
-      are never read, decoded, or re-sorted: update cost is O(delta), and
-      the full historical posting list of a hot term never lands on one
-      task — the scale killer the old rewrite-touched-buckets variant had.
+    - new postings are encoded with the SAME plan and kernel as the fresh
+      build and appended as ONE additional parquet row per touched term
+      in its bucket. Existing blobs are never read, decoded, or re-sorted:
+      update cost is O(delta), and the full historical posting list of a
+      hot term never lands on one task — the scale killer the old
+      rewrite-touched-buckets variant had.
     - a term may now span several rows (base + per-update segments);
       the term dictionary sums df across rows for idf and the query path
       concatenates candidates (exactness unaffected — every (term, doc)
@@ -1221,7 +1109,6 @@ def update_index(
             os.replace(os.path.join(out_dir, _UPDATE_INFLIGHT + ".tmp"),
                        os.path.join(out_dir, _UPDATE_INFLIGHT))
         num_buckets = stats["num_buckets"]
-        salt_partitions = stats.get("salt_partitions", 8)
         # the analyzer is an INDEX property: the delta tokenizes with the
         # stoplist persisted at build time, never a caller-supplied one
         stop = frozenset(stats.get("stopwords", [])) or None
@@ -1275,63 +1162,41 @@ def update_index(
             .write.mode("append").parquet(docs_path))
         feats.unpersist()
 
-        # hot set for the delta: persisted build-time hots ∪ sampled re-detection
-        # over the delta (a term can be hot in the delta without being hot in
-        # the base corpus)
-        hot_set = set(stats.get("hot_terms", []))
-        hot_set |= set(detect_hot_terms(src, 0.1, 50_000, doc_id_col,
-                                        text_col, stopwords=stop))
-
-        # the same map-side-combined relation as the fresh build (hot terms
-        # salted by doc_id % S inside the combine), encoded per (term, salt)
-        # run with hot_terms=∅: every run finalizes with real per-segment
-        # block-max metadata (a hot term's delta becomes up to
-        # `salt_partitions` segment rows — parallel encode, parallel read)
+        # the same map-side-combined relation and encode plan as the fresh
+        # build: each touched term's delta becomes one segment row with real
+        # per-segment block-max metadata
         n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        new_post = partial_postings(src, doc_id_col, text_col,
-                                    hot_terms=hot_set,
-                                    salt_partitions=salt_partitions,
-                                    stopwords=stop)
+        new_post = partial_postings(src, doc_id_col, text_col, stopwords=stop)
         postings_root = os.path.join(out_dir, "postings")
         # the touched buckets are the ones the append adds files to: the
         # listing diff is exactly what was written, with no Spark job
         before = _part_files(postings_root)
-        _encode(new_post, _merge_partial_runs(set(), avgdl), _POSTINGS_SCHEMA,
+        _encode(new_post, _merge_partial_runs(avgdl), _POSTINGS_SCHEMA,
                 n_shuffle, num_buckets).write.mode("append").partitionBy(
             "bucket").parquet(postings_root)
         added = sorted(_part_files(postings_root) - before)
         touched = sorted({_file_bucket(f) for f in added})
         folded = base_td
         if base_td is not None and added:
-            # the delta's rows are the part files the append added: read
-            # their (term, df, max_impact) on the driver, no Spark job
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            folded = _term_dict(pa.concat_tables(
-                pq.read_table(f, columns=["term", "df", "max_impact"])
-                for f in added), base_td)
+            # the delta's rows are the part files the append added
+            folded = _term_dict(_dict_rows(added), base_td)
 
         if stats.get("has_positions"):
             # positional layer: same LSM segment append — the delta's
             # positional rows land as EXTRA rows in their buckets (blobs are
             # self-contained, so a term spanning base + delta segments needs
             # no byte-level merge; the phrase path sums df across rows and
-            # concatenates candidates). hot_terms=∅ here for the same reason
-            # as the main append: a hot term's delta becomes up to
-            # salt_partitions finalized segment rows instead of one giant
-            # reducer task. compact_index merges segments back to one row.
+            # concatenates candidates). compact_index merges segments back
+            # to one row.
             pos_part = partial_positional_postings(
-                src, doc_id_col, text_col, hot_terms=hot_set,
-                salt_partitions=salt_partitions, stopwords=stop)
-            _encode(pos_part, _merge_partial_pos_runs(set()), _POS_SCHEMA,
+                src, doc_id_col, text_col, stopwords=stop)
+            _encode(pos_part, _merge_partial_pos_runs, _POS_SCHEMA,
                     n_shuffle, num_buckets).write.mode("append").partitionBy(
                 "bucket").parquet(os.path.join(out_dir, "positions"))
 
         seg = sorted(set(stats.get("segmented_buckets", [])) | set(touched))
         stats.update({"n_docs": n_docs, "avgdl": avgdl, "sum_dl": sum_dl,
-                      "version": version, "hot_terms": sorted(hot_set),
-                      "segmented_buckets": seg})
+                      "version": version, "segmented_buckets": seg})
         with open(os.path.join(out_dir, "stats.json"), "w") as f:
             json.dump(stats, f)
         new_key = _version_key(spark, out_dir)
@@ -1472,10 +1337,10 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
     the same pass — for single-row terms the merge degenerates to a
     decode → re-encode that refreshes the bounds.
 
-    Scale shape: the per-term merge is the SAME blob-level fan-in as the
-    fresh build's phase 2 (pre-compressed partials, decode + merge-sort +
-    re-encode on one reducer per term) — amortized background work, never
-    on the update or query path.
+    Scale shape: the per-term merge is a blob-level fan-in (the segments'
+    pre-compressed blobs, decode + merge-sort + re-encode on one reducer
+    per term) — amortized background work, never on the update or query
+    path.
 
     Crash safety: the overwrite below deletes the stale buckets' old rows,
     so those files (plus stats.json/manifest state) are first copied to
@@ -1668,6 +1533,20 @@ class TermDict(NamedTuple):
     stats: dict[str, TermStats]
 
 
+def _dict_rows(files: list[str]):
+    """The (term, df, max_impact) columns of postings part files as one
+    Arrow table, read on the driver with pyarrow — no Spark job, and the
+    posting blobs are never read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if not files:
+        return pa.schema([("term", pa.string()), ("df", pa.int64()),
+                          ("max_impact", pa.float64())]).empty_table()
+    return pa.concat_tables(
+        pq.read_table(f, columns=["term", "df", "max_impact"]) for f in files)
+
+
 def _term_dict(rows, base: TermDict | None = None) -> TermDict:
     """Fold posting rows' (term, df, max_impact) — an Arrow table — into a
     TermDict, on top of `base` when given (update_index folds its delta
@@ -1775,11 +1654,11 @@ def open_index(spark: SparkSession, out_dir: str
                ) -> tuple[DataFrame, DataFrame, dict, TermDict]:
     """read_index plus the version's term dictionary, from ONE cache entry,
     so handles, stats and dictionary always describe the same index
-    version. The dictionary costs ONE column-pruned collect of (term, df,
-    max_impact) — the posting blobs are never read — on the first call
-    after a version change made by another process, a build, a compaction
-    or a merge; an in-process update_index folds its delta into the
-    previous version's dictionary instead. Every query-time df, WAND bound
+    version. The dictionary costs one driver-side pyarrow read of (term,
+    df, max_impact) from the version's part files (`_dict_rows`, no Spark
+    job) on the first call after a version change made by another
+    process, a build, a compaction or a merge; an in-process update_index
+    folds its delta into the previous version's dictionary instead. Every query-time df, WAND bound
     and prefix / fuzzy / regexp expansion is then answered on the driver."""
     entry = open_version(spark, out_dir)
     return (*entry.handles, entry.tdict)
@@ -1790,8 +1669,8 @@ def open_version(spark: SparkSession, out_dir: str) -> _Version:
     files of one index version."""
     entry = _index_entry(spark, out_dir)
     if entry.tdict is None:
-        entry.tdict = _term_dict(
-            entry.handles[0].select("term", "df", "max_impact").toArrow())
+        entry.tdict = _term_dict(_dict_rows(
+            [f for fs in entry.files.values() for f in fs]))
     return entry
 
 
@@ -1916,8 +1795,6 @@ def merge_indexes(spark: SparkSession, shard_dirs: list[str],
          .write.mode("overwrite").partitionBy("bucket")
          .parquet(os.path.join(out_dir, "positions")))
     buckets = _buckets(os.path.join(out_dir, "postings"))
-    hot = sorted({t for st in shard_stats
-                  for t in st.get("hot_terms", [])})
     # len_med/len_mad feed only future updates' anomaly normalization
     # (advisory robust stats, not scoring inputs) — carrying the first
     # shard's values avoids a docs re-scan; an update recomputes its own
@@ -1928,11 +1805,8 @@ def merge_indexes(spark: SparkSession, shard_dirs: list[str],
             "len_med": base.get("len_med"), "len_mad": base.get("len_mad"),
             "k1": K1, "b": B, "block_size": BLOCK_SIZE,
             "num_buckets": num_buckets, "version": 1,
-            "salt_partitions": max(st.get("salt_partitions", 1)
-                                   for st in shard_stats),
             "stopwords": sorted(stops.pop()),
             "has_positions": has_pos,
-            "hot_terms": hot,
             # every bucket holds one segment per shard: the query path's
             # cross-row df sums apply index-wide until compaction
             "segmented_buckets": buckets,

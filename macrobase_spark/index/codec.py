@@ -183,8 +183,8 @@ def decode_positional(buf: bytes) -> tuple[np.ndarray, np.ndarray,
 
 
 def merge_positional_blobs(blobs: list[bytes]) -> bytes:
-    """Merge positional blobs of one term (disjoint doc sets from salted
-    partials / segments) into one doc-sorted blob."""
+    """Merge positional blobs of one term (disjoint doc sets from LSM
+    segments) into one doc-sorted blob."""
     parts = [decode_positional(b) for b in blobs]
     ids = np.concatenate([p[0] for p in parts])
     tfs = np.concatenate([p[1] for p in parts])

@@ -137,20 +137,17 @@ def turn_features(df: DataFrame, text_col: str = "text",
 def partial_postings(df: DataFrame, doc_id_col: str = "doc_id",
                      text_col: str = "text",
                      hot_terms: set[str] | frozenset | None = None,
-                     salt_partitions: int = 8,
                      stopwords: frozenset | None = None) -> DataFrame:
-    """text → ONE row per (term, salt) per Arrow batch carrying the
-    batch-local posting arrays (ids/tfs/dls as Arrow LIST columns, doc-
-    sorted) — the map-side combine of the index build (guide §2.3
-    "aggregate before you shuffle" / §8 "move the heavy bytes packed"):
-    the encode shuffle ships ~vocabulary-count rows of packed arrays
-    instead of one row per posting (~30x fewer rows), and both Python
-    boundary crossings shrink accordingly. `salt` splits hot terms'
-    entries by doc_id % salt_partitions (0 for every other term), so the
-    downstream (term, salt) shuffle spreads a hot term over S reducers.
-    The per-batch arrays are ascending in doc_id, so the phase-1 merge
-    (build._merge_partial_runs) restores each run's global doc order with
-    one lexsort.
+    """text → ONE row per term per Arrow batch carrying the batch-local
+    posting arrays (ids/tfs/dls as Arrow LIST columns, doc-sorted) — the
+    map-side combine of the index build (guide §2.3 "aggregate before you
+    shuffle" / §8 "move the heavy bytes packed"): the encode shuffle ships
+    ~vocabulary-count rows of packed arrays instead of one row per posting
+    (~30x fewer rows), and both Python boundary crossings shrink
+    accordingly. The per-batch arrays are ascending in doc_id, so the
+    encode kernel (build._merge_partial_runs) restores each term's global
+    doc order with one lexsort. `hot_terms` is accepted for older callers
+    and ignored: every term is one run.
 
     This is the only tokenize → postings relation: the build, the update
     delta, hot-term detection, suggest_stopwords and the q17 term-stats
@@ -160,8 +157,6 @@ def partial_postings(df: DataFrame, doc_id_col: str = "doc_id",
     (see _flat_term_counts) — doc lengths count survivors only."""
     import pyarrow as pa
 
-    hot_sorted = sorted(hot_terms) if hot_terms else []
-    S = int(salt_partitions)
     stop_sorted = sorted(stopwords) if stopwords else []
 
     def fn(batches):
@@ -198,60 +193,47 @@ def partial_postings(df: DataFrame, doc_id_col: str = "doc_id",
             ids_e = doc_ids[urow]
             dls_e = lens[urow].astype(np.int32)
             tfs_e = counts.astype(np.int32)
-            if hot_sorted:
-                hot_code = pc.is_in(
-                    vocab, value_set=pa.array(hot_sorted, type=pa.string())
-                ).to_numpy(zero_copy_only=False)
-                salt_e = np.where(hot_code[ucode], ids_e % S, 0).astype(
-                    np.int32)
-            else:
-                salt_e = np.zeros(len(ids_e), dtype=np.int32)
-            # group entries by (code, salt), ascending doc within group
-            order = np.lexsort((ids_e, salt_e, ucode))
-            c_s, s_s = ucode[order], salt_e[order]
-            change = np.flatnonzero(
-                (c_s[1:] != c_s[:-1]) | (s_s[1:] != s_s[:-1])) + 1
-            starts = np.concatenate(([0], change)).astype(np.int64)
+            # group entries by term, ascending doc within group
+            order = np.lexsort((ids_e, ucode))
+            c_s = ucode[order]
+            starts = np.concatenate(
+                ([0], np.flatnonzero(c_s[1:] != c_s[:-1]) + 1)).astype(
+                np.int64)
             offsets = pa.array(
                 np.concatenate((starts, [len(c_s)])).astype(np.int32),
                 type=pa.int32())
             yield pa.RecordBatch.from_arrays(
                 [vocab.take(pa.array(c_s[starts])),
-                 pa.array(s_s[starts], type=pa.int32()),
                  pa.ListArray.from_arrays(
                      offsets, pa.array(ids_e[order], type=pa.int64())),
                  pa.ListArray.from_arrays(
                      offsets, pa.array(tfs_e[order], type=pa.int32())),
                  pa.ListArray.from_arrays(
                      offsets, pa.array(dls_e[order], type=pa.int32()))],
-                names=["term", "salt", "ids", "tfs", "dls"])
+                names=["term", "ids", "tfs", "dls"])
 
     return df.select(doc_id_col, text_col).mapInArrow(
-        fn, schema=("term string, salt int, ids array<long>, "
-                    "tfs array<int>, dls array<int>"))
+        fn, schema="term string, ids array<long>, tfs array<int>, "
+                   "dls array<int>")
 
 
 def partial_positional_postings(df: DataFrame, doc_id_col: str = "doc_id",
                                 text_col: str = "text",
-                                hot_terms: set[str] | frozenset | None = None,
-                                salt_partitions: int = 8,
                                 stopwords: frozenset | None = None
                                 ) -> DataFrame:
-    """Positional twin of partial_postings: ONE row per (term, salt) per
-    Arrow batch carrying ids/tfs/dls list columns PLUS the run's token
+    """Positional twin of partial_postings: ONE row per term per Arrow
+    batch carrying ids/tfs/dls list columns PLUS the run's token
     positions as one flat list (each entry owns tfs[i] ascending
     positions, entries concatenated in ids order) — the map-side combine
     of the positional index build and of update_index's positional delta.
-    Positions are extracted with one lexsort over (code, salt, row, pos)
-    keys — no per-token Python. With `stopwords`, dropped tokens leave
-    POSITION GAPS (Lucene StopFilter + position increments): surviving
+    Positions are extracted with one lexsort over (code, row, pos) keys —
+    no per-token Python. With `stopwords`, dropped tokens leave POSITION
+    GAPS (Lucene StopFilter + position increments): surviving
     tokens keep their original in-document positions, so a phrase
     spanning a removed stopword still matches at its original span, while
     dl/tf count survivors only."""
     import pyarrow as pa
 
-    hot_sorted = sorted(hot_terms) if hot_terms else []
-    S = int(salt_partitions)
     stop_sorted = sorted(stopwords) if stopwords else []
 
     def fn(batches):
@@ -285,27 +267,15 @@ def partial_positional_postings(df: DataFrame, doc_id_col: str = "doc_id",
             codes = denc.indices.to_numpy(zero_copy_only=False).astype(
                 np.int64)
             vocab = denc.dictionary
-            if hot_sorted:
-                hot_code = pc.is_in(
-                    vocab, value_set=pa.array(hot_sorted, type=pa.string())
-                ).to_numpy(zero_copy_only=False)
-                salt_tok = np.where(hot_code[codes],
-                                    doc_ids[row_idx] % S, 0).astype(np.int64)
-            else:
-                salt_tok = np.zeros(len(codes), dtype=np.int64)
-            order = np.lexsort((pos_in_row, row_idx, salt_tok, codes))
-            c_s, s_s = codes[order], salt_tok[order]
-            r_s, p_s = row_idx[order], pos_in_row[order]
+            order = np.lexsort((pos_in_row, row_idx, codes))
+            c_s, r_s, p_s = codes[order], row_idx[order], pos_in_row[order]
             e_change = np.flatnonzero(
-                (c_s[1:] != c_s[:-1]) | (s_s[1:] != s_s[:-1])
-                | (r_s[1:] != r_s[:-1])) + 1
+                (c_s[1:] != c_s[:-1]) | (r_s[1:] != r_s[:-1])) + 1
             e_starts = np.concatenate(([0], e_change)).astype(np.int64)
             e_ends = np.concatenate((e_starts[1:], [len(c_s)]))
-            e_code, e_salt, e_row = (c_s[e_starts], s_s[e_starts],
-                                     r_s[e_starts])
+            e_code, e_row = c_s[e_starts], r_s[e_starts]
             e_tf = (e_ends - e_starts).astype(np.int32)
-            run_change = np.flatnonzero(
-                (e_code[1:] != e_code[:-1]) | (e_salt[1:] != e_salt[:-1])) + 1
+            run_change = np.flatnonzero(e_code[1:] != e_code[:-1]) + 1
             run_e = np.concatenate(([0], run_change)).astype(np.int64)
             entry_off = pa.array(
                 np.concatenate((run_e, [len(e_code)])).astype(np.int32),
@@ -316,7 +286,6 @@ def partial_positional_postings(df: DataFrame, doc_id_col: str = "doc_id",
                 type=pa.int32())
             yield pa.RecordBatch.from_arrays(
                 [vocab.take(pa.array(e_code[run_e])),
-                 pa.array(e_salt[run_e].astype(np.int32), type=pa.int32()),
                  pa.ListArray.from_arrays(
                      entry_off, pa.array(doc_ids[e_row], type=pa.int64())),
                  pa.ListArray.from_arrays(
@@ -327,11 +296,11 @@ def partial_positional_postings(df: DataFrame, doc_id_col: str = "doc_id",
                  pa.ListArray.from_arrays(
                      pos_off, pa.array(p_s.astype(np.int32),
                                        type=pa.int32()))],
-                names=["term", "salt", "ids", "tfs", "dls", "pos"])
+                names=["term", "ids", "tfs", "dls", "pos"])
 
     return df.select(doc_id_col, text_col).mapInArrow(
-        fn, schema=("term string, salt int, ids array<long>, "
-                    "tfs array<int>, dls array<int>, pos array<int>"))
+        fn, schema=("term string, ids array<long>, tfs array<int>, "
+                    "dls array<int>, pos array<int>"))
 
 
 def with_anomaly_score(df: DataFrame, exact: bool = False) -> DataFrame:

@@ -209,8 +209,8 @@ def heavy_hitters(df: DataFrame, col: str, threshold_frac: float = 0.01,
     (legacy/.../count/AmortizedMaintenanceCounter.java:35-110).
 
     exact=True → full groupBy (map-side combined, cheap for hot keys);
-    exact=False → sampled estimate (the 100 TB path, same shape the index
-    builder uses for hot-term salting)."""
+    exact=False → sampled estimate (the 100 TB path, same shape as the
+    index's detect_hot_terms)."""
     n = df.count()
     src = df if exact else df.sample(fraction=sample_frac, seed=1)
     scale = 1.0 if exact else 1.0 / sample_frac

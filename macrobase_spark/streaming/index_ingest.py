@@ -228,8 +228,8 @@ def stream_index_updates(
     (batch-incremental ingest), or {"processingTime": "30 seconds"}.
 
     Scale shape: every epoch is one O(delta) distributed job (the same
-    salted (term, salt) shuffle as the fresh build — a hot term's delta
-    shards across reducers); the driver-side bookkeeping here is a handful
+    term-keyed encode plan as the fresh build — one segment row per
+    touched term); the driver-side bookkeeping here is a handful
     of file ops per epoch. Compaction cost is amortized background work
     bounded by the buckets the deltas touched.
     """

@@ -11,7 +11,7 @@ Cluster usage (the production path the engine is designed for):
         scripts/submit_index_build.py \
         --input <iceberg-table-or-parquet-path> \
         --output s3://bucket/index \
-        --num-buckets 4096 --num-groups 16 --salt-partitions 64
+        --num-buckets 4096 --num-groups 16
 
 Local smoke (this sandbox):
 
@@ -48,8 +48,6 @@ def main() -> None:
     ap.add_argument("--text-col", default="text")
     ap.add_argument("--num-buckets", type=int, default=32)
     ap.add_argument("--num-groups", type=int, default=1)
-    ap.add_argument("--salt-partitions", type=int, default=8)
-    ap.add_argument("--hot-df-threshold", type=int, default=50_000)
     ap.add_argument("--no-resume", action="store_true")
     args = ap.parse_args()
 
@@ -67,8 +65,6 @@ def main() -> None:
         df, args.output,
         doc_id_col=args.doc_id_col, text_col=args.text_col,
         num_buckets=args.num_buckets, num_groups=args.num_groups,
-        salt_partitions=args.salt_partitions,
-        hot_df_threshold=args.hot_df_threshold,
         resume=not args.no_resume,
     )
     print(json.dumps(report))

@@ -1,6 +1,6 @@
 """Seeded differential test of the BM25 scoring kernel, which owns the
 per-doc float order: on generated small corpora (U+0130 'İ', token-less
-docs, an index-time stoplist, hot terms split across salted rows) and
+docs, an index-time stoplist, terms spanning base and segment rows) and
 generated queries (exclusions, boosts, stoplist-only token sets,
 mode='and', min_should_match), bm25_topk and bm25_topk_batch over a
 segmented index (build, then update_index) and bm25_topk_sharded over two
@@ -62,8 +62,7 @@ def test_kernel_equals_oracle_bitwise(spark, tmp_path_factory, texts,
         return spark.createDataFrame(rows, "doc_id long, text string")
 
     for out, rows in ((seg, docs[:half]), (other, docs[half:])):
-        build_index(frame(rows), out, num_buckets=2, salt_partitions=2,
-                    hot_df_threshold=3, hot_sample_frac=1.0, stopwords=STOP)
+        build_index(frame(rows), out, num_buckets=2, stopwords=STOP)
     # two shards are one corpus: sharded scoring uses the global stats
     for q, (mode, msm) in queries:
         if msm is None and "^" not in q:

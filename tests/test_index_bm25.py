@@ -1,6 +1,7 @@
 """End-to-end inverted index + BM25 tests against the exact pure-Python
 oracle (north-rule checks: per-turn text equality under stable ordering,
-rank-identical top-k docIDs AND scores, resumable build, hot-term salting)."""
+rank-identical top-k docIDs AND scores, resumable build, one encode per
+term)."""
 
 import math
 import shutil
@@ -22,14 +23,14 @@ def corpus(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("index"))
     report = build_index(
         df, out, num_buckets=8, num_groups=2,
-        hot_df_threshold=120, hot_sample_frac=0.5, salt_partitions=4,
+        hot_df_threshold=120, hot_sample_frac=0.5,
     )
     docs = [(r["doc_id"], r["text"]) for r in df.select("doc_id", "text").collect()]
     return df, out, report, docs
 
 
 QUERIES = [
-    "the",                # hot stopword-like term (salted path)
+    "the",                # hot stopword-like term (longest posting list)
     "rare7",              # rare discriminative term → its conversation
     "tok0001",            # high-zipf vocab term
     "tok0042 tok0007",    # multi-term
@@ -53,16 +54,34 @@ def test_build_report(corpus):
     _, _, report, docs = corpus
     assert report["n_docs"] == len(docs)
     assert report["postings"] > 0
-    assert "the" in report["hot_terms"]
 
 
-def test_hot_term_salted_fan_in(spark, corpus):
-    _, out, _, _ = corpus
+def test_every_term_encoded_once(spark, corpus):
+    """Every postings row is a term's one final encode (fan_in 1, one row
+    per term), and the hot term's decoded (ids, tfs, dls) equal a recount
+    over the corpus."""
+    import re
+
+    import numpy as np
+
+    from macrobase_spark.index.bm25 import TOKEN_PATTERN
+    from macrobase_spark.index.build import _decode_partial
+
+    _, out, _, docs = corpus
     postings, _, _ = read_index(spark, out)
-    fan = {r["term"]: r["fan_in"] for r in
-           postings.filter(F.col("term").isin(["the", "rare7"])).collect()}
-    assert fan["the"] > 1      # hot term merged from multiple salted partials
-    assert fan.get("rare7", 1) == 1
+    assert postings.filter(F.col("fan_in") != 1).count() == 0
+    assert postings.count() == postings.select("term").distinct().count()
+    want = []
+    for d, text in docs:
+        toks = re.findall(TOKEN_PATTERN, text.lower())
+        if "the" in toks:
+            want.append((d, toks.count("the"), len(toks)))
+    want.sort()
+    (blob,) = [bytes(r["blob"]) for r in
+               postings.filter(F.col("term") == "the").collect()]
+    got = np.stack(_decode_partial(blob), axis=1).tolist()
+    assert got == [list(w) for w in want]
+    assert len(want) > 120  # above the fixture's hot_df_threshold
 
 
 @pytest.mark.parametrize("query", QUERIES)
@@ -213,30 +232,31 @@ def test_incremental_update_rank_identical(spark, tmp_path):
             assert math.isclose(gs, ws, rel_tol=1e-12), (q, gs, ws)
 
 
-def test_update_path_hot_term_sharded(spark, tmp_path):
-    """The LSM update path must NOT funnel a hot term through one reducer:
-    the delta's postings for a hot term are salted across (term, salt)
-    encoders and appended as MULTIPLE segment rows; existing blobs are not
-    rewritten. Compaction then merges back to one row per term."""
+def test_update_appends_one_segment_row_per_term(spark, tmp_path):
+    """The LSM update path appends exactly ONE segment row per touched
+    term, the hot term included; existing blobs are not rewritten.
+    Compaction then merges back to one row per term."""
     from macrobase_spark.index.build import compact_index, update_index
 
     base = with_doc_id(synth_transcripts(spark, n_convs=60, seed=42)).cache()
     extra = with_doc_id(
         synth_transcripts(spark, n_convs=120, seed=42)
     ).filter(F.col("conv_id") >= "conv00000060").cache()
-    out = str(tmp_path / "shard_idx")
+    out = str(tmp_path / "seg_idx")
     build_index(base, out, num_buckets=8, hot_df_threshold=120,
-                hot_sample_frac=0.5, salt_partitions=4)
-    postings0, _, stats0 = read_index(spark, out)
-    assert "the" in stats0["hot_terms"]
-    base_rows = postings0.filter(F.col("term") == "the").count()
-    assert base_rows == 1
+                hot_sample_frac=0.5)
+    postings0, _, _ = read_index(spark, out)
+    base_the = [bytes(r["blob"]) for r in
+                postings0.filter(F.col("term") == "the").collect()]
+    assert len(base_the) == 1
 
     update_index(extra, out)
     postings1, _, stats1 = read_index(spark, out)
-    seg_rows = postings1.filter(F.col("term") == "the").count()
-    # base row + >1 salted delta segments → the delta was encoded in parallel
-    assert seg_rows > 2, f"hot-term delta not sharded: {seg_rows} rows"
+    seg_the = [bytes(r["blob"]) for r in
+               postings1.filter(F.col("term") == "the").collect()]
+    assert len(seg_the) == 2 and base_the[0] in seg_the
+    assert postings1.groupBy("term").count().filter(
+        F.col("count") > 2).count() == 0
     assert stats1["segmented_buckets"]
 
     compact_index(spark, out)
@@ -354,8 +374,8 @@ def test_batch_wand_prunes_hot_two_term_query(spark, tmp_path):
 
 def test_compaction_after_many_updates(spark, tmp_path):
     """r3 verdict Next-round #9 — compaction at scale: 20 incremental
-    updates leave many terms spanning many segment rows (hot terms salted
-    into several shards per delta); compact_index must merge every term
+    updates leave many terms spanning many segment rows (one per delta
+    that touched the term); compact_index must merge every term
     back to ONE row, re-enable version-gated block pruning index-wide, and
     stay rank+score identical to a scratch build over everything."""
     import math
@@ -1074,8 +1094,7 @@ def test_boost_batch_matches_single_bitwise(spark, corpus):
 
 
 def test_update_segments_match_fresh_build_of_delta(spark, tmp_path):
-    """With no hot term anywhere, update_index appends exactly one segment
-    row per delta term, and those rows carry the same (term, df, cf, blob)
+    """update_index appends exactly one segment row per delta term, and those rows carry the same (term, df, cf, blob)
     as a fresh build_index of the delta alone — blob bytes depend only on
     the delta's (doc, tf, dl) postings, never on avgdl."""
     from collections import Counter

@@ -1,7 +1,7 @@
 """r5: positional layer + exact phrase/proximity top-k
 (build_index(positions=True) -> bm25_phrase_topk). Covers codec
 roundtrip/merge, phrase rank+score identity vs the single-threaded
-oracle, hot-term salted positional merge, duplicate-token phrases,
+oracle, hot terms' positional lists, duplicate-token phrases,
 absent terms, ordered-proximity slop, and the positional LSM lifecycle
 (update_index segment append -> compact_index blob merge)."""
 
@@ -57,8 +57,6 @@ def test_positional_codec_roundtrip_fuzz():
 def pos_index(spark, tmp_path_factory):
     t = with_doc_id(synth_transcripts(spark, n_convs=60, seed=42)).cache()
     out = str(tmp_path_factory.mktemp("posidx") / "idx")
-    # low hot threshold so hot terms actually exercise the salted
-    # positional phase-2 merge
     build_index(t, out, num_buckets=4, hot_df_threshold=120,
                 hot_sample_frac=0.5, positions=True)
     docs = [(r["doc_id"], r["text"])
@@ -218,9 +216,9 @@ def test_positional_update_compact_lifecycle(spark, tmp_path):
 
 
 def test_positional_update_segments_match_fresh_build(spark, tmp_path):
-    """Positional analogue of the main-layer segment check: with no hot
-    term, the positional rows update_index appends equal, on (term, df,
-    blob), those of a fresh positions=True build of the delta alone."""
+    """Positional analogue of the main-layer segment check: the positional
+    rows update_index appends equal, on (term, df, blob), those of a fresh
+    positions=True build of the delta alone."""
     import os
     from collections import Counter
 

@@ -257,10 +257,14 @@ def test_bm25_doc_filter_pushes_down_and_semijoins(spark, tmp_path):
         "Sort" in p  # formatted plans list operators top-down (sink first)
 
 
-def test_bm25_prefix_expansion_scan_reads_term_only(spark, tmp_path):
+def test_bm25_prefix_expansion_scan_reads_term_only(spark, tmp_path,
+                                                   monkeypatch):
     """Prefix expansion reads the term dictionary, whose one load is a
-    scan column-pruned to (term, df, max_impact) — posting blobs are
-    never read to expand a prefix (asserted on the executed plan)."""
+    driver-side pyarrow read of the version's part files, column-pruned to
+    (term, df, max_impact): it runs no Spark job, and posting blobs are
+    never read to expand a prefix."""
+    import pyarrow.parquet as pq
+
     from macrobase_spark.fixtures.transcripts import synth_transcripts, with_doc_id
     from macrobase_spark.index.build import (build_index, read_index,
                                              open_index)
@@ -269,12 +273,23 @@ def test_bm25_prefix_expansion_scan_reads_term_only(spark, tmp_path):
     out = str(tmp_path / "plan_idx_p")
     build_index(df, out, num_buckets=4, hot_df_threshold=10 ** 9)
     read_index(spark, out)
-    td = open_index(spark, out)[3]
+    columns = []
+    read_table = pq.read_table
+
+    def spy(source, *args, **kwargs):
+        columns.append(kwargs.get("columns"))
+        return read_table(source, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "read_table", spy)
+    sc = spark.sparkContext
+    sc.setJobGroup("prefix-dict-load", "dictionary load")
+    try:
+        td = open_index(spark, out)[3]
+    finally:
+        sc.setJobGroup("", "")
     assert any(t.startswith("tok00") for t in td.terms)
-    runs = spark._jsparkSession.sharedState().statusStore().executionsList()
-    p = runs.apply(runs.size() - 1).physicalPlanDescription()
-    read_schema = p.split("ReadSchema:")[1].split("\n")[0].strip()
-    assert read_schema == "struct<term:string,df:bigint,max_impact:double>"
+    assert list(sc.statusTracker().getJobIdsForGroup("prefix-dict-load")) == []
+    assert columns and all(c == ["term", "df", "max_impact"] for c in columns)
 
 
 def test_bm25_no_tombstone_join_when_none_pending(spark, tmp_path):

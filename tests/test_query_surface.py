@@ -1102,13 +1102,36 @@ def test_bm25_jobs_per_call(spark, corpus, seg_index, shards):
     assert not over, f"jobs (got, bound): {over}"
     # a new index version costs one job to open its handles (the docs
     # schema is inferred; the postings read takes the known schema) and
-    # one to load its dictionary; a warm call reads both from memory
+    # none to load its dictionary (a pyarrow read of its part files); a
+    # warm call reads both from memory
     invalidate_index_cache(out)
     assert _jobs(spark, "read cold", lambda: read_index(spark, out)) == 1
-    assert _jobs(spark, "dict cold", lambda: open_index(spark, out)[3]) == 1
+    assert _jobs(spark, "dict cold", lambda: open_index(spark, out)[3]) == 0
     invalidate_index_cache(out)
-    assert _jobs(spark, "open cold", lambda: open_index(spark, out)[3]) == 2
+    assert _jobs(spark, "open cold", lambda: open_index(spark, out)[3]) == 1
     assert _jobs(spark, "dict warm", lambda: open_index(spark, out)[3]) == 0
+
+
+def test_dictionary_read_equals_spark_fold(spark, seg_index):
+    """The dictionary a new version reads with pyarrow from its part files
+    equals a Spark fold of its postings — on a segmented index, where a
+    term spans several rows: df summed, max_impact maxed, rows counted.
+    An index with no part files has an empty dictionary."""
+    from macrobase_spark.index.build import (TermDict, _dict_rows,
+                                             _term_dict,
+                                             invalidate_index_cache,
+                                             open_index)
+
+    invalidate_index_cache(seg_index)
+    postings, _, _, tdict = open_index(spark, seg_index)
+    want = {r["term"]: (r["df"], r["mi"], r["rows"]) for r in
+            postings.groupBy("term").agg(
+                F.sum("df").alias("df"), F.max("max_impact").alias("mi"),
+                F.count("*").alias("rows")).collect()}
+    assert max(rows for _, _, rows in want.values()) > 1  # segmented
+    assert tdict.terms == sorted(want)
+    assert {t: tuple(s) for t, s in tdict.stats.items()} == want
+    assert _term_dict(_dict_rows([])) == TermDict([], {})
 
 
 def _sql_plans(spark, after: int = -1) -> dict[int, str]:
@@ -1121,8 +1144,8 @@ def _sql_plans(spark, after: int = -1) -> dict[int, str]:
 
 def _build_jobs(spark, df, root, **kw):
     """One warm build_index of df (a first build warms it up): its Spark
-    jobs — its main thread's job group plus the jobs of its helper threads
-    (hot-term detection and the docs write), which carry no job group —,
+    jobs — its main thread's job group plus the jobs of its helper thread
+    (the docs write), which carry no job group —,
     how many stages of them ran one task per input partition (the stages
     that read the input), and the physical plan of its postings write."""
     sc = spark.sparkContext
@@ -1157,18 +1180,21 @@ def test_build_index_jobs(spark, corpus, tmp_path):
     counts), over the 60-conversation corpus read from parquet and as the
     cached DataFrame itself. Both have fewer partitions than the session's
     shuffle partitions, so the build's parallelism floor repartitions the
-    input: once, cached for its three queries (the feature aggregate,
-    hot-term detection and the postings write), so one stage reads the
-    input. The encode path is one linear plan: its postings write holds no
-    grouped-pandas stage or union, and the only cached relations it reads
-    hold input rows (the text column), never a tokenized or encoded one."""
+    input: once, cached for its two queries (the feature aggregate and the
+    postings write), so one stage reads the input. The encode path is one
+    linear plan: its postings write holds exactly two Arrow kernels
+    (tokenize and encode), no grouped-pandas stage or union, and the only
+    cached relations it reads hold input rows (the text column), never a
+    tokenized or encoded one."""
     kw = dict(num_buckets=4, hot_df_threshold=120, hot_sample_frac=0.5)
     corpus[0].write.parquet(str(tmp_path / "corpus"))
     parquet = spark.read.parquet(str(tmp_path / "corpus"))
     for name, df, caches in [("parquet", parquet, 1), ("cached", corpus[0], 2)]:
         n, reads, write = _build_jobs(spark, df, tmp_path / name, **kw)
-        assert n <= 12 and reads == 1, (name, n, reads)
-        assert "MapInArrow" in write
+        assert n <= 9 and reads == 1, (name, n, reads)
+        final = write.split("== Initial Plan ==")[0]
+        assert len(re.findall(r"MapInArrow \(\d+\)", final)) == 2, (
+            name, final)
         for op in ("FlatMapGroupsInPandas", "Union"):
             assert op not in write, (name, op)
         lines = write.splitlines()
