@@ -11,7 +11,7 @@ Every term-query entry point runs the same three stages:
   1. resolve (`_resolve`, driver-side): parse the micro-syntax, drop
      stoplisted tokens, add synonym alternates, expand prefix / fuzzy /
      regexp tokens against the term dictionary (`_TermDict` over the
-     `build.open_index` TermDict: term → (df, max_impact, rows), memoized
+     `build.open_version` TermDict: term → (df, max_impact, rows), memoized
      with the index handles of the same version), apply boost precedence,
      and refuse the option combinations no surface supports. The result is
      one `_Clauses(terms, nterms, boosts)` per query. Every df — hence
@@ -34,15 +34,14 @@ Every term-query entry point runs the same three stages:
      kernel unpruned and keep the doc ids (`_match_set`). A query with a
      few candidate rows costs less to score here than one Spark job costs
      to plan and schedule, so the scoring surfaces run no Spark job.
-  3. restrict and rank: pending tombstones drop on the driver (`_live`,
-     from a pyarrow read of the pending ids). With no docs-metadata
-     modifier the top-k is taken on the driver in ranking order (score
-     desc, doc_id asc) and returned as a local DataFrame. The modifiers
-     that need the docs table (doc_filter, anomaly, recency, sort_by,
-     collapse, `after`) run as before in Spark, over a local DataFrame of
-     the match set: the doc_filter semi-join (`_filtered`), then the
-     surface's own native tail (weights, collapse, cursor, TakeOrdered
-     top-k, per-query windows, facet aggregation).
+  3. restrict and rank, on the driver: pending tombstones drop (`_live`,
+     from a pyarrow read of the pending ids), and so do docs outside a
+     doc_filter (`_allowed`: the filter's doc ids, one Spark job per call
+     with the predicate pushed down to the docs scan). The docs-metadata
+     modifiers (anomaly, recency, sort_by, collapse, `after`) and the facet
+     counts read only the docs columns they need with pyarrow from the
+     version's docs part files (`_docs`) and finish in numpy in ranking
+     order (score desc, doc_id asc); the result is a local DataFrame.
 
 A sharded call is the same pipeline over several index handles, one
 kernel run per shard. The phrase paths keep a Spark read of the
@@ -61,12 +60,18 @@ import math
 import re as _re
 from bisect import bisect_left
 from collections import Counter
+from functools import reduce
 from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
+from pyspark.sql.types import (DateType, NumericType, StringType, StructType,
+                               TimestampNTZType, TimestampType)
 
 from macrobase_spark.index.build import (open_version, has_tombstones,
                                          deleted_ids, TermDict, K1, B,
@@ -232,12 +237,11 @@ def _split_field_scopes(q: str, doc_filter: str | None = None
                       else f"({doc_filter}) AND ({scope})")
 
 
-def _sort_columns(sort_by: str):
-    """Parse a 'col [asc|desc][, col [asc|desc]]*' spec into Spark sort
-    columns (metadata column names only — not expressions; determinism
-    comes from the doc_id tiebreak the caller appends)."""
-    cols = []
-    names = []
+def _sort_spec(sort_by: str) -> list[tuple[str, bool]]:
+    """Parse a 'col [asc|desc][, col [asc|desc]]*' spec into (column,
+    descending) pairs (metadata column names only — not expressions;
+    determinism comes from the doc_id tiebreak the caller appends)."""
+    spec = []
     for part in sort_by.split(","):
         toks = part.strip().split()
         if not toks or len(toks) > 2 or not toks[0].isidentifier():
@@ -248,10 +252,8 @@ def _sort_columns(sort_by: str):
         if direction not in ("asc", "desc"):
             raise ValueError(f"sort_by: direction must be asc|desc, got "
                              f"{toks[1]!r}")
-        c = F.col(toks[0])
-        cols.append(c.desc() if direction == "desc" else c.asc())
-        names.append(toks[0])
-    return cols, names
+        spec.append((toks[0], direction == "desc"))
+    return spec
 
 
 def _edit_distance(a: str, b: str, limit: int) -> int:
@@ -295,16 +297,23 @@ def _edit_distances(a: str, bs: list[str]) -> np.ndarray:
     return prev[np.arange(len(bs)), [len(b) for b in bs]]
 
 
-def _after_cursor(rel: DataFrame, after) -> DataFrame:
-    """Search-after: keep only rows STRICTLY after the cursor in ranking
-    order (score desc, doc_id asc) — exact because scores are
-    bitwise-reproducible. The cursor is a previous-page Row (or mapping)
-    with doc_id/score fields, or an explicit (score, doc_id) tuple."""
+def _cursor(after) -> tuple[float, int]:
+    """A search-after cursor's (score, doc_id): a previous-page Row (or
+    mapping) with doc_id/score fields, or an explicit (score, doc_id)
+    tuple."""
     try:
-        s0, d0 = float(after["score"]), int(after["doc_id"])
+        return float(after["score"]), int(after["doc_id"])
     except (TypeError, IndexError, KeyError):
         s0, d0 = after
-        s0, d0 = float(s0), int(d0)
+        return float(s0), int(d0)
+
+
+def _after_cursor(rel: DataFrame, after) -> DataFrame:
+    """Search-after over the phrase paths' Spark relation (bm25_topk cuts
+    on the driver): keep only rows STRICTLY after the cursor in ranking
+    order (score desc, doc_id asc) — exact because scores are
+    bitwise-reproducible."""
+    s0, d0 = _cursor(after)
     return rel.filter((F.col("score") < s0)
                       | ((F.col("score") == s0) & (F.col("doc_id") > d0)))
 
@@ -323,19 +332,20 @@ def _rank_within(rel: DataFrame, key: str, col: str = "rank",
 # ------------------------------------------------ shared query stages
 
 class _Index(NamedTuple):
-    """One index version: docs handle, stats, term dictionary and the
-    postings part files per bucket."""
+    """One index version: docs handle, stats, term dictionary, the
+    postings part files per bucket and the docs part files."""
     docs: DataFrame
     stats: dict
     tdict: TermDict
     files: dict[int, list[str]]
+    docs_files: list[str]
     dir: str
 
 
 def _open(spark: SparkSession, index_dir: str) -> _Index:
     v = open_version(spark, index_dir)
     _, docs, stats = v.handles
-    return _Index(docs, stats, v.tdict, v.files, index_dir)
+    return _Index(docs, stats, v.tdict, v.files, v.docs_files, index_dir)
 
 
 class _Clauses(NamedTuple):
@@ -521,8 +531,6 @@ def _candidates(h: _Index, terms, cols: tuple[str, ...] = ("term", "blob")
     terms' buckets are read; a row group is read only when its term
     statistics can hold a wanted term (part files are term-sorted), and
     its rows then filter on `term IN (…)`."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     from macrobase_spark.index.xxh64 import term_bucket
@@ -659,16 +667,99 @@ def _scores(h: _Index, queries: dict, idfs: dict[str, float], avgdl: float,
                          k, mode, msm, single, lambdas)
 
 
-def _live(handles: list[_Index], ids: np.ndarray, *cols: np.ndarray
-          ) -> tuple[np.ndarray, ...]:
-    """`ids` (and the aligned `cols`) minus the handles' pending deletes:
+def _live(handles: list[_Index], ids: np.ndarray, *cols: np.ndarray,
+          allowed: np.ndarray | None = None) -> tuple[np.ndarray, ...]:
+    """`ids` (and the aligned `cols`) minus the handles' pending deletes —
     they vanish at once, while corpus stats count them until compact_index
-    purges (Lucene semantics)."""
+    purges (Lucene semantics) — and, given `allowed` (`_allowed`), minus
+    the docs outside the doc_filter."""
     dead = np.concatenate([deleted_ids(h.dir) for h in handles])
-    if not len(dead):
-        return (ids, *cols)
-    keep = ~np.isin(ids, dead)
+    keep = ~np.isin(ids, dead) if len(dead) else np.ones(len(ids), bool)
+    if allowed is not None:
+        keep &= np.isin(ids, allowed)
     return (ids[keep], *(c[keep] for c in cols))
+
+
+def _allowed(handles: list[_Index], doc_filter: str | None
+             ) -> np.ndarray | None:
+    """The doc ids that pass doc_filter (None without one). The filter is
+    a Spark SQL predicate over the docs metadata, so it runs as ONE Spark
+    job over the handles' docs tables, with the predicate pushed down to
+    the docs parquet scan, which reads doc_id and the filter's columns."""
+    if doc_filter is None:
+        return None
+    return reduce(DataFrame.unionByName, [
+        h.docs.filter(F.expr(doc_filter)).select("doc_id") for h in handles
+    ]).toArrow()["doc_id"].to_numpy()
+
+
+def _docs(handles: list[_Index], cols) -> pa.Table:
+    """doc_id and `cols` of the handles' docs tables in doc_id order (so
+    np.searchsorted on doc_id finds a doc's row), read on the driver with
+    pyarrow from exactly the index versions' docs part files and typed as
+    Spark reads the docs table (a column a part file lacks reads NULL)."""
+    import pyarrow.parquet as pq
+
+    names = list(dict.fromkeys(["doc_id", *cols]))
+    schema = to_arrow_schema(StructType(
+        [handles[0].docs.schema[c] for c in names]))
+    parts = [schema.empty_table()]
+    for f in (f for h in handles for f in h.docs_files):
+        with pq.ParquetFile(f) as pf:
+            t = pf.read(columns=[c for c in names
+                                 if c in pf.schema_arrow.names])
+        parts.append(pa.table(
+            [t[c] if c in t.column_names
+             else pa.nulls(t.num_rows, schema.field(c).type) for c in names],
+            names=names).cast(schema))
+    t = pa.concat_tables(parts)
+    ids = t["doc_id"].to_numpy()
+    return t if np.all(ids[1:] >= ids[:-1]) else t.take(pc.sort_indices(ids))
+
+
+def _rank_codes(values) -> np.ndarray:
+    """Dense ascending ranks of an Arrow column with NULLs first and all
+    NULLs tied: Spark's asc order (NULLS FIRST); negated, its desc order
+    (NULLS LAST). Strings compare as UTF-8 bytes, as Spark's do."""
+    return pc.rank(values, sort_keys="ascending", null_placement="at_start",
+                   tiebreaker="dense").to_numpy().astype(np.int64)
+
+
+def _epoch_seconds(values, dt, tz: str) -> np.ndarray:
+    """A recency column as epoch seconds, NaN for NULL, as the Spark
+    expressions cast(col as double) (numeric) and unix_timestamp(col)
+    (timestamp, date, string: whole seconds, floored; dates and strings
+    read as local time in the session time zone `tz`) evaluate it."""
+    if isinstance(dt, NumericType):
+        x = pc.cast(values, pa.float64())
+        secs = np.array(x.fill_null(0), dtype=np.float64)
+    else:
+        if isinstance(dt, (StringType, DateType)):
+            values = pc.assume_timezone(
+                pc.strptime(values, format="%Y-%m-%d %H:%M:%S", unit="s",
+                            error_is_null=True)
+                if isinstance(dt, StringType)
+                else pc.cast(values, pa.timestamp("s")),
+                tz, ambiguous="earliest", nonexistent="latest")
+        x = pc.cast(pc.cast(values, pa.timestamp("us", "UTC")), pa.int64())
+        secs = np.floor_divide(x.fill_null(0).to_numpy(),
+                               1_000_000).astype(np.float64)
+    secs[np.asarray(pc.is_null(x))] = np.nan
+    return secs
+
+
+def _hits(spark: SparkSession, ids: np.ndarray, scores: np.ndarray,
+          docs: DataFrame | None = None, meta: pa.Table | None = None,
+          names=()) -> DataFrame:
+    """A top-k relation: (doc_id, score) plus the `names` docs-metadata
+    columns (from `meta`, row-aligned; none for a zero-hit result), typed
+    as the docs table types them."""
+    types = {c: docs.schema[c].dataType for c in dict.fromkeys(names)}
+    return _frame(spark, ", ".join(
+        [_HITS] + [f"{c} {t.simpleString()}" for c, t in types.items()]),
+        doc_id=ids, score=scores, **{
+            c: pa.nulls(0, to_arrow_type(t)) if meta is None else meta[c]
+            for c, t in types.items()})
 
 
 def _top(ids: np.ndarray, scores: np.ndarray, k: int
@@ -681,35 +772,17 @@ def _top(ids: np.ndarray, scores: np.ndarray, k: int
 def _frame(spark: SparkSession, schema: str, **cols) -> DataFrame:
     """Driver-side columns as a DataFrame: an Arrow table becomes a local
     relation, which Spark collects without running a job."""
-    import pyarrow as pa
-
     return spark.createDataFrame(pa.table(cols), schema)
 
 
-def _union(parts: list[DataFrame]) -> DataFrame:
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def _filtered(rel: DataFrame, handles: list[_Index],
-              doc_filter: str | None) -> DataFrame:
-    """The doc_filter semi-join against the handles' filtered docs
-    projections (a no-op without a doc_filter)."""
-    if doc_filter is None:
-        return rel
-    return rel.join(_union([h.docs.filter(F.expr(doc_filter))
-                            .select("doc_id") for h in handles]),
-                    "doc_id", "semi")
-
-
 def _match_set(handles: list[_Index], clauses: _Clauses, mode: str = "or",
-               msm: int | None = None) -> np.ndarray:
+               msm: int | None = None, doc_filter: str | None = None
+               ) -> np.ndarray:
     """The doc ids of the query's full match set over index handles (a
     doc lives in one shard, so shard sets union exactly) under mode / m /
-    exclusions / tombstones — the scoring kernel with no pruning, one run
-    per handle. A doc_filter applies after, as `_matched`'s semi-join."""
+    exclusions / tombstones / doc_filter, in ascending order — the scoring
+    kernel with no pruning, one run per handle. The doc_filter's job runs
+    only when some doc matches."""
     terms = clauses.terms
     ids = [_NO_HITS[0]]
     if terms and (msm is None or msm <= len(terms)):
@@ -717,26 +790,9 @@ def _match_set(handles: list[_Index], clauses: _Clauses, mode: str = "or",
                         _idfs(h.tdict, h.stats["n_docs"], terms),
                         h.stats["avgdl"], mode=mode, msm=msm)
                 .get("", _NO_HITS)[0] for h in handles]
-    return _live(handles, np.concatenate(ids))[0]
-
-
-def _matched(spark: SparkSession, handles: list[_Index], ids: np.ndarray,
-             doc_filter: str | None) -> DataFrame:
-    """A match set as a (doc_id) relation, under the doc_filter."""
-    return _filtered(_frame(spark, "doc_id long", doc_id=ids), handles,
-                     doc_filter)
-
-
-def _empty_topk(spark: SparkSession, docs: DataFrame | None = None,
-                sort_by: str | None = None,
-                collapse: str | None = None) -> DataFrame:
-    """A zero-hit top-k in the non-empty path's schema (sort_by / collapse
-    append their metadata columns)."""
-    extra = (dict.fromkeys(_sort_columns(sort_by)[1]) if sort_by
-             else [collapse] if collapse else [])
-    return spark.createDataFrame([], ", ".join(
-        ["doc_id long", "score double"]
-        + [f"{c} {docs.schema[c].dataType.simpleString()}" for c in extra]))
+    ids = np.sort(np.concatenate(ids))
+    return _live(handles, ids, allowed=_allowed(handles, doc_filter)
+                 if len(ids) else None)[0]
 
 
 def _check_shards(where: str, handles: list[_Index], pq: ParsedQuery) -> None:
@@ -783,13 +839,13 @@ def bm25_topk(
     doc_filter is a SQL boolean expression over the docs table's metadata
     columns (conv_id, turn_idx, role, tool — persisted at build time from
     the transcripts input), e.g. ``doc_filter="role = 'assistant'"``:
-    non-matching docs are excluded BEFORE top-k selection (a semi-join
-    against the filtered docs projection — filter pushdown reaches the
-    docs parquet scan), so the k results are the best k *within* the
-    filtered population, not a post-filter of the unfiltered top-k.
-    Because filtering changes which docs can occupy the top-k, every
-    block-pruning θ computed from raw scores is invalid — pruning is
-    disabled (exactness over speed, same policy as the anomaly gate).
+    non-matching docs are excluded BEFORE top-k selection (one Spark job
+    evaluates the predicate, pushed down to the docs parquet scan, and
+    its doc ids restrict the match set on the driver), so the k results
+    are the best k *within* the filtered population, not a post-filter of
+    the unfiltered top-k. Because filtering changes which docs can occupy
+    the top-k, every block-pruning θ computed from raw scores is invalid
+    — pruning is disabled (exactness over speed, as for anomaly).
 
     Query tokens ending in ``*`` are prefix wildcards (``merg*``):
     expanded against the term dictionary by a bisect into the sorted
@@ -894,19 +950,22 @@ def bm25_topk(
     matching doc competes (block pruning is disabled — a low-scoring
     match can win a metadata sort), ties break by ascending doc_id, and
     the BM25 score still rides along in the output together with the
-    sort columns.
+    sort columns. NULLs sort first under asc and last under desc, as in
+    Spark.
 
     ``recency_half_life=7.0`` is recency-decay scoring (the freshness
     modifier a transcript corpus wants — Elasticsearch's exp/gauss decay
     family): score ×= 0.5^(age_days / half_life), where age is measured
     against ``recency_ref`` (epoch seconds) or, when None, the corpus's
     own max ``recency_col`` — deterministic per index state, no
-    wall-clock in the plan. The timestamp rides the same docs-projection
-    join as the anomaly modifier (column-pruned); docs with a NULL
+    wall-clock involved. Ages are epoch seconds as Spark's cast(double)
+    (numeric column) or unix_timestamp (timestamp, date, string) reads
+    them (`_epoch_seconds`); docs with a NULL
     timestamp keep weight 1. Block pruning is disabled (the reweighting
     reorders), same policy as anomaly_weight. Requires the index to have
     persisted the ``recency_col`` metadata column (build_index persists
-    ``ts`` when the input carries it).
+    ``ts`` when the input carries it); a bad half-life or column raises
+    even for a query that matches nothing.
 
     ``synonyms={"fast": ["quick", "rapid"]}`` is query-time synonym
     expansion (the classic QueryParser expand=true behavior): a query
@@ -941,17 +1000,33 @@ def bm25_topk(
     ix = _open(spark, index_dir)
     docs, stats = ix.docs, ix.stats
     have = sorted(set(docs.columns) - {"doc_id"})
-    if sort_by is not None:
-        sort_cols, names = _sort_columns(sort_by)
-        missing = [c for c in names if c not in have]
-        if missing:
-            raise ValueError(
-                f"sort_by: {missing!r} not sortable docs-metadata "
-                f"columns (have {have})")
+    spec = _sort_spec(sort_by) if sort_by is not None else []
+    missing = [c for c, _ in spec if c not in have]
+    if missing:
+        raise ValueError(
+            f"sort_by: {missing!r} not sortable docs-metadata "
+            f"columns (have {have})")
     if collapse is not None and collapse not in have:
         raise ValueError(
             f"collapse: {collapse!r} not a docs-metadata column "
             f"(have {have})")
+    if recency_half_life is not None:
+        if not recency_half_life > 0:
+            raise ValueError("recency_half_life must be > 0 (days), got "
+                             f"{recency_half_life!r}")
+        if recency_col not in have:
+            raise ValueError(
+                f"recency: {recency_col!r} is not a docs-metadata column "
+                f"(have {have}) — the index must persist the timestamp "
+                "at build time")
+        ts_type = docs.schema[recency_col].dataType
+        if not isinstance(ts_type, (NumericType, TimestampType, DateType,
+                                    TimestampNTZType, StringType)):
+            raise ValueError(
+                f"recency: {recency_col!r} has type "
+                f"{ts_type.simpleString()} — need a timestamp/date/"
+                "numeric-epoch docs column")
+    names = [c for c, _ in spec] or ([collapse] if collapse else [])
     td = ix.tdict
     [clauses] = _resolve(td, stats, [_parse_query_full(query)], mode, msm,
                          synonyms, max_expansions)
@@ -959,19 +1034,17 @@ def bm25_topk(
     # no indexable term, or an m above the indexable term count: nothing
     # can match
     if not terms or (msm is not None and msm > len(terms)):
-        return _empty_topk(spark, docs, sort_by, collapse)
+        return _hits(spark, *_NO_HITS, docs, names=names)
     n, avgdl = stats["n_docs"], stats["avgdl"]
-    # the docs-metadata modifiers run in Spark over the match set; without
-    # them the top-k is taken on the driver
-    plain = (anomaly_max is None and not anomaly_weight
-             and doc_filter is None and after is None and sort_by is None
-             and collapse is None and recency_half_life is None)
-    # anomaly/filter/exclusion/tombstone modifiers change the final ranking
-    # AFTER raw-BM25 scoring (filtering can promote docs from pruned
-    # blocks; weighting reorders), so every block-pruning θ computed from
-    # raw scores is invalid — score fully. Exactness over speed, same
-    # policy as the stale-version gate.
-    allow_prune = (plain and not nterms and msm is None
+    anomaly = anomaly_max is not None or bool(anomaly_weight)
+    # filter/anomaly/recency/sort/collapse/cursor/exclusion/tombstone
+    # modifiers change the final ranking AFTER raw-BM25 scoring (filtering
+    # can promote docs from pruned blocks; weighting reorders), so every
+    # block-pruning θ computed from raw scores is invalid — score fully.
+    # Exactness over speed, same policy as the stale-version gate.
+    allow_prune = (not anomaly and doc_filter is None and after is None
+                   and not names and recency_half_life is None
+                   and not nterms and msm is None
                    and not has_tombstones(index_dir)
                    and _bounds_current(index_dir, stats, terms))
     # multi-term WAND needs unboosted disjunctive bounds; a boost is a
@@ -982,78 +1055,52 @@ def bm25_topk(
     ids, sc = _live([ix], *_scores(
         ix, {"": clauses}, _idfs(td, n, terms), avgdl, k, mode, msm,
         set(terms) if allow_prune and len(terms) == 1 else set(),
-        lambdas).get("", _NO_HITS))
-    if plain:
-        ids, sc = _top(ids, sc, k)
-        return _frame(spark, _HITS, doc_id=ids, score=sc)
-    scored = _filtered(_frame(spark, _HITS, doc_id=ids, score=sc), [ix],
-                       doc_filter)
-    if anomaly_max is not None or anomaly_weight:
-        scored = scored.join(docs.select("doc_id", "anomaly"), "doc_id", "inner")
+        lambdas).get("", _NO_HITS), allowed=_allowed([ix], doc_filter))
+    # the docs-metadata modifiers, in the order their semantics compose:
+    # anomaly filter and weight, recency weight, then the metadata sort —
+    # or collapse, then the cursor — and the top k
+    need = (["anomaly"] * anomaly
+            + [recency_col] * (recency_half_life is not None) + names)
+    meta = _docs([ix], need) if need else None
+    # each hit's docs row (a placeholder when no docs column is needed)
+    pos = np.searchsorted(meta["doc_id"].to_numpy(), ids) if need else ids
+    if anomaly:
+        a = np.array(meta["anomaly"].take(pos), dtype=np.float64)
         if anomaly_max is not None:
-            scored = scored.filter(F.col("anomaly") <= anomaly_max)
+            keep = a <= anomaly_max
+            ids, sc, pos, a = ids[keep], sc[keep], pos[keep], a[keep]
         if anomaly_weight:
-            scored = scored.withColumn(
-                "score", F.col("score") * (1.0 - anomaly_weight * F.col("anomaly"))
-            )
-        scored = scored.drop("anomaly")
+            sc = sc * (1.0 - anomaly_weight * a)
     if recency_half_life is not None:
-        if not recency_half_life > 0:
-            raise ValueError("recency_half_life must be > 0 (days), got "
-                             f"{recency_half_life!r}")
-        if recency_col not in docs.columns:
+        ts = _epoch_seconds(meta[recency_col], ts_type,
+                            spark.conf.get("spark.sql.session.timeZone"))
+        if recency_ref is None and np.isnan(ts).all():
             raise ValueError(
-                f"recency: {recency_col!r} is not a docs-metadata column "
-                f"(have {have}) — the index must persist the timestamp "
-                "at build time")
-        from pyspark.sql.types import (DateType, NumericType, StringType,
-                                       TimestampNTZType, TimestampType)
-
-        dt = docs.schema[recency_col].dataType
-        if isinstance(dt, NumericType):
-            # numeric epoch-seconds column persisted verbatim at build
-            # time: unix_timestamp() would parse it as a date STRING and
-            # return NULL, silently making every weight 1.0 when a caller
-            # passes recency_ref — cast directly instead
-            ts_sec = F.col(recency_col).cast("double")
-        elif isinstance(dt, (TimestampType, TimestampNTZType, DateType,
-                             StringType)):
-            ts_sec = F.unix_timestamp(F.col(recency_col)).cast("double")
-        else:
-            raise ValueError(
-                f"recency: {recency_col!r} has type {dt.simpleString()} — "
-                "need a timestamp/date/numeric-epoch docs column")
-        ref = recency_ref
-        if ref is None:
-            row = docs.agg(F.max(ts_sec).alias("m")).collect()[0]
-            if row["m"] is None:
-                raise ValueError(
-                    f"recency: every {recency_col!r} in the docs table is "
-                    "NULL — pass recency_ref explicitly")
-            ref = float(row["m"])
-        age_days = (F.lit(float(ref)) - ts_sec) / 86400.0
-        weight = F.coalesce(
-            F.pow(F.lit(0.5), age_days / float(recency_half_life)),
-            F.lit(1.0))
-        scored = (scored.join(docs.select("doc_id", recency_col), "doc_id",
-                              "left")
-                  .withColumn("score", F.col("score") * weight)
-                  .drop(recency_col))
-    if sort_by is not None:
-        # matching docs ranked by metadata: join the (small, pre-limit)
-        # match set to the docs projection of just the sort columns —
-        # column pruning reaches the docs parquet scan; AQE broadcasts
-        # the smaller side
-        out = scored.join(docs.select("doc_id", *dict.fromkeys(names)),
-                          "doc_id")
-        return out.orderBy(*sort_cols, F.col("doc_id").asc()).limit(k)
+                f"recency: every {recency_col!r} in the docs table is "
+                "NULL — pass recency_ref explicitly")
+        ref = float(np.nanmax(ts) if recency_ref is None else recency_ref)
+        w = np.power(0.5, ((ref - ts[pos]) / 86400.0)
+                     / float(recency_half_life))
+        sc = sc * np.where(np.isnan(w), 1.0, w)
+    if spec:
+        o = np.lexsort([ids] + [
+            -r if desc else r for c, desc in reversed(spec)
+            for r in [_rank_codes(meta[c].take(pos))]])[:k]
+        return _hits(spark, ids[o], sc[o], docs, meta.take(pos[o]), names)
     if collapse is not None:
-        scored = _rank_within(
-            scored.join(docs.select("doc_id", collapse), "doc_id"),
-            collapse, "_rn").filter(F.col("_rn") == 1).drop("_rn")
+        # the best-ranked doc per key value; NULL keys form one group
+        o = np.lexsort((ids, -sc))
+        _, first = np.unique(_rank_codes(meta[collapse].take(pos[o])),
+                             return_index=True)
+        w = o[np.sort(first)]
+        ids, sc, pos = ids[w], sc[w], pos[w]
     if after is not None:
-        scored = _after_cursor(scored, after)
-    return scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+        s0, d0 = _cursor(after)
+        keep = (sc < s0) | ((sc == s0) & (ids > d0))
+        ids, sc, pos = ids[keep], sc[keep], pos[keep]
+    o = np.lexsort((ids, -sc))[:k]
+    return _hits(spark, ids[o], sc[o], docs,
+                 meta.take(pos[o]) if names else None, names)
 
 
 def _batch_wand_lambdas(h: _Index, q_terms: dict[str, list[str]], k: int
@@ -1124,9 +1171,8 @@ def bm25_topk_batch(
     `_score_kernel` run that decodes every row once, scores each (term,
     doc) once and sums per (query, doc) in ascending-term order
     (bit-identical to bm25_topk per query — bm25_topk is a batch of one),
-    then each query's top-k on the driver (a per-query window in Spark
-    under a doc_filter). Returns (query_id, doc_id, score, rank); without
-    a doc_filter no Spark job runs.
+    then each query's top-k on the driver. Returns (query_id, doc_id,
+    score, rank); only a doc_filter runs a Spark job (one per call).
 
     A term shared by several queries is read and decoded once. A term
     that only one-term queries use is block-max pruned exactly as
@@ -1156,8 +1202,9 @@ def bm25_topk_batch(
     Not with mode='and' / min_should_match (same policy as bm25_topk).
 
     doc_filter (SQL expression over docs metadata, see bm25_topk) applies
-    to EVERY query in the batch: one filtered docs projection, one
-    semi-join before the per-query top-k windows. Prefix / fuzzy /
+    to EVERY query in the batch: Spark evaluates it once, and its doc ids
+    restrict every query's hits on the driver before the query's top-k.
+    Prefix / fuzzy /
     regexp tokens expand per query against the term dictionary;
     mode='and' rejects them (same as bm25_topk). Exclusions (``-term`` /
     ``-pre*``, see bm25_topk) apply per query inside the kernel."""
@@ -1167,7 +1214,7 @@ def bm25_topk_batch(
     scoped = [qid for qid, q in queries.items()
               if _split_field_scopes(q)[1] is not None]
     if scoped:
-        # a batch runs ONE doc_filter semi-join for every query; a
+        # a batch applies ONE doc_filter to every query; a
         # per-query field scope would need per-query doc restriction —
         # refuse loudly rather than silently scoring 'role'/'assistant'
         # as ordinary terms
@@ -1200,21 +1247,15 @@ def bm25_topk_batch(
     lambdas = (_batch_wand_lambdas(ix, wand_q, k)
                if wand and allow_prune and mode == "or" and wand_q
                and not any(c.boosts for c in live.values()) else None)
-    hits = [(qid, *_live([ix], *h)) for qid, h in _scores(
-        ix, live, _idfs(td, n, all_terms), avgdl, k, mode, msm, single,
-        lambdas).items()]
-    if doc_filter is None:
-        hits = [(qid, *_top(ids, sc, k)) for qid, ids, sc in hits]
-    cols = dict(query_id=[qid for qid, ids, _ in hits for _ in ids],
-                doc_id=np.concatenate([_NO_HITS[0], *(h[1] for h in hits)]),
-                score=np.concatenate([_NO_HITS[1], *(h[2] for h in hits)]))
-    if doc_filter is None:
-        return _frame(spark, _BATCH, **cols, rank=[
-            r for _, ids, _ in hits for r in range(1, len(ids) + 1)])
-    scored = _filtered(_frame(spark, "query_id string, " + _HITS, **cols),
-                       [ix], doc_filter)
-    return (_rank_within(scored, "query_id").filter(F.col("rank") <= k)
-            .select("query_id", "doc_id", "score", "rank"))
+    allowed = _allowed([ix], doc_filter)
+    hits = [(qid, *_top(*_live([ix], *h, allowed=allowed), k))
+            for qid, h in _scores(ix, live, _idfs(td, n, all_terms), avgdl,
+                                  k, mode, msm, single, lambdas).items()]
+    return _frame(
+        spark, _BATCH, query_id=[qid for qid, ids, _ in hits for _ in ids],
+        doc_id=np.concatenate([_NO_HITS[0], *(h[1] for h in hits)]),
+        score=np.concatenate([_NO_HITS[1], *(h[2] for h in hits)]),
+        rank=[r for _, ids, _ in hits for r in range(1, len(ids) + 1)])
 
 
 def bm25_oracle(
@@ -1238,10 +1279,8 @@ def bm25_oracle(
     corpus vocabulary, ``-term``/``-pre*`` exclude docs containing any
     matching term, ``term^2``/``pre*^2`` boost contributions (same c·b
     post-multiplication and precedence as the engine)."""
-    import re
-
     stop = set(stopwords or ())
-    tokenized = {d: [t for t in re.findall(TOKEN_PATTERN, t_.lower())
+    tokenized = {d: [t for t in _re.findall(TOKEN_PATTERN, t_.lower())
                      if t not in stop] for d, t_ in docs}
     n = len(tokenized)
     avgdl = sum(len(v) for v in tokenized.values()) / n
@@ -1280,7 +1319,7 @@ def bm25_oracle(
         if smap:
             terms = sorted(set(terms) |
                            {a for l in smap.values() for a in l})
-    rmap = {pat: sorted(t for t in dfs if re.fullmatch(pat, t))
+    rmap = {pat: sorted(t for t in dfs if _re.fullmatch(pat, t))
             for pat in pq.regexes}
     if rmap:
         terms = sorted(set(terms) |
@@ -1288,7 +1327,7 @@ def bm25_oracle(
     if pq.neg_regexes:
         nterms = sorted(set(nterms) | {
             t for pat in pq.neg_regexes
-            for t in dfs if re.fullmatch(pat, t)})
+            for t in dfs if _re.fullmatch(pat, t)})
     if nprefixes:
         nterms = sorted(set(nterms) | {t for t in dfs
                                        if any(t.startswith(p)
@@ -1378,13 +1417,90 @@ def _positions(spark: SparkSession, ix: _Index, terms: list[str]
 def _restrict(spark: SparkSession, rel: DataFrame, ix: _Index,
               doc_filter: str | None) -> DataFrame:
     """The phrase paths' restrictions over their Spark relation: the
-    pending deletes (read on the driver) anti-joined out, then the
-    doc_filter semi-join."""
+    pending deletes (read on the driver) anti-joined out, then a semi-join
+    to the doc_filter's ids (`_allowed`)."""
     dead = deleted_ids(ix.dir)
     if len(dead):
         rel = rel.join(_frame(spark, "doc_id long", doc_id=dead), "doc_id",
                        "anti")
-    return _filtered(rel, [ix], doc_filter)
+    allowed = _allowed([ix], doc_filter)
+    if allowed is not None:
+        rel = rel.join(_frame(spark, "doc_id long", doc_id=allowed),
+                       "doc_id", "semi")
+    return rel
+
+
+def _gathered(pos_df: DataFrame, idf: dict[str, float], avgdl: float,
+              cand_ids: np.ndarray | None = None,
+              rarest: str | None = None) -> DataFrame:
+    """Per doc, the (term, contrib, pos) parts of the phrase terms it
+    holds: a Python task decodes and scores the positional rows (every
+    term but `rarest` restricted to `cand_ids` when given), then one
+    groupBy gathers the parts per doc."""
+    from macrobase_spark.index.codec import decode_positional
+
+    def decode_score(batches):
+        for pdf in batches:
+            frames = []
+            for term, blob in zip(pdf["term"], pdf["blob"]):
+                ids, tfs, dls, flat = decode_positional(blob)
+                starts = np.concatenate(
+                    ([0], np.cumsum(tfs)))[:-1].astype(np.int64)
+                if cand_ids is not None and term != rarest:
+                    keep = np.flatnonzero(
+                        np.isin(ids, cand_ids, assume_unique=True))
+                    ids, tfs, dls, starts = (ids[keep], tfs[keep], dls[keep],
+                                             starts[keep])
+                if len(ids) == 0:
+                    continue
+                frames.append(pd.DataFrame({
+                    "doc_id": ids.astype(np.int64),
+                    "term": term,
+                    "contrib": _row_contrib(ids, tfs, dls, idf[term], avgdl,
+                                            None, 0, False, None)[1],
+                    "pos": [flat[s:s + int(t_)].astype(np.int32).tolist()
+                            for s, t_ in zip(starts, tfs)],
+                }))
+            if frames:
+                yield pd.concat(frames, ignore_index=True)
+
+    return pos_df.mapInPandas(
+        decode_score,
+        schema="doc_id long, term string, contrib double, pos array<int>"
+    ).groupBy("doc_id").agg(
+        F.collect_list(F.struct("term", "contrib", "pos")).alias("parts"))
+
+
+def _phrase_score(by_term: dict, seq: list[str], max_span: int
+                  ) -> float | None:
+    """The phrase `seq`'s score in one doc (`by_term`: term → its gathered
+    part), or None when the doc lacks a phrase term or holds no ordered
+    match within `max_span`. Greedy ordered match: for each start position
+    of the first token, repeatedly take the SMALLEST position of the next
+    token strictly after the current one — for a fixed start this
+    minimizes the end (exchange argument), so a span-bound match exists
+    iff the greedy chain's span fits. slop=0 degenerates to the
+    consecutive-phrase check (span == len-1 forces adjacency under
+    strictly increasing positions). The score sums the distinct terms'
+    contributions in ascending-term order."""
+    if any(t not in by_term for t in seq):
+        return None
+    pos = {t: np.asarray(by_term[t]["pos"], dtype=np.int64) for t in seq}
+    starts = cur = pos[seq[0]]
+    alive = np.ones(len(starts), dtype=bool)
+    for t in seq[1:]:
+        nxt = pos[t]
+        idx = np.searchsorted(nxt, cur, side="right")
+        alive &= idx < len(nxt)
+        if not alive.any():
+            return None
+        cur = nxt[np.minimum(idx, len(nxt) - 1)]
+    if not (alive & (cur - starts <= max_span)).any():
+        return None
+    s = 0.0
+    for t in sorted(set(seq)):
+        s += float(by_term[t]["contrib"])
+    return s
 
 
 def bm25_phrase_topk(
@@ -1420,12 +1536,10 @@ def bm25_phrase_topk(
     pagination cursor as bm25_topk's (strict ranking-order position;
     exact across pages).
     """
-    import re
-
     from macrobase_spark.index.codec import decode_positional
 
-    seq = re.findall(TOKEN_PATTERN, phrase.lower())
-    out_schema = "doc_id long, score double"
+    seq = _re.findall(TOKEN_PATTERN, phrase.lower())
+    out_schema = _HITS
     if not seq:
         return spark.createDataFrame([], out_schema)
     ix = _positional_index(spark, index_dir)
@@ -1459,83 +1573,14 @@ def bm25_phrase_topk(
         cand_ids = np.sort(np.concatenate(
             [decode_positional(r["blob"])[0] for r in blobs]))
 
-    def decode_score(batches):
-        for pdf in batches:
-            frames = []
-            for term, blob in zip(pdf["term"], pdf["blob"]):
-                ids, tfs, dls, flat = decode_positional(blob)
-                if cand_ids is not None and term != rarest:
-                    keep = np.flatnonzero(
-                        np.isin(ids, cand_ids, assume_unique=True))
-                    if len(keep) < len(ids):
-                        starts = np.concatenate(
-                            ([0], np.cumsum(tfs)))[:-1].astype(np.int64)
-                        segs = [flat[starts[i]:starts[i] + int(tfs[i])]
-                                for i in keep]
-                        flat = (np.concatenate(segs) if segs
-                                else np.empty(0, dtype=np.uint64))
-                        ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-                if len(ids) == 0:
-                    continue
-                tf = tfs.astype(np.float64)
-                dl = dls.astype(np.float64)
-                contrib = idf[term] * (tf * (K1 + 1.0)) / (
-                    tf + K1 * (1.0 - B + B * dl / avgdl))
-                starts = np.concatenate(
-                    ([0], np.cumsum(tfs)))[:-1].astype(np.int64)
-                frames.append(pd.DataFrame({
-                    "doc_id": ids.astype(np.int64),
-                    "term": term,
-                    "contrib": contrib,
-                    "pos": [flat[s:s + int(t_)].astype(np.int32).tolist()
-                            for s, t_ in zip(starts, tfs)],
-                }))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    parts = pos_df.mapInPandas(
-        decode_score,
-        schema="doc_id long, term string, contrib double, pos array<int>")
-    gathered = parts.groupBy("doc_id").agg(
-        F.collect_list(F.struct("term", "contrib", "pos")).alias("parts"))
-
-    n_terms = len(uterms)
-    seq_local = list(seq)
+    gathered = _gathered(pos_df, idf, avgdl, cand_ids, rarest)
     max_span = _orig_len - 1 + max(0, int(slop))
 
     @F.pandas_udf("double")
     def phrase_score(parts_col: pd.Series) -> pd.Series:
-        out = np.full(len(parts_col), np.nan)
-        for i, plist in enumerate(parts_col):
-            by_term = {p["term"]: p for p in plist}
-            if len(by_term) != n_terms:
-                continue  # missing a phrase term
-            pos_sets = {t: np.asarray(by_term[t]["pos"], dtype=np.int64)
-                        for t in by_term}
-            # greedy ordered match: for each start position of the first
-            # token, repeatedly take the SMALLEST position of the next
-            # token strictly after the current one — for a fixed start
-            # this minimizes the end (exchange argument), so a span-bound
-            # match exists iff the greedy chain's span fits. slop=0
-            # degenerates to the consecutive-phrase check (span == len-1
-            # forces adjacency under strictly increasing positions).
-            starts = pos_sets[seq_local[0]]
-            cur = starts
-            alive = np.ones(len(starts), dtype=bool)
-            for j in range(1, len(seq_local)):
-                nxt = pos_sets[seq_local[j]]
-                idx = np.searchsorted(nxt, cur, side="right")
-                alive &= idx < len(nxt)
-                if not alive.any():
-                    break
-                cur = nxt[np.minimum(idx, len(nxt) - 1)]
-            if not (alive & (cur - starts <= max_span)).any():
-                continue
-            s = 0.0
-            for t in sorted(by_term):  # ascending-term float order
-                s += float(by_term[t]["contrib"])
-            out[i] = s
-        return pd.Series(out)
+        return pd.Series([_phrase_score({p["term"]: p for p in plist}, seq,
+                                        max_span) for plist in parts_col],
+                         dtype="float64")
 
     out = (gathered.withColumn("score", phrase_score("parts"))
            .filter(F.col("score").isNotNull())
@@ -1560,15 +1605,13 @@ def phrase_oracle(docs: list[tuple[int, str]], phrase: str,
     stoplist: removed tokens keep their position slot (None — matches
     nothing) while dl/tf/df count survivors, and stoplisted phrase
     tokens shrink the chain but not the span budget."""
-    import re
-
     stop = set(stopwords or ())
-    seq_full = re.findall(TOKEN_PATTERN, phrase.lower())
+    seq_full = _re.findall(TOKEN_PATTERN, phrase.lower())
     seq = [t for t in seq_full if t not in stop]
     if not seq:
         return []
     tokenized = {d: [t if t not in stop else None
-                     for t in re.findall(TOKEN_PATTERN, t_.lower())]
+                     for t in _re.findall(TOKEN_PATTERN, t_.lower())]
                  for d, t_ in docs}
     live = {d: [t for t in toks if t is not None]
             for d, toks in tokenized.items()}
@@ -1636,14 +1679,15 @@ def bm25_facets(
     restrict bm25_topk's rankable population — so the total row equals
     the number of docs bm25_topk could ever return for this query.
 
-    Plan: the match set (`_match_set`: one driver-side kernel run over
-    the bucket/row-group-pruned postings of the scored and excluded
-    terms, minus pending deletes; no positions) → the doc_filter
-    semi-join → ONE join to
-    the docs metadata projection (facet columns only — column pruning
-    reaches the docs parquet scan) → one groupBy over the exploded
-    (facet, value) entries. The posting blobs of non-query terms are
-    never read.
+    Plan, all on the driver: the match set (`_match_set`: one kernel run
+    over the bucket/row-group-pruned postings of the scored and excluded
+    terms, minus pending deletes and docs outside the doc_filter; no
+    positions) → a pyarrow read of doc_id and the facet, range and metric
+    columns from the version's docs part files (`_docs`) → one pass that
+    counts every (facet, label) entry (`_facet_rows`). No Spark job runs
+    unless a doc_filter is given (one job, `_allowed`). Value labels
+    render as Spark's cast(... as string) renders them. The posting blobs
+    of non-query terms are never read.
 
     Returns (facet string, value string, doc_count long), ordered by
     (facet, doc_count desc, value) with '__total__' first. NULL metadata
@@ -1664,7 +1708,9 @@ def bm25_facets(
     __total__ row) — the Elasticsearch sub-aggregation shape:
     ``metrics={"anomaly": ["avg", "max"]}`` appends `anomaly_avg` /
     `anomaly_max` columns computed over the matching docs in each
-    bucket (fns: avg, min, max, sum)."""
+    bucket (fns: avg, min, max, sum). A sum, and the sum behind an avg,
+    adds the values one at a time in ascending doc_id order, so the float
+    result does not depend on how the docs are stored or sharded."""
     return _facets(spark, [index_dir], query, facets, mode, doc_filter,
                    max_expansions, ranges, metrics)
 
@@ -1712,85 +1758,114 @@ def _facets(spark: SparkSession, index_dirs: list[str], query: str,
             f"(have {sorted(have)})")
     [cl] = _resolve(handles[0].tdict, handles[0].stats, [pq], mode,
                     max_expansions=max_expansions)
-    ids = _match_set(handles, cl, mode)
-    if not len(ids):
-        # nothing matches: the lone ('__total__', '', 0) row, with no
-        # Spark job
-        mcols = [f"{col}_{fn}" for col, fns in sorted(metrics.items())
-                 for fn in fns]
-        return spark.createDataFrame(
-            [("__total__", "", 0, *[None] * len(mcols))],
-            "facet string, value string, doc_count long"
-            + "".join(f", {c} double" for c in mcols))
-    all_docs = _union([h.docs.select("doc_id", *fcols) for h in handles])
-    meta = _matched(spark, handles, ids, doc_filter).join(all_docs, "doc_id")
-    return _facet_single_pass(spark, meta, facets, ranges, metrics)
+    ids = _match_set(handles, cl, mode, doc_filter=doc_filter)
+    meta = _docs(handles, fcols)
+    rows = _facet_rows(
+        meta.take(np.searchsorted(meta["doc_id"].to_numpy(), ids)), facets,
+        ranges, metrics, spark.conf.get("spark.sql.session.timeZone"))
+    mcols = [f"{col}_{fn}" for col, fns in sorted(metrics.items())
+             for fn in fns]
+    types = [pa.string(), pa.string(), pa.int64()] + [pa.float64()] * len(
+        mcols)
+    return _frame(spark, ", ".join(
+        ["facet string, value string, doc_count long"]
+        + [f"{c} double" for c in mcols]),
+        **{c: pa.array(v, t) for c, v, t in zip(
+            ["facet", "value", "doc_count", *mcols], zip(*rows), types)})
 
 
-def _facet_single_pass(spark: SparkSession, meta: DataFrame,
-                       facets: list[str], ranges: dict[str, list[float]],
-                       metrics: dict[str, list[str]]) -> DataFrame:
-    """ONE pass over the match set (guide §2.4 — remove repeated subtrees):
-    each matching doc explodes into one (facet, value) entry per facet plus
-    the __total__ entry, and a single groupBy computes every facet's counts
-    and metric sub-aggs together. The old shape unioned one aggregate per
-    facet, and Catalyst re-executed the whole ids-decode → restriction-join
-    subtree for every union branch."""
-    mcols = []
-    aggs = [F.sum("_w").cast("long").alias("doc_count")]
-    for col, fns in sorted(metrics.items()):
-        for fn in fns:
-            name = f"{col}_{fn}"
-            aggs.append(getattr(F, fn)(F.col(col).cast("double"))
-                        .alias(name))
-            mcols.append(name)
+def _edge(x: float) -> str:
+    """A range-facet edge label: 6-digit precision, trailing zeros
+    stripped."""
+    s = f"{float(x):.6f}".rstrip("0").rstrip(".")
+    return s if s else "0"
 
-    def _edge(x: float) -> str:
-        s = f"{float(x):.6f}".rstrip("0").rstrip(".")
-        return s if s else "0"
 
-    entries = [F.struct(F.lit("__total__").alias("facet"),
-                        F.lit("").alias("value"))]
+def _java_str(x: float, digits: str) -> str:
+    """A float as Java's Double/Float.toString renders it (Spark's
+    cast(... as string)), from `digits`, its shortest round-trip repr:
+    as Python's repr for 1e-3 <= |x| < 1e7 and zero, else d.dddE±n."""
+    from decimal import Decimal
+
+    special = {"nan": "NaN", "inf": "Infinity", "-inf": "-Infinity"}
+    if digits in special or x == 0 or 1e-3 <= abs(x) < 1e7:
+        return special.get(digits, digits)
+    m, e = f"{Decimal(digits).normalize():E}".split("E")
+    return f"{m if '.' in m else m + '.0'}E{int(e)}"
+
+
+def _spark_str(values: pa.Array, tz: str) -> list:
+    """An Arrow array rendered as Spark's cast(... as string) renders it
+    (None for NULL): floats as Java's toString, timestamps as
+    'yyyy-MM-dd HH:mm:ss[.ffffff]' in the session time zone `tz`, other
+    types (strings, integers, booleans, dates) as Arrow casts them."""
+    t = values.type
+    if pa.types.is_floating(t):
+        rep = repr if t == pa.float64() else lambda v: str(np.float32(v))
+        return [None if v is None else _java_str(v, rep(v))
+                for v in values.to_pylist()]
+    if pa.types.is_timestamp(t):
+        local = pc.cast(values, pa.timestamp("us", tz if t.tz else None))
+        return pc.replace_substring_regex(pc.strftime(
+            local, "%Y-%m-%d %H:%M:%S"), r"\.?0+$", "").to_pylist()
+    return pc.cast(values, pa.string()).to_pylist()
+
+
+def _facet_rows(meta, facets: list[str], ranges: dict[str, list[float]],
+                metrics: dict[str, list[str]], tz: str) -> list[tuple]:
+    """Facet counts and metric sub-aggregations over the match set's docs
+    metadata `meta` (in doc_id order), in one pass: each doc counts once
+    under every (facet, label) entry — value facets label as Spark's
+    cast(... as string) (`_spark_str`), range facets by their half-open
+    bucket (the last one closed), values outside every bucket as '(out)',
+    NULLs as '(null)' — plus the ('__total__', '') entry. Metrics are over
+    cast(col as double), NULLs ignored, and sums add in doc_id order.
+    Rows come in (facet, doc_count desc, value) order."""
+    entries = [("__total__", np.zeros(meta.num_rows, np.int64), [""])]
     for f in dict.fromkeys(facets):
-        entries.append(F.struct(
-            F.lit(f).alias("facet"),
-            F.coalesce(F.col(f).cast("string"), F.lit("(null)"))
-            .alias("value")))
+        enc = pc.dictionary_encode(meta[f].combine_chunks(),
+                                   null_encoding="encode")
+        entries.append((f, enc.indices.to_numpy(), [
+            "(null)" if v is None else v
+            for v in _spark_str(enc.dictionary, tz)]))
     for f, edges in ranges.items():
-        c = F.col(f).cast("double")
-        lab = F.when(c.isNull(), F.lit("(null)"))
-        for lo, hi in zip(edges, edges[1:]):
-            label = f"[{_edge(lo)},{_edge(hi)}" + (
-                "]" if hi == edges[-1] else ")")
-            cond = ((c >= float(lo)) & (c <= float(hi))
-                    if hi == edges[-1] else
-                    (c >= float(lo)) & (c < float(hi)))
-            lab = lab.when(cond, F.lit(label))
-        lab = lab.otherwise(F.lit("(out)"))
-        entries.append(F.struct(F.lit(f).alias("facet"),
-                                lab.alias("value")))
-    flat = meta.select(
-        F.explode(F.array(*entries)).alias("_kv"),
-        *[F.col(c) for c in dict.fromkeys(metrics)],
-        F.lit(1).alias("_w"),
-    ).select(F.col("_kv.facet").alias("facet"),
-             F.col("_kv.value").alias("value"),
-             *[F.col(c) for c in dict.fromkeys(metrics)], "_w")
-    # zero-weight seed: a query with zero matches must still return the
-    # ('__total__', '', 0) row (the pre-r6 per-facet-aggregate behavior);
-    # metric aggs ignore the seed's NULLs, sum("_w") ignores its 0.
-    # Built from spark.range(1) — a plan-only one-row relation — instead of
-    # createDataFrame, which pays a Python→JVM conversion round-trip per
-    # query (~0.1 s of pure serving latency)
-    seed = spark.range(1).select(
-        F.lit("__total__").alias("facet"), F.lit("").alias("value"),
-        F.lit(0).cast("int").alias("_w"))
-    for c in dict.fromkeys(metrics):
-        seed = seed.withColumn(c, F.lit(None).cast("double"))
-    out = (flat.unionByName(seed.select(*flat.columns))
-           .groupBy("facet", "value").agg(*aggs)
-           .select("facet", "value", "doc_count", *mcols))
-    return out.orderBy("facet", F.col("doc_count").desc(), "value")
+        x = np.array(pc.cast(meta[f], pa.float64()).fill_null(0), np.float64)
+        nb = len(edges) - 1
+        b = np.searchsorted(np.asarray(edges, np.float64), x, "right") - 1
+        b[x == edges[-1]] = nb - 1
+        b[(b < 0) | (b >= nb)] = nb
+        b[np.asarray(pc.is_null(meta[f]))] = nb + 1
+        entries.append((f, b, [
+            f"[{_edge(lo)},{_edge(hi)}" + ("]" if i == nb - 1 else ")")
+            for i, (lo, hi) in enumerate(zip(edges, edges[1:]))]
+            + ["(out)", "(null)"]))
+    # (facet, label) → its rows; two entries can share a label (a column
+    # faceted by value and by range)
+    groups: dict[tuple[str, str], list[np.ndarray]] = {}
+    for f, codes, labels in entries:
+        counts = np.bincount(codes, minlength=len(labels))
+        for label, rows in zip(labels, np.split(
+                np.argsort(codes, kind="stable"), np.cumsum(counts)[:-1])):
+            if len(rows) or f == "__total__":
+                groups.setdefault((f, label), []).append(rows)
+    vals = {c: pc.cast(meta[c], pa.float64()) for c in metrics}
+    vals = {c: (np.array(x.fill_null(0), np.float64),
+                ~np.asarray(pc.is_null(x))) for c, x in vals.items()}
+    out = []
+    for (f, label), parts in groups.items():
+        rows = np.sort(np.concatenate(parts))
+        aggs = []
+        for c, fns in sorted(metrics.items()):
+            v = vals[c][0][rows[vals[c][1][rows]]]
+            if not len(v):
+                aggs += [None] * len(fns)
+                continue
+            total = float(np.cumsum(v)[-1])
+            got = {"sum": total, "avg": total / len(v),
+                   "min": float(v.min()), "max": float(v.max())}
+            aggs += [got[fn] for fn in fns]
+        out.append((f, label, len(rows), *aggs))
+    return sorted(out, key=lambda r: (r[0], -r[2], r[1]))
 
 
 def bm25_explain(
@@ -1906,8 +1981,6 @@ def more_like_this(
     modifier — doc_filter, mode, anomaly, after — passes through via
     **topk_kwargs); the seed itself is excluded unless include_self=True.
     Returns (doc_id, score)."""
-    import re
-
     # executeTake short-circuit: the pushed-down doc_id filter hits one row
     # group; limit(1) stops the scan at the first partition that yields the
     # row instead of scanning every input split (same result — the old path
@@ -1917,7 +1990,7 @@ def more_like_this(
     if not rows:
         raise ValueError(f"more_like_this: doc_id {doc_id} not found in "
                          "source_df")
-    toks = re.findall(TOKEN_PATTERN, (rows[0]["text"] or "").lower())
+    toks = _re.findall(TOKEN_PATTERN, (rows[0]["text"] or "").lower())
     tf = Counter(toks)
     cand = sorted(t for t, c in tf.items() if c >= min_tf)
     out_schema = "doc_id long, score double"
@@ -1937,9 +2010,6 @@ def more_like_this(
     if include_self:
         return hits
     # drop the seed from the k+1 collected hits on the driver
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     rows = sorted((r.asDict() for r in hits.collect()
                    if r["doc_id"] != int(doc_id)),
                   key=lambda r: (-r["score"], r["doc_id"]))[:k]
@@ -1969,13 +2039,13 @@ def bm25_topk_sharded(
     doc_ids), so its whole ascending-term sum and its exclusions are
     computed in that shard's run, the union of the shards' (doc_id,
     score) rows is exact, and the ranking reproduces the monolithic
-    float order (identity pinned in pytest). Without a doc_filter the
-    top-k is taken on the driver and no Spark job runs.
+    float order (identity pinned in pytest). The top-k is taken on the
+    driver, and only a doc_filter runs a Spark job (one per call).
 
     Supports mode='and'/'or', field scopes, exclusions, doc_filter
-    (applied per shard docs table, unioned), stoplists (which must be
-    IDENTICAL across shards — mixing analyzers raises), and pending
-    tombstones per shard. Wildcards / fuzzy / boosts are not supported
+    (one job over the union of the shards' docs tables), stoplists (which
+    must be IDENTICAL across shards — mixing analyzers raises), and
+    pending tombstones per shard. Wildcards / fuzzy / boosts are not supported
     in v1 — expand them per query via bm25_topk, or pre-expand.
     Block pruning is disabled (per-shard block-max bounds were computed
     under per-shard stats)."""
@@ -1988,7 +2058,7 @@ def bm25_topk_sharded(
     _check_shards("bm25_topk_sharded", handles, pq)
     [clauses] = _resolve(handles[0].tdict, handles[0].stats, [pq], mode)
     if not clauses.terms:
-        return _empty_topk(spark)
+        return _hits(spark, *_NO_HITS)
     n_docs = sum(h.stats["n_docs"] for h in handles)
     sum_dl = sum(h.stats.get("sum_dl", h.stats["avgdl"] * h.stats["n_docs"])
                  for h in handles)
@@ -2001,14 +2071,10 @@ def bm25_topk_sharded(
     idfs = {t: _idf(n_docs, d) for t, d in dfs.items()}
     hits = [_scores(h, {"": clauses}, idfs, sum_dl / n_docs,
                     mode=mode).get("", _NO_HITS) for h in handles]
-    ids, sc = _live(handles, np.concatenate([i for i, _ in hits]),
-                    np.concatenate([s for _, s in hits]))
-    if doc_filter is None:
-        ids, sc = _top(ids, sc, k)
-        return _frame(spark, _HITS, doc_id=ids, score=sc)
-    scored = _filtered(_frame(spark, _HITS, doc_id=ids, score=sc), handles,
-                       doc_filter)
-    return scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+    ids, sc = _top(*_live(handles, np.concatenate([i for i, _ in hits]),
+                          np.concatenate([s for _, s in hits]),
+                          allowed=_allowed(handles, doc_filter)), k)
+    return _hits(spark, ids, sc)
 
 
 def bm25_phrase_topk_batch(
@@ -2031,20 +2097,16 @@ def bm25_phrase_topk_batch(
     skipped — the batch amortizes one full decode of the union terms
     across all phrases, which is the serving shape when phrases share
     vocabulary. slop and doc_filter apply to every phrase in the batch."""
-    import re
-
-    from macrobase_spark.index.codec import decode_positional
-
     if isinstance(phrases, list):
         phrases = {str(i): p for i, p in enumerate(phrases)}
-    out_schema = "query_id string, doc_id long, score double, rank int"
+    out_schema = _BATCH
     ix = _positional_index(spark, index_dir)
     stats = ix.stats
     _stop = set(stats.get("stopwords", []))
     seqs: dict[str, list[str]] = {}
     spans: dict[str, int] = {}
     for qid, p in phrases.items():
-        seq_full = re.findall(TOKEN_PATTERN, p.lower())
+        seq_full = _re.findall(TOKEN_PATTERN, p.lower())
         seq = [t for t in seq_full if t not in _stop]
         if seq:
             seqs[qid] = seq
@@ -2057,79 +2119,20 @@ def bm25_phrase_topk_batch(
     live = {qid: s for qid, s in seqs.items() if all(t in idf for t in s)}
     if not live:
         return spark.createDataFrame([], out_schema)
-    pos_df = _positions(spark, ix, sorted({t for s in live.values()
-                                           for t in s}))
-
-    def decode_score(batches):
-        for pdf in batches:
-            frames = []
-            for term, blob in zip(pdf["term"], pdf["blob"]):
-                ids, tfs, dls, flat = decode_positional(blob)
-                if len(ids) == 0:
-                    continue
-                tf = tfs.astype(np.float64)
-                dl = dls.astype(np.float64)
-                contrib = idf[term] * (tf * (K1 + 1.0)) / (
-                    tf + K1 * (1.0 - B + B * dl / avgdl))
-                starts = np.concatenate(
-                    ([0], np.cumsum(tfs)))[:-1].astype(np.int64)
-                frames.append(pd.DataFrame({
-                    "doc_id": ids.astype(np.int64),
-                    "term": term,
-                    "contrib": contrib,
-                    "pos": [flat[s:s + int(t_)].astype(np.int32).tolist()
-                            for s, t_ in zip(starts, tfs)],
-                }))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    parts = pos_df.mapInPandas(
-        decode_score,
-        schema="doc_id long, term string, contrib double, pos array<int>")
-    gathered = parts.groupBy("doc_id").agg(
-        F.collect_list(F.struct("term", "contrib", "pos")).alias("parts"))
-
-    live_local = {qid: list(s) for qid, s in live.items()}
-    spans_local = dict(spans)
+    gathered = _gathered(_positions(spark, ix, sorted(
+        {t for s in live.values() for t in s})), idf, avgdl)
 
     def verify(pdf_iter):
         for pdf in pdf_iter:
-            out_q, out_d, out_s = [], [], []
-            for doc_id, plist in zip(pdf["doc_id"], pdf["parts"]):
-                by_term = {p["term"]: p for p in plist}
-                for qid, seq_local in live_local.items():
-                    pos_sets = {}
-                    ok = True
-                    for t in set(seq_local):
-                        if t not in by_term:
-                            ok = False
-                            break
-                        pos_sets[t] = np.asarray(by_term[t]["pos"],
-                                                 dtype=np.int64)
-                    if not ok:
-                        continue
-                    starts = pos_sets[seq_local[0]]
-                    cur = starts
-                    alive = np.ones(len(starts), dtype=bool)
-                    for j in range(1, len(seq_local)):
-                        nxt = pos_sets[seq_local[j]]
-                        idx = np.searchsorted(nxt, cur, side="right")
-                        alive &= idx < len(nxt)
-                        if not alive.any():
-                            break
-                        cur = nxt[np.minimum(idx, len(nxt) - 1)]
-                    if not (alive
-                            & (cur - starts <= spans_local[qid])).any():
-                        continue
-                    s = 0.0
-                    for t in sorted(set(seq_local)):
-                        s += float(by_term[t]["contrib"])
-                    out_q.append(qid)
-                    out_d.append(int(doc_id))
-                    out_s.append(s)
-            if out_q:
-                yield pd.DataFrame({"query_id": out_q, "doc_id": out_d,
-                                    "score": out_s})
+            out = [(qid, int(doc_id), sc)
+                   for doc_id, plist in zip(pdf["doc_id"], pdf["parts"])
+                   for by_term in [{p["term"]: p for p in plist}]
+                   for qid, seq in live.items()
+                   for sc in [_phrase_score(by_term, seq, spans[qid])]
+                   if sc is not None]
+            if out:
+                yield pd.DataFrame(out, columns=["query_id", "doc_id",
+                                                 "score"])
 
     scored = gathered.mapInPandas(
         verify, schema="query_id string, doc_id long, score double")
@@ -2151,18 +2154,14 @@ def bm25_count(
     semantics (mode / min_should_match / exclusions / field scopes /
     doc_filter / tombstones) — a one-row (n_matches long) relation: the
     size of bm25_match_ids' match set, so it shares the resolver and the
-    match set with bm25_match_ids and bm25_facets (no positions, and
-    unlike bm25_facets no docs-metadata join unless a doc filter requires
-    one; without one it is counted on the driver). A query no document
-    can match (no indexable term, or min_should_match above the term
-    count) counts 0."""
-    handles, ids, doc_filter = _match_ids(spark, index_dir, query, mode,
-                                          min_should_match, doc_filter,
-                                          max_expansions)
-    if doc_filter is None:
-        return _frame(spark, "n_matches long", n_matches=[len(ids)])
-    return _matched(spark, handles, ids, doc_filter).agg(
-        F.count("*").alias("n_matches"))
+    match set with bm25_match_ids and bm25_facets. It is counted on the
+    driver, with no positions and no docs-metadata read; a doc_filter adds
+    its one Spark job (`_allowed`), which runs only when some doc matches.
+    A query no document can match (no indexable term, or
+    min_should_match above the term count) counts 0."""
+    return _frame(spark, "n_matches long", n_matches=[len(_match_ids(
+        spark, index_dir, query, mode, min_should_match, doc_filter,
+        max_expansions))])
 
 
 def bm25_match_ids(
@@ -2179,28 +2178,27 @@ def bm25_match_ids(
     queries", "re-embed everything mentioning X") rather than a results
     page. Same full retrieval semantics as bm25_count over the same
     match set (one driver-side kernel run, no positions read, no top-k
-    limit): the result is a (doc_id) relation — a local one, under the
-    doc_filter semi-join when there is one — to join/anti-join against
-    the corpus. For a ranked export use bm25_topk with a large k
-    instead."""
-    return _matched(spark, *_match_ids(spark, index_dir, query, mode,
-                                       min_should_match, doc_filter,
-                                       max_expansions))
+    limit, plus the doc_filter's one Spark job when there is one): the
+    result is a local (doc_id) relation in ascending doc_id order, to
+    join/anti-join against the corpus. For a ranked export use bm25_topk
+    with a large k instead."""
+    return _frame(spark, "doc_id long", doc_id=_match_ids(
+        spark, index_dir, query, mode, min_should_match, doc_filter,
+        max_expansions))
 
 
 def _match_ids(spark: SparkSession, index_dir: str, query: str, mode: str,
                min_should_match: int | None, doc_filter: str | None,
-               max_expansions: int
-               ) -> tuple[list[_Index], np.ndarray, str | None]:
-    """bm25_count's and bm25_match_ids' match set: (handles, doc ids, the
-    doc_filter with the query's field scopes folded in)."""
+               max_expansions: int) -> np.ndarray:
+    """bm25_count's and bm25_match_ids' match set, the query's field
+    scopes folded into the doc_filter."""
     msm = _check_mode(mode, min_should_match)
     query, doc_filter = _split_field_scopes(query, doc_filter)
     handles = [_open(spark, index_dir)]
     [cl] = _resolve(handles[0].tdict, handles[0].stats,
                     [_parse_query_full(query)], mode, msm,
                     max_expansions=max_expansions)
-    return handles, _match_set(handles, cl, mode, msm), doc_filter
+    return _match_set(handles, cl, mode, msm, doc_filter)
 
 
 def hybrid_topk(
@@ -2306,11 +2304,11 @@ def bm25_facets_sharded(
     same facet body over one index handle per shard. Facet membership is
     stats-free (a doc matches in exactly one shard), so the result is
     IDENTICAL to a monolithic index over the union — pytest-pinned, the
-    empty cases included. Each shard contributes its match set
-    and its docs-metadata projection; one union of each, then the same
-    single facet pass. Mixed stoplists refuse loudly (they change which
-    query terms exist); wildcard / fuzzy / regexp / boost tokens are
-    rejected as in bm25_topk_sharded."""
+    empty cases included. Each shard contributes its match set and its
+    docs part files; the match sets and docs columns concatenate, then
+    the same facet pass runs. Mixed stoplists refuse loudly (they change
+    which query terms exist); wildcard / fuzzy / regexp / boost tokens
+    are rejected as in bm25_topk_sharded."""
     if not index_dirs:
         raise ValueError("index_dirs: pass at least one index")
     return _facets(spark, index_dirs, query, facets, mode, doc_filter,

@@ -1057,7 +1057,7 @@ def update_index(
       index is being served), the delta's (term, df, max_impact) rows are
       folded into it — read on the driver from the part files the append
       added, with no Spark job — so the next query loads no dictionary
-      (`open_index`).
+      (`open_version`).
 
     Reference lineage: the reference has no incremental index; this is the
     standard Lucene/LSM segment-log design expressed as parquet appends.
@@ -1571,17 +1571,19 @@ def _term_dict(rows, base: TermDict | None = None) -> TermDict:
 
 class _Version:
     """One cached index version: read_index's (postings, docs, stats)
-    handles and the postings part files per bucket, both taken on the
-    first read, and its TermDict, loaded on the first open_index — or
-    folded in ahead of the first read by the in-process update_index that
-    created the version. The query path reads candidate rows from `files`
-    only, so a file written after the version opened is never read by it."""
-    __slots__ = ("handles", "tdict", "files")
+    handles, the postings part files per bucket and the docs part files,
+    all taken on the first read, and its TermDict, loaded on the first
+    open_version — or folded in ahead of the first read by the in-process
+    update_index that created the version. The query path reads candidate
+    rows from `files` and docs metadata from `docs_files` only, so a file
+    written after the version opened is never read by it."""
+    __slots__ = ("handles", "tdict", "files", "docs_files")
 
     def __init__(self, tdict: TermDict | None = None):
         self.handles: tuple[DataFrame, DataFrame, dict] | None = None
         self.tdict = tdict
         self.files: dict[int, list[str]] = {}
+        self.docs_files: list[str] = []
 
 
 _INDEX_CACHE: dict[tuple, _Version] = {}
@@ -1636,8 +1638,13 @@ def _index_entry(spark: SparkSession, out_dir: str) -> _Version:
     files: dict[int, list[str]] = {}
     for f in sorted(_part_files(postings_root)):
         files.setdefault(_file_bucket(f), []).append(f)
+    docs_root = os.path.join(out_dir, "docs.parquet")
     entry = _INDEX_CACHE.setdefault(key, _Version())
     entry.files = files
+    entry.docs_files = [os.path.join(docs_root, f)
+                        for f in _list_dir(docs_root) or []
+                        if f.endswith(".parquet")
+                        and not f.startswith(("_", "."))]
     entry.handles = (postings, docs, stats)
     return entry
 
@@ -1650,23 +1657,16 @@ def read_index(spark: SparkSession, out_dir: str) -> tuple[DataFrame, DataFrame,
     return _index_entry(spark, out_dir).handles
 
 
-def open_index(spark: SparkSession, out_dir: str
-               ) -> tuple[DataFrame, DataFrame, dict, TermDict]:
-    """read_index plus the version's term dictionary, from ONE cache entry,
-    so handles, stats and dictionary always describe the same index
-    version. The dictionary costs one driver-side pyarrow read of (term,
-    df, max_impact) from the version's part files (`_dict_rows`, no Spark
-    job) on the first call after a version change made by another
-    process, a build, a compaction or a merge; an in-process update_index
-    folds its delta into the previous version's dictionary instead. Every query-time df, WAND bound
-    and prefix / fuzzy / regexp expansion is then answered on the driver."""
-    entry = open_version(spark, out_dir)
-    return (*entry.handles, entry.tdict)
-
-
 def open_version(spark: SparkSession, out_dir: str) -> _Version:
-    """The cache entry behind open_index: handles, dictionary and part
-    files of one index version."""
+    """One index version's cache entry: read_index's handles, the part
+    files and the term dictionary, so all of them always describe the
+    same version. The dictionary costs one driver-side pyarrow read of
+    (term, df, max_impact) from the version's part files (`_dict_rows`, no
+    Spark job) on the first call after a version change made by another
+    process, a build, a compaction or a merge; an in-process update_index
+    folds its delta into the previous version's dictionary instead. Every
+    query-time df, WAND bound and prefix / fuzzy / regexp expansion is
+    then answered on the driver."""
     entry = _index_entry(spark, out_dir)
     if entry.tdict is None:
         entry.tdict = _term_dict(_dict_rows(

@@ -326,7 +326,7 @@ def test_batch_wand_prunes_hot_two_term_query(spark, tmp_path):
     pruning) while ranks and scores stay identical to the exact path."""
     import numpy as np
 
-    from macrobase_spark.index.build import K1, open_index
+    from macrobase_spark.index.build import K1
     from macrobase_spark.index.bm25 import (
         _batch_wand_lambdas, _open, _parse_query_full, bm25_topk_batch)
 
@@ -352,7 +352,7 @@ def test_batch_wand_prunes_hot_two_term_query(spark, tmp_path):
     assert a == b and len(a) == 10
     assert all(doc < 16 for _, doc, _ in a)  # high-impact docs win
 
-    postings, _, stats, _ = open_index(spark, out)
+    postings, _, stats = read_index(spark, out)
     terms = sorted(_parse_query_full("spike the").terms)
     lam = _batch_wand_lambdas(_open(spark, out), {"h": terms}, 10)
     assert lam and "spike" in lam
@@ -671,6 +671,68 @@ def test_recency_decay_matches_python_recount(spark, corpus):
     with pytest.raises(ValueError, match="not a docs-metadata"):
         bm25_topk(spark, out, "the", recency_half_life=1.0,
                   recency_col="nope")
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/Los_Angeles"])
+def test_recency_epoch_seconds_follow_spark(spark, tmp_path, tz):
+    """recency reads its column with pyarrow and converts it to epoch
+    seconds as Spark's cast(col as double) (numeric) and
+    unix_timestamp(col) (timestamp, date, string: whole seconds, floored,
+    in the session time zone) do: on a small docs table per column type,
+    the weights equal those of the Spark expressions up to the last bit
+    (np.power against Java's Math.pow), NULLs keep weight 1, and the
+    ranks are equal."""
+    import datetime as dt
+    import glob
+
+    import numpy as np
+
+    from macrobase_spark.index.bm25 import _docs, _epoch_seconds, _Index
+
+    hl = 0.7
+    t0 = dt.datetime(2024, 3, 10, 9, 59, 58, 750000)
+    stamps = [t0 + dt.timedelta(hours=7 * i, microseconds=250_000 * i)
+              for i in range(12)] + [dt.datetime(1969, 12, 31, 23, 59, 59,
+                                                 500000), None]
+    base = spark.createDataFrame(list(enumerate(stamps)),
+                                 "doc_id long, t timestamp")
+    variants = {
+        "timestamp": F.col("t"),
+        "date": F.to_date("t"),
+        "string": F.date_format("t", "yyyy-MM-dd HH:mm:ss"),
+        "long": F.unix_timestamp("t"),
+        "double": F.col("t").cast("double"),
+    }
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        for name, expr in variants.items():
+            path = str(tmp_path / f"docs_{name}")
+            base.select("doc_id", expr.alias("ts")).write.parquet(path)
+            d = spark.read.parquet(path)
+            dtype = d.schema["ts"].dataType
+            ts_sec = (F.col("ts").cast("double") if name in ("long", "double")
+                      else F.unix_timestamp("ts").cast("double"))
+            ref = d.agg(F.max(ts_sec)).collect()[0][0]
+            want = dict(d.select("doc_id", F.coalesce(F.pow(
+                F.lit(0.5), ((F.lit(ref) - ts_sec) / 86400.0) / hl),
+                F.lit(1.0))).collect())
+            h = _Index(d, {}, None, {}, glob.glob(f"{path}/*.parquet"), path)
+            meta = _docs([h], ["ts"])
+            secs = _epoch_seconds(meta["ts"], dtype, tz)
+            w = np.power(0.5, ((np.nanmax(secs) - secs) / 86400.0) / hl)
+            got = dict(zip(meta["doc_id"].to_pylist(),
+                           np.where(np.isnan(w), 1.0, w).tolist()))
+            assert got.keys() == want.keys(), name
+            assert got[len(stamps) - 1] == 1.0, name  # the NULL ts
+            for doc, wv in want.items():
+                assert abs(got[doc] - wv) <= np.spacing(wv), (name, doc)
+            score = {doc: 1.0 + 0.01 * (doc % 5) for doc in want}
+            rank = [sorted(want, key=lambda doc: (-score[doc] * ws[doc], doc))
+                    for ws in (want, got)]
+            assert rank[0] == rank[1], name
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
 
 
 # ------------------------------------------- r5: regexp term queries

@@ -161,7 +161,7 @@ def test_positional_update_compact_lifecycle(spark, tmp_path):
     bit-identical at every stage vs the oracle over base+delta."""
     import os
 
-    from macrobase_spark.index.build import (compact_index, open_index,
+    from macrobase_spark.index.build import (compact_index, open_version,
                                              update_index)
 
     base = with_doc_id(synth_transcripts(spark, n_convs=30, seed=7)).cache()
@@ -177,7 +177,7 @@ def test_positional_update_compact_lifecycle(spark, tmp_path):
                spark.read.parquet(os.path.join(out, "positions"))
                .groupBy("term").agg(F.sum("df").alias("df")).collect()}
     assert pos_dfs == {t: st.df for t, st in
-                       open_index(spark, out)[3].stats.items()}
+                       open_version(spark, out).tdict.stats.items()}
 
     docs = ([(r["doc_id"], r["text"]) for r in
              base.select("doc_id", "text").collect()]

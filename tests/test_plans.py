@@ -236,25 +236,42 @@ def test_ann_bucketed_paths_join_per_query(spark):
     assert "CartesianProduct" not in p2 and "NestedLoop" not in p2
 
 
-def test_bm25_doc_filter_pushes_down_and_semijoins(spark, tmp_path):
-    """doc_filter='role = ...': the predicate reaches the docs parquet scan
-    (PushedFilters) and the restriction is a semi-join BEFORE the top-k
-    sort — never a post-limit filter."""
+def test_bm25_doc_filter_pushes_down_and_semijoins(spark, tmp_path,
+                                                   monkeypatch):
+    """doc_filter='role = ...' runs as ONE Spark job per call: its docs
+    parquet scan takes the predicate as a pushed filter and reads just
+    doc_id and role; the passing ids restrict the match set on the driver
+    BEFORE the top-k, so every hit passes the filter and the top-k equals
+    the unfiltered ranking restricted to the passing docs."""
     from macrobase_spark.fixtures.transcripts import synth_transcripts, with_doc_id
     from macrobase_spark.index.build import build_index
     from macrobase_spark.index.bm25 import bm25_topk
 
     df = with_doc_id(synth_transcripts(spark, n_convs=20, seed=42))
+    DataFrame = type(df)
     out = str(tmp_path / "plan_idx_f")
     build_index(df, out, num_buckets=4, hot_df_threshold=10 ** 9)
-    p = _plan(bm25_topk(spark, out, "the call", k=5,
-                        doc_filter="role = 'assistant'"))
-    assert "LeftSemi" in p
-    pushed = [ln for ln in p.split("\n") if "PushedFilters:" in ln]
-    assert any("role" in ln for ln in pushed), pushed
-    # the semi-join sits below the global TakeOrdered/Sort+Limit
-    assert p.index("LeftSemi") > p.index("TakeOrderedAndProject") or \
-        "Sort" in p  # formatted plans list operators top-down (sink first)
+    plans = []
+    to_arrow = DataFrame.toArrow
+
+    def spy(self):
+        plans.append(_plan(self))
+        return to_arrow(self)
+
+    monkeypatch.setattr(DataFrame, "toArrow", spy)
+    got = bm25_topk(spark, out, "the call", k=5,
+                    doc_filter="role = 'assistant'").collect()
+    [p] = plans
+    scans = [ln for ln in p.split("\n") if "PushedFilters:" in ln]
+    assert scans and all("role" in ln for ln in scans), scans
+    schemas = [ln.split("ReadSchema:")[1].strip() for ln in p.split("\n")
+               if "ReadSchema:" in ln]
+    assert schemas == ["struct<doc_id:bigint,role:string>"], schemas
+    role = dict(df.select("doc_id", "role").collect())
+    ranked = [r["doc_id"] for r in bm25_topk(spark, out, "the call",
+                                             k=10 ** 6).collect()]
+    assert [r["doc_id"] for r in got] == [
+        d for d in ranked if role[d] == "assistant"][:5]
 
 
 def test_bm25_prefix_expansion_scan_reads_term_only(spark, tmp_path,
@@ -267,7 +284,7 @@ def test_bm25_prefix_expansion_scan_reads_term_only(spark, tmp_path,
 
     from macrobase_spark.fixtures.transcripts import synth_transcripts, with_doc_id
     from macrobase_spark.index.build import (build_index, read_index,
-                                             open_index)
+                                             open_version)
 
     df = with_doc_id(synth_transcripts(spark, n_convs=20, seed=42))
     out = str(tmp_path / "plan_idx_p")
@@ -284,7 +301,7 @@ def test_bm25_prefix_expansion_scan_reads_term_only(spark, tmp_path,
     sc = spark.sparkContext
     sc.setJobGroup("prefix-dict-load", "dictionary load")
     try:
-        td = open_index(spark, out)[3]
+        td = open_version(spark, out).tdict
     finally:
         sc.setJobGroup("", "")
     assert any(t.startswith("tok00") for t in td.terms)
@@ -314,30 +331,74 @@ def test_bm25_no_tombstone_join_when_none_pending(spark, tmp_path):
     assert top not in [r["doc_id"] for r in res.collect()]
 
 
-def test_bm25_facets_read_no_blobs_and_prune_docs_columns(spark, tmp_path):
-    """Facets are an ids-only operation: the postings scan reads term+blob
-    of the QUERY terms' buckets only (never positions), and the docs join
-    reads just doc_id + the facet columns."""
+def _driver_reads(monkeypatch):
+    """Record every pyarrow ParquetFile read: (path, columns)."""
+    import pyarrow.parquet as pq
+
+    reads = []
+    parquet_file = pq.ParquetFile
+
+    class Spy(parquet_file):
+        def read(self, columns=None, *args, **kwargs):
+            reads.append((self.path, columns))
+            return super().read(columns, *args, **kwargs)
+
+        def read_row_groups(self, row_groups, columns=None, *args, **kwargs):
+            reads.append((self.path, columns))
+            return super().read_row_groups(row_groups, columns, *args,
+                                           **kwargs)
+
+    def opened(path, *args, **kwargs):
+        f = Spy(path, *args, **kwargs)
+        f.path = path
+        return f
+
+    monkeypatch.setattr(pq, "ParquetFile", opened)
+    return reads
+
+
+def _no_jobs(spark, name, fn):
+    """fn()'s result, asserting it ran no Spark job."""
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    try:
+        res = fn()
+        assert list(sc.statusTracker().getJobIdsForGroup(name)) == []
+        return res
+    finally:
+        sc.setJobGroup("", "")
+
+
+def test_bm25_facets_read_no_blobs_and_prune_docs_columns(spark, tmp_path,
+                                                          monkeypatch):
+    """Facets are an ids-only operation that runs no Spark job: the
+    postings read takes term+blob of the QUERY terms' buckets only (never
+    positions), and the docs read asks for just doc_id and the facet
+    columns — never text-adjacent metadata like rep_ratio/anomaly."""
     from macrobase_spark.fixtures.transcripts import synth_transcripts, with_doc_id
     from macrobase_spark.index.build import build_index
     from macrobase_spark.index.bm25 import bm25_facets
 
     df = with_doc_id(synth_transcripts(spark, n_convs=20, seed=42))
     out = str(tmp_path / "plan_idx_fc")
-    build_index(df, out, num_buckets=4, hot_df_threshold=10 ** 9)
-    p = _plan(bm25_facets(spark, out, "the call", ["role"]))
-    # docs scan pruned to doc_id + facet column — never text-adjacent
-    # metadata like rep_ratio/anomaly
-    docs_schemas = [ln.split("ReadSchema:")[1] for ln in p.split("\n")
-                    if "ReadSchema:" in ln and "role" in ln]
-    assert docs_schemas and all(
-        "anomaly" not in s and "rep_ratio" not in s for s in docs_schemas)
-    # no positional layer touched
-    assert "positions" not in p
+    build_index(df, out, num_buckets=4, hot_df_threshold=10 ** 9,
+                positions=True)
+    bm25_facets(spark, out, "the call", ["role", "tool"]).collect()
+    reads = _driver_reads(monkeypatch)
+    rows = _no_jobs(spark, "facets", lambda: bm25_facets(
+        spark, out, "the call", ["role", "tool"]).collect())
+    assert rows[0]["facet"] == "__total__" and rows[0]["doc_count"] > 0
+    docs = [cols for f, cols in reads if "/docs.parquet/" in f]
+    post = [cols for f, cols in reads if "/postings/" in f]
+    assert docs and all(c == ["doc_id", "role", "tool"] for c in docs)
+    assert post and all(c == ["term", "blob"] for c in post)
+    assert len(docs) + len(post) == len(reads)  # no positions read
 
 
-def test_bm25_sort_by_prunes_docs_to_sort_columns(spark, tmp_path):
-    """sort_by joins only (doc_id, sort columns) from the docs table."""
+def test_bm25_sort_by_prunes_docs_to_sort_columns(spark, tmp_path,
+                                                  monkeypatch):
+    """sort_by reads only (doc_id, sort columns) from the docs part files,
+    on the driver, and runs no Spark job."""
     from macrobase_spark.fixtures.transcripts import synth_transcripts, with_doc_id
     from macrobase_spark.index.build import build_index
     from macrobase_spark.index.bm25 import bm25_topk
@@ -345,19 +406,20 @@ def test_bm25_sort_by_prunes_docs_to_sort_columns(spark, tmp_path):
     df = with_doc_id(synth_transcripts(spark, n_convs=20, seed=42))
     out = str(tmp_path / "plan_idx_s")
     build_index(df, out, num_buckets=4, hot_df_threshold=10 ** 9)
-    p = _plan(bm25_topk(spark, out, "the call", k=5,
-                        sort_by="turn_idx desc"))
-    docs_schemas = [ln.split("ReadSchema:")[1] for ln in p.split("\n")
-                    if "ReadSchema:" in ln and "turn_idx" in ln]
-    assert docs_schemas and all(
-        "role" not in s and "anomaly" not in s for s in docs_schemas)
-    # the metadata sort is the global top-k, not a post-score re-sort
-    assert "TakeOrderedAndProject" in p or "Sort" in p
+    bm25_topk(spark, out, "the call", k=5, sort_by="turn_idx desc").collect()
+    reads = _driver_reads(monkeypatch)
+    got = _no_jobs(spark, "sort_by", lambda: bm25_topk(
+        spark, out, "the call", k=5, sort_by="turn_idx desc").collect())
+    assert [r["turn_idx"] for r in got] == sorted(
+        (r["turn_idx"] for r in got), reverse=True)
+    docs = [cols for f, cols in reads if "/docs.parquet/" in f]
+    assert docs and all(c == ["doc_id", "turn_idx"] for c in docs)
 
 
-def test_bm25_search_after_keeps_single_term_no_shuffle_shape(spark, tmp_path):
-    """after= only adds a Filter — the single-term fast path still plans
-    without a per-doc aggregation exchange."""
+def test_bm25_search_after_keeps_single_term_no_shuffle_shape(spark, tmp_path,
+                                                              monkeypatch):
+    """after= only cuts the driver-side ranking: the single-term query
+    runs no Spark job and reads no docs metadata."""
     from macrobase_spark.fixtures.transcripts import synth_transcripts, with_doc_id
     from macrobase_spark.index.build import build_index
     from macrobase_spark.index.bm25 import bm25_topk
@@ -365,8 +427,12 @@ def test_bm25_search_after_keeps_single_term_no_shuffle_shape(spark, tmp_path):
     df = with_doc_id(synth_transcripts(spark, n_convs=20, seed=42))
     out = str(tmp_path / "plan_idx_a")
     build_index(df, out, num_buckets=4, hot_df_threshold=10 ** 9)
-    p = _plan(bm25_topk(spark, out, "the", k=5, after=(99.0, -1)))
-    assert "HashAggregate" not in p
+    full = bm25_topk(spark, out, "the", k=10).collect()
+    reads = _driver_reads(monkeypatch)
+    got = _no_jobs(spark, "after", lambda: bm25_topk(
+        spark, out, "the", k=5, after=full[4]).collect())
+    assert got == full[5:]
+    assert reads and not any("/docs.parquet/" in f for f, _ in reads)
 
 
 def test_suggest_and_spellcheck_scan_term_df_only(spark, tmp_path):

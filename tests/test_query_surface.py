@@ -640,6 +640,38 @@ def test_facet_metrics_match_python_recount(spark, corpus):
                     metrics={"anomaly": ["median"]})
 
 
+def test_facet_labels_and_sums_follow_spark(spark, corpus):
+    """Value facets on numeric columns label each value as Spark's
+    cast(... as string) renders it (Java's toString for doubles), and a
+    metric sum, like the sum behind an avg, adds the values one at a time
+    in ascending doc_id order."""
+    from collections import Counter
+
+    _, out, docs, meta = corpus
+    matched = _match_ids(docs, "tok0042 the")
+    d = spark.read.parquet(out + "/docs.parquet")
+    cols = ["anomaly", "rep_ratio", "turn_idx", "doc_len"]
+    want = Counter(
+        (c, r[c] if r[c] is not None else "(null)")
+        for r in d.select("doc_id", *[F.col(c).cast("string").alias(c)
+                                      for c in cols]).collect()
+        if r["doc_id"] in matched for c in cols)
+    got = {(r["facet"], r["value"]): r["doc_count"] for r in
+           bm25_facets(spark, out, "tok0042 the", cols).collect()
+           if r["facet"] != "__total__"}
+    assert got == want
+    anomaly = dict(d.select("doc_id", "anomaly").collect())
+    rows = bm25_facets(spark, out, "tok0042 the", ["role"],
+                       metrics={"anomaly": ["sum", "avg"]}).collect()
+    for r in rows:
+        ids = sorted(x for x in matched
+                     if r["facet"] == "__total__" or meta[x][0] == r["value"])
+        s = 0.0
+        for x in ids:
+            s += anomaly[x]
+        assert (r["anomaly_sum"], r["anomaly_avg"]) == (s, s / len(ids)), r
+
+
 def test_sort_by_multiple_columns(spark, corpus):
     """sort_by accepts a comma list: 'role asc, turn_idx desc' with the
     doc_id tiebreak — recounted from the corpus."""
@@ -650,6 +682,20 @@ def test_sort_by_multiple_columns(spark, corpus):
     want = sorted(matched, key=lambda d: (meta[d][0], -meta[d][2], d))[:10]
     assert [r["doc_id"] for r in got] == want
     assert set(got[0].asDict()) == {"doc_id", "score", "role", "turn_idx"}
+    # tool holds NULLs: first under asc, last under desc (Spark's order)
+    for sort_by, spec in [("tool asc, turn_idx desc", [(1, False), (2, True)]),
+                          ("tool desc, role", [(1, True), (0, False)])]:
+        want = sorted(matched)
+        for i, desc in reversed(spec):
+            nulls = [d for d in want if meta[d][i] is None]
+            vals = sorted((d for d in want if meta[d][i] is not None),
+                          key=lambda d: meta[d][i], reverse=desc)
+            want = vals + nulls if desc else nulls + vals
+        got = bm25_topk(spark, out, "tok0042 tok0007", k=10 ** 6,
+                        sort_by=sort_by).collect()
+        assert [r["doc_id"] for r in got] == want, sort_by
+        assert [r["tool"] for r in got] == [meta[d][1] for d in want]
+        assert None in [r["tool"] for r in got]
 
 
 def test_bm25_count_matches_facet_total(spark, corpus):
@@ -693,6 +739,18 @@ def test_collapse_best_turn_per_conversation(spark, corpus):
                    collapse="conv_id", after=got[-1]).collect()
     assert [(r["doc_id"], r["score"]) for r in p2] == winners[8:16]
     assert not ({r["conv_id"] for r in p2} & {r["conv_id"] for r in got})
+    # tool holds NULLs, which collapse into one group
+    tool = {r["doc_id"]: r["tool"] for r in
+            df.select("doc_id", "tool").collect()}
+    winners, seen = [], set()
+    for d, s in full:
+        if tool[d] not in seen:
+            seen.add(tool[d])
+            winners.append((d, s, tool[d]))
+    got = bm25_topk(spark, out, "tok0042 tok0007 the", k=100,
+                    collapse="tool").collect()
+    assert [(r["doc_id"], r["score"], r["tool"]) for r in got] == winners
+    assert None in seen
     with pytest.raises(ValueError, match="not compose with sort_by|sort_by"):
         bm25_topk(spark, out, "the", k=3, collapse="conv_id",
                   sort_by="turn_idx desc")
@@ -987,7 +1045,8 @@ def test_no_indexable_term_has_the_zero_hit_shape(spark, corpus,
                                                   stop_index):
     """A stoplist-only or exclusion-only query returns exactly what a
     query with zero hits returns: the sort_by / collapse columns on
-    bm25_topk, the lone __total__ row on the facet surfaces."""
+    bm25_topk, the lone __total__ row on the facet surfaces; and it
+    refuses a bad recency modifier as a query with hits does."""
     from macrobase_spark.index.bm25 import bm25_facets_sharded
 
     _, out, _, _ = corpus
@@ -996,6 +1055,12 @@ def test_no_indexable_term_has_the_zero_hit_shape(spark, corpus,
             got = bm25_topk(spark, idx, q, **kw)
             want = bm25_topk(spark, idx, "zzzznotaword", **kw)
             assert got.count() == 0 and got.dtypes == want.dtypes, (q, kw)
+        # a bad recency modifier raises as it does for a query with hits
+        for kw, msg in [({"recency_half_life": 0.0}, "half_life"),
+                        ({"recency_half_life": 1.0, "recency_col": "nope"},
+                         "not a docs-metadata")]:
+            with pytest.raises(ValueError, match=msg):
+                bm25_topk(spark, idx, q, **kw)
         for kw in [{}, {"metrics": {"anomaly": ["avg"]}}]:
             want = [tuple(r) for r in bm25_facets(
                 spark, idx, "zzzznotaword", ["role"], **kw).collect()]
@@ -1043,15 +1108,16 @@ def test_bm25_jobs_per_call(spark, corpus, seg_index, shards):
     """Upper bounds on the Spark jobs each BM25 entry point runs per
     call, one bm25_topk per serving query class: a plan that sprouts a
     job fails here. Term metadata (df, max_impact, expansions) comes from
-    the memoized term dictionary, and scoring runs on the driver, so only
-    the docs-metadata joins (doc_filter, facets), the phrase layer and
-    more_like_this's seed lookup run jobs."""
+    the memoized term dictionary, scoring runs on the driver, and the
+    docs-metadata modifiers and facets read the docs part files with
+    pyarrow, so only a doc_filter (one job per call), the phrase layer
+    and more_like_this's seed lookup run jobs."""
     from macrobase_spark.index.bm25 import (bm25_count, bm25_match_ids,
                                             bm25_phrase_topk,
                                             bm25_topk_sharded,
                                             more_like_this)
     from macrobase_spark.index.build import (invalidate_index_cache,
-                                             read_index, open_index)
+                                             read_index, open_version)
 
     df, out, docs, _ = corpus
     ids = [d for d, _ in docs[:3]]
@@ -1080,13 +1146,35 @@ def test_bm25_jobs_per_call(spark, corpus, seg_index, shards):
         "more_like_this": (1, lambda: more_like_this(spark, out, df,
                                                      ids[1])),
         "topk exclude": (0, lambda: bm25_topk(spark, out, "tok0007 -the")),
-        "topk filter": (2, lambda: bm25_topk(
+        "topk filter": (1, lambda: bm25_topk(
             spark, out, "tok0011 tok0200", doc_filter="role = 'assistant'")),
+        "topk sort_by": (0, lambda: bm25_topk(
+            spark, out, "tok0042 the", sort_by="tool desc, turn_idx")),
+        "topk collapse": (0, lambda: bm25_topk(spark, out, "tok0042 the",
+                                               collapse="conv_id")),
+        "topk anomaly": (0, lambda: bm25_topk(spark, out, "tok0042 the",
+                                              anomaly_weight=0.5)),
+        "topk recency": (0, lambda: bm25_topk(spark, out, "tok0042 the",
+                                              recency_half_life=1.0)),
+        "topk recency ref": (0, lambda: bm25_topk(
+            spark, out, "tok0042 the", recency_half_life=1.0,
+            recency_ref=1.8e9)),
+        "topk after": (0, lambda: bm25_topk(spark, out, "tok0042 the",
+                                            after=(2.0, 0))),
+        "batch filter": (1, lambda: bm25_topk_batch(
+            spark, out, ["the", "tok0042", "call tool"],
+            doc_filter="role = 'assistant'")),
+        "sharded filter": (1, lambda: bm25_topk_sharded(
+            spark, shards[2], "role:assistant tok0042 the")),
+        "count filter": (1, lambda: bm25_count(
+            spark, out, "tok0042 -tok0007", doc_filter="tool IS NULL")),
+        "match_ids filter": (1, lambda: bm25_match_ids(
+            spark, out, "role:user tok0042 -tok0007")),
         "batch": (0, lambda: bm25_topk_batch(
             spark, out, ["the", "tok0042", "call tool", "tok0005 tok0100",
                          "tok0003 tok0042 tok0777"])),
-        "facets": (5, lambda: bm25_facets(spark, out, "tok0042 the",
-                                          ["role"])),
+        "facets": (0, lambda: bm25_facets(spark, out, "tok0042 the",
+                                          ["role", "tool"])),
         "count": (0, lambda: bm25_count(spark, out, "tok0042 -tok0007")),
         "match_ids": (0, lambda: bm25_match_ids(spark, out,
                                                 "tok0042 -tok0007")),
@@ -1105,11 +1193,14 @@ def test_bm25_jobs_per_call(spark, corpus, seg_index, shards):
     # none to load its dictionary (a pyarrow read of its part files); a
     # warm call reads both from memory
     invalidate_index_cache(out)
+    def tdict():
+        return open_version(spark, out).tdict
+
     assert _jobs(spark, "read cold", lambda: read_index(spark, out)) == 1
-    assert _jobs(spark, "dict cold", lambda: open_index(spark, out)[3]) == 0
+    assert _jobs(spark, "dict cold", tdict) == 0
     invalidate_index_cache(out)
-    assert _jobs(spark, "open cold", lambda: open_index(spark, out)[3]) == 1
-    assert _jobs(spark, "dict warm", lambda: open_index(spark, out)[3]) == 0
+    assert _jobs(spark, "open cold", tdict) == 1
+    assert _jobs(spark, "dict warm", tdict) == 0
 
 
 def test_dictionary_read_equals_spark_fold(spark, seg_index):
@@ -1120,10 +1211,11 @@ def test_dictionary_read_equals_spark_fold(spark, seg_index):
     from macrobase_spark.index.build import (TermDict, _dict_rows,
                                              _term_dict,
                                              invalidate_index_cache,
-                                             open_index)
+                                             open_version)
 
     invalidate_index_cache(seg_index)
-    postings, _, _, tdict = open_index(spark, seg_index)
+    v = open_version(spark, seg_index)
+    postings, tdict = v.handles[0], v.tdict
     want = {r["term"]: (r["df"], r["mi"], r["rows"]) for r in
             postings.groupBy("term").agg(
                 F.sum("df").alias("df"), F.max("max_impact").alias("mi"),
@@ -1319,7 +1411,7 @@ def test_update_folds_the_served_term_dictionary(spark, corpus, tmp_path):
     fresh load of the new version, neither the next query nor a delete
     reloads it, and scores after the update and the delete stay exact."""
     from macrobase_spark.index.build import (_term_dict, delete_docs,
-                                             open_index, read_index,
+                                             open_version, read_index,
                                              update_index)
 
     df, _, docs, _ = corpus
@@ -1331,14 +1423,15 @@ def test_update_folds_the_served_term_dictionary(spark, corpus, tmp_path):
     bm25_topk(spark, out, q).collect()  # served: the dictionary is loaded
     update_index(df.filter(~base), out)
     read_index(spark, out)
-    assert _jobs(spark, "dict folded", lambda: open_index(spark, out)) == 0
-    postings, _, _, folded = open_index(spark, out)
+    assert _jobs(spark, "dict folded", lambda: open_version(spark, out)) == 0
+    v = open_version(spark, out)
+    postings, folded = v.handles[0], v.tdict
     assert folded == _term_dict(
         postings.select("term", "df", "max_impact").toArrow())
     assert max(s.rows for s in folded.stats.values()) > 1  # segmented
     victim = bm25_oracle(docs, q, k=1)[0][0]
     delete_docs(spark, out, [victim])
-    assert _jobs(spark, "dict deleted", lambda: open_index(spark, out)) == 0
+    assert _jobs(spark, "dict deleted", lambda: open_version(spark, out)) == 0
     got = [(r["doc_id"], r["score"])
            for r in bm25_topk(spark, out, q, k=8).collect()]
     assert got == bm25_oracle(docs, q, k=8,
