@@ -16,11 +16,11 @@ Every term-query entry point runs the same three stages:
      and refuse the option combinations no surface supports. The result is
      one `_Clauses(terms, nterms, boosts)` per query. Every df — hence
      every idf, WAND upper bound and phrase rarest-term choice — is a
-     driver literal from the same dictionary. The only Spark job for term
-     metadata is the dictionary's one column-pruned collect on the first
-     query after the index version changes (a build, compaction, merge or
-     another process's update; an in-process update_index folds its delta
-     into the served dictionary instead).
+     driver literal from the same dictionary, which no Spark job loads:
+     it is one column-pruned pyarrow read of the version's part files on
+     the first query after the index version changes (a build,
+     compaction, merge or another process's update; an in-process
+     update_index folds its delta into the served dictionary instead).
   2. score, in-process on the driver, once per index: `_candidates` reads
      the posting rows of every scored AND excluded term with pyarrow from
      the version's part files (term → bucket is computed driver-side, and
@@ -44,8 +44,11 @@ Every term-query entry point runs the same three stages:
      order (score desc, doc_id asc); the result is a local DataFrame.
 
 A sharded call is the same pipeline over several index handles, one
-kernel run per shard. The phrase paths keep a Spark read of the
-positional layer (`_positions`).
+kernel run per shard. The phrase paths share stages 2 and 3: `_candidates`
+reads the phrase terms' rows from the version's positional part files,
+and `_phrase_hits` decodes them, cuts the candidates to the docs that hold
+every phrase term, scores each term with `_row_contrib` and verifies the
+ordered match on the driver.
 
 Determinism/rank-identity: postings are scored with float64 throughout;
 ties broken by ascending doc_id. Scores are identical bits to the oracle
@@ -297,55 +300,51 @@ def _edit_distances(a: str, bs: list[str]) -> np.ndarray:
     return prev[np.arange(len(bs)), [len(b) for b in bs]]
 
 
-def _cursor(after) -> tuple[float, int]:
-    """A search-after cursor's (score, doc_id): a previous-page Row (or
+def _near(a: str, terms: list[str], n: int) -> dict[str, int]:
+    """Every term of `terms` within n edits of `a`, with its distance, in
+    `terms` order: the length band, then one vectorized DP over all of
+    it."""
+    band = [t for t in terms if abs(len(t) - len(a)) <= n]
+    return {t: int(d) for t, d in zip(band, _edit_distances(a, band))
+            if d <= n} if band else {}
+
+
+def _after(after, ids: np.ndarray, scores: np.ndarray, *cols: np.ndarray
+           ) -> tuple[np.ndarray, ...]:
+    """Search-after: the hits (and the aligned `cols`) STRICTLY after the
+    cursor in ranking order (score desc, doc_id asc) — exact because
+    scores are bitwise-reproducible. The cursor is a previous-page Row (or
     mapping) with doc_id/score fields, or an explicit (score, doc_id)
     tuple."""
     try:
-        return float(after["score"]), int(after["doc_id"])
+        s0, d0 = after["score"], after["doc_id"]
     except (TypeError, IndexError, KeyError):
         s0, d0 = after
-        return float(s0), int(d0)
-
-
-def _after_cursor(rel: DataFrame, after) -> DataFrame:
-    """Search-after over the phrase paths' Spark relation (bm25_topk cuts
-    on the driver): keep only rows STRICTLY after the cursor in ranking
-    order (score desc, doc_id asc) — exact because scores are
-    bitwise-reproducible."""
-    s0, d0 = _cursor(after)
-    return rel.filter((F.col("score") < s0)
-                      | ((F.col("score") == s0) & (F.col("doc_id") > d0)))
-
-
-def _rank_within(rel: DataFrame, key: str, col: str = "rank",
-                 score: str = "score") -> DataFrame:
-    """row_number within each `key` partition in ranking order (score
-    desc, doc_id asc)."""
-    from pyspark.sql import Window as W
-
-    return rel.withColumn(col, F.row_number().over(
-        W.partitionBy(key).orderBy(F.col(score).desc(),
-                                   F.col("doc_id").asc())))
+    s0, d0 = float(s0), int(d0)
+    keep = (scores < s0) | ((scores == s0) & (ids > d0))
+    return (ids[keep], scores[keep], *(c[keep] for c in cols))
 
 
 # ------------------------------------------------ shared query stages
 
 class _Index(NamedTuple):
     """One index version: docs handle, stats, term dictionary, the
-    postings part files per bucket and the docs part files."""
+    postings and positional part files per bucket and the docs part
+    files."""
     docs: DataFrame
     stats: dict
     tdict: TermDict
     files: dict[int, list[str]]
     docs_files: list[str]
     dir: str
+    pos_files: dict[int, list[str]] = {}
 
 
 def _open(spark: SparkSession, index_dir: str) -> _Index:
     v = open_version(spark, index_dir)
     _, docs, stats = v.handles
-    return _Index(docs, stats, v.tdict, v.files, v.docs_files, index_dir)
+    return _Index(docs, stats, v.tdict, v.files, v.docs_files, index_dir,
+                  v.pos_files)
 
 
 class _Clauses(NamedTuple):
@@ -405,9 +404,7 @@ class _TermDict:
         all of it."""
         out = {}
         for tok, nv in fuzzies.items():
-            band = [t for t in self.terms if abs(len(t) - len(tok)) <= nv]
-            out[tok] = [t for t, d in zip(band, _edit_distances(tok, band))
-                        if d <= nv] if band else []
+            out[tok] = list(_near(tok, self.terms, nv))
             if len(out[tok]) > self.max_expansions:
                 raise ValueError(
                     f"fuzzy token {tok!r}~{nv} expands to more "
@@ -523,14 +520,15 @@ def _may_hold(stats, terms: list[str]) -> bool:
     return i < len(terms) and terms[i] <= stats.max
 
 
-def _candidates(h: _Index, terms, cols: tuple[str, ...] = ("term", "blob")
-                ) -> list:
-    """The posting rows of `terms`, read on the driver with pyarrow from
-    the index version's part files (one Arrow table per file read): term
-    → bucket = pmod(xxhash64(term), B) is computed here, so only the
-    terms' buckets are read; a row group is read only when its term
-    statistics can hold a wanted term (part files are term-sorted), and
-    its rows then filter on `term IN (…)`."""
+def _candidates(h: _Index, terms, cols: tuple[str, ...] = ("term", "blob"),
+                positional: bool = False) -> list:
+    """The posting rows of `terms` (their positional rows when
+    `positional`), read on the driver with pyarrow from the index
+    version's part files (one Arrow table per file read): term → bucket =
+    pmod(xxhash64(term), B) is computed here, so only the terms' buckets
+    are read; a row group is read only when its term statistics can hold a
+    wanted term (part files of both layers are term-sorted), and its rows
+    then filter on `term IN (…)`."""
     import pyarrow.parquet as pq
 
     from macrobase_spark.index.xxh64 import term_bucket
@@ -539,7 +537,7 @@ def _candidates(h: _Index, terms, cols: tuple[str, ...] = ("term", "blob")
     want = pa.array(terms, pa.string())
     out = []
     for b in sorted({term_bucket(t, h.stats["num_buckets"]) for t in terms}):
-        for f in h.files.get(b, ()):
+        for f in (h.pos_files if positional else h.files).get(b, ()):
             with pq.ParquetFile(f) as pf:
                 md = pf.metadata
                 col = md.schema.names.index("term")
@@ -775,6 +773,19 @@ def _frame(spark: SparkSession, schema: str, **cols) -> DataFrame:
     return spark.createDataFrame(pa.table(cols), schema)
 
 
+def _batch_frame(spark: SparkSession, hits: list) -> DataFrame:
+    """A batch result (query_id, doc_id, score, rank) from each query's
+    (query_id, doc ids, scores) top-k in ranking order."""
+    return _frame(
+        spark, _BATCH,
+        query_id=pa.array([qid for qid, ids, _ in hits for _ in ids],
+                          pa.string()),
+        doc_id=np.concatenate([_NO_HITS[0], *(h[1] for h in hits)]),
+        score=np.concatenate([_NO_HITS[1], *(h[2] for h in hits)]),
+        rank=pa.array([r for _, ids, _ in hits
+                       for r in range(1, len(ids) + 1)], pa.int32()))
+
+
 def _match_set(handles: list[_Index], clauses: _Clauses, mode: str = "or",
                msm: int | None = None, doc_filter: str | None = None
                ) -> np.ndarray:
@@ -960,8 +971,9 @@ def bm25_topk(
     own max ``recency_col`` — deterministic per index state, no
     wall-clock involved. Ages are epoch seconds as Spark's cast(double)
     (numeric column) or unix_timestamp (timestamp, date, string) reads
-    them (`_epoch_seconds`); docs with a NULL
-    timestamp keep weight 1. Block pruning is disabled (the reweighting
+    them (`_epoch_seconds`); an age below 0 (a doc newer than
+    ``recency_ref``) counts as 0, and docs with a NULL timestamp keep
+    weight 1. Block pruning is disabled (the reweighting
     reorders), same policy as anomaly_weight. Requires the index to have
     persisted the ``recency_col`` metadata column (build_index persists
     ``ts`` when the input carries it); a bad half-life or column raises
@@ -1079,7 +1091,8 @@ def bm25_topk(
                 f"recency: every {recency_col!r} in the docs table is "
                 "NULL — pass recency_ref explicitly")
         ref = float(np.nanmax(ts) if recency_ref is None else recency_ref)
-        w = np.power(0.5, ((ref - ts[pos]) / 86400.0)
+        # a doc newer than the reference has age 0, so weight 1
+        w = np.power(0.5, (np.maximum(ref - ts[pos], 0.0) / 86400.0)
                      / float(recency_half_life))
         sc = sc * np.where(np.isnan(w), 1.0, w)
     if spec:
@@ -1095,9 +1108,7 @@ def bm25_topk(
         w = o[np.sort(first)]
         ids, sc, pos = ids[w], sc[w], pos[w]
     if after is not None:
-        s0, d0 = _cursor(after)
-        keep = (sc < s0) | ((sc == s0) & (ids > d0))
-        ids, sc, pos = ids[keep], sc[keep], pos[keep]
+        ids, sc, pos = _after(after, ids, sc, pos)
     o = np.lexsort((ids, -sc))[:k]
     return _hits(spark, ids[o], sc[o], docs,
                  meta.take(pos[o]) if names else None, names)
@@ -1230,7 +1241,7 @@ def bm25_topk_batch(
         td, stats, list(parsed.values()), mode, msm, synonyms,
         max_expansions)) if c.terms}
     if not live:
-        return spark.createDataFrame([], _BATCH)
+        return _batch_frame(spark, [])
     all_terms = sorted({t for c in live.values() for t in c.terms})
     n, avgdl = stats["n_docs"], stats["avgdl"]
     allow_prune = (doc_filter is None and msm is None
@@ -1248,14 +1259,10 @@ def bm25_topk_batch(
                if wand and allow_prune and mode == "or" and wand_q
                and not any(c.boosts for c in live.values()) else None)
     allowed = _allowed([ix], doc_filter)
-    hits = [(qid, *_top(*_live([ix], *h, allowed=allowed), k))
-            for qid, h in _scores(ix, live, _idfs(td, n, all_terms), avgdl,
-                                  k, mode, msm, single, lambdas).items()]
-    return _frame(
-        spark, _BATCH, query_id=[qid for qid, ids, _ in hits for _ in ids],
-        doc_id=np.concatenate([_NO_HITS[0], *(h[1] for h in hits)]),
-        score=np.concatenate([_NO_HITS[1], *(h[2] for h in hits)]),
-        rank=[r for _, ids, _ in hits for r in range(1, len(ids) + 1)])
+    return _batch_frame(spark, [
+        (qid, *_top(*_live([ix], *h, allowed=allowed), k))
+        for qid, h in _scores(ix, live, _idfs(td, n, all_terms), avgdl, k,
+                              mode, msm, single, lambdas).items()])
 
 
 def bm25_oracle(
@@ -1393,82 +1400,78 @@ def _positional_index(spark: SparkSession, index_dir: str) -> _Index:
     return ix
 
 
-def _positions(spark: SparkSession, ix: _Index, terms: list[str]
-               ) -> DataFrame:
-    """The (term, blob) positional rows of `terms` in ONE partition, read
-    by Spark: term → bucket = pmod(xxhash64(term), B) is computed on the
-    driver, so only matching bucket directories are listed, and parquet
-    row-group statistics skip non-matching terms (their df and presence
-    come from the term dictionary: a term's positional rows sum to its
-    posting df)."""
-    import os
+def _phrase_hits(spark: SparkSession, index_dir: str, phrases: dict[str, str],
+                 slop: int, doc_filter: str | None
+                 ) -> dict[str, tuple[np.ndarray, np.ndarray]]:
+    """Every phrase's matching (doc ids, scores), unranked, on the driver:
+    one bucket- and row-group-pruned read of the phrase terms' positional
+    rows (`_candidates` over the version's positional part files), each
+    row decoded once; per phrase, the candidates are the docs that hold
+    every phrase term (the rarest term bounds them), each scored by
+    `_row_contrib` per term and verified by `_phrase_score`; pending
+    deletes and docs outside the doc_filter drop (`_live`).
 
-    from macrobase_spark.index.build import _POS_SCHEMA
-    from macrobase_spark.index.xxh64 import term_bucket
-
-    terms = sorted(set(terms))
-    buckets = sorted({term_bucket(t, ix.stats["num_buckets"]) for t in terms})
-    return (spark.read.schema(_POS_SCHEMA + ", bucket int")
-            .parquet(os.path.join(ix.dir, "positions"))
-            .filter(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
-            .select("term", "blob").coalesce(1))
-
-
-def _restrict(spark: SparkSession, rel: DataFrame, ix: _Index,
-              doc_filter: str | None) -> DataFrame:
-    """The phrase paths' restrictions over their Spark relation: the
-    pending deletes (read on the driver) anti-joined out, then a semi-join
-    to the doc_filter's ids (`_allowed`)."""
-    dead = deleted_ids(ix.dir)
-    if len(dead):
-        rel = rel.join(_frame(spark, "doc_id long", doc_id=dead), "doc_id",
-                       "anti")
-    allowed = _allowed([ix], doc_filter)
-    if allowed is not None:
-        rel = rel.join(_frame(spark, "doc_id long", doc_id=allowed),
-                       "doc_id", "semi")
-    return rel
-
-
-def _gathered(pos_df: DataFrame, idf: dict[str, float], avgdl: float,
-              cand_ids: np.ndarray | None = None,
-              rarest: str | None = None) -> DataFrame:
-    """Per doc, the (term, contrib, pos) parts of the phrase terms it
-    holds: a Python task decodes and scores the positional rows (every
-    term but `rarest` restricted to `cand_ids` when given), then one
-    groupBy gathers the parts per doc."""
+    Index-time stoplist: stoplisted phrase tokens were never indexed but
+    surviving tokens keep original positions (gap-preserving analysis).
+    They drop from the chain while the original span BUDGET stays: "merge
+    the scan" matches any ordered merge..scan within span 2 — both "merge
+    X scan" and adjacent "merge scan". This is span-budget (sloppy-phrase)
+    treatment of the gap, deliberately one notch looser than Lucene's
+    exact position-increment match; phrase_oracle implements the
+    identical rule."""
     from macrobase_spark.index.codec import decode_positional
 
-    def decode_score(batches):
-        for pdf in batches:
-            frames = []
-            for term, blob in zip(pdf["term"], pdf["blob"]):
-                ids, tfs, dls, flat = decode_positional(blob)
-                starts = np.concatenate(
-                    ([0], np.cumsum(tfs)))[:-1].astype(np.int64)
-                if cand_ids is not None and term != rarest:
-                    keep = np.flatnonzero(
-                        np.isin(ids, cand_ids, assume_unique=True))
-                    ids, tfs, dls, starts = (ids[keep], tfs[keep], dls[keep],
-                                             starts[keep])
-                if len(ids) == 0:
-                    continue
-                frames.append(pd.DataFrame({
-                    "doc_id": ids.astype(np.int64),
-                    "term": term,
-                    "contrib": _row_contrib(ids, tfs, dls, idf[term], avgdl,
-                                            None, 0, False, None)[1],
-                    "pos": [flat[s:s + int(t_)].astype(np.int32).tolist()
-                            for s, t_ in zip(starts, tfs)],
-                }))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    return pos_df.mapInPandas(
-        decode_score,
-        schema="doc_id long, term string, contrib double, pos array<int>"
-    ).groupBy("doc_id").agg(
-        F.collect_list(F.struct("term", "contrib", "pos")).alias("parts"))
+    ix = _positional_index(spark, index_dir)
+    stop = set(ix.stats.get("stopwords", []))
+    seqs, spans = {}, {}
+    for qid, p in phrases.items():
+        seq_full = _re.findall(TOKEN_PATTERN, p.lower())
+        seq = [t for t in seq_full if t not in stop]
+        if seq:
+            seqs[qid] = seq
+            spans[qid] = len(seq_full) - 1 + max(0, int(slop))
+    td, avgdl = ix.tdict, ix.stats["avgdl"]
+    idf = _idfs(td, ix.stats["n_docs"], {t for s in seqs.values() for t in s})
+    # a phrase with an unindexed term can never match
+    live = {qid: s for qid, s in seqs.items() if all(t in idf for t in s)}
+    if not live:
+        return {}
+    # per term, over its positional rows: doc ids, tfs, dls, where each
+    # doc's positions start in `flat`, and `flat`
+    rows: dict[str, list] = {}
+    for tbl in _candidates(ix, idf, positional=True):
+        for term, blob in zip(tbl["term"].to_pylist(),
+                              tbl["blob"].to_pylist()):
+            rows.setdefault(term, []).append(decode_positional(blob))
+    post = {}
+    for t, parts in rows.items():
+        ids, tfs, dls, flat = (np.concatenate(c) for c in zip(*parts))
+        starts = np.concatenate(([0], np.cumsum(tfs)))[:-1].astype(np.int64)
+        o = np.argsort(ids, kind="stable")
+        post[t] = (ids[o].astype(np.int64), tfs[o].astype(np.int64), dls[o],
+                   starts[o], flat.astype(np.int64))
+    out = {}
+    for qid, seq in live.items():
+        terms = sorted(set(seq), key=lambda t: td.stats[t].df)
+        cand = post[terms[0]][0]
+        for t in terms[1:]:
+            cand = cand[np.isin(cand, post[t][0])]
+        parts = {}
+        for t in terms:
+            ids, tfs, dls, starts, flat = post[t]
+            j = np.searchsorted(ids, cand)
+            parts[t] = (_row_contrib(cand, tfs[j], dls[j], idf[t], avgdl,
+                                     None, 0, False, None)[1],
+                        starts[j], tfs[j], flat)
+        # a doc without a match scores None, which reads as NaN
+        sc = np.array([_phrase_score(
+            {t: {"contrib": c[i], "pos": f[s[i]:s[i] + n[i]]}
+             for t, (c, s, n, f) in parts.items()}, seq, spans[qid])
+            for i in range(len(cand))], dtype=np.float64)
+        hit = ~np.isnan(sc)
+        out[qid] = (cand[hit], sc[hit])
+    allowed = _allowed([ix], doc_filter)
+    return {qid: _live([ix], *h, allowed=allowed) for qid, h in out.items()}
 
 
 def _phrase_score(by_term: dict, seq: list[str], max_span: int
@@ -1508,7 +1511,6 @@ def bm25_phrase_topk(
     index_dir: str,
     phrase: str,
     k: int = 10,
-    candidate_collect_limit: int = 200_000,
     slop: int = 0,
     doc_filter: str | None = None,
     after: tuple[float, int] | None = None,
@@ -1523,12 +1525,12 @@ def bm25_phrase_topk(
     terms (ascending-term float order — the engine-wide reproducibility
     convention).
 
-    Plan: bucket/row-group-pruned scan of the phrase terms' positional
-    blobs → Arrow decode+score, pre-filtered to the rarest term's doc set
-    when that set is small enough to broadcast in the UDF closure
-    (candidate_collect_limit) → per-doc gather of (term, contrib,
-    positions) → vectorized adjacency verify + score → top-k. The rarest
-    term bounds the candidate count the same way WAND's pivoting does.
+    Plan, on the driver: a bucket/row-group-pruned pyarrow read of the
+    phrase terms' positional rows → one decode per row → the docs that
+    hold every phrase term (the rarest term bounds them, as WAND's
+    pivoting does) → per-term contributions and a greedy ordered-match
+    verify per candidate (`_phrase_hits`) → top-k. No Spark job runs
+    unless a doc_filter is given (one job, `_allowed`).
 
     doc_filter (SQL expression over docs metadata, see bm25_topk)
     restricts the phrase match to the filtered doc population before
@@ -1536,60 +1538,13 @@ def bm25_phrase_topk(
     pagination cursor as bm25_topk's (strict ranking-order position;
     exact across pages).
     """
-    from macrobase_spark.index.codec import decode_positional
-
-    seq = _re.findall(TOKEN_PATTERN, phrase.lower())
-    out_schema = _HITS
-    if not seq:
-        return spark.createDataFrame([], out_schema)
-    ix = _positional_index(spark, index_dir)
-    stats = ix.stats
-    # index-time stoplist: stoplisted phrase tokens were never indexed but
-    # surviving tokens keep original positions (gap-preserving analysis).
-    # Drop stoplisted tokens from the chain while keeping the original
-    # span BUDGET: "merge the scan" matches any ordered merge..scan within
-    # span 2 — both "merge X scan" and adjacent "merge scan". This is
-    # span-budget (sloppy-phrase) treatment of the gap, deliberately one
-    # notch looser than Lucene's exact position-increment match; the
-    # brute-force oracle implements the identical rule.
-    _orig_len = len(seq)
-    _stop = set(stats.get("stopwords", []))
-    if _stop:
-        seq = [t for t in seq if t not in _stop]
-        if not seq:
-            return spark.createDataFrame([], out_schema)
-    n, avgdl = stats["n_docs"], stats["avgdl"]
-    uterms = sorted(set(seq))
-    idf = _idfs(ix.tdict, n, uterms)
-    if len(idf) < len(uterms):
-        return spark.createDataFrame([], out_schema)  # a term is absent
-    pos_df = _positions(spark, ix, uterms)
-    cand_ids: np.ndarray | None = None
-    tstats = ix.tdict.stats
-    rarest = min(uterms, key=lambda t: tstats[t].df)
-    if len(uterms) > 1 and tstats[rarest].df <= candidate_collect_limit:
-        blobs = pos_df.filter(F.col("term") == rarest).select(
-            "blob").collect()
-        cand_ids = np.sort(np.concatenate(
-            [decode_positional(r["blob"])[0] for r in blobs]))
-
-    gathered = _gathered(pos_df, idf, avgdl, cand_ids, rarest)
-    max_span = _orig_len - 1 + max(0, int(slop))
-
-    @F.pandas_udf("double")
-    def phrase_score(parts_col: pd.Series) -> pd.Series:
-        return pd.Series([_phrase_score({p["term"]: p for p in plist}, seq,
-                                        max_span) for plist in parts_col],
-                         dtype="float64")
-
-    out = (gathered.withColumn("score", phrase_score("parts"))
-           .filter(F.col("score").isNotNull())
-           .select("doc_id", "score"))
-    out = _restrict(spark, out, ix, doc_filter)
+    if not _re.findall(TOKEN_PATTERN, phrase.lower()):
+        return _hits(spark, *_NO_HITS)
+    ids, sc = _phrase_hits(spark, index_dir, {"": phrase}, slop,
+                           doc_filter).get("", _NO_HITS)
     if after is not None:
-        out = _after_cursor(out, after)
-    return (out.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(k))
+        ids, sc = _after(after, ids, sc)
+    return _hits(spark, *_top(ids, sc, k))
 
 
 def phrase_oracle(docs: list[tuple[int, str]], phrase: str,
@@ -2085,60 +2040,19 @@ def bm25_phrase_topk_batch(
     slop: int = 0,
     doc_filter: str | None = None,
 ) -> DataFrame:
-    """Top-k for MANY phrase queries in one positional scan — the batch
+    """Top-k for MANY phrase queries in one positional read — the batch
     twin of bm25_phrase_topk (same span-budget semantics, same
-    ascending-term scores, pytest-pinned bit-identical per query):
-    one bucket/row-group-pruned decode over the union of every phrase's
-    terms, one per-doc gather, then a vectorized verify that evaluates
-    every phrase whose terms a document carries. Returns (query_id,
-    doc_id, score, rank).
-
-    Candidate pre-filtering (the single path's rarest-term doc set) is
-    skipped — the batch amortizes one full decode of the union terms
-    across all phrases, which is the serving shape when phrases share
-    vocabulary. slop and doc_filter apply to every phrase in the batch."""
+    ascending-term scores, pytest-pinned bit-identical per query): one
+    bucket/row-group-pruned read and decode of the union of every
+    phrase's terms, then each phrase's candidates, verify and top-k on the
+    driver (`_phrase_hits`). Returns (query_id, doc_id, score, rank).
+    slop and doc_filter apply to every phrase in the batch; only a
+    doc_filter runs a Spark job (one per call)."""
     if isinstance(phrases, list):
         phrases = {str(i): p for i, p in enumerate(phrases)}
-    out_schema = _BATCH
-    ix = _positional_index(spark, index_dir)
-    stats = ix.stats
-    _stop = set(stats.get("stopwords", []))
-    seqs: dict[str, list[str]] = {}
-    spans: dict[str, int] = {}
-    for qid, p in phrases.items():
-        seq_full = _re.findall(TOKEN_PATTERN, p.lower())
-        seq = [t for t in seq_full if t not in _stop]
-        if seq:
-            seqs[qid] = seq
-            spans[qid] = len(seq_full) - 1 + max(0, int(slop))
-    if not seqs:
-        return spark.createDataFrame([], out_schema)
-    n, avgdl = stats["n_docs"], stats["avgdl"]
-    idf = _idfs(ix.tdict, n, {t for s in seqs.values() for t in s})
-    # a phrase with an unindexed term can never match — drop it up front
-    live = {qid: s for qid, s in seqs.items() if all(t in idf for t in s)}
-    if not live:
-        return spark.createDataFrame([], out_schema)
-    gathered = _gathered(_positions(spark, ix, sorted(
-        {t for s in live.values() for t in s})), idf, avgdl)
-
-    def verify(pdf_iter):
-        for pdf in pdf_iter:
-            out = [(qid, int(doc_id), sc)
-                   for doc_id, plist in zip(pdf["doc_id"], pdf["parts"])
-                   for by_term in [{p["term"]: p for p in plist}]
-                   for qid, seq in live.items()
-                   for sc in [_phrase_score(by_term, seq, spans[qid])]
-                   if sc is not None]
-            if out:
-                yield pd.DataFrame(out, columns=["query_id", "doc_id",
-                                                 "score"])
-
-    scored = gathered.mapInPandas(
-        verify, schema="query_id string, doc_id long, score double")
-    scored = _restrict(spark, scored, ix, doc_filter)
-    return (_rank_within(scored, "query_id").filter(F.col("rank") <= k)
-            .select("query_id", "doc_id", "score", "rank"))
+    return _batch_frame(spark, [
+        (qid, *_top(ids, sc, k)) for qid, (ids, sc) in _phrase_hits(
+            spark, index_dir, phrases, slop, doc_filter).items()])
 
 
 def bm25_count(

@@ -817,6 +817,14 @@ def _file_bucket(path: str) -> int:
     return int(os.path.basename(os.path.dirname(path)).split("=")[1])
 
 
+def _files_by_bucket(root: str) -> dict[int, list[str]]:
+    """root's part files, sorted, per bucket."""
+    files: dict[int, list[str]] = {}
+    for f in sorted(_part_files(root)):
+        files.setdefault(_file_bucket(f), []).append(f)
+    return files
+
+
 def take_index_snapshot(out_dir: str) -> dict:
     """Record the pre-mutation state of every index artifact update_index /
     build_index touches."""
@@ -959,7 +967,7 @@ def delete_docs(spark: SparkSession, out_dir: str, doc_ids) -> dict:
     (Lucene-style) delete completing the LSM lifecycle:
 
     - the effect on queries is IMMEDIATE: bm25_topk / bm25_topk_batch /
-      bm25_phrase_topk anti-join pending tombstones out of the result set
+      bm25_phrase_topk drop pending tombstones from the result set
       (block pruning is disabled while tombstones are pending, exactness
       over speed — a delete can promote docs from pruned blocks);
     - corpus statistics (n_docs, avgdl, per-term df/idf) keep counting
@@ -1571,18 +1579,20 @@ def _term_dict(rows, base: TermDict | None = None) -> TermDict:
 
 class _Version:
     """One cached index version: read_index's (postings, docs, stats)
-    handles, the postings part files per bucket and the docs part files,
-    all taken on the first read, and its TermDict, loaded on the first
-    open_version — or folded in ahead of the first read by the in-process
-    update_index that created the version. The query path reads candidate
-    rows from `files` and docs metadata from `docs_files` only, so a file
-    written after the version opened is never read by it."""
-    __slots__ = ("handles", "tdict", "files", "docs_files")
+    handles, the postings and positional part files per bucket and the
+    docs part files, all taken on the first read, and its TermDict, loaded
+    on the first open_version — or folded in ahead of the first read by
+    the in-process update_index that created the version. The query path
+    reads candidate rows from `files` / `pos_files` and docs metadata from
+    `docs_files` only, so a file written after the version opened is never
+    read by it."""
+    __slots__ = ("handles", "tdict", "files", "pos_files", "docs_files")
 
     def __init__(self, tdict: TermDict | None = None):
         self.handles: tuple[DataFrame, DataFrame, dict] | None = None
         self.tdict = tdict
         self.files: dict[int, list[str]] = {}
+        self.pos_files: dict[int, list[str]] = {}
         self.docs_files: list[str] = []
 
 
@@ -1635,12 +1645,11 @@ def _index_entry(spark: SparkSession, out_dir: str) -> _Version:
     # cache (and pin old DataFrames) for the life of a query server
     for k in [k for k in _INDEX_CACHE if k[:2] == key[:2] and k != key]:
         del _INDEX_CACHE[k]
-    files: dict[int, list[str]] = {}
-    for f in sorted(_part_files(postings_root)):
-        files.setdefault(_file_bucket(f), []).append(f)
     docs_root = os.path.join(out_dir, "docs.parquet")
     entry = _INDEX_CACHE.setdefault(key, _Version())
-    entry.files = files
+    entry.files = _files_by_bucket(postings_root)
+    if stats.get("has_positions"):
+        entry.pos_files = _files_by_bucket(os.path.join(out_dir, "positions"))
     entry.docs_files = [os.path.join(docs_root, f)
                         for f in _list_dir(docs_root) or []
                         if f.endswith(".parquet")

@@ -1,22 +1,25 @@
 """Query-suggestion surface over the index's term dictionary: prefix
 autocomplete and did-you-mean spelling correction.
 
-Both operate on the (term, df) projection of the postings parquet —
-column pruning keeps the posting blobs untouched, so at 100 TB these are
-dictionary scans, not index scans (same access shape as the prefix/fuzzy
-query expansions in bm25.py). Everything stays JVM-side: the prefix match
-is a `startswith` filter and the edit distance is Spark's built-in
-levenshtein — no Python in the scan.
+Both answer from the term dictionary `build.open_version` memoizes per
+index version — the sorted vocabulary and each term's df summed over its
+posting rows, read with pyarrow from the (term, df, max_impact) columns of
+the version's part files, so the posting blobs are never read — on the
+driver, with no Spark job: the prefix match is a bisect range over the
+sorted terms, and the edit distance is one vectorized levenshtein DP over
+the length band (`bm25._near`, the fuzzy-query expansion's matcher; equal
+to Spark's `levenshtein`, pytest-pinned).
 
 Reference capability context: the reference's SQL shell exposes the data
 through exact relational operators only; the suggestion surface is part
 of the Lucene-class query engine this graft adds on top (Lucene
 `PrefixQuery`-backed suggesters and `DirectSpellChecker`'s
-dictionary-intersection rewrite, re-expressed as DataFrame plans).
+dictionary-intersection rewrite).
 
-Both accept a LIST of index dirs too (time-partitioned shards): the
-dictionaries union and df sums globally, so the suggestion ranking over
-shards equals the merged monolith's (pytest-pinned).
+Both accept a LIST of index dirs too (time-partitioned shards): each
+shard's dictionary is matched on its own and the matched terms' dfs sum
+across shards before ranking (and before min_df), so the suggestion
+ranking over shards equals the merged monolith's (pytest-pinned).
 
 Semantics notes shared by both functions:
 - A segmented index (post-update, pre-compaction) may carry one row per
@@ -30,41 +33,34 @@ Semantics notes shared by both functions:
 
 from __future__ import annotations
 
+import heapq
+from bisect import bisect_left
+from collections import Counter
+from itertools import takewhile
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from macrobase_spark.index.build import read_index
-
-
-def _dictionary(postings: DataFrame) -> DataFrame:
-    """(term, df) dictionary view: df summed across segment rows."""
-    return postings.groupBy("term").agg(F.sum("df").alias("df"))
+from macrobase_spark.index.bm25 import _frame, _near
+from macrobase_spark.index.build import TermDict, open_version
 
 
-def _open_dictionary(spark: SparkSession,
-                     index_dir: str | list[str]) -> DataFrame:
-    """One (term, df) dictionary over a single index OR a list of
-    physical shards — the sharded case unions the shards' postings
-    (term+df columns only) and sums df per term, the same
-    global-statistics treatment bm25_topk_sharded gives scoring: an
-    autocomplete ranking over era shards equals the merged monolith's."""
+def _dictionaries(spark: SparkSession,
+                  index_dir: str | list[str]) -> list[TermDict]:
+    """The term dictionaries of a single index OR of a list of physical
+    shards, which must share one stoplist (shards built with different
+    analyzers have incompatible dictionaries — merging their counts would
+    silently break the sharded-equals-monolith guarantee)."""
     dirs = [index_dir] if isinstance(index_dir, str) else list(index_dir)
     if not dirs:
         raise ValueError("suggest: empty shard list")
-    u, stops = None, set()
-    for d in dirs:
-        postings, _docs, stats = read_index(spark, d)
-        stops.add(tuple(stats.get("stopwords", [])))
-        p = postings.select("term", "df")
-        u = p if u is None else u.unionByName(p)
+    versions = [open_version(spark, d) for d in dirs]
+    stops = {tuple(v.handles[2].get("stopwords", [])) for v in versions}
     if len(stops) > 1:
-        # mirror bm25_topk_sharded/bm25_facets_sharded: shards built with
-        # different analyzers have incompatible dictionaries — merging
-        # them would silently break the sharded-equals-monolith guarantee
         raise ValueError(
             "suggest: shards were built with DIFFERENT stoplists "
             f"{sorted(stops)!r} — rebuild with one list")
-    return _dictionary(u)
+    return [v.tdict for v in versions]
 
 
 def suggest_terms(
@@ -81,10 +77,15 @@ def suggest_terms(
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k!r}")
     prefix = prefix.strip().lower()
-    d = _open_dictionary(spark, index_dir)
-    if prefix:
-        d = d.filter(F.col("term").startswith(prefix))
-    return d.orderBy(F.col("df").desc(), F.col("term").asc()).limit(k)
+    df: Counter[str] = Counter()
+    for td in _dictionaries(spark, index_dir):
+        for t in takewhile(lambda t: t.startswith(prefix),
+                           td.terms[bisect_left(td.terms, prefix):]):
+            df[t] += td.stats[t].df
+    top = heapq.nsmallest(k, df.items(), key=lambda x: (-x[1], x[0]))
+    return _frame(spark, "term string, df long",
+                  term=pa.array([t for t, _ in top], pa.string()),
+                  df=pa.array([n for _, n in top], pa.int64()))
 
 
 def spellcheck(
@@ -103,10 +104,8 @@ def spellcheck(
     the "no correction needed" signal. min_df drops hapax-noise
     corrections (a misspelling suggesting OTHER one-off misspellings).
 
-    The scan is length-banded before the levenshtein evaluates
-    (|len(term) − len(token)| ≤ max_edits), the same codegen'd
-    pre-filter the fuzzy-query expansion uses; the scan reads only the
-    term and df columns either way."""
+    Only the length band (|len(term) − len(token)| ≤ max_edits) is
+    compared, the same pre-filter the fuzzy-query expansion uses."""
     if max_edits not in (1, 2):
         raise ValueError(
             f"max_edits must be 1 or 2 (Lucene fuzzy bound), got {max_edits!r}")
@@ -117,13 +116,16 @@ def spellcheck(
     token = token.strip().lower()
     if not token:
         raise ValueError("spellcheck token must be non-empty")
-    d = _open_dictionary(spark, index_dir)
-    band = ((F.length("term") >= len(token) - max_edits)
-            & (F.length("term") <= len(token) + max_edits))
-    d = (d.filter(band)
-         .withColumn("distance",
-                     F.levenshtein(F.col("term"), F.lit(token)))
-         .filter(F.col("distance") <= max_edits)
-         .filter(F.col("df") >= min_df))
-    return d.orderBy(F.col("distance").asc(), F.col("df").desc(),
-                     F.col("term").asc()).limit(k)
+    df: Counter[str] = Counter()
+    dist: dict[str, int] = {}
+    for td in _dictionaries(spark, index_dir):
+        for t, d in _near(token, td.terms, max_edits).items():
+            df[t] += td.stats[t].df
+            dist[t] = d
+    top = heapq.nsmallest(k, ((t, n, dist[t]) for t, n in df.items()
+                              if n >= min_df),
+                          key=lambda x: (x[2], -x[1], x[0]))
+    return _frame(spark, "term string, df long, distance int",
+                  term=pa.array([t for t, _, _ in top], pa.string()),
+                  df=pa.array([n for _, n, _ in top], pa.int64()),
+                  distance=pa.array([d for _, _, d in top], pa.int32()))

@@ -735,6 +735,19 @@ def test_recency_epoch_seconds_follow_spark(spark, tmp_path, tz):
         spark.conf.set("spark.sql.session.timeZone", old_tz)
 
 
+def test_recency_ref_before_every_ts_keeps_raw_scores(spark, corpus):
+    """A recency_ref earlier than every doc's timestamp makes each age
+    negative, which counts as 0: every weight is 1, so the scores stay
+    finite and the rows equal the same query without recency, bitwise."""
+    df, out, _, _ = corpus
+    lo = df.agg(F.min(F.col("ts").cast("double"))).collect()[0][0]
+    raw = bm25_topk(spark, out, "the call", k=12).collect()
+    got = bm25_topk(spark, out, "the call", k=12, recency_half_life=1.0,
+                    recency_ref=lo - 86400.0).collect()
+    assert got and all(math.isfinite(r["score"]) for r in got)
+    assert [tuple(r) for r in got] == [tuple(r) for r in raw]
+
+
 # ------------------------------------------- r5: regexp term queries
 
 

@@ -67,20 +67,26 @@ def pos_index(spark, tmp_path_factory):
 PHRASES = [
     "the", "the user", "tool call", "call the tool",
     "the the",            # duplicate-token phrase
-    "rare7 the",          # rare + hot
+    "rare7 the",          # rare + hot, no match (rare7 ends its turn)
     "zzz missing term",   # absent term -> empty
 ]
 
 
 def test_phrase_rank_score_identity(spark, pos_index):
+    """Rank+score identity vs the oracle on every PHRASES case, plus a
+    matching rare + common phrase (the token before rare7, then rare7),
+    where the candidates are cut to the rare term's one doc."""
     out, docs = pos_index
-    for phrase in PHRASES:
+    toks = next(t for _, t in docs if "rare7" in t.split()).split()
+    rare = f"{toks[toks.index('rare7') - 1]} rare7"
+    for phrase in PHRASES + [rare]:
         got = [(r["doc_id"], r["score"]) for r in
                bm25_phrase_topk(spark, out, phrase, k=10).collect()]
         want = phrase_oracle(docs, phrase, k=10)
         assert [d for d, _ in got] == [d for d, _ in want], phrase
         for (_, gs), (_, ws) in zip(got, want):
             assert math.isclose(gs, ws, rel_tol=1e-12), (phrase, gs, ws)
+        assert want or phrase != rare
 
 
 def test_phrase_requires_adjacency(spark, pos_index):
@@ -105,21 +111,6 @@ def test_phrase_requires_adjacency(spark, pos_index):
         got_all = {r["doc_id"] for r in
                    bm25_phrase_topk(spark, out, phrase, k=10 ** 6).collect()}
         assert got_all == matched, phrase
-
-
-def test_phrase_candidate_prefilter_path(spark, pos_index):
-    """Force the rarest-term broadcast prefilter on AND off — identical
-    results (the prefilter is a pure optimization)."""
-    out, docs = pos_index
-    phrase = "rare7 the"
-    on = [(r["doc_id"], round(r["score"], 9)) for r in
-          bm25_phrase_topk(spark, out, phrase, k=10,
-                           candidate_collect_limit=10 ** 6).collect()]
-    off = [(r["doc_id"], round(r["score"], 9)) for r in
-           bm25_phrase_topk(spark, out, phrase, k=10,
-                            candidate_collect_limit=0).collect()]
-    assert on == off == [(d, round(s, 9)) for d, s in
-                         phrase_oracle(docs, phrase, k=10)]
 
 
 def test_phrase_slop_identity(spark, pos_index):
@@ -266,14 +257,22 @@ def test_phrase_doc_filter_rank_identity(spark, pos_index):
             t.filter(F.col("role") == "assistant")
             .select("doc_id").collect()}
     ph = "tok0000 tok0000"
-    got = [(r["doc_id"], r["score"]) for r in
-           bm25_phrase_topk(spark, out, ph, k=12,
-                            doc_filter="role = 'assistant'").collect()]
+    rows = bm25_phrase_topk(spark, out, ph, k=12,
+                            doc_filter="role = 'assistant'").collect()
+    got = [(r["doc_id"], r["score"]) for r in rows]
     want = phrase_oracle(docs, ph, k=12, keep_ids=keep)
     assert want, "fixture phrase must match within role='assistant'"
     assert [g[0] for g in got] == [w[0] for w in want]
     assert all(abs(g[1] - w[1]) < 1e-12 for g, w in zip(got, want))
     assert all(d in keep for d, _ in got)
+    # search-after pages (Row and (score, doc_id) cursors) tile the
+    # filtered ranking
+    mid = len(got) // 2
+    for cursor in (rows[mid - 1], (got[mid - 1][1], got[mid - 1][0])):
+        page = bm25_phrase_topk(spark, out, ph, k=len(got) - mid,
+                                doc_filter="role = 'assistant'",
+                                after=cursor).collect()
+        assert [(r["doc_id"], r["score"]) for r in page] == got[mid:]
 
 
 def test_phrase_batch_matches_single(spark, tmp_path):

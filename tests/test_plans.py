@@ -435,26 +435,47 @@ def test_bm25_search_after_keeps_single_term_no_shuffle_shape(spark, tmp_path,
     assert reads and not any("/docs.parquet/" in f for f, _ in reads)
 
 
-def test_suggest_and_spellcheck_scan_term_df_only(spark, tmp_path):
-    """The suggestion surface plans as a dictionary scan: only the term
-    and df columns are read (blobs/block_max untouched), and the prefix
-    predicate reaches the scan."""
+def test_suggest_and_spellcheck_read_the_dictionary_on_the_driver(
+        spark, tmp_path, monkeypatch):
+    """The suggestion surface answers from the term dictionary: on a new
+    index version its one load is a pyarrow read of (term, df,
+    max_impact) — posting blobs and block_max are never read, no
+    candidate or docs file is opened — and neither call runs a Spark
+    job, cold or warm."""
+    import pyarrow.parquet as pq
+
     from macrobase_spark.fixtures.transcripts import synth_transcripts, with_doc_id
-    from macrobase_spark.index.build import build_index
+    from macrobase_spark.index.build import (build_index,
+                                             invalidate_index_cache,
+                                             read_index)
     from macrobase_spark.index.suggest import spellcheck, suggest_terms
 
     df = with_doc_id(synth_transcripts(spark, n_convs=20, seed=42))
     out = str(tmp_path / "plan_idx_sg")
-    build_index(df, out, num_buckets=4, hot_df_threshold=10 ** 9)
-    p = _plan(suggest_terms(spark, out, "tok", k=5))
-    read_schema = p.split("ReadSchema:")[1].split("\n")[0]
-    assert "term" in read_schema and "df" in read_schema
-    assert "blob" not in read_schema and "block_max" not in read_schema
-    assert "StartsWith" in p
-    p2 = _plan(spellcheck(spark, out, "tok0001", max_edits=1, k=5))
-    read_schema2 = p2.split("ReadSchema:")[1].split("\n")[0]
-    assert "blob" not in read_schema2 and "block_max" not in read_schema2
-    assert "levenshtein" in p2.lower()
+    build_index(df, out, num_buckets=4, hot_df_threshold=10 ** 9,
+                positions=True)
+    invalidate_index_cache(out)
+    read_index(spark, out)  # the handles' one job (docs schema inference)
+    columns = []
+    read_table = pq.read_table
+
+    def spy(source, *args, **kwargs):
+        columns.append(kwargs.get("columns"))
+        return read_table(source, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "read_table", spy)
+    reads = _driver_reads(monkeypatch)
+    for name in ("cold", "warm"):
+        got = _no_jobs(spark, f"suggest {name}", lambda: suggest_terms(
+            spark, out, "tok", k=5).collect())
+        assert len(got) == 5 and all(r["term"].startswith("tok")
+                                     for r in got)
+        got = _no_jobs(spark, f"spellcheck {name}", lambda: spellcheck(
+            spark, out, "tok0001", max_edits=1, k=5).collect())
+        assert got[0]["term"] == "tok0001" and got[0]["distance"] == 0
+    assert columns and all(c == ["term", "df", "max_impact"]
+                           for c in columns)
+    assert reads == []
 
 
 def test_match_ids_plans_no_scoring_aggregate(spark, tmp_path):

@@ -930,6 +930,44 @@ def test_spellcheck_matches_python_recount(spark, corpus):
         spellcheck(spark, out, "   ")
 
 
+def test_edit_distances_equal_spark_levenshtein(spark, corpus):
+    """spellcheck's and the fuzzy expansion's matcher equals Spark's
+    levenshtein: over seeded random words from an alphabet with non-ASCII
+    letters (two-, three- and four-byte UTF-8), `_edit_distances` gives
+    every pair's distance and `_near` the matches within 1 and 2 edits; a
+    token whose length band holds no term matches nothing."""
+    import random
+
+    from macrobase_spark.index.bm25 import _edit_distances, _near
+    from macrobase_spark.index.suggest import spellcheck
+
+    rng = random.Random(13)
+    alphabet = "abcd0é\u00df\u65e5\U0001f600"
+
+    def word(lo, hi):
+        return "".join(rng.choice(alphabet)
+                       for _ in range(rng.randint(lo, hi)))
+
+    words = sorted({word(1, 7) for _ in range(60)})
+    tokens = [word(1, 7) for _ in range(8)] + [
+        w[:-1] + rng.choice(alphabet) for w in rng.sample(words, 4)]
+    pairs = spark.createDataFrame([(a, b) for a in tokens for b in words],
+                                  "a string, b string")
+    lev = {(r["a"], r["b"]): r["d"] for r in pairs.select(
+        "a", "b", F.levenshtein("a", "b").alias("d")).collect()}
+    for a in tokens:
+        assert _edit_distances(a, words).tolist() == [lev[a, b]
+                                                      for b in words], a
+        for n in (1, 2):
+            assert _near(a, words, n) == {
+                b: lev[a, b] for b in words
+                if abs(len(a) - len(b)) <= n and lev[a, b] <= n}, (a, n)
+    assert any(_near(a, words, 1) for a in tokens)
+    assert _near("x" * 12, words, 2) == {}
+    out = corpus[1]
+    assert spellcheck(spark, out, "x" * 40, max_edits=2).collect() == []
+
+
 def test_match_ids_export_equals_count_and_semantics(spark, corpus):
     """bm25_match_ids = the full match set on the ids-only path: cardinality
     equals bm25_count under every modifier combo, membership equals the
@@ -1107,17 +1145,20 @@ def _jobs_per_call(spark, name, fn):
 def test_bm25_jobs_per_call(spark, corpus, seg_index, shards):
     """Upper bounds on the Spark jobs each BM25 entry point runs per
     call, one bm25_topk per serving query class: a plan that sprouts a
-    job fails here. Term metadata (df, max_impact, expansions) comes from
-    the memoized term dictionary, scoring runs on the driver, and the
-    docs-metadata modifiers and facets read the docs part files with
-    pyarrow, so only a doc_filter (one job per call), the phrase layer
-    and more_like_this's seed lookup run jobs."""
+    job fails here. Term metadata (df, max_impact, expansions) and the
+    suggestion surface come from the memoized term dictionary, scoring
+    and phrase matching run on the driver over pyarrow reads of the
+    version's part files, and the docs-metadata modifiers and facets read
+    the docs part files with pyarrow, so only a doc_filter (one job per
+    call) and more_like_this's seed lookup run jobs."""
     from macrobase_spark.index.bm25 import (bm25_count, bm25_match_ids,
                                             bm25_phrase_topk,
+                                            bm25_phrase_topk_batch,
                                             bm25_topk_sharded,
                                             more_like_this)
     from macrobase_spark.index.build import (invalidate_index_cache,
                                              read_index, open_version)
+    from macrobase_spark.index.suggest import spellcheck, suggest_terms
 
     df, out, docs, _ = corpus
     ids = [d for d, _ in docs[:3]]
@@ -1141,8 +1182,17 @@ def test_bm25_jobs_per_call(spark, corpus, seg_index, shards):
             spark, seg_index, "tok0042 call", doc_ids=ids)),
         "sharded": (0, lambda: bm25_topk_sharded(
             spark, shards[2], "tok0042 the")),
-        "phrase": (2, lambda: bm25_phrase_topk(spark, seg_index,
+        "phrase": (0, lambda: bm25_phrase_topk(spark, seg_index,
                                                "tok0001 tok0000")),
+        "phrase filter": (1, lambda: bm25_phrase_topk(
+            spark, seg_index, "tok0001 tok0000",
+            doc_filter="role = 'assistant'")),
+        "phrase batch": (0, lambda: bm25_phrase_topk_batch(
+            spark, seg_index, ["tok0001 tok0000", "the user", "tool call"])),
+        "suggest_terms": (0, lambda: suggest_terms(spark, out, "tok00")),
+        "suggest sharded": (0, lambda: suggest_terms(spark, shards[2],
+                                                     "tok00")),
+        "spellcheck": (0, lambda: spellcheck(spark, out, "tok0042")),
         "more_like_this": (1, lambda: more_like_this(spark, out, df,
                                                      ids[1])),
         "topk exclude": (0, lambda: bm25_topk(spark, out, "tok0007 -the")),
@@ -1438,15 +1488,19 @@ def test_update_folds_the_served_term_dictionary(spark, corpus, tmp_path):
                               keep_ids={d for d, _ in docs} - {victim})
 
 
-def test_driver_read_follows_the_index_version(spark, corpus, tmp_path):
+def test_driver_read_follows_the_index_version(spark, corpus, tmp_path,
+                                               monkeypatch):
     """Queries read candidate rows from the part files their index version
-    opened with: a part file appended out of band, with stats.json
-    unchanged, is not read by the open version (a new version reads it),
-    and the files of an in-process update_index are read by the next
-    query."""
+    opened with: a postings or positional part file appended out of band,
+    with stats.json unchanged, is not read by the open version (a new
+    version reads it), and the files of an in-process update_index are
+    read by the next query."""
     import glob
     import os
 
+    import pyarrow.parquet as pq
+
+    from macrobase_spark.index.bm25 import bm25_phrase_topk, phrase_oracle
     from macrobase_spark.index.build import (invalidate_index_cache,
                                              update_index)
     from macrobase_spark.index.xxh64 import term_bucket
@@ -1455,25 +1509,47 @@ def test_driver_read_follows_the_index_version(spark, corpus, tmp_path):
     out = str(tmp_path / "ver")
     base = F.col("conv_id") < "conv00000048"
     build_index(df.filter(base), out, num_buckets=4, hot_df_threshold=120,
-                hot_sample_frac=0.5)
+                hot_sample_frac=0.5, positions=True)
     keep = {r["doc_id"] for r in df.filter(base).select("doc_id").collect()}
-    q = "tok0042 the"
+    q, ph = "tok0042 the", "tok0001 tok0000"
 
     def topk():
         return [(r["doc_id"], r["score"])
                 for r in bm25_topk(spark, out, q, k=8).collect()]
 
+    def phrase():
+        return [r["doc_id"]
+                for r in bm25_phrase_topk(spark, out, ph, k=8).collect()]
+
     want = bm25_oracle([(d, t) for d, t in docs if d in keep], q, k=8)
-    assert topk() == want
-    [part] = glob.glob(f"{out}/postings/bucket={term_bucket('tok0042', 4)}"
-                       "/*.parquet")
-    oob = os.path.join(os.path.dirname(part), "part-99999-oob.parquet")
-    shutil.copy(part, oob)
-    assert topk() == want
+    want_ph = [d for d, _ in phrase_oracle(
+        [(d, t) for d, t in docs if d in keep], ph, k=8)]
+    assert topk() == want and phrase() == want_ph and want_ph
+    oobs = []
+    for layer, term in [("postings", "tok0042"), ("positions", "tok0001")]:
+        [part] = glob.glob(f"{out}/{layer}/bucket={term_bucket(term, 4)}"
+                           "/*.parquet")
+        oobs.append(os.path.join(os.path.dirname(part),
+                                 "part-99999-oob.parquet"))
+        shutil.copy(part, oobs[-1])
+    opened = []
+    parquet_file = pq.ParquetFile
+
+    def recorded(path, *args, **kwargs):
+        opened.append(path)
+        return parquet_file(path, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "ParquetFile", recorded)
+    assert topk() == want and phrase() == want_ph
+    assert not set(oobs) & set(opened)
     invalidate_index_cache(out)
     assert topk() != want  # a new version reads the duplicated rows
-    os.remove(oob)
+    phrase()
+    assert set(oobs) <= set(opened)
+    for f in oobs:
+        os.remove(f)
     invalidate_index_cache(out)
-    assert topk() == want
+    assert topk() == want and phrase() == want_ph
     update_index(df.filter(~base), out)
     assert topk() == bm25_oracle(docs, q, k=8)
+    assert phrase() == [d for d, _ in phrase_oracle(docs, ph, k=8)]
