@@ -1290,7 +1290,7 @@ def bm25_oracle(
     tokenized = {d: [t for t in _re.findall(TOKEN_PATTERN, t_.lower())
                      if t not in stop] for d, t_ in docs}
     n = len(tokenized)
-    avgdl = sum(len(v) for v in tokenized.values()) / n
+    avgdl = sum(len(v) for v in tokenized.values()) / max(1, n)
     dfs: Counter[str] = Counter()
     tfs: dict[int, Counter] = {}
     for d, toks in tokenized.items():

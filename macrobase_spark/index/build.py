@@ -41,13 +41,14 @@ the manifest. Granularity = num_groups re-scans of the input (configurable;
 1 = single pass, no mid-build resume).
 
 The positional layer (partial_positional_postings → _merge_partial_pos_runs)
-and update_index's delta segments run the same plan; hot-term detection and
-suggest_stopwords count document frequency over the same packed relation.
+runs the same plan, and so do update_index's delta segments and
+compact_index, whose input is the stale segment rows decoded back into
+partial rows (_segment_partials); hot-term detection and suggest_stopwords
+count document frequency over the same packed relation.
 """
 
 from __future__ import annotations
 
-import functools
 import json
 import os
 import shutil
@@ -56,11 +57,10 @@ import time
 from typing import NamedTuple
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from macrobase_spark.index.codec import delta_varint_encode, delta_varint_decode
+from macrobase_spark.index.codec import delta_varint_decode
 
 # In-process mutation registry: update_index / compact_index register the
 # index dir they are mutating for the duration of the mutation. Crash
@@ -115,12 +115,6 @@ _POS_SCHEMA = "term string, df long, blob_len long, blob binary"
 def _impact(tfs: np.ndarray, dls: np.ndarray, avgdl: float) -> np.ndarray:
     tf = tfs.astype(np.float64)
     return tf / (tf + K1 * (1.0 - B + B * dls.astype(np.float64) / avgdl))
-
-
-def _block_max(impact: np.ndarray) -> list[float]:
-    n_blocks = (len(impact) + BLOCK_SIZE - 1) // BLOCK_SIZE
-    return [float(impact[i * BLOCK_SIZE:(i + 1) * BLOCK_SIZE].max())
-            for i in range(n_blocks)]
 
 
 def _run_starts_arrow(tbl) -> np.ndarray:
@@ -223,10 +217,11 @@ def _merge_partial_runs(avgdl: float):
     term: concatenate each term's list segments (zero-copy child-array
     slices), one lexsort restores global doc order per term (partials
     from different map tasks interleave doc ranges; ids are unique per run
-    because a doc lives in exactly one upstream batch), then
-    _encode_runs_flat emits each term's final row (fan_in 1) — a build's
-    one row per term, an update's one segment row per touched term. No
-    posting row is ever boxed into a Python object."""
+    because a doc lives in exactly one upstream batch, and a compaction's
+    segment rows hold disjoint doc sets too), then _encode_runs_flat emits
+    each term's final row (fan_in 1) — a build's or compaction's one row
+    per term, an update's one segment row per touched term. No posting row
+    is ever boxed into a Python object."""
     import pyarrow as pa
 
     def encode_slice(tbl, starts: np.ndarray, ends: np.ndarray):
@@ -274,59 +269,14 @@ def _decode_partial(blob: bytes) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return ids, tfs, dls
 
 
-def _merge_postings(avgdl: float, blobs: list[bytes],
-                    drop: np.ndarray | None = None) -> dict | None:
-    """The ONE posting merge: one term's blobs (LSM segments — disjoint
-    doc sets) → decode → doc-order argsort → re-encode,
-    with df/cf and block-max impact metadata under `avgdl`. `drop` (a
-    SORTED int64 array of tombstoned doc_ids) purges those docs — the
-    compaction-time physical delete; None when every posting is purged
-    (the term leaves the dictionary)."""
-    from macrobase_spark.index.codec import varint_encode
-
-    parts = [_decode_partial(b) for b in blobs]
-    ids = np.concatenate([p[0] for p in parts])
-    tfs = np.concatenate([p[1] for p in parts])
-    dls = np.concatenate([p[2] for p in parts])
-    order = np.argsort(ids, kind="stable")
-    ids, tfs, dls = ids[order], tfs[order], dls[order]
-    if drop is not None:
-        keep = ~np.isin(ids.astype(np.int64), drop, assume_unique=False)
-        ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-        if len(ids) == 0:
-            return None
-    blob = delta_varint_encode(ids, tfs) + varint_encode(dls)
-    impact = _impact(tfs, dls, avgdl)
-    return {"df": len(ids), "cf": int(tfs.sum()), "fan_in": len(parts),
-            "max_impact": float(impact.max()),
-            "block_max": _block_max(impact), "blob_len": len(blob),
-            "blob": blob}
-
-
-def _grouped_merge(merge, schema: str, drop_bc=None):
-    """compact_index's grouped (applyInPandas) wrapper around a layer's one
-    merge: one term's segment rows → its merged row (`schema`), purging the
-    docs in drop_bc (a Spark broadcast of a SORTED int64 numpy array of
-    tombstoned doc_ids); a term whose postings all vanish emits no row."""
-    columns = [c.split()[0] for c in schema.split(", ")]
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        row = merge(list(pdf["blob"]),
-                    drop_bc.value if drop_bc is not None else None)
-        return pd.DataFrame(
-            [{"term": pdf["term"].iloc[0], **row}] if row is not None else [],
-            columns=columns)
-
-    return fn
-
-
 def _merge_partial_pos_runs(batches):
     """The positional layer's encode kernel (mapInArrow) over MAP-SIDE-
     COMBINED partial rows (tokenize.partial_positional_postings),
     pre-sorted by term: per term, entries re-sort by doc id (one lexsort;
     position segments follow their entry via a vectorized gather) and the
-    term encodes into one self-contained positional blob — a build's one
-    row per term, an update's one segment row per touched term."""
+    term encodes into one self-contained positional blob — a build's or
+    compaction's one row per term, an update's one segment row per touched
+    term."""
     import pyarrow as pa
 
     from macrobase_spark.index.codec import encode_positional
@@ -379,31 +329,48 @@ def _merge_partial_pos_runs(batches):
     return _split_runs(batches, encode_slice)
 
 
-def _merge_positions(blobs: list[bytes],
-                     drop: np.ndarray | None = None) -> dict | None:
-    """The positional layer's one merge: one term's segments → a single
-    doc-sorted blob; `drop` purges tombstoned docs
-    (see _merge_postings)."""
-    from macrobase_spark.index.codec import (decode_positional,
-                                             encode_positional,
-                                             merge_positional_blobs,
-                                             varint_decode)
+def _segment_partials(drop: np.ndarray, schema: str):
+    """compact_index's decode kernel (mapInArrow): each segment row
+    (term, blob) of a layer → one partial row in the build's input format
+    `schema` (tokenize._PARTIAL_SCHEMA, or _PARTIAL_POS_SCHEMA for the
+    positional layer), without the postings of the tombstoned docs in
+    `drop`. A row left empty is dropped, so a fully purged term leaves the
+    dictionary. The layer's encode kernel then merges a term's segment rows
+    exactly as it merges a build's batch partials."""
+    import pyarrow as pa
 
-    blob = merge_positional_blobs(blobs)
-    if drop is not None:
-        ids, tfs, dls, flat = decode_positional(blob)
-        keep = ~np.isin(ids.astype(np.int64), drop)
-        if not keep.all():
-            if not keep.any():
-                return None
-            starts = np.concatenate(([0], np.cumsum(tfs)))[:-1].astype(
-                np.int64)
-            flat = np.concatenate([flat[starts[i]:starts[i] + int(tfs[i])]
-                                   for i in np.flatnonzero(keep)])
-            blob = encode_positional(ids[keep], tfs[keep], dls[keep], flat)
-    # df is the blob's entry count, its leading varint
-    return {"df": int(varint_decode(blob, count=1)[0][0]),
-            "blob_len": len(blob), "blob": blob}
+    from macrobase_spark.index.codec import decode_positional
+
+    fields = [c.split() for c in schema.split(", ")]
+    names = [name for name, _ in fields]
+    dtypes = [{"array<long>": np.int64, "array<int>": np.int32}[t]
+              for _, t in fields[1:]]
+    decode = decode_positional if "pos" in names else _decode_partial
+
+    def fn(batches):
+        for rb in batches:
+            rows, segs = [], []
+            for i, blob in enumerate(rb.column("blob").to_pylist()):
+                seg = decode(blob)
+                keep = ~np.isin(seg[0].astype(np.int64), drop)
+                if keep.any():
+                    # a positional entry's tfs positions go with it
+                    rows.append(i)
+                    segs.append([a[keep] for a in seg[:3]] + [
+                        pos[np.repeat(keep, seg[1].astype(np.int64))]
+                        for pos in seg[3:]])
+            if not rows:
+                continue
+            cols = [rb.column("term").take(pa.array(rows))]
+            for j, dtype in enumerate(dtypes):
+                off = np.cumsum([0] + [len(sg[j]) for sg in segs])
+                cols.append(pa.ListArray.from_arrays(
+                    pa.array(off.astype(np.int32)),
+                    pa.array(np.concatenate([sg[j] for sg in segs])
+                             .astype(dtype))))
+            yield pa.RecordBatch.from_arrays(cols, names=names)
+
+    return fn
 
 
 def _bucket_col(num_buckets: int):
@@ -646,11 +613,13 @@ def build_index(
             F.expr(f"percentile_approx({ll}, array(0.25, 0.5, 0.75))").alias("qs"),
         ).collect()[0]
         phases["feats_stats_agg"] = round(time.time() - _tp, 3)
-        n_docs, sum_dl = int(row["n"]), int(row["sum_dl"])
-        avgdl = sum_dl / n_docs  # exact int sum / int count — matches the
-        # oracle's sum(len)/n bit-for-bit AND survives O(1) incremental
-        # updates (update_index adds the delta's integer sum)
-        q25, med, q75 = [float(v) for v in row["qs"]]
+        n_docs, sum_dl = int(row["n"]), int(row["sum_dl"] or 0)
+        # exact int sum / int count — matches the oracle's sum(len)/n
+        # bit-for-bit AND survives O(1) incremental updates (update_index
+        # adds the delta's integer sum); an empty input builds the empty
+        # index a compaction that purges every doc leaves (avgdl 0)
+        avgdl = sum_dl / max(1, n_docs)
+        q25, med, q75 = [float(v) for v in row["qs"] or (0, 0, 0)]
         mad = (q75 - q25) / 2.0 or 1e-9
         z = F.abs(F.log1p(F.col("doc_len").cast("double")) - F.lit(med)) / F.lit(
             mad * 1.4826)
@@ -998,8 +967,12 @@ def delete_docs(spark: SparkSession, out_dir: str, doc_ids) -> dict:
         n = df.count()
         # the cached version stays valid: queries read tombstones per call,
         # and postings, docs, stats and the term dictionary (whose df counts
-        # deleted docs until compaction) are unchanged
-        df.write.mode("append").parquet(os.path.join(out_dir, _TOMBSTONES))
+        # deleted docs until compaction) are unchanged. An empty delete
+        # writes nothing: an empty part file would read as pending deletes
+        # and make the next compaction a full purge rewrite
+        if n:
+            df.write.mode("append").parquet(
+                os.path.join(out_dir, _TOMBSTONES))
         return {"tombstoned": n}
     finally:
         _mutation_end(_key)
@@ -1071,9 +1044,10 @@ def update_index(
     standard Lucene/LSM segment-log design expressed as parquet appends.
 
     Contract: `df_new` must contain only NEW doc_ids (append-only corpus).
-    Re-ingesting an existing doc_id would leave its old postings in the base
-    segment and add new ones — deletions/upserts need a tombstone layer this
-    engine does not implement (the transcripts corpus is append-only).
+    Re-ingesting a live doc_id would leave its old postings in the base
+    segment and add new ones. An upsert is delete_docs, compact_index,
+    then update_index: a tombstoned id is refused until a compaction has
+    purged it.
     """
     from pyspark import StorageLevel
 
@@ -1345,10 +1319,13 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
     the same pass — for single-row terms the merge degenerates to a
     decode → re-encode that refreshes the bounds.
 
-    Scale shape: the per-term merge is a blob-level fan-in (the segments'
-    pre-compressed blobs, decode + merge-sort + re-encode on one reducer
-    per term) — amortized background work, never on the update or query
-    path.
+    Plan: the build's own encode plan (_encode) with the stale segment
+    rows as its input — a decode kernel (_segment_partials) turns each
+    (term, blob) row into a partial row of the build's format, without
+    tombstoned docs, and the layer's encode kernel merges a term's
+    segments in one vectorized pass. Every term comes out as the row a
+    fresh build over the surviving docs writes (fan_in 1) — amortized
+    background work, never on the update or query path.
 
     Crash safety: the overwrite below deletes the stale buckets' old rows,
     so those files (plus stats.json/manifest state) are first copied to
@@ -1357,6 +1334,9 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
     instead of data loss. The backup is bounded by the stale buckets'
     compressed size (the deltas since the last compaction plus their base
     rows), and is deleted on success."""
+    from macrobase_spark.index.tokenize import (_PARTIAL_POS_SCHEMA,
+                                                _PARTIAL_SCHEMA)
+
     restore_compact_backup(out_dir)  # recover any earlier crashed attempt
     recover_update_inflight(out_dir)
     _key = _mutation_begin(out_dir)
@@ -1375,7 +1355,7 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
             # postings, so the physical purge rewrites every bucket (full
             # LSM major compaction), not just the version-stale ones
             stale = sorted(set(stale) | set(_buckets(postings_root)))
-        if not stale:
+        if not (stale or purge):
             return {"version": version, "compacted_buckets": []}
 
         backup = _compact_backup_dir(out_dir)
@@ -1412,52 +1392,39 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
         with open(os.path.join(backup, "_complete"), "w") as f:
             f.write("1")
 
-        drop_bc = None
+        drop = np.unique(deleted_ids(out_dir))
         avgdl_enc = avgdl
         if purge:
             # post-purge global stats drive the re-encoded block-max
             # metadata, so they are computed BEFORE the merge
             kept_docs = spark.read.parquet(docs_path).join(
                 tomb, "doc_id", "anti")
-            drop_ids = np.unique(np.asarray(
-                [r["doc_id"] for r in tomb.distinct().collect()],
-                dtype=np.int64))
-            drop_bc = spark.sparkContext.broadcast(drop_ids)
             row = kept_docs.agg(
                 F.count("*").alias("n"),
                 F.sum("doc_len").alias("sum_dl")).collect()[0]
             n_docs_new = int(row["n"])
             sum_dl_new = int(row["sum_dl"] or 0)
             avgdl_enc = sum_dl_new / max(1, n_docs_new)
-        merged = (
-            spark.read.parquet(postings_root)
-            .filter(F.col("bucket").isin(stale))
-            .drop("bucket")
-            .groupBy("term")
-            .applyInPandas(_grouped_merge(
-                functools.partial(_merge_postings, avgdl_enc),
-                _POSTINGS_SCHEMA, drop_bc), schema=_POSTINGS_SCHEMA)
-            .withColumn("bucket", _bucket_col(stats["num_buckets"]))
-            .repartition("bucket")
-            .sortWithinPartitions("bucket", "term")
-        )
-        _overwrite_buckets(merged, postings_root, stale, purge)
+        # each layer's stale segment rows decode into the build's partial
+        # rows and run the build's encode plan: a term's segments merge to
+        # the one row a fresh build over the surviving docs writes
+        n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        layers = [(postings_root, _merge_partial_runs(avgdl_enc),
+                   _POSTINGS_SCHEMA, _PARTIAL_SCHEMA)]
         if has_positions:
-            # positional segments of the same stale buckets merge back to
-            # one doc-sorted blob per term (blob-level fan-in, one reducer
-            # per term — same shape as the main merge above)
-            pos_merged = (
-                spark.read.parquet(positions_root)
-                .filter(F.col("bucket").isin(stale))
-                .drop("bucket")
-                .groupBy("term")
-                .applyInPandas(_grouped_merge(_merge_positions, _POS_SCHEMA,
-                                              drop_bc), schema=_POS_SCHEMA)
-                .withColumn("bucket", _bucket_col(stats["num_buckets"]))
-                .repartition("bucket")
-                .sortWithinPartitions("bucket", "term")
-            )
-            _overwrite_buckets(pos_merged, positions_root, stale, purge)
+            layers.append((positions_root, _merge_partial_pos_runs,
+                           _POS_SCHEMA, _PARTIAL_POS_SCHEMA))
+        for root, kernel, schema, partial_schema in layers:
+            # every writer emits the layer's schema: no inference job, and
+            # a layer with no bucket left (every term purged) reads empty
+            segments = (spark.read.schema(schema + ", bucket int").parquet(root)
+                        .filter(F.col("bucket").isin(stale))
+                        .select("term", "blob")
+                        .mapInArrow(_segment_partials(drop, partial_schema),
+                                    schema=partial_schema))
+            _overwrite_buckets(
+                _encode(segments, kernel, schema, n_shuffle,
+                        stats["num_buckets"]), root, stale, purge)
         if purge:
             # docs table rewrite: read old → write new dir → swap (never
             # overwrite the path being read); the backup covers every

@@ -181,19 +181,3 @@ def decode_positional(buf: bytes) -> tuple[np.ndarray, np.ndarray,
     flat = csum - np.repeat(seg_base, tfs.astype(np.int64))
     return ids, tfs, dls, flat
 
-
-def merge_positional_blobs(blobs: list[bytes]) -> bytes:
-    """Merge positional blobs of one term (disjoint doc sets from LSM
-    segments) into one doc-sorted blob."""
-    parts = [decode_positional(b) for b in blobs]
-    ids = np.concatenate([p[0] for p in parts])
-    tfs = np.concatenate([p[1] for p in parts])
-    dls = np.concatenate([p[2] for p in parts])
-    order = np.argsort(ids, kind="stable")
-    # reorder the flat position stream doc-wise
-    flat_all = np.concatenate([p[3] for p in parts]) if parts else \
-        np.empty(0, dtype=np.uint64)
-    starts = np.concatenate(([0], np.cumsum(tfs)))[:-1].astype(np.int64)
-    segs = [flat_all[starts[i]:starts[i] + int(tfs[i])] for i in order]
-    flat = (np.concatenate(segs) if segs else np.empty(0, dtype=np.uint64))
-    return encode_positional(ids[order], tfs[order], dls[order], flat)

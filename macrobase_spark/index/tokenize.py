@@ -19,6 +19,12 @@ from pyspark.sql import types as T
 
 TOKEN_PATTERN = r"[a-z0-9]+"
 
+# The partial-row format every posting encode reads: one row per term per
+# upstream batch (or per compacted segment), doc-sorted posting arrays as
+# list columns; the positional layer's rows add each entry's positions.
+_PARTIAL_SCHEMA = "term string, ids array<long>, tfs array<int>, dls array<int>"
+_PARTIAL_POS_SCHEMA = _PARTIAL_SCHEMA + ", pos array<int>"
+
 
 def _tokenize_flat_arrow(text):
     """Vectorized tokenizer core in pyarrow C++ (guide §4.2: hand whole
@@ -213,8 +219,7 @@ def partial_postings(df: DataFrame, doc_id_col: str = "doc_id",
                 names=["term", "ids", "tfs", "dls"])
 
     return df.select(doc_id_col, text_col).mapInArrow(
-        fn, schema="term string, ids array<long>, tfs array<int>, "
-                   "dls array<int>")
+        fn, schema=_PARTIAL_SCHEMA)
 
 
 def partial_positional_postings(df: DataFrame, doc_id_col: str = "doc_id",
@@ -299,8 +304,7 @@ def partial_positional_postings(df: DataFrame, doc_id_col: str = "doc_id",
                 names=["term", "ids", "tfs", "dls", "pos"])
 
     return df.select(doc_id_col, text_col).mapInArrow(
-        fn, schema=("term string, ids array<long>, tfs array<int>, "
-                    "dls array<int>, pos array<int>"))
+        fn, schema=_PARTIAL_POS_SCHEMA)
 
 
 def with_anomaly_score(df: DataFrame, exact: bool = False) -> DataFrame:

@@ -8,16 +8,25 @@ shards must equal bm25_oracle bitwise — doc ids, order and float scores —
 and bm25_count its match count; after a delete_docs on the segmented
 index, topk, batch and count must equal bm25_oracle over the surviving
 docs (corpus stats still count the deleted ones until a compaction).
+
+The mutation harness runs random sequences of update_index / delete_docs /
+compact_index on a positional index and checks topk, batch and count
+against bm25_oracle after every step, and after every compaction both
+layers against a fresh build over the surviving docs, in every column,
+and that tombstones are pending exactly while a deleted doc awaits a
+compaction.
 """
 
 from collections import defaultdict
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from macrobase_spark.index.bm25 import (bm25_count, bm25_oracle, bm25_topk,
                                         bm25_topk_batch, bm25_topk_sharded)
-from macrobase_spark.index.build import build_index, delete_docs, update_index
+from macrobase_spark.index.build import (build_index, compact_index,
+                                         delete_docs, has_tombstones,
+                                         update_index)
 
 STOP = ["the", "and"]
 # 'İ' lowercases to 'i' + U+0307, which splits the token: "İnsert" is the
@@ -98,3 +107,77 @@ def _check(spark, seg, docs, queries, k, keep_ids=None):
             got[r["query_id"]].append((r["rank"], r["doc_id"], r["score"]))
         for i, (q, want) in qs.items():
             assert [(d, s) for _, d, s in sorted(got[i])] == want, q
+
+
+def _layers(out):
+    """Both layers of an index as rows sorted by term, every column."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    return {layer: sorted((r for f in glob.glob(f"{out}/{layer}/bucket=*/*")
+                           for r in pq.read_table(f).to_pylist()),
+                          key=lambda r: r["term"])
+            for layer in ("postings", "positions")}
+
+
+step = st.one_of(
+    # new docs; True re-ingests ids a compaction purged, where there are
+    st.tuples(st.just("update"), st.lists(doc_text, min_size=1, max_size=4),
+              st.booleans()),
+    # picks among the ingested ids (an empty list tombstones nothing)
+    st.tuples(st.just("delete"),
+              st.lists(st.integers(0, 10 ** 6), max_size=3)),
+    st.tuples(st.just("compact")))
+
+
+@settings(max_examples=10, derandomize=True, deadline=None,
+          suppress_health_check=list(HealthCheck))
+# every doc purged, the next compaction on an index with no posting bucket
+# left, then the purged ids re-ingested
+@example(base=["alpha", "..."],
+         steps=[("delete", [0]), ("compact",), ("delete", [0]), ("compact",),
+                ("update", ["beta", "gamma"], True), ("compact",)],
+         queries=[("alpha beta", ("or", None))], k=3)
+@given(base=st.lists(doc_text, min_size=3, max_size=8),
+       steps=st.lists(step, min_size=3, max_size=6),
+       queries=st.lists(query, min_size=2, max_size=3),
+       k=st.sampled_from([3, 10]))
+def test_mutation_sequences_equal_oracle(spark, tmp_path_factory, base,
+                                         steps, queries, k):
+    root = tmp_path_factory.mktemp("mut")
+    out = str(root / "idx")
+    ids = iter(range(1, 10 ** 6, 7))
+    corpus = {next(ids): t for t in base}  # docs the corpus stats count
+    dead, purged = set(), []
+
+    def frame(rows):
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    build_index(frame(sorted(corpus.items())), out, num_buckets=2,
+                positions=True, stopwords=STOP)
+    for n, op in enumerate(steps):
+        if op[0] == "update":
+            rows = [(purged.pop() if op[2] and purged else next(ids), t)
+                    for t in op[1]]
+            update_index(frame(rows), out)
+            corpus.update(rows)
+        elif op[0] == "delete":
+            live = sorted(set(corpus) - dead)
+            picked = sorted({live[i % len(live)] for i in op[1]} if live
+                            else set())
+            delete_docs(spark, out, picked)
+            dead |= set(picked)
+        else:
+            compact_index(spark, out)
+            purged += sorted(dead)
+            corpus = {d: t for d, t in corpus.items() if d not in dead}
+            dead = set()
+            fresh = str(root / f"fresh{n}")
+            build_index(frame(sorted(corpus.items())), fresh, num_buckets=2,
+                        positions=True, stopwords=STOP)
+            assert _layers(out) == _layers(fresh), steps[:n + 1]
+        # an empty delete leaves no pending tombstone behind
+        assert has_tombstones(out) == bool(dead)
+        _check(spark, out, sorted(corpus.items()), queries, k,
+               set(corpus) - dead if dead else None)

@@ -1,9 +1,10 @@
 """r5: positional layer + exact phrase/proximity top-k
-(build_index(positions=True) -> bm25_phrase_topk). Covers codec
-roundtrip/merge, phrase rank+score identity vs the single-threaded
-oracle, hot terms' positional lists, duplicate-token phrases,
-absent terms, ordered-proximity slop, and the positional LSM lifecycle
-(update_index segment append -> compact_index blob merge)."""
+(build_index(positions=True) -> bm25_phrase_topk). Covers the codec
+roundtrip, phrase rank+score identity vs the single-threaded oracle, hot
+terms' positional lists, duplicate-token phrases, absent terms,
+ordered-proximity slop, and the positional LSM lifecycle (update_index
+segment append -> compact_index re-encode through the build's positional
+kernel)."""
 
 from __future__ import annotations
 
@@ -20,8 +21,7 @@ from macrobase_spark.index.build import build_index
 
 def test_positional_codec_roundtrip_fuzz():
     from macrobase_spark.index.codec import (decode_positional,
-                                             encode_positional,
-                                             merge_positional_blobs)
+                                             encode_positional)
 
     rng = np.random.default_rng(7)
     for _ in range(100):
@@ -37,20 +37,6 @@ def test_positional_codec_roundtrip_fuzz():
             encode_positional(ids, tfs, dls, flat))
         assert (i2 == ids).all() and (t2 == tfs).all()
         assert (l2 == dls).all() and (f2 == flat).all()
-    # merge two disjoint partials, interleaved ids
-    b1 = encode_positional(np.array([2, 9], np.uint64),
-                           np.array([1, 2], np.uint64),
-                           np.array([5, 6], np.uint64),
-                           np.array([4, 0, 2], np.uint64))
-    b2 = encode_positional(np.array([5], np.uint64),
-                           np.array([2], np.uint64),
-                           np.array([7], np.uint64),
-                           np.array([1, 3], np.uint64))
-    i, t, l, f = __import__(
-        "macrobase_spark.index.codec", fromlist=["decode_positional"]
-    ).decode_positional(merge_positional_blobs([b1, b2]))
-    assert i.tolist() == [2, 5, 9] and t.tolist() == [1, 2, 2]
-    assert l.tolist() == [5, 7, 6] and f.tolist() == [4, 1, 3, 0, 2]
 
 
 @pytest.fixture(scope="module")

@@ -505,3 +505,62 @@ def test_deterministic_sample_filter_is_scan_level(spark):
     assert "Exchange" not in p and "Join" not in p
     assert "Python" not in p and "ArrowEval" not in p
     assert "md5" in p.lower()
+
+
+def _sql_plans(spark, after: int = -1) -> dict[int, str]:
+    """Physical plan of every retained SQL execution with id > after."""
+    seq = spark._jsparkSession.sharedState().statusStore().executionsList()
+    execs = (seq.apply(i) for i in range(seq.size()))
+    return {e.executionId(): e.physicalPlanDescription() for e in execs
+            if e.executionId() > after}
+
+
+def test_compaction_runs_the_build_encode_plan(spark, tmp_path):
+    """A purge compaction of a positional index runs each layer through
+    the build's encode plan: either layer's write plan holds exactly two
+    Arrow kernels (the segment decode and the encode) and no grouped-
+    pandas operator, and a warm compaction runs at most 16 Spark jobs (the
+    measured count; the grouped-pandas merge it replaced ran 20). No
+    applyInPandas is left in the index package."""
+    import pathlib
+    import re
+    import shutil
+
+    from macrobase_spark.fixtures.transcripts import synth_transcripts, with_doc_id
+    from macrobase_spark.index import build
+    from macrobase_spark.index.build import (build_index, compact_index,
+                                             delete_docs, update_index)
+
+    df = with_doc_id(synth_transcripts(spark, n_convs=30, seed=42)).cache()
+    new = F.col("conv_id") >= "conv00000020"
+    base = str(tmp_path / "base")
+    build_index(df.filter(~new), base, num_buckets=4, positions=True)
+    update_index(df.filter(new), base)
+    ids = sorted(r["doc_id"] for r in df.select("doc_id").collect())
+    delete_docs(spark, base, ids[::7])
+    for name in ("warm", "idx"):
+        shutil.copytree(base, str(tmp_path / name))
+    compact_index(spark, str(tmp_path / "warm"))
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    last = max(_sql_plans(spark), default=-1)
+    out = str(tmp_path / "idx")
+    sc.setJobGroup("compact", "compact")
+    try:
+        compact_index(spark, out)
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("compact"))
+    assert n_jobs <= 16, n_jobs
+    plans = _sql_plans(spark, last).values()
+    for layer in ("postings", "positions"):
+        [write] = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p
+                   and f"{out}/{layer}" in p]
+        final = write.split("== Initial Plan ==")[0]
+        assert len(re.findall(r"MapInArrow \(\d+\)", final)) == 2, (
+            layer, final)
+        assert "FlatMapGroupsInPandas" not in write, layer
+    index_src = pathlib.Path(build.__file__).parent
+    assert [f.name for f in index_src.glob("*.py")
+            if "applyInPandas" in f.read_text()] == []
